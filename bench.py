@@ -914,8 +914,10 @@ def main() -> None:
     # round-over-round table. The full line here is ~1.8 KB, so the
     # tail-capture always holds ONE complete parseable object. Every
     # bulky diagnostic (cold walls, anchors per query, streaming,
-    # nightly-refresh fit points) moves to the ``bench_details.json``
-    # sidecar next to this file, echoed to stderr as a labeled line.
+    # nightly-refresh fit points) moves to the
+    # ``bench_details_sf<sf>_c<cores>.json`` sidecar next to this file
+    # (named per run shape so concurrent c8/c32 runs keep their own),
+    # echoed to stderr as a labeled line.
     contract = {
         "metric": "headline_queries_total_wall_warm",
         "queries": warm,
@@ -991,7 +993,9 @@ def main() -> None:
         # refresh, the r10 structural-I/O proof
         "nightly_refresh": nightly_refresh,
     }
-    details_path = Path(__file__).resolve().parent / "bench_details.json"
+    details_path = (
+        Path(__file__).resolve().parent / f"bench_details_sf{sf}_c{DEFAULT_CPUS}.json"
+    )
     try:
         details_path.write_text(json.dumps(details) + "\n")
     except OSError:

@@ -83,32 +83,3 @@ def percentile_from_bins(df: DataFrame, group_cols: list[str], p: float = 0.85, 
         *group_cols, percentile_col(p, bins).alias(f"p{int(p * 100)}_speed")
     )
 
-
-def percentile_from_bins_interp(
-    df: DataFrame, group_cols: list[str], p: float = 0.85, bins: Bins = SPEED_BINS
-) -> DataFrame:
-    """Linearly-interpolated percentile from the wide histogram: inside
-    the bin where the cumulative count crosses ``p * total``, interpolate
-
-        lo + (hi - lo) * (target - cum_before) / bin_count
-
-    — the standard grouped-data percentile estimator. Same single-pass
-    static-expression shape as :func:`percentile_from_bins` (which
-    returns the coarser bin upper bound); still no window, no unpivot.
-    """
-    total = _total(bins)
-    target = F.lit(p) * total
-    expr = None
-    acc = None
-    for c, lo, hi in bins:
-        before = acc if acc is not None else F.lit(0)
-        acc = F.col(c) if acc is None else acc + F.col(c)
-        interp = F.lit(lo) + (F.lit(hi - lo) * (target - before) / F.col(c))
-        cond = acc >= target
-        expr = F.when(cond & (F.col(c) > 0), interp) if expr is None else expr.when(
-            cond & (F.col(c) > 0), interp
-        )
-    pcol = F.round(expr.otherwise(F.lit(float(bins[-1][2]))), 4).alias(
-        f"p{int(p * 100)}_interp"
-    )
-    return df.select(*group_cols, pcol)

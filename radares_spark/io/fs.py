@@ -321,7 +321,7 @@ def fold_epochs(
     supersedes: Callable[[int], bool],
 ) -> None:
     """The crash-safe core every epoch-ledger compactor here shares
-    (admission / URL / hotkeys ledgers — one implementation so the
+    (admission / URL ledgers — one implementation so the
     ordering invariant can never silently diverge between copies).
 
     ``folded`` is the compacted content (no epoch column); it lands as
@@ -349,7 +349,7 @@ def fold_epochs(
     compactor is working the same ledger at the same time — two
     overlapping runs could interleave stage/GC steps. The tmp dir is
     suffixed with ``new_epoch`` so a RETRY of a *different generation*
-    (hotkeys' ``-(w+1)`` advances per fold) never collides with a
+    (a generation epoch that advances per fold) never collides with a
     stale tmp from a crashed older fold; same-generation overlap is
     out of contract."""
     tmp = ledger_dir.rstrip("/") + f"__compact_tmp_e{new_epoch}"

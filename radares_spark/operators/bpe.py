@@ -13,7 +13,7 @@ the word table (``word_counts`` — vocabulary-sized, ~10^7-10^8 rows
 for web scale, independent of corpus bytes from then on), and every
 merge round is a small job over the word table — an explode + one
 map-side-combined pair aggregate + a SCALAR argmax collect (the
-PageRank/k-means per-round pattern) + a codegen'd fold that rewrites
+k-means per-round pattern) + a codegen'd fold that rewrites
 the symbol arrays.
 
 Greedy left-to-right merge application within a round is an
@@ -21,8 +21,7 @@ Greedy left-to-right merge application within a round is an
 the new symbol never re-merges in the same round, matching the
 reference implementation exactly (pinned against a pure-Python
 replica in tests/test_bpe.py, the same verification tier as the
-k-means trainer and PageRank — iterative algorithms have no SQL
-oracle).
+k-means trainer — iterative algorithms have no SQL oracle).
 
 Determinism: ties on pair count break on (left, right) lexicographic
 ascending — stable across partitionings and engines.
@@ -33,7 +32,7 @@ trainers amortize this by sampling the word table or batching
 disjoint merges; THIS implementation keeps the exact sequential
 semantics (the testable contract) and documents the knob. The word
 table is localCheckpoint'd every ``checkpoint_every`` rounds so plan
-lineage stays bounded (the PageRank recipe).
+lineage stays bounded (the k-means recipe).
 
 ``bpe_encode`` tokenizes documents with the trained table the way
 fast tokenizers do: the trained word -> symbols mapping is a
@@ -387,21 +386,6 @@ def bpe_encode(
         )
         .select("doc_id", "tokens", F.size("tokens").alias("n_tokens"))
     )
-
-
-def bpe_vocab(merges: list[tuple[str, str]], words: DataFrame) -> DataFrame:
-    """(symbol) — the trained vocabulary: every base character symbol
-    present in the word table plus one merged symbol per merge, the
-    artifact a tokenizer ships."""
-    base = (
-        words.select(F.explode(_initial_symbols(F.col("word"))).alias("symbol"))
-        .distinct()
-    )
-    spark = words.sparkSession
-    merged = spark.createDataFrame(
-        [(l + r,) for l, r in merges], "symbol string"
-    ).distinct()
-    return base.unionByName(merged).distinct()
 
 
 def save_tokenizer(

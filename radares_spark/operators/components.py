@@ -95,8 +95,7 @@ def cluster_representatives(
     member, tie-broken by minimum id. ``members`` is
     ``connected_components`` output (node, component); ``scores`` maps
     every member id to a quality signal (length for the SlimPajama
-    keep-longest policy, a classifier probability, PageRank of the
-    source host, ...).
+    keep-longest policy, a classifier probability, ...).
 
     min-id canonicalization (canonical_near_dup_drops) keeps an
     ARBITRARY member; real pipelines keep the best one — dropping a
@@ -120,84 +119,3 @@ def cluster_representatives(
         "keep", F.when(F.col(id_col) == F.col("rep_doc_id"), 1).otherwise(0)
     )
 
-
-def pagerank(
-    edges: DataFrame,
-    iters: int = 15,
-    damping: float = 0.85,
-    src: str = "src_host",
-    dst: str = "dst_host",
-    weight: str | None = "n_links",
-) -> DataFrame:
-    """(node, rank) — weighted PageRank over an edge table (e.g. the
-    host link graph from ``urls.outlink_host_graph``), the standard
-    crawl-prioritization signal.
-
-    Power iteration as DataFrame ops: per round, one equi-join of the
-    edge list against the rank table (contribution = rank x
-    weight/out-weight), one sum-per-destination aggregate, plus the
-    damping/teleport terms. Dangling nodes' mass is redistributed
-    uniformly each round (the standard stochastic-matrix fix) — its
-    total is the ONE scalar collected per round, same budget as
-    ``connected_components``' convergence counter. localCheckpoint per
-    round truncates the iterative lineage.
-
-    Ranks sum to 1 (up to float error) every round by construction.
-    """
-    # zero/negative-weight edges carry no mass: dropping them up front
-    # makes a node whose out-edges all weigh 0 correctly DANGLING
-    # (keeping them left it in out_w with ow=0, whose rank*w/ow inflow
-    # was NULL and silently leaked its mass — review finding). Nodes
-    # stay in the node set either way via the pre-filter endpoints.
-    raw = edges.select(
-        F.col(src).alias("u"),
-        F.col(dst).alias("v"),
-        (F.col(weight) if weight else F.lit(1)).cast("double").alias("w"),
-    )
-    # pin once: e/out_w/nodes are consumed 2x PER ITERATION (dangling
-    # scalar + rank rebuild); without the pin the entire upstream edge
-    # pipeline (e.g. link extraction + canonicalization) re-executes
-    # ~2*iters times (review finding)
-    nodes = (
-        raw.select("u")
-        .unionByName(raw.select(F.col("v").alias("u")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        # empty edge table (a crawl batch with no parseable outlinks):
-        # an empty result, not a ZeroDivisionError at plan build
-        return nodes.select(
-            F.col("u").alias("node"), F.lit(0.0).alias("rank")
-        )
-    e = raw.filter(F.col("w") > 0).localCheckpoint(eager=True)
-    out_w = e.groupBy("u").agg(F.sum("w").alias("ow")).localCheckpoint(eager=True)
-    ranks = nodes.select("u", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(iters):
-        # mass sitting on nodes with no out-edges
-        dangling = (
-            ranks.join(out_w, "u", "left_anti").agg(F.sum("rank")).collect()[0][0]
-            or 0.0
-        )
-        contribs = (
-            e.join(out_w, "u")
-            .join(ranks, "u")
-            .select("v", (F.col("rank") * F.col("w") / F.col("ow")).alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        base = (1.0 - damping) / n + damping * dangling / n
-        ranks = (
-            nodes.join(contribs.withColumnRenamed("v", "u"), "u", "left")
-            .select(
-                "u",
-                (
-                    F.lit(base) + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select(F.col("u").alias("node"), F.round("rank", 9).alias("rank"))

@@ -1,7 +1,7 @@
 """Engine-native text embeddings via feature hashing (Weinberger et
 al. 2009, "Feature Hashing for Large Scale Multitask Learning") —
 the bridge between the text stack and the similarity/ANN stack: every
-similarity operator here (cosine/IVF/PQ top-k, SemDeDup, hyperplane
+similarity operator here (cosine/IVF top-k, SemDeDup, hyperplane
 LSH) consumes an ``array<double>`` column, and until now only the
 synthetic embeddings table provided one. ``hashed_tf`` turns raw text
 into such a column with no external model:
@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from radares_spark.io.tables import load_table
 from radares_spark.operators.dedup import NORM_SQL, _md5, normalize_text
@@ -64,8 +65,9 @@ def hashed_tf(
     text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, embedding array<double>) — L2-normalized hashed
-    bag-of-words vectors. Docs with no tokens (empty normalized text)
-    AND docs whose raw vector has zero norm (all-ubiquitous tokens
+    bag-of-words vectors; ``doc_id`` keeps the input column's type
+    (long, int, string, ...). Docs with no tokens (empty normalized
+    text) AND docs whose raw vector has zero norm (all-ubiquitous tokens
     under tf_idf — every IDF weight 0 — or full sign cancellation) are
     DROPPED: a zero vector poisons every cosine, the same rule
     ``embedding_store_health`` audits. Preserve a doc spine downstream
@@ -150,9 +152,13 @@ def hashed_tf(
     # docstring forbids and embedding_store_health flags — reachable
     # via all-ubiquitous-token docs under tf_idf (every IDF weight 0)
     # or full sign cancellation under plain TF).
-    return split.mapInArrow(
-        _dense_unit_assemble(dim), "doc_id long, embedding array<double>"
+    out_schema = StructType(
+        [
+            StructField("doc_id", split.schema["doc_id"].dataType),
+            StructField("embedding", ArrayType(DoubleType())),
+        ]
     )
+    return split.mapInArrow(_dense_unit_assemble(dim), out_schema)
 
 
 def _dense_unit_assemble(dim: int):
@@ -196,7 +202,7 @@ def _dense_unit_assemble(dim: int):
             n = batch.num_rows
             if not n:
                 continue
-            did = batch.column("doc_id").to_numpy(zero_copy_only=False)
+            did = batch.column("doc_id")
             ii_arr = batch.column("ii")
             xx_arr = batch.column("xx")
             # ListArray internals: one contiguous values buffer + an
@@ -246,7 +252,7 @@ def _dense_unit_assemble(dim: int):
                     pa.array(mat.ravel(), type=pa.float64()),
                 )
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(did[a:b][ok], type=pa.int64()), emb],
+                    [did.slice(a, m).filter(pa.array(ok)), emb],
                     names=["doc_id", "embedding"],
                 )
 

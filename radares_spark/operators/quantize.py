@@ -13,8 +13,7 @@ products are EXACT (order-independent), so the DuckDB oracle matches
 without any float-summation-order ceremony.
 
 Scale shapes mirror operators/similarity.py: quantization is a pure
-projection (zero shuffles); quantized brute-force top-k broadcasts
-the query side and scans the corpus in place. The IVF layout
+projection (zero shuffles). The IVF layout
 (write_ivf_layout) applies unchanged — store ``q`` instead of ``v``
 and the probe scan reads a quarter of the bytes.
 """
@@ -23,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from radares_spark.functions.vectors import DIM
 from radares_spark.io.tables import spread
@@ -63,41 +61,6 @@ def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding") -> DataFrame
         ).cast("double")
     )
     return quant.select("vec_id", "q", "scale", qnrm.alias("qnrm"))
-
-
-def _int_dot(a: str, b: str) -> F.Column:
-    """Exact integer dot product — order-independent, codegen'd."""
-    return sum(
-        F.element_at(F.col(a), i + 1).cast("int")
-        * F.element_at(F.col(b), i + 1).cast("int")
-        for i in range(DIM)
-    )
-
-
-def quantized_topk(qtab: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """Brute-force top-k over the QUANTIZED store (same plan shape as
-    similarity.cosine_topk: broadcast queries, corpus scanned in place,
-    tiny per-query rank window). Scales cancel in the cosine, so the
-    score is integer math + one division."""
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("q").alias("qq"),
-            F.col("qnrm").alias("qqn"),
-        )
-    )
-    cos = F.round(
-        _int_dot("qq", "q").cast("double") / (F.col("qqn") * F.col("qnrm")), 4
-    )
-    scored = qtab.join(q, F.col("query_id") != F.col("vec_id")).select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim_q")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim_q", "rank")
-    )
 
 
 def similarity_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -298,54 +298,6 @@ LIBRARY_SPECS: dict[str, QuerySpec] = {
 }
 
 
-LINK_RE = '(?i)<a [^>]*href="([^"]*)"'
-
-
-def extract_links(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """(doc_id, link) — one row per double-quoted <a href> in the
-    page, document order preserved by the generator. The crawl
-    frontier's raw edge stream; pure projection + explode, no
-    shuffle."""
-    return df.select(
-        "doc_id",
-        F.explode(F.regexp_extract_all(F.col(html_col), F.lit(LINK_RE), 1)).alias(
-            "link"
-        ),
-    )
-
-
-def outlink_host_graph(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """(src_host, dst_host, n_links) — the host-level link graph a
-    crawl frontier / PageRank pass consumes: links extracted, both
-    endpoints canonicalized with the SAME rules as URL dedup, one
-    count aggregate on the edge key. Self-loops kept (they carry
-    real rank mass). Only absolute http(s) links form edges:
-    schemeless hrefs (relative paths, mailto:, javascript:) would
-    need base-URL resolution to name a host — without it the host
-    regex would capture the raw string ('about.html' as a node),
-    siphoning rank mass onto non-hosts — so they are dropped here,
-    explicitly."""
-    links = extract_links(df.select("doc_id", "url", html_col), html_col).filter(
-        F.col("link").rlike("(?i)^https?://")
-    )
-    src = with_canonical_url(
-        links.join(df.select("doc_id", "url"), "doc_id"), "url"
-    ).select("doc_id", F.col("url_host").alias("src_host"), "link")
-    dst = with_canonical_url(src, "link", out_col="__c").select(
-        "src_host", F.col("url_host").alias("dst_host")
-    )
-    return (
-        dst.filter(
-            F.col("src_host").isNotNull()
-            & (F.col("src_host") != "")
-            & F.col("dst_host").isNotNull()
-            & (F.col("dst_host") != "")
-        )
-        .groupBy("src_host", "dst_host")
-        .agg(F.count(F.lit(1)).alias("n_links"))
-    )
-
-
 # --- Cross-run URL ledger (recrawl idempotency) ------------------------------
 
 OUT_URL_DUP_LEDGER = "url_dup_ledger"

@@ -332,29 +332,6 @@ def mix_corpus(
     return docs.filter(u < thresh)
 
 
-def assign_splits(
-    docs: DataFrame, val_pct: float = 1.0, test_pct: float = 1.0, id_col: str = "doc_id"
-) -> DataFrame:
-    """Leakage-free train/val/test assignment as a ``split`` column.
-
-    Hashing the DOC ID (not position or rand()) makes the assignment
-    a pure function of identity: stable across re-runs, cluster
-    layouts, and corpus growth — a doc never migrates between splits
-    when other docs arrive, which is what keeps eval sets honest over
-    time. Caveat (documented, not solved here): near-duplicate texts
-    with different ids can still straddle splits — run the dedup
-    stages (``curate``) BEFORE splitting, which is the pipeline order
-    ``corpus_curation_audit`` encodes.
-    """
-    u = _unit_hash(F.col(id_col), "split")
-    test_cut = int(test_pct * 10_000)
-    val_cut = test_cut + int(val_pct * 10_000)
-    split = (
-        F.when(u < test_cut, "test").when(u < val_cut, "val").otherwise("train")
-    )
-    return docs.withColumn("split", split)
-
-
 def stratified_sample(
     docs: DataFrame, k: int, group_col: str = "source", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1020,7 +997,7 @@ def weighted_sample(
     Docs with non-positive weight are excluded (zero mass cannot win).
 
     Deterministic: ``u`` comes from the same ``md5(seed:doc_id)``
-    unit-hash idiom as mixing/splits, so the sample is a pure function
+    unit-hash idiom as mixing, so the sample is a pure function
     of identity — byte-identical across re-runs, partitionings, and
     cluster sizes, and mirrorable in the DuckDB oracle.
 

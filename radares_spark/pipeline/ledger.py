@@ -86,107 +86,3 @@ def idempotent_append(
         build_ledger(new).write.mode("append").parquet(ledger_path)
     return n, skipped
 
-
-def merge_flows(spark: SparkSession, updates: DataFrame, warehouse: str) -> int:
-    """MERGE semantics without Delta: for every (pubdate, equipment)
-    group in ``updates``, replace the stored group; groups not in
-    ``updates`` are kept. Equivalent to ``MERGE INTO flows USING
-    updates ON (pubdate, equipment) WHEN MATCHED THEN REPLACE GROUP
-    WHEN NOT MATCHED THEN INSERT`` — the upsert the reference's
-    unique-index + check-then-insert cannot express (it can only skip).
-
-    Physical shape: only the pubdate partitions present in ``updates``
-    are rewritten (dynamic partition overwrite); inside each touched
-    partition the kept remainder is ``existing LEFT ANTI updates`` on
-    the natural key. Cost is proportional to the touched days, never
-    the table. Returns rows written into the touched partitions.
-    """
-    flows_path = os.path.join(warehouse, "flows")
-    ledger_path = os.path.join(warehouse, "equipment_files")
-    # localCheckpoint BEFORE the partition overwrite below: the natural
-    # repair flow builds ``updates`` by READING flows_path (read, fix
-    # rows, merge back). Without materializing here, the post-overwrite
-    # ledger update re-executes a plan whose source files were just
-    # replaced — FileNotFoundException at best, silently re-reading the
-    # merged output at worst. Same self-read hazard the ``merged``
-    # checkpoint guards; ``stamped`` needs the guard for the same reason.
-    stamped = updates.withColumn(
-        "equipment_files_id", file_id(F.col("pubdate"), F.col("equipment"))
-    ).localCheckpoint(eager=True)
-
-    days = stamped.select("pubdate").distinct()
-    existing = spark.read.parquet(flows_path).join(
-        F.broadcast(days), "pubdate", "left_semi"
-    )
-    kept = existing.join(
-        F.broadcast(stamped.select(*NATURAL_KEY).distinct()), NATURAL_KEY, "left_anti"
-    )
-    merged = kept.unionByName(stamped)
-    n = merged.count()
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # merged reads flows_path too (via ``kept``) — same guard
-        merged.localCheckpoint(eager=True).write.mode("overwrite").partitionBy(
-            "pubdate"
-        ).parquet(flows_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    # ledger gains any genuinely new natural keys (idempotent)
-    new_keys = (
-        stamped.select(*NATURAL_KEY)
-        .distinct()
-        .join(spark.read.parquet(ledger_path).select(*NATURAL_KEY), NATURAL_KEY, "left_anti")
-    )
-    if new_keys.count():
-        build_ledger(new_keys).write.mode("append").parquet(ledger_path)
-    return n
-
-
-def compact_partitions(
-    spark: SparkSession, path: str, partition_col: str = "pubdate"
-) -> int:
-    """Bin small files: rewrite each partition of a partitioned parquet
-    table as one file (append-heavy ingest leaves one file per batch;
-    at 100 TB the scan's file-listing and per-file open costs dominate
-    long before the bytes do). Returns partitions compacted.
-
-    One-file-per-partition fits this table's grain (a day is ≤ ~19k
-    rows); for partitions beyond a row-group target, swap the
-    ``repartition(col)`` for ``repartitionByRange(n, col, key)``.
-    """
-    df = spark.read.parquet(path)
-    n_parts = df.select(partition_col).distinct().count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.repartition(F.col(partition_col)).localCheckpoint(eager=True).write.mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n_parts
-
-
-def reingest_overwrite(spark: SparkSession, flows: DataFrame, warehouse: str) -> int:
-    """Re-ingest corrected data for the pubdates present in ``flows``,
-    atomically replacing ONLY those partitions (dynamic partition
-    overwrite). This is the repair path the reference lacks entirely —
-    its fix for a bad day is manual DELETE + re-run. Partitions not in
-    the input are untouched, so a repair of one day never rewrites the
-    other ~3650 days of a 10-year fact table.
-    """
-    flows_path = os.path.join(warehouse, "flows")
-    stamped = flows.withColumn(
-        "equipment_files_id", file_id(F.col("pubdate"), F.col("equipment"))
-    )
-    n = stamped.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        stamped.write.mode("overwrite").partitionBy("pubdate").parquet(flows_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n

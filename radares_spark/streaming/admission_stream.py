@@ -178,8 +178,8 @@ def compact_ledger(
     Exchange (plan-asserted in tests/test_incremental.py).
 
     ``checkpoint`` (the stream's checkpointLocation) gates folding on
-    the commit watermark, mirroring ``compact_hot_ledger``: only
-    epochs ``<= last_committed_epoch`` fold into ``epoch=-1``. A
+    the commit watermark: only epochs ``<= last_committed_epoch`` fold
+    into ``epoch=-1``. A
     written-but-uncommitted epoch (crash between the sink's writes and
     the checkpoint commit) must stay an EXCLUDABLE delta — once folded
     into ``epoch=-1``, the replay's own-epoch exclusion
@@ -199,8 +199,8 @@ def compact_ledger(
     else:
         committed = lambda e: True  # noqa: E731
     # stage/fold/GC ordering and its crash contract live in ONE place
-    # (fs.fold_epochs) shared by the admission, URL, and hotkeys
-    # compactors; every committed epoch>=0 row lands in epoch=-1
+    # (fs.fold_epochs) shared by the admission and URL compactors;
+    # every committed epoch>=0 row lands in epoch=-1
     fs.fold_epochs(
         spark,
         ledger_dir,

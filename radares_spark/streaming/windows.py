@@ -1,21 +1,15 @@
-"""Streaming windowed aggregation + custom stateful operator.
+"""Streaming windowed aggregation.
 
 The radar fact table's native grain is a 15-minute grid (96
 slots/day, src/clean_data.py:54); with a live feed the same grid is a
 tumbling ``F.window(ts, '15 minutes')`` with a watermark for late data
-(SURVEY §2.11). ``sessionize_stateful`` shows the
-``applyInPandasWithState`` escape hatch for operators the built-in
-windows can't express (per-key custom state machines).
+(SURVEY §2.11).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 def tumbling_15min(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -31,64 +25,3 @@ def tumbling_15min(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
     )
 
-
-def session_windows_native(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user sessions via Spark's NATIVE ``session_window`` (dynamic
-    gap-merging window): one row per (user, session) with bounds and
-    event count. Same session rule as the lag/cumsum batch form
-    (plans/relational.events_sessionize) and the applyInPandasWithState
-    kernel below — three implementations, one semantics (tested
-    equivalent). In streaming mode this composes with a watermark for
-    state expiry; in batch it is a single shuffle on user_id."""
-    return (
-        events.groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-SESSION_SCHEMA = "user_id long, n_sessions int, n_events int"
-STATE_SCHEMA = "last_ts double, n_sessions int, n_events int"
-GAP_S = 1800.0
-
-
-def _session_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Custom stateful kernel: per-user session counting with a 30-min
-    gap rule — the streaming twin of the batch lag/cumsum sessionizer
-    (plans/relational.events_sessionize)."""
-    (user_id,) = key
-    last_ts, n_sessions, n_events = state.get if state.exists else (None, 0, 0)
-    ts_all: list[float] = []
-    for pdf in pdfs:
-        ts_all.extend(t.timestamp() for t in pdf["ts"])
-    for t in sorted(ts_all):
-        if last_ts is None or t - last_ts > GAP_S:
-            n_sessions += 1
-        last_ts = t
-        n_events += 1
-    state.update((last_ts, n_sessions, n_events))
-    yield pd.DataFrame(
-        {"user_id": [user_id], "n_sessions": [n_sessions], "n_events": [n_events]}
-    )
-
-
-def sessionize_stateful(events: DataFrame) -> DataFrame:
-    """applyInPandasWithState sessionizer (update mode)."""
-    return (
-        events.select("user_id", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_fn,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )

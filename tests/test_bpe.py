@@ -4,7 +4,7 @@ reference algorithm (merge tables AND final symbol arrays identical),
 greedy-fold semantics on adversarial chains, deterministic ties,
 encode round-trip incl. OOV fallback. Iterative training has no SQL
 oracle — replica parity is the verification tier, the same as the
-k-means trainer and PageRank."""
+k-means trainer."""
 
 from __future__ import annotations
 
@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from radares_spark.operators.bpe import (
     EOW,
     bpe_encode,
-    bpe_vocab,
     train_bpe,
     train_bpe_batched,
     word_counts,
@@ -423,16 +422,6 @@ def test_encode_preserves_doc_spine_for_tokenless_docs(spark, docs):
     for d in (2, 3, 4):
         assert enc[d]["tokens"] == [] and enc[d]["n_tokens"] == 0
     assert enc[1]["n_tokens"] > 0
-
-
-def test_vocab_contents(spark, docs):
-    wc = word_counts(docs)
-    merges, _ = train_bpe(wc, n_merges=5)
-    vocab = {r["symbol"] for r in bpe_vocab(merges, wc).collect()}
-    for l, r in merges:
-        assert l + r in vocab
-    # base characters of every word present
-    assert {"l", "o", "w", "t" + EOW} - vocab == set()
 
 
 def test_merge_fold_matches_replica_on_random_chains(spark):

@@ -79,110 +79,6 @@ def test_on_real_lsh_pairs(spark):
     assert minima.isdisjoint(dropped)
 
 
-# ---- PageRank ----
-
-
-def test_pagerank_matches_numpy_power_iteration(spark):
-    """Distributed PageRank == an independent numpy replica of the
-    same update rule (damping, weights, dangling redistribution) on a
-    planted graph with a dangling node and weighted edges."""
-    import numpy as np
-    import pandas as pd
-
-    from radares_spark.operators.components import pagerank
-
-    # nodes: a,b,c,d ; d is dangling (no out-edges)
-    edges = pd.DataFrame(
-        {
-            "src_host": ["a", "a", "b", "c"],
-            "dst_host": ["b", "c", "c", "d"],
-            "n_links": [2.0, 1.0, 1.0, 1.0],
-        }
-    )
-    got = {
-        r["node"]: r["rank"]
-        for r in pagerank(spark.createDataFrame(edges), iters=25).collect()
-    }
-
-    idx = {x: i for i, x in enumerate("abcd")}
-    M = np.zeros((4, 4))
-    for s, t, w in edges.itertuples(index=False):
-        M[idx[t], idx[s]] = w
-    out = M.sum(axis=0)
-    d = 0.85
-    r = np.full(4, 0.25)
-    for _ in range(25):
-        dangling = r[out == 0].sum()
-        inflow = np.zeros(4)
-        for j in range(4):
-            if out[j] > 0:
-                inflow += M[:, j] / out[j] * r[j]
-        r = (1 - d) / 4 + d * dangling / 4 + d * inflow
-    for x, i in idx.items():
-        assert abs(got[x] - r[i]) < 1e-6, (x, got[x], r[i])
-    assert abs(sum(got.values()) - 1.0) < 1e-6
-
-
-def test_pagerank_on_extracted_host_graph(spark):
-    """End-to-end: links extracted from planted pages -> canonical
-    host graph -> pagerank; the host every page links to outranks the
-    ones that only link out."""
-    import pandas as pd
-
-    from radares_spark.operators.components import pagerank
-    from radares_spark.operators.urls import outlink_host_graph
-
-    pages = pd.DataFrame(
-        {
-            "doc_id": range(4),
-            "url": [f"https://site{i}.com/p" for i in range(4)],
-            "html": [
-                '<a href="https://HUB.com/x">h</a> <a href="https://www.hub.com/y/">h2</a>'
-            ]
-            * 3
-            + ['<a href="https://site0.com/p?utm_source=z">back</a>'],
-        }
-    )
-    g = {
-        (r["src_host"], r["dst_host"]): r["n_links"]
-        for r in outlink_host_graph(spark.createDataFrame(pages)).collect()
-    }
-    # both link forms canonicalize onto hub.com
-    assert g[("site0.com", "hub.com")] == 2
-    assert g[("site3.com", "site0.com")] == 1
-    ranks = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            outlink_host_graph(spark.createDataFrame(pages)), iters=20
-        ).collect()
-    }
-    assert ranks["hub.com"] == max(ranks.values())
-
-
-def test_pagerank_empty_graph_and_zero_weight_dangling(spark):
-    """Review findings: an empty edge table yields an empty result
-    (not ZeroDivisionError at plan build), and a node whose out-edges
-    all weigh 0 is treated as DANGLING so ranks still sum to 1."""
-    import pandas as pd
-    from radares_spark.operators.components import pagerank
-
-    empty = spark.createDataFrame([], "src_host string, dst_host string, n_links double")
-    assert pagerank(empty, iters=2).count() == 0
-
-    edges = pd.DataFrame(
-        {
-            "src_host": ["a", "b"],
-            "dst_host": ["b", "a"],
-            "n_links": [1.0, 0.0],  # b's only out-edge carries no mass
-        }
-    )
-    ranks = {
-        r["node"]: r["rank"]
-        for r in pagerank(spark.createDataFrame(edges), iters=10).collect()
-    }
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-
-
 def test_cluster_representatives_keeps_best_not_min(spark):
     """Chain 1~2~3 is one transitive group; doc 3 is the longest so it
     is the representative — min-id canonicalization would keep doc 1,

@@ -233,3 +233,26 @@ def test_zero_norm_vectors_are_dropped_not_emitted(spark):
     assert ids == {1, 2}  # doc 0's only token has IDF 0 -> dropped
     for r in out.collect():
         assert abs(np.linalg.norm(np.array(r["embedding"])) - 1.0) < 1e-9
+
+
+def _typed_ids_frame(spark, ddl, ids):
+    texts = ["alpha beta gamma", "beta gamma delta epsilon", "", "zeta eta"]
+    return spark.createDataFrame(list(zip(ids, texts)), f"doc_id {ddl}, text string")
+
+
+@pytest.mark.parametrize(
+    "ddl, ids", [("int", [7, 8, 9, 10]), ("string", ["d-a", "d-b", "d-c", "d-d"])]
+)
+def test_doc_id_keeps_its_type(spark, ddl, ids):
+    """doc_id leaves hashed_tf with the input's type and values, and
+    each vector equals the one a long-keyed copy of the doc gets."""
+    out = hashed_tf(_typed_ids_frame(spark, ddl, ids))
+    assert out.schema["doc_id"].dataType.simpleString() == ddl
+    got = {r["doc_id"]: r["embedding"] for r in out.collect()}
+    assert set(got) == {ids[0], ids[1], ids[3]}  # empty text dropped
+    ref = {
+        r["doc_id"]: r["embedding"]
+        for r in hashed_tf(_typed_ids_frame(spark, "bigint", [0, 1, 2, 3])).collect()
+    }
+    for pos in (0, 1, 3):
+        assert got[ids[pos]] == ref[pos]

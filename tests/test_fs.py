@@ -59,7 +59,9 @@ def test_fs_helpers_on_file_uris(spark, tmp_path):
 
 def test_admission_compaction_over_file_uri(spark, tmp_path):
     """compact_ledger end to end with every path an explicit file: URI
-    — stream a landing dir, compact, verify the fold and the GC."""
+    — stream a landing dir, compact behind the commit watermark
+    (last_committed_epoch reads the checkpoint's commit log via
+    FileSystem), verify the fold and the GC."""
     from radares_spark.streaming.admission_stream import (
         compact_ledger,
         run_admission_stream,
@@ -76,56 +78,17 @@ def test_admission_compaction_over_file_uri(spark, tmp_path):
     audit = _furi(tmp_path / "audit")
     ckpt = _furi(tmp_path / "ckpt")
     run_admission_stream(spark, _furi(landing), ledger, audit, ckpt)
+    assert fs.last_committed_epoch(spark, ckpt) == 0
     assert fs.epoch_partitions(spark, ledger) == [0]
     led_df = spark.read.parquet(ledger)
     assert led_df.select("doc_id").distinct().count() == 8
     before = led_df.drop("epoch").distinct().count()
 
-    compact_ledger(spark, ledger)
+    compact_ledger(spark, ledger, checkpoint=ckpt)
     assert fs.epoch_partitions(spark, ledger) == [-1]
     assert spark.read.parquet(ledger).drop("epoch").distinct().count() == before
     # the staging sibling is GC'd (suffixed with the target epoch, r7)
     assert not fs.exists(spark, ledger.rstrip("/") + "__compact_tmp_e-1")
-
-
-def test_hotkeys_maintenance_over_file_uri(spark, tmp_path):
-    """hotkeys fold + generation compaction + snapshot prune, all file:
-    URIs: last_committed_epoch reads the checkpoint's commit log via
-    FileSystem, compaction GC's superseded partitions, totals exact."""
-    from radares_spark.streaming.hotkeys_stream import (
-        compact_hot_ledger,
-        current_top,
-        last_committed_epoch,
-        prune_snapshots,
-        run_hotkeys_stream,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    pdf = pd.DataFrame({"k": ["x"] * 5 + ["y"] * 3 + ["z"] * 2})
-    spark.createDataFrame(pdf).coalesce(1).write.parquet(_furi(landing / "f0"))
-
-    led, top, ckpt = (
-        _furi(tmp_path / "led"),
-        _furi(tmp_path / "top"),
-        _furi(tmp_path / "ckpt"),
-    )
-    run_hotkeys_stream(spark, _furi(landing), "k string", ["k"], led, top, ckpt)
-    assert last_committed_epoch(spark, ckpt) == 0
-    snap = {r["k"]: r["n_rows"] for r in current_top(spark, top).collect()}
-    assert snap == {"x": 5, "y": 3, "z": 2}
-
-    compact_hot_ledger(spark, led, ckpt)
-    assert fs.epoch_partitions(spark, led) == [-1]
-    # a second landing folds against the compacted generation
-    spark.createDataFrame(
-        pd.DataFrame({"k": ["y"] * 4})
-    ).coalesce(1).write.parquet(_furi(landing / "f1"))
-    run_hotkeys_stream(spark, _furi(landing), "k string", ["k"], led, top, ckpt)
-    snap = {r["k"]: r["n_rows"] for r in current_top(spark, top).collect()}
-    assert snap == {"x": 5, "y": 7, "z": 2}
-    prune_snapshots(spark, top, keep=1)
-    assert len(fs.epoch_partitions(spark, top)) == 1
 
 
 def test_heartbeat_survives_object_store_settimes_noop(

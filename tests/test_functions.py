@@ -70,21 +70,3 @@ def test_percentile_from_bins(spark):
     d = {r["g"]: r["p85_speed"] for r in rows}
     assert d["g1"] == 30  # cum: 10,20,100 -> first >= 85 is b2 (hi=30)
     assert d["g2"] == 10  # cum: 90 -> first >= 85 is b0 (hi=10)
-
-
-def test_percentile_from_bins_interp(spark):
-    from radares_spark.functions.histogram import percentile_from_bins_interp
-
-    rows = percentile_from_bins_interp(_hist_df(spark), ["g"], 0.85, BINS).collect()
-    d = {r["g"]: r["p85_interp"] for r in rows}
-    # g1: target 85; before b2 cum=20, b2 count=80 -> 21 + 9*(85-20)/80
-    assert d["g1"] == round(21 + 9 * 65 / 80, 4)
-    # g2: target 85 inside b0 (count 90) -> 0 + 10*85/90
-    assert d["g2"] == round(10 * 85 / 90, 4)
-    # interpolated estimate never exceeds the coarse bin-upper answer
-    coarse = {
-        r["g"]: r["p85_speed"]
-        for r in percentile_from_bins(_hist_df(spark), ["g"], 0.85, BINS).collect()
-    }
-    for g, v in d.items():
-        assert v <= coarse[g]

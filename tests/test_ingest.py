@@ -15,12 +15,7 @@ from radares_spark.io.ingest import clean_flows, parse_reports, quarantined
 from radares_spark.io.report_parser import build_bad_report, build_report
 from radares_spark.pipeline.audit import completeness_audit
 from radares_spark.pipeline.backfill import backfill_plan
-from radares_spark.pipeline.ledger import (
-    compact_partitions,
-    idempotent_append,
-    merge_flows,
-    reingest_overwrite,
-)
+from radares_spark.pipeline.ledger import idempotent_append
 from radares_spark.schemas import BIN_COLS
 
 EQUIPS = ["FS551JOI", "FS655JOI", "FS661JOI"]
@@ -77,92 +72,6 @@ def test_idempotent_append(spark, landing, tmp_path):
     # partitioned by pubdate on disk
     parts = {p.name for p in Path(wh, "flows").iterdir() if p.is_dir()}
     assert parts == {f"pubdate={d.isoformat()}" for d in DATES}
-
-
-def test_reingest_overwrites_only_touched_partitions(spark, landing, tmp_path):
-    """Repair path: dynamic partition overwrite replaces ONLY the
-    pubdates present in the corrected input (ledger.reingest_overwrite)."""
-    wh = str(tmp_path / "warehouse")
-    flows = clean_flows(parse_reports(spark, landing))
-    idempotent_append(spark, flows, wh)
-    before_day1 = (
-        spark.read.parquet(f"{wh}/flows").filter(F.col("pubdate") == str(DATES[0])).count()
-    )
-
-    # "corrected" day-2 data: only one device's report survives review
-    fixed = flows.filter(
-        (F.col("pubdate") == str(DATES[1])) & (F.col("equipment") == EQUIPS[0])
-    )
-    n = reingest_overwrite(spark, fixed, wh)
-    assert n == 96  # template 1 report
-
-    stored = spark.read.parquet(f"{wh}/flows")
-    # day 2 fully replaced by the corrected subset...
-    assert stored.filter(F.col("pubdate") == str(DATES[1])).count() == 96
-    # ...day 1 untouched
-    assert stored.filter(F.col("pubdate") == str(DATES[0])).count() == before_day1
-
-
-def test_merge_flows_upserts_groups(spark, landing, tmp_path):
-    """MERGE semantics: matched (pubdate, equipment) groups replaced,
-    unmatched kept, new keys inserted + ledgered; only touched pubdate
-    partitions rewritten."""
-    wh = str(tmp_path / "warehouse")
-    flows = clean_flows(parse_reports(spark, landing))
-    idempotent_append(spark, flows, wh)
-    before_day1 = (
-        spark.read.parquet(f"{wh}/flows").filter(F.col("pubdate") == str(DATES[0])).count()
-    )
-
-    # corrected report for (day2, equip0): zero out the bins; plus a
-    # brand-new device for day2
-    corrected = (
-        flows.filter(
-            (F.col("pubdate") == str(DATES[1])) & (F.col("equipment") == EQUIPS[0])
-        )
-        .withColumn(BIN_COLS[0], F.lit(0))
-    )
-    new_dev = corrected.withColumn("equipment", F.lit("FS999JOI"))
-    merge_flows(spark, corrected.unionByName(new_dev).drop("equipment_files_id"), wh)
-
-    stored = spark.read.parquet(f"{wh}/flows")
-    day2 = stored.filter(F.col("pubdate") == str(DATES[1]))
-    # replaced group carries the correction
-    assert (
-        day2.filter(F.col("equipment") == EQUIPS[0]).agg(F.sum(BIN_COLS[0])).collect()[0][0]
-        == 0
-    )
-    # untouched groups in the same partition survive
-    assert day2.filter(F.col("equipment") == EQUIPS[1]).count() == 192
-    # new key inserted and ledgered
-    assert day2.filter(F.col("equipment") == "FS999JOI").count() == 96
-    ledger = spark.read.parquet(f"{wh}/equipment_files")
-    assert ledger.filter(F.col("equipment") == "FS999JOI").count() == 1
-    # other partition untouched
-    assert stored.filter(F.col("pubdate") == str(DATES[0])).count() == before_day1
-
-
-def test_compact_partitions(spark, landing, tmp_path):
-    wh = str(tmp_path / "warehouse")
-    flows = clean_flows(parse_reports(spark, landing))
-    idempotent_append(spark, flows, wh)
-    # second batch for the same days -> extra files per partition
-    extra = flows.withColumn("equipment", F.concat(F.col("equipment"), F.lit("X")))
-    idempotent_append(spark, extra, wh)
-
-    def files_per_part():
-        return {
-            p.name: len(list(p.glob("*.parquet")))
-            for p in Path(wh, "flows").iterdir()
-            if p.is_dir()
-        }
-
-    before_total = spark.read.parquet(f"{wh}/flows").count()
-    assert all(n >= 2 for n in files_per_part().values())
-    compacted = compact_partitions(spark, f"{wh}/flows")
-    assert compacted == len(DATES)
-    assert all(n == 1 for n in files_per_part().values())
-    assert spark.read.parquet(f"{wh}/flows").count() == before_total
 
 
 def test_e2e_ingested_flows_feed_analytics(spark, landing, tmp_path):

@@ -12,14 +12,28 @@ from pyspark.sql import functions as F
 
 from radares_spark.io.layout import read_pruned, write_layout
 from radares_spark.io.tables import load_table
-from radares_spark.streaming.corpus_stream import doc_features
+from radares_spark.operators.dedup import normalize_text
+from radares_spark.operators.text import LANG_MARKERS, stopword_hits
 
 SF = "/root/testdata/sf0.001"
 
 
+def _pred_lang(text):
+    """Marker-voting language id as a per-row projection (fixed
+    en>es>fr>de tie order, zero hits -> 'und') — a skewed, low-
+    cardinality partition column."""
+    norm = normalize_text(F.coalesce(text, F.lit("")))
+    hits = {lang: stopword_hits(norm, words) for lang, words in LANG_MARKERS.items()}
+    best = F.greatest(*hits.values())
+    pick = F.when(best == F.lit(0), "und")
+    for lang in LANG_MARKERS:
+        pick = pick.when(hits[lang] == best, lang)
+    return pick
+
+
 def _write_docs_layout(spark, path: str, max_records_per_file: int = 1_000_000):
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    feats = doc_features(docs).select("doc_id", "text", "pred_lang")
+    feats = docs.select("doc_id", "text", _pred_lang(F.col("text")).alias("pred_lang"))
     write_layout(
         feats, path, partition_col="pred_lang", sort_col="doc_id",
         max_records_per_file=max_records_per_file,

@@ -1,13 +1,12 @@
-"""Corpus mixing + split assignment (pipeline/corpus.py): exact
-DuckDB-oracle parity for the hash arithmetic, determinism, and the
-stability-under-growth property that keeps eval splits honest."""
+"""Corpus mixing (pipeline/corpus.py): exact DuckDB-oracle parity for
+the hash arithmetic, determinism, and temperature-scaled rates."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from radares_spark.io.tables import load_table
-from radares_spark.pipeline.corpus import assign_splits, mix_corpus
+from radares_spark.pipeline.corpus import mix_corpus
 from tests.conftest import SF_ORACLE
 from tests.oracle import compare_frames, duckdb_conn
 
@@ -21,14 +20,6 @@ FROM documents
 WHERE {_UNIT.format(salt='mix')} <
       CASE source WHEN 'src0' THEN 250000 WHEN 'src1' THEN 1000000
                   WHEN 'src2' THEN 600000 WHEN 'src3' THEN 50000 ELSE 0 END
-"""
-
-SPLIT_ORACLE = f"""
-SELECT doc_id,
-       CASE WHEN {_UNIT.format(salt='split')} < 20000 THEN 'test'
-            WHEN {_UNIT.format(salt='split')} < 70000 THEN 'val'
-            ELSE 'train' END AS split
-FROM documents
 """
 
 
@@ -71,43 +62,6 @@ def test_mix_rate_converges_at_scale(spark):
     )
     kept = mix_corpus(big, {"src0": 0.3}).count()
     assert abs(kept / 100_000 - 0.3) < 0.01, kept
-
-
-def test_assign_splits_oracle_parity_and_partition(spark):
-    # 2% test / 5% val (val_pct/test_pct are percents)
-    sdf = assign_splits(_docs(spark).select("doc_id"), val_pct=5, test_pct=2).select(
-        "doc_id", "split"
-    )
-    con = duckdb_conn(SF_ORACLE)
-    try:
-        tbl = con.execute(SPLIT_ORACLE).arrow()
-    finally:
-        con.close()
-    ok, msg = compare_frames(sdf, tbl)
-    assert ok, msg
-    # exactly one split per doc, all three present at this corpus size
-    assert sdf.count() == _docs(spark).count()
-    assert {r["split"] for r in sdf.select("split").distinct().collect()} == {
-        "train",
-        "val",
-        "test",
-    }
-
-
-def test_splits_stable_under_corpus_growth(spark):
-    """A doc's split must be a pure function of its id: assigning on
-    half the corpus and on the full corpus must agree on the shared
-    docs (no migration when new data arrives)."""
-    docs = _docs(spark).select("doc_id")
-    half = docs.filter(F.col("doc_id") % 2 == 0)
-    full_assign = assign_splits(docs, val_pct=5, test_pct=5).withColumnRenamed(
-        "split", "full_split"
-    )
-    half_assign = assign_splits(half, val_pct=5, test_pct=5)
-    moved = half_assign.join(full_assign, "doc_id").filter(
-        F.col("split") != F.col("full_split")
-    )
-    assert moved.count() == 0
 
 
 # ---- temperature-scaled source mixing (mT5/UniMax lineage) ----

@@ -1,6 +1,6 @@
 """Int8 quantization (operators/quantize.py): DuckDB parity (exact —
-integer dots are order-independent), reconstruction error bound, top-k
-recall vs the exact float path, and the staged-projection plan guard
+integer dots are order-independent), reconstruction error bound, and
+the staged-projection plan guard
 (the amax alias must NOT be re-inlined into all 64 terms)."""
 
 from __future__ import annotations
@@ -8,16 +8,10 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from radares_spark.io.tables import spread
-from radares_spark.operators.quantize import (
-    Q_LEVELS,
-    quantize_embeddings,
-    quantized_topk,
-)
-from radares_spark.operators.similarity import TOP_K, _normed, cosine_topk
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from radares_spark.operators.quantize import Q_LEVELS, quantize_embeddings
+from tests.conftest import SF_SMOKE
 
 # DuckDB parity for similarity_quantize runs in the consolidated
 # library sweep (tests/test_oracle_parity.py::test_library_parity).
@@ -35,28 +29,6 @@ def test_reconstruction_error_bounded_by_half_scale(spark):
         assert r["qnrm"] == pytest.approx(
             math.sqrt(sum(q * q for q in r["q"]))
         )
-
-
-def test_quantized_topk_recall_vs_exact(spark):
-    """The corpus is the adversarial case for int8 (near-uniform random
-    vectors, tiny cosine gaps between rank-k and rank-k+1) — measured
-    recall 0.975 at sf0.01; pinned >= 0.9."""
-    emb = spread(spark, SF_ORACLE, "embeddings")
-    qt = quantize_embeddings(emb).cache()
-    normed = _normed(spark, SF_ORACLE)
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk(
-            normed, normed.filter(F.col("vec_id") < 8), k=TOP_K
-        ).collect()
-    }
-    quant = {
-        (r["query_id"], r["neighbor_id"])
-        for r in quantized_topk(qt, qt.filter(F.col("vec_id") < 8), k=TOP_K).collect()
-    }
-    assert len(exact) == len(quant) == 8 * TOP_K
-    assert len(exact & quant) / len(exact) >= 0.9
-    qt.unpersist()
 
 
 def test_amax_alias_stays_staged(spark):

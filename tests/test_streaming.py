@@ -1,5 +1,5 @@
 """Structured Streaming: AvailableNow ingest exactly-once, tumbling
-windows vs batch equivalence, applyInPandasWithState sessionizer."""
+windows vs batch equivalence, watermarked late-row drop."""
 
 from __future__ import annotations
 
@@ -18,11 +18,7 @@ from radares_spark.io.report_parser import build_bad_report, build_report
 from radares_spark.io.tables import load_table
 from radares_spark.pipeline.run_log import read_run_log
 from radares_spark.streaming.ingest_stream import run_ingest_stream
-from radares_spark.streaming.windows import (
-    session_windows_native,
-    sessionize_stateful,
-    tumbling_15min,
-)
+from radares_spark.streaming.windows import tumbling_15min
 
 SF = "/root/testdata/sf0.001"
 
@@ -155,143 +151,3 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     # the 08:00 window was emitted once, from batch 1 only (n=2) — the
     # late 99.0 row vanished instead of duplicating/correcting it
     assert got[t] == (2, 2.0)
-
-
-@pytest.mark.slow  # >=10 s in the r15 full-suite durations log
-def test_streaming_exact_dedup(spark, tmp_path):
-    """Streaming dedup keyed on the normalized-text hash: duplicate
-    texts arriving in later micro-batches are dropped by keyed state
-    (streaming/dedup_stream.py)."""
-    from radares_spark.streaming.dedup_stream import dedup_doc_stream
-
-    src = tmp_path / "docs_src"
-    src.mkdir()
-    out = str(tmp_path / "docs_out")
-    ckpt = str(tmp_path / "docs_ckpt")
-    schema = "doc_id long, text string, ingest_ts timestamp"
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / name))
-
-    def run():
-        stream = spark.readStream.schema(schema).option("pathGlobFilter", "*.parquet").parquet(
-            str(src) + "/*"
-        )
-        q = (
-            dedup_doc_stream(stream)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    t = dt.datetime(2024, 6, 1, 9, 0)
-    write_batch("b1", [(1, "Hello, World!", t), (2, "something else", t)])
-    run()
-    # batch 2: doc 3 normalizes identically to doc 1 ("hello world"),
-    # doc 4 is new
-    write_batch(
-        "b2",
-        [(3, "hello   WORLD", t + dt.timedelta(minutes=5)),
-         (4, "fresh content", t + dt.timedelta(minutes=5))],
-    )
-    run()
-
-    got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
-    assert got == [1, 2, 4]  # doc 3 deduped against doc 1's state
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream interval join (both sides watermarked, state
-    bounded by the lookback) produces exactly the batch join's rows."""
-    from radares_spark.streaming.joins import clicks_before_errors
-
-    events = load_table(spark, SF, "events")
-    errors = events.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = events.filter(F.col("event_type") == "click").select("user_id", "ts")
-
-    def key(rows):
-        return sorted(
-            (r["event_id"], r["user_id"], r["error_ts"], r["click_ts"]) for r in rows
-        )
-
-    # sf0.001 events are sparse: a 24h lookback yields ~114 pairs
-    expect = key(clicks_before_errors(errors, clicks, lookback="24 hours").collect())
-    assert len(expect) > 100  # non-vacuous on the testdata
-
-    esrc, csrc = str(tmp_path / "errs"), str(tmp_path / "clicks")
-    errors.write.parquet(esrc)
-    clicks.write.parquet(csrc)
-    e_stream = spark.readStream.schema(errors.schema).parquet(esrc)
-    c_stream = spark.readStream.schema(clicks.schema).parquet(csrc)
-    q = (
-        clicks_before_errors(e_stream, c_stream, lookback="24 hours")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ssjoin")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = key(spark.sql("select * from ssjoin").collect())
-    assert got == expect
-
-
-def test_native_session_window_matches_lag_form(spark):
-    """Three sessionizer implementations, one semantics: the native
-    session_window's per-user session count and total events must match
-    the lag/cumsum batch query."""
-    from radares_spark.plans.relational import events_sessionize
-
-    expect = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in events_sessionize(spark, SF).collect()
-    }
-    native = session_windows_native(load_table(spark, SF, "events"))
-    got = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in native.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.sum("n_events").cast("long").alias("n_events"),
-        )
-        .collect()
-    }
-    assert got == expect
-
-
-def test_stateful_sessionizer(spark, tmp_path):
-    events = load_table(spark, SF, "events").filter(F.col("user_id") < 10)
-    # batch truth (same 30-min gap rule)
-    from radares_spark.plans.relational import events_sessionize
-
-    expect = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in events_sessionize(spark, SF).filter(F.col("user_id") < 10).collect()
-    }
-
-    src = str(tmp_path / "sess_src")
-    events.write.parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (
-        sessionize_stateful(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sessions")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in spark.sql(
-            "select user_id, max_by(n_sessions, n_events) as n_sessions, max(n_events) as n_events "
-            "from sessions group by user_id"
-        ).collect()
-    }
-    assert got == expect

@@ -208,27 +208,6 @@ def test_domain_cap_null_quality_ranks_last(spark):
     assert got == {1: 1, 2: 2, 0: 3}  # NULL quality never outranks real scores
 
 
-def test_outlink_graph_drops_schemeless_links(spark):
-    """Review finding: relative/mailto/javascript hrefs must not
-    become fake host nodes — only absolute http(s) links form edges."""
-    import pandas as pd
-    from radares_spark.operators.urls import outlink_host_graph
-
-    pages = pd.DataFrame(
-        {
-            "doc_id": [0],
-            "url": ["https://example.com/p"],
-            "html": [
-                '<a href="about.html">a</a> <a href="mailto:x@y.z">m</a>'
-                ' <a href="javascript:void(0)">j</a>'
-                ' <a href="https://real.com/x">r</a>'
-            ],
-        }
-    )
-    g = outlink_host_graph(spark.createDataFrame(pages)).collect()
-    assert {(r["src_host"], r["dst_host"]) for r in g} == {("example.com", "real.com")}
-
-
 def test_canonicalization_conformance_fuzz(spark):
     """Cross-engine conformance sweep: every combination of
     adversarial URL parts (schemes incl. casing and non-http, hosts
