@@ -309,10 +309,6 @@ def parse_cli_date(s: str, today: dt.date | None = None) -> dt.date:
     return d
 
 
-def _ingest(spark: SparkSession, landing: str, warehouse: str, checkpoint: str) -> None:
-    run_ingest_stream(spark, landing, warehouse, checkpoint)
-
-
 def cmd_scrape(
     spark: SparkSession,
     http,
@@ -329,7 +325,7 @@ def cmd_scrape(
     day = day or (dt.date.today() - dt.timedelta(days=1))
     results = fetch_reports(http, report_url, [(e, day) for e in devices], landing)
     append_run_log(fetch_run_log(spark, results), warehouse)
-    _ingest(spark, landing, warehouse, checkpoint)
+    run_ingest_stream(spark, landing, warehouse, checkpoint)
 
 
 def cmd_backload(
@@ -347,10 +343,10 @@ def cmd_backload(
     ledger is missing (anti-join planner), land, ingest. Returns the
     number of work items fetched; a re-run over the same range is a
     no-op (plans empty)."""
+    from radares_spark.io import fs as iofs
+
     ledger_path = os.path.join(warehouse, "equipment_files")
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(ledger_path)  # type: ignore[union-attr]
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    if fs.exists(jvm_path):
+    if iofs.exists(spark, ledger_path):
         ledger = spark.read.parquet(ledger_path).select("pubdate", "equipment")
     else:
         ledger = spark.createDataFrame([], "pubdate date, equipment string")
@@ -361,7 +357,7 @@ def cmd_backload(
         return 0
     results = fetch_reports(http, report_url, work, landing)
     append_run_log(fetch_run_log(spark, results), warehouse)
-    _ingest(spark, landing, warehouse, checkpoint)
+    run_ingest_stream(spark, landing, warehouse, checkpoint)
     return len(work)
 
 
@@ -901,9 +897,7 @@ def _corpus_nightly_run(
         nights/<night>/               kept/ audit/ url_audit/
         state_ledger/                 refresh state, ONE epoch-delta
                                       ledger (night N appends only its
-                                      changed rows as epoch=N; roots
-                                      predating it keep their rotated
-                                      state/<night>/ dirs)
+                                      changed rows as epoch=N)
         kept_store/ postings_store/ ivf_store/   serving stores
         tokenizer/ shards/            frozen artifact + shard store
         night_log                     completed nights, written LAST
@@ -1020,26 +1014,15 @@ def _corpus_nightly_run(
             "concurrently; if that run is dead, delete the claim file "
             "and re-run"
         )
-    # refresh state: NEW roots use the delta state ledger (one epoch
-    # appended per night, r10 verdict #1); roots that already rotate
-    # state/<night>/ dirs keep doing so — the two layouts share every
-    # code path below via the refresh layer's str|LedgerState dispatch
-    # resolved through the pointer log: corpus-reinit swaps in a fresh
-    # ledger (state_ledger.m<k>) when the curation knobs change
-    state_led = resolve_store(spark, root_dir, "state_ledger")
-    legacy_state = not iofs.has_parquet(spark, state_led) and iofs.has_parquet(
-        spark, os.path.join(root_dir, "state")
-    )
-    if legacy_state:
-        prior_state = (
-            os.path.join(root_dir, "state", done[-1]) if done else None
-        )
-        state_dir = os.path.join(root_dir, "state", night)
-    else:
-        from radares_spark.pipeline.state_ledger import LedgerState
+    # refresh state: the delta state ledger (one epoch appended per
+    # night, r10 verdict #1), resolved through the pointer log:
+    # corpus-reinit swaps in a fresh ledger (state_ledger.m<k>) when
+    # the curation knobs change
+    from radares_spark.pipeline.state_ledger import LedgerState
 
-        prior_state = LedgerState(state_led, len(done) - 1) if done else None
-        state_dir = LedgerState(state_led, len(done))
+    state_led = resolve_store(spark, root_dir, "state_ledger")
+    prior_state = LedgerState(state_led, len(done) - 1) if done else None
+    state_dir = LedgerState(state_led, len(done))
 
     _check_root_lease(root_dir)  # next: crawl mutates ledgers/out_dir
     counts = cmd_crawl_nightly(
@@ -1065,14 +1048,9 @@ def _corpus_nightly_run(
     # PREVIOUS completed night's profile — crawl-vs-crawl distribution
     # drift, the data-quality alarm a production ingest watches.
     # Deterministic on replay (crawl preserves kept/, the profile
-    # rewrite converges); pre-upgrade nights have no profile and
-    # simply report no psi. --prune-nights keeps >= 1 completed night,
+    # rewrite converges). --prune-nights keeps >= 1 completed night,
     # so the profile the NEXT night compares against always survives.
-    from radares_spark.operators.drift import (
-        crawl_profile,
-        profile_psi,
-        recap_profile_hosts,
-    )
+    from radares_spark.operators.drift import crawl_profile, profile_psi
 
     _check_root_lease(root_dir)  # next: profile write under out_dir
     profile_dir = os.path.join(out_dir, "drift_profile")
@@ -1088,14 +1066,9 @@ def _corpus_nightly_run(
             # produces structurally noisier terms than the token-bin
             # histogram, so one summed score would drown a real
             # tok_bin shift — an operator alerts per dimension
-            # the prior is re-capped through the same top-N+__other
-            # host fold tonight's profile was built with: a pre-cap
-            # prior (every host named) would otherwise spike the host
-            # PSI once on the first post-upgrade night; on an
-            # already-capped prior the re-cap is a no-op (r12 advice)
             per_dim = (
                 profile_psi(
-                    recap_profile_hosts(spark.read.parquet(prev_profile)),
+                    spark.read.parquet(prev_profile),
                     spark.read.parquet(profile_dir),
                 )
                 .groupBy("dim")
@@ -1293,136 +1266,13 @@ def cmd_ivf_retrain(
 def cmd_nightly_verify(spark: SparkSession, root_dir: str) -> dict:
     """Cross-store consistency audit for a corpus-nightly root
     (``pipeline/nightly_audit.py``): the night log vs every store's
-    own completion evidence — URL/content ledger epochs, rotated
-    refresh states + knobs, kept/IVF/postings id sets, shard-store
+    own completion evidence — URL/content ledger epochs, the delta
+    state ledger + knobs, kept/IVF/postings id sets, shard-store
     night tags (read through the pointer log). Exit code 1 on any
     divergence; the operator-facing counterpart of shards-verify."""
     from radares_spark.pipeline.nightly_audit import verify_nightly_root
 
     return verify_nightly_root(spark, root_dir)
-
-
-def _migrate_legacy_state(spark: SparkSession, root_dir: str) -> dict:
-    """corpus-maintain --migrate-state: move a legacy root's rotated
-    ``state/<night>/`` dirs onto the delta state ledger under the
-    SAME knobs (r11 verdict #1 — corpus-reinit only covers the
-    knobs-change path, so pre-ledger deployments had no supported
-    move off the O(corpus)-per-night rewrite).
-
-    Steps, ordered for the crash contract: (1) land the LAST
-    completed night's features/bands/audit as the base epoch
-    ``n_nights - 1`` of a fresh ``state_ledger.m<k>`` candidate (a
-    partial rerun overwrites — write_state_epoch clears its epoch
-    partition first and the knobs write is an overwrite); (2) flip
-    the ``state_ledger`` pointer (the atomic adoption point — the
-    next night reads the ledger as "last night's state" and appends
-    only its delta); (3) archive the rotated dirs to
-    ``state_archived_pre_ledger/`` (history preserved, the unbounded
-    per-night retention ended). A rerun after the flip completes only
-    the archive step; a rerun after completion fails fast."""
-    from radares_spark.io import fs as iofs
-    from radares_spark.pipeline.state_ledger import (
-        STATE_TABLES,
-        LedgerState,
-        write_state_epoch,
-    )
-    from radares_spark.pipeline.stores import (
-        flip_stores,
-        next_flip_index,
-        resolve_store,
-    )
-
-    log = os.path.join(root_dir, "night_log")
-    if not iofs.has_parquet(spark, log):
-        raise ValueError(
-            "--migrate-state needs a completed root (night log missing) — "
-            "a fresh root gets the delta ledger from its first "
-            "corpus-nightly automatically"
-        )
-    done = [
-        r["night"] for r in spark.read.parquet(log).orderBy("idx").collect()
-    ]
-    legacy_root = os.path.join(root_dir, "state")
-    archive = os.path.join(root_dir, "state_archived_pre_ledger")
-    cur_led = resolve_store(spark, root_dir, "state_ledger")
-    if iofs.has_parquet(spark, cur_led):
-        if iofs.is_dir(spark, legacy_root):
-            # crashed between flip and archive: finish the archive
-            if iofs.is_dir(spark, archive):
-                # both dirs present can only mean manual surgery (the
-                # tool archives exactly once, post-flip) — fail with
-                # the remedy instead of fs.rename's bare refusal
-                raise ValueError(
-                    f"--migrate-state: both {legacy_root!r} and its "
-                    f"archive {archive!r} exist — this migration "
-                    "already completed and state/ was recreated by "
-                    "hand; remove or rename one of the two dirs "
-                    "(the serving truth is the delta state ledger "
-                    f"{cur_led!r}; neither dir is read) and re-run"
-                )
-            iofs.rename(spark, legacy_root, archive)
-            return {"state_migrated": 0, "state_archive_completed": 1}
-        raise ValueError(
-            "--migrate-state: this root already serves the delta state "
-            f"ledger ({cur_led!r}) and has no rotated state/ dirs — "
-            "nothing to migrate"
-        )
-    # ANY state dir the night log does not record is a crashed night
-    # ahead of the log (its partial dir would be archived wholesale and
-    # its replay would then run ledger-mode over a base that never saw
-    # it) — fail fast, matching the replay-first contract below (r12
-    # verdict #4: previously only the features-missing case tripped).
-    unlogged = sorted(
-        n for n in iofs.list_names(spark, legacy_root)
-        if n not in done and not n.startswith("_")
-    )
-    if unlogged:
-        raise ValueError(
-            f"--migrate-state: state dir(s) {unlogged!r} under "
-            f"{legacy_root!r} are not in the night log ({done!r}) — a "
-            "crashed night is ahead of the log; replay it under its "
-            "original tag (corpus-nightly completes it and logs it), "
-            "then migrate"
-        )
-    last_dir = os.path.join(legacy_root, done[-1])
-    if not iofs.has_parquet(spark, os.path.join(last_dir, "features")):
-        raise ValueError(
-            f"--migrate-state: last completed night's state {last_dir!r} "
-            "is missing its features table — run nightly-verify; a "
-            "crashed night must be replayed before migrating"
-        )
-    base_epoch = len(done) - 1
-    new_led = LedgerState(
-        os.path.join(
-            root_dir, f"state_ledger.m{next_flip_index(spark, root_dir)}"
-        ),
-        base_epoch,
-    )
-    n_rows = 0
-    for table in STATE_TABLES:
-        tdir = os.path.join(last_dir, table)
-        if not iofs.has_parquet(spark, tdir):
-            continue
-        full = spark.read.parquet(tdir)
-        write_state_epoch(
-            spark, new_led, table, full, full.select("doc_id").limit(0)
-        )
-        n_rows += spark.read.parquet(new_led.table_dir(table)).count()
-    knobs = os.path.join(last_dir, "knobs")
-    if iofs.has_parquet(spark, knobs):
-        spark.read.parquet(knobs).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(f"{new_led.ledger_dir}/knobs")
-    flip_idx = flip_stores(
-        spark, root_dir, {"state_ledger": new_led.ledger_dir}
-    )
-    iofs.rename(spark, legacy_root, archive)
-    return {
-        "state_migrated": 1,
-        "state_base_epoch": base_epoch,
-        "state_rows_landed": n_rows,
-        "state_flip_idx": flip_idx,
-    }
 
 
 def cmd_corpus_maintain(spark: SparkSession, root_dir: str, **kwargs) -> dict:
@@ -1453,7 +1303,6 @@ def _corpus_maintain_run(
     compact_shards: bool = False,
     compact_states: bool = False,
     prune_nights: int | None = None,
-    migrate_state: bool = False,
 ) -> dict:
     """Periodic artifact maintenance for a corpus-nightly root — the
     composition that CONSUMES the maintenance telemetry and finishes
@@ -1470,21 +1319,6 @@ def _corpus_maintain_run(
       (completed-night tags carried, so old-night replays stay
       no-ops), then flips ``shards`` AND ``tokenizer`` in ONE pointer
       append — the pair can never be observed half-swapped.
-
-    - ``--migrate-state`` moves a LEGACY root (rotated
-      ``state/<night>/`` dirs — the pre-ledger layout) onto the delta
-      state ledger under its EXISTING knobs: the last completed
-      night's state tables land as the base epoch ``n_nights - 1`` of
-      a fresh ``state_ledger.m<k>``, the knobs meta travels with
-      them, the ``state_ledger`` pointer flips, and the rotated dirs
-      are archived to ``state_archived_pre_ledger/``. The next night
-      then appends only its delta epoch — without this, a pre-ledger
-      root keeps paying the full O(corpus) state rewrite nightly and
-      retains every night's copy forever (``corpus-reinit`` covers
-      only the knobs-CHANGE path; it refuses identical knobs). A
-      crash before the flip leaves the rotated dirs serving (rerun
-      rebuilds the candidate deterministically); a crash after it
-      leaves only the archive step, which the rerun completes.
     - ``--compact-states`` folds the delta state ledger's completed
       per-night epochs into its ``epoch=-1`` base
       (``pipeline/state_ledger.compact_state_ledger``): the fold is
@@ -1539,12 +1373,6 @@ def _corpus_maintain_run(
     if ivf not in ("auto", "force", "skip"):
         raise ValueError(f"--ivf must be auto|force|skip, got {ivf!r}")
     counts: dict = {}
-
-    if migrate_state:
-        _check_root_lease(root_dir)
-        # runs FIRST so --migrate-state --compact-states composes: the
-        # compaction below resolves the freshly flipped ledger
-        counts.update(_migrate_legacy_state(spark, root_dir))
 
     if ivf != "skip":
         cur = resolve_store(spark, root_dir, "ivf_store")
@@ -1643,9 +1471,8 @@ def _corpus_maintain_run(
         if not iofs.has_parquet(spark, led):
             raise ValueError(
                 "--compact-states requires the delta state ledger "
-                f"({led!r}); a legacy root's rotated state/<night>/ dirs "
-                "have no epochs to fold — prune them by deleting old "
-                "night dirs (keep the last) instead"
+                f"({led!r}), which the root's first corpus-nightly "
+                "writes — none found"
             )
         log = os.path.join(root_dir, "night_log")
         n_done = (
@@ -2002,7 +1829,6 @@ def main(argv: list[str] | None = None) -> int:
     cm.add_argument("--compact-shards", action="store_true", help="fold the shard store's per-night epoch partitions into one epoch=-1 partition in a NEW store (~128MiB files), then flip the pointer — content-identical: meta/frontier/tags carried, verify and exports unchanged")
     cm.add_argument("--compact-states", action="store_true", help="fold the delta state ledger's completed per-night epochs into its epoch=-1 base (night-log gated: a crashed night's epoch never folds); bounds state retention to one base + the epochs since the last fold")
     cm.add_argument("--prune-nights", type=int, default=None, metavar="K", help="delete the nights/<night>/ output dirs of all but the last K COMPLETED nights (pure audit archive once logged; un-logged dirs are never touched)")
-    cm.add_argument("--migrate-state", action="store_true", help="move a pre-ledger root's rotated state/<night>/ dirs onto the delta state ledger under the SAME knobs: last night's state lands as the ledger base epoch, the pointer flips, the dirs archive — the next night appends only its delta")
     ri = sub.add_parser("corpus-reinit")
     ri.add_argument("--root", required=True, help="corpus-nightly pipeline root")
     _add_refresh_knobs(ri)
@@ -2095,7 +1921,6 @@ def main(argv: list[str] | None = None) -> int:
             compact_shards=args.compact_shards,
             compact_states=args.compact_states,
             prune_nights=args.prune_nights,
-            migrate_state=args.migrate_state,
         )
         _print_sorted(counts)
         return 0

@@ -355,38 +355,6 @@ def crawl_profile(docs: DataFrame) -> DataFrame:
     return out
 
 
-def recap_profile_hosts(profile: DataFrame) -> DataFrame:
-    """Re-apply the ``PROFILE_HOST_TOPN``+``__other`` host cap to a
-    STORED profile — the upgrade shim for roots whose previous night
-    predates the cap (r12 advice #3): an uncapped prior (every host
-    named) compared against tonight's capped profile leaves most host
-    buckets one-sided, each contributing a large clamp term — a
-    one-time spurious ``drift_psi_host_x1e6`` spike on the first
-    post-upgrade night. Capping the prior the same way removes the
-    artifact; on an ALREADY-capped profile this is a no-op
-    (``__other`` never competes for a named slot, so the kept set is
-    unchanged). Counts are conserved either way; non-host dims pass
-    through untouched. Profiles are kilobyte frames — driver-cheap."""
-    hosts = profile.filter(F.col("dim") == "host")
-    rest = profile.filter(F.col("dim") != "host")
-    top = (
-        hosts.filter(F.col("bucket") != "__other")
-        .orderBy(F.desc("n"), F.asc("bucket"))
-        .limit(PROFILE_HOST_TOPN)
-        .select("bucket", F.lit(True).alias("__top"))
-    )
-    capped = (
-        hosts.join(F.broadcast(top), "bucket", "left")
-        .withColumn(
-            "bucket",
-            F.when(F.col("__top"), F.col("bucket")).otherwise(F.lit("__other")),
-        )
-        .groupBy("dim", "bucket")
-        .agg(F.sum("n").alias("n"))
-    )
-    return rest.unionByName(capped.select("dim", "bucket", "n"))
-
-
 def profile_psi(prior: DataFrame, tonight: DataFrame) -> DataFrame:
     """Per-bucket PSI between two stored crawl profiles (already
     aggregated — kilobyte frames): full-outer join on (dim, bucket)

@@ -345,14 +345,11 @@ def refresh_ivf_store(
     # refresh (kilobyte aggregate over the _assignment ledger). Either
     # symptom past its threshold sets retrain_due — the caller
     # schedules a periodic build_ivf_index rebuild, the standard IVF
-    # serving playbook. Stores predating the _stats sidecar skip the
-    # drift half (fields None).
-    from radares_spark.io import fs as iofs
-
+    # serving playbook.
     delta_mean_cos = None
     train_mean_cos = None
     drift = None
-    if n_delta and iofs.has_parquet(spark, f"{path}/_stats"):
+    if n_delta:
         train_mean_cos = spark.read.parquet(f"{path}/_stats").collect()[0][
             "train_mean_cos"
         ]

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from radares_spark.io import fs as iofs
+
 NATURAL_KEY = ["pubdate", "equipment"]
 
 
@@ -70,9 +72,7 @@ def idempotent_append(
     # reference enforces with a DB index (schema.sql:31-33). Only a
     # genuinely missing ledger path skips the anti-join; every other
     # error propagates and fails the ingest.
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(ledger_path)  # type: ignore[union-attr]
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    if fs.exists(jvm_path):
+    if iofs.exists(spark, ledger_path):
         existing = spark.read.parquet(ledger_path).select(*NATURAL_KEY)
         before = flows.select(*NATURAL_KEY).distinct()
         new_keys = before.join(existing, NATURAL_KEY, "left_anti")

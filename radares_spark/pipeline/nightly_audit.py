@@ -4,8 +4,8 @@ shards-verify, one level up).
 
 The night log is the root's source of truth for completed nights; every
 store underneath keeps its own completion evidence (URL/content ledger
-epochs, refresh state dirs, shards/postings night-tag sets, the pointer
-log). A crash, a foreign store dropped into the root, or a manually
+epochs, the delta state ledger, shards/postings night-tag sets, the
+pointer log). A crash, a foreign store dropped into the root, or a manually
 mangled log each leave those records DISAGREEING — this audit
 cross-checks them all and reports one named flag per invariant,
 ``ok`` only when every flag passes:
@@ -21,27 +21,28 @@ cross-checks them all and reports one named flag per invariant,
   are contiguous from zero with at most one per completed night
   (a zero-admission night appends none), and content-ledger epoch
   numbers — which track the url ledger's — are a subset of them;
-- ``states_present``: the refresh state is intact — for a delta state
-  ledger (``state_ledger/``): the tables exist, every per-night epoch
-  maps to a logged night (one allowed AHEAD as crash state), and the
-  compaction floor never exceeds the completed nights; for legacy
-  rotated ``state/<night>`` dirs: every completed night's dir is on
-  disk;
-- ``knobs_uniform``: every state records the SAME curation knobs
-  (mixed-knob states would mean carried outcomes under two semantics;
-  the ledger holds one knobs meta by construction);
+- ``states_present``: the delta state ledger (``state_ledger/``,
+  read through the pointer log) is intact: the tables exist, every
+  per-night epoch maps to a logged night (one allowed AHEAD as crash
+  state), and the compaction floor never exceeds the completed
+  nights; a root with completed nights and no ledger fails;
+- ``knobs_uniform``: the ledger carries its knobs meta (one per
+  ledger by construction, so every night ran under the SAME curation
+  knobs);
 - ``kept_matches_state``: the kept store's resident ids are exactly
   the last state's KEPT audit rows;
 - ``ivf_matches_kept`` / ``postings_count_matches``: the ANN store's
   assignment ledger covers exactly the kept ids, and the postings
   meta's n_docs equals the kept count (serving stores from a FOREIGN
   root fail here);
-- ``shards_nights_match`` / ``postings_nights_match``: the completed
-  nights are a PREFIX-closed subset of each store's applied-tag set,
-  and neither store carries a night the log never completed (a
-  half-completed night — crash between a store apply and the log
-  append — shows up as the store being AHEAD of the log: legitimate
-  crash state, but exactly what an operator must see before replaying).
+- ``shards_nights_match`` / ``postings_nights_match``: every completed
+  night is in the shard store's applied tags in log order (the
+  postings store tags only churned nights, so there the completed
+  nights it did tag must keep log order), and neither store carries a
+  night the log never completed (a half-completed night — crash
+  between a store apply and the log append — shows up as the store
+  being AHEAD of the log: legitimate crash state, but exactly what an
+  operator must see before replaying).
 
 Every check is a kilobyte meta/ledger read or an id-column aggregate —
 never a text scan — so the audit is cheap at any corpus size.
@@ -202,22 +203,8 @@ def verify_nightly_root(spark: SparkSession, root_dir: str) -> dict:
         }
         checks["content_epochs_match"] = con_pos <= set(url_pos)
 
-    # --- refresh state: per-night dirs (legacy) or the delta ledger ----
-    # knobs are only required where they exist: states predating the
-    # knobs meta are explicitly tolerated by the refresh layer
-    # (_check_knobs skips them), so the audit must not out-strict the
-    # code that writes the state
+    # --- refresh state: the delta state ledger -------------------------
     state_led = resolve_store(spark, root_dir, "state_ledger")
-    # `state_archived_pre_ledger/` is minted exactly once, by a
-    # completed --migrate-state whose pointer flip landed the serving
-    # ledger FIRST — so an archive with NO serving ledger is manual
-    # surgery (ledger dir deleted, pointer log edited): the rotated
-    # history was retired but nothing serves (r12 verdict #6). Healthy
-    # migrated roots (archive + ledger) stay silent.
-    if iofs.is_dir(
-        spark, os.path.join(root_dir, "state_archived_pre_ledger")
-    ) and not iofs.has_parquet(spark, state_led):
-        checks["state_archive_consistent"] = False
     last_audit = None  # the audit view the kept store must match
     if iofs.has_parquet(spark, state_led):
         from radares_spark.pipeline.state_ledger import (
@@ -259,22 +246,9 @@ def verify_nightly_root(spark: SparkSession, root_dir: str) -> dict:
                 spark, LedgerState(state_led, len(nights) - 1), "audit"
             )
     else:
-        states_ok, knob_rows = True, []
-        for n in nights:
-            sd = os.path.join(root_dir, "state", n)
-            parts_ok = all(
-                iofs.has_parquet(spark, f"{sd}/{p}") for p in ("features", "audit")
-            )
-            states_ok = states_ok and parts_ok
-            if parts_ok and iofs.has_parquet(spark, f"{sd}/knobs"):
-                knob_rows.append(tuple(spark.read.parquet(f"{sd}/knobs").head()))
-        checks["states_present"] = states_ok
-        if knob_rows:
-            checks["knobs_uniform"] = len(set(knob_rows)) == 1
-        if states_ok and nights:
-            last_audit = spark.read.parquet(
-                os.path.join(root_dir, "state", nights[-1], "audit")
-            )
+        # every night writes its state epoch, so completed nights with
+        # no ledger mean the state was lost
+        checks["states_present"] = not nights
 
     # --- kept store vs the last state's audit --------------------------
     kept = None  # lazy (doc_id) frame — compared via anti-joins, never collected
@@ -327,21 +301,10 @@ def verify_nightly_root(spark: SparkSession, root_dir: str) -> dict:
         # tag means the store is AHEAD of the log: a half-completed
         # night awaiting replay, or a store from a foreign root
         ahead = sorted(set(night_tags) - set(nights))
-        if meta_row.asDict().get("nights"):
-            checks["shards_nights_match"] = (
-                [t for t in night_tags if t in set(nights)] == nights
-                and not ahead
-            )
-        else:
-            # store meta predating the ``nights`` column records only
-            # the LAST applied tag (pipeline/shards._completed_nights'
-            # documented fallback) — demanding the full prefix would
-            # false-alarm on every healthy multi-night pre-upgrade
-            # root (r10 advice), so require only that the recorded
-            # last night, IF it is a night at all (a maintenance tag
-            # may have superseded it), is the log's last completed one
-            ok_tags = [[]] + ([[nights[-1]]] if nights else [])
-            checks["shards_nights_match"] = night_tags in ok_tags and not ahead
+        checks["shards_nights_match"] = (
+            [t for t in night_tags if t in set(nights)] == nights
+            and not ahead
+        )
         if ahead:
             checks["shards_ahead_of_log"] = ahead
 

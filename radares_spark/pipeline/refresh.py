@@ -87,10 +87,11 @@ from radares_spark.pipeline.state_ledger import (
 )
 
 # Every public entry below takes states as ``str | LedgerState``: a
-# str is the legacy full-rewrite layout (one dir per night, every
-# table rewritten in full); a LedgerState addresses one epoch of the
-# delta state ledger (pipeline/state_ledger.py), where a night writes
-# ONLY its changed rows — the delta-proportional production shape.
+# str is the full-rewrite dir layout the corpus-refresh CLI writes
+# (one dir per night, every table rewritten in full); a LedgerState
+# addresses one epoch of the delta state ledger
+# (pipeline/state_ledger.py), where a night writes ONLY its changed
+# rows — the delta-proportional production shape.
 
 
 def _state_read(spark: SparkSession, state, table: str) -> DataFrame:
@@ -121,7 +122,7 @@ def _state_write(
 
 def _knobs_dir(state) -> str:
     """Knobs live once per ledger (immutable for its lifetime) vs once
-    per night dir in the legacy layout."""
+    per night dir in the dir layout."""
     base = state.ledger_dir if isinstance(state, LedgerState) else state
     return f"{base}/knobs"
 
@@ -209,11 +210,7 @@ def _check_knobs(
 ) -> None:
     """Fail fast when the caller's knobs differ from the knobs the
     state was built under — carried outcomes are only valid under the
-    SAME semantics. States predating the knobs meta skip the check."""
-    from radares_spark.io import fs as iofs
-
-    if not iofs.has_parquet(spark, _knobs_dir(state_in)):
-        return
+    SAME semantics."""
     row = spark.read.parquet(_knobs_dir(state_in)).collect()[0]
     want = (
         ",".join(keep_langs),
@@ -246,7 +243,7 @@ def init_state(
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Night zero: full batch curation, landing the reusable state
-    (``state_dir``: legacy dir, or a LedgerState whose epoch becomes
+    (``state_dir``: a state dir, or a LedgerState whose epoch becomes
     the ledger's base — every row is that epoch's "delta").
     Returns the audit (read back from the state)."""
     none_dead = docs.select("doc_id").limit(0)

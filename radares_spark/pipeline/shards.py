@@ -527,22 +527,9 @@ def _write_meta(
 
 
 def _completed_nights(meta) -> list[str]:
-    """Completed night tags from a meta row; stores predating the
-    ``nights`` column fall back to the last tag alone.
-
-    Upgrade caveat (documented, not fixable retroactively): on such a
-    pre-upgrade store only the MOST RECENT completed night is
-    replay-protected — the older tags were simply never recorded, so
-    replaying one of them double-appends exactly as it would have
-    before the nights column existed. The full no-op guarantee covers
-    every night completed AFTER the upgrade (each append rewrites the
-    meta with the complete tag set from then on)."""
-    d = meta.asDict()
-    nights = d.get("nights")
-    if nights:
-        return list(nights)
-    last = d.get("last_night")
-    return [last] if last is not None else []
+    """Completed night tags from a meta row (every append rewrites the
+    meta with the complete tag set)."""
+    return list(meta["nights"] or [])
 
 
 def init_shards(

@@ -68,7 +68,7 @@ COMPACTED_EPOCH = -1
 class LedgerState:
     """One epoch's view of a delta state ledger — accepted anywhere
     the refresh layer takes a state DIR path (``str`` keeps the
-    legacy full-rewrite layout). ``epoch`` is the night index the
+    full-rewrite dir layout). ``epoch`` is the night index the
     orchestrator assigns (night log order), so consecutive nights are
     consecutive epochs."""
 
@@ -82,8 +82,8 @@ class LedgerState:
 def read_state(spark: SparkSession, state: LedgerState, table: str) -> DataFrame:
     """The state table as of ``state.epoch``: latest-per-doc over
     ``epoch <= e`` (partition-pruned), tombstoned docs dropped, payload
-    columns only — row-equal to what the legacy full-rewrite layout
-    stored in ``state/<night>/<table>``.
+    columns only — row-equal to what the full-rewrite dir layout
+    stores in ``<state_dir>/<table>``.
 
     Latest-per-doc is a max-over-window + filter (ONE doc_id shuffle;
     every row of a doc's newest epoch survives, which the bands table

@@ -13,6 +13,17 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus):
+    """A run whose marker filter deselects every test exits 5 with only
+    "N deselected" — say where those tests went."""
+    deselected = len(terminalreporter.stats.get("deselected", []))
+    if exitstatus == pytest.ExitCode.NO_TESTS_COLLECTED and deselected:
+        terminalreporter.write_line(
+            f"no test ran: all {deselected} collected tests were deselected "
+            "(the default tier runs -m 'not slow'); rerun with -m slow"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("radares-spark-tests", shuffle_partitions=8)

@@ -405,76 +405,3 @@ def test_psi_strategies_agree_on_nonstring_dims(spark):
     assert sorted((tuple(r) for r in default.collect()), key=repr) == sorted(
         (tuple(r) for r in single.collect()), key=repr
     )
-
-
-def test_recap_profile_hosts_cures_uncapped_prior(spark):
-    """r12 advice #3: the first cross-night PSI after the host-cap
-    upgrade compares an UNCAPPED previous profile (every host named)
-    against tonight's capped top-N+__other — most host buckets land
-    one-sided and the host PSI spikes once, purely as an upgrade
-    artifact. recap_profile_hosts folds the prior through the same
-    cap: counts conserved, idempotent on already-capped profiles, and
-    the identical-distribution PSI returns to ~0."""
-    from radares_spark.operators import drift
-    from radares_spark.operators.drift import (
-        crawl_profile,
-        profile_psi,
-        recap_profile_hosts,
-    )
-
-    monkey_n = 2
-    old = drift.PROFILE_HOST_TOPN
-    drift.PROFILE_HOST_TOPN = monkey_n
-    try:
-        # the same crawl distribution two nights running: 2 big hosts
-        # + a 3-host tail, one doc each tail host
-        docs = spark.createDataFrame(
-            [
-                (1, "http://big.com/a", "x"), (2, "http://big.com/b", "x"),
-                (3, "http://mid.com/a", "x"), (4, "http://mid.com/b", "x"),
-                (5, "http://t1.com/a", "x"), (6, "http://t2.com/a", "x"),
-                (7, "http://t3.com/a", "x"),
-            ],
-            "doc_id long, url string, text string",
-        )
-        tonight = crawl_profile(docs)  # capped: big, mid, __other
-        # the PRE-upgrade prior: every host named (what an old night
-        # persisted)
-        prior_uncapped = spark.createDataFrame(
-            [("host", h, n) for h, n in
-             [("big.com", 2), ("mid.com", 2), ("t1.com", 1),
-              ("t2.com", 1), ("t3.com", 1)]]
-            + [("tok_bin", "tok_0", 7)],
-            "dim string, bucket string, n long",
-        )
-        # uncapped vs capped: the upgrade artifact — a one-sided spike
-        raw = sum(
-            r["psi_term"]
-            for r in profile_psi(prior_uncapped, tonight).collect()
-            if r["dim"] == "host"
-        )
-        assert raw > 0.5
-        # re-capped prior vs capped tonight: identical distribution,
-        # PSI vanishes
-        fixed = profile_psi(recap_profile_hosts(prior_uncapped), tonight)
-        host_terms = [
-            r["psi_term"] for r in fixed.collect() if r["dim"] == "host"
-        ]
-        assert host_terms and all(abs(t) < 1e-9 for t in host_terms)
-        # counts conserved through the re-cap
-        recapped = recap_profile_hosts(prior_uncapped)
-        tot = recapped.filter(F.col("dim") == "host").agg(
-            F.sum("n")
-        ).collect()[0][0]
-        assert tot == 7
-        # idempotent on an already-capped profile (__other never
-        # competes for a named slot)
-        once = sorted(tuple(r) for r in recapped.collect())
-        twice = sorted(
-            tuple(r) for r in recap_profile_hosts(recapped).collect()
-        )
-        assert once == twice
-        # non-host dims pass through untouched
-        assert ("tok_bin", "tok_0", 7) in once
-    finally:
-        drift.PROFILE_HOST_TOPN = old

@@ -7,23 +7,26 @@ from __future__ import annotations
 import pandas as pd
 
 
-def test_containment_flags_quote_inclusion_jaccard_misses(spark):
-    from radares_spark.operators.dedup import ngram_containment_pairs
+def test_containment_flags_quote_inclusion_jaccard_misses(spark, tmp_path):
+    from radares_spark.operators.dedup import dedup_ngram_jaccard, ngram_containment_pairs
 
     quote = "the quick brown fox jumps over the lazy dog again and again"
     filler = " ".join(f"filler{i} word{i} more{i}" for i in range(120))
     pdf = pd.DataFrame(
         {
-            "doc_id": [0, 1],
-            # doc 1 (adjacent id) contains doc 0 wholesale
-            "text": [quote, f"{filler} {quote} {filler}"],
+            "doc_id": [0, 1, 2],
+            # doc 1 (adjacent id) contains doc 0 wholesale; doc 2
+            # shares no 3-gram with doc 1, so (1, 2) is no pair at all
+            "text": [quote, f"{filler} {quote} {filler}", "zzz qqq xxx"],
         }
     )
+    pdf.to_parquet(tmp_path / "documents.parquet", index=False)
     rows = ngram_containment_pairs(spark.createDataFrame(pdf)).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["doc_a"], r["doc_b"]) == (0, 1)
-    assert r["containment"] == 1.0  # every gram of the quote is in doc 1
+    jac = dedup_ngram_jaccard(spark, str(tmp_path)).collect()
+    for found in (rows, jac):
+        assert [(r["doc_a"], r["doc_b"]) for r in found] == [(0, 1)]
+    assert rows[0]["containment"] == 1.0  # every gram of the quote is in doc 1
+    assert jac[0]["jaccard"] < 0.2  # far below any near-dup threshold
 
 
 def test_vocab_top_ngrams_planted(spark):

@@ -11,8 +11,6 @@ import glob
 import os
 import shutil
 
-from pyspark.sql import functions as F
-
 from radares_spark.cli import cmd_corpus_nightly, main
 from tests.test_nightly_e2e import _body, _write_pages
 
@@ -237,96 +235,6 @@ def test_corpus_nightly_threads_refresh_knobs(spark, tmp_path, capsys):
               "--night", "n3"])
 
 
-def test_legacy_state_dir_root_keeps_working(spark, tmp_path):
-    """Roots built before the delta state ledger rotate state/<night>/
-    dirs; corpus-nightly must keep driving them in that layout (and
-    nightly-verify must keep auditing it) instead of forking the state
-    history into a fresh ledger mid-root."""
-    from radares_spark.cli import cmd_nightly_verify
-    from radares_spark.pipeline.refresh import _state_read
-    from radares_spark.pipeline.state_ledger import LedgerState
-
-    A, B, C = (_body(t) for t in ("alpha", "beta", "gamma"))
-    root = str(tmp_path / "root")
-    src1, src2 = tmp_path / "p1", tmp_path / "p2"
-    _write_pages(spark, src1, [(1, "https://a.example.com/1", A),
-                               (2, "https://b.example.com/2", B)])
-    _write_pages(spark, src2, [(10, "https://c.example.com/10", C)])
-    cmd_corpus_nightly(spark, str(src1), root, "n1", n_merges=8, ctx_len=16)
-
-    # downgrade the root to the legacy layout: materialize night-1's
-    # state dir from the ledger view, then drop the ledger
-    led = f"{root}/state_ledger"
-    for t in ("features", "bands", "audit"):
-        _state_read(spark, LedgerState(led, 0), t).write.parquet(
-            f"{root}/state/n1/{t}"
-        )
-    spark.read.parquet(f"{led}/knobs").write.parquet(f"{root}/state/n1/knobs")
-    shutil.rmtree(led)
-
-    # night 2 continues in the legacy layout
-    c2 = cmd_corpus_nightly(spark, str(src2), root, "n2", n_merges=8)
-    assert c2["kept"] == 1 and c2["night_index"] == 1
-    assert os.path.isdir(f"{root}/state/n2/audit")
-    assert not os.path.exists(led)
-    checks = cmd_nightly_verify(spark, root)
-    assert checks["ok"] and checks["states_present"], checks
-
-    # ---- corpus-maintain --migrate-state: same-knobs move onto the
-    # delta ledger (r11 verdict #1) — the last night's state lands as
-    # the base epoch, the pointer flips, the rotated dirs archive
-    import pytest
-
-    from radares_spark.cli import cmd_corpus_maintain
-    from radares_spark.io import fs as iofs
-    from radares_spark.pipeline.stores import resolve_store
-
-    m = cmd_corpus_maintain(spark, root, ivf="skip", migrate_state=True)
-    assert m["state_migrated"] == 1 and m["state_base_epoch"] == 1
-    assert not os.path.exists(f"{root}/state")
-    assert os.path.isdir(f"{root}/state_archived_pre_ledger/n2")
-    new_led = resolve_store(spark, root, "state_ledger")
-    assert new_led.endswith(f".m{m['state_flip_idx']}")
-    assert iofs.epoch_partitions(spark, f"{new_led}/features") == [1]
-
-    # migrated continuation: night 3 runs DELTA-DIRECT against the
-    # ledger and appends only its delta epoch — the state-bytes scale
-    # shape the ledger exists for (base carries the corpus; the night
-    # writes only tonight's changed docs)
-    src3 = tmp_path / "p3"
-    _write_pages(spark, src3, [(20, "https://d.example.com/20", _body("delta"))])
-    c3 = cmd_corpus_nightly(spark, str(src3), root, "n3", n_merges=8)
-    assert c3["kept"] == 1 and c3["night_index"] == 2
-    assert sorted(
-        iofs.epoch_partitions(spark, f"{new_led}/features")
-    ) == [1, 2]
-    base_rows = (
-        spark.read.parquet(f"{new_led}/features")
-        .filter(F.col("epoch") == 1).count()
-    )
-    delta_rows = (
-        spark.read.parquet(f"{new_led}/features")
-        .filter(F.col("epoch") == 2).count()
-    )
-    assert base_rows == 3 and delta_rows == 1  # delta-sized, not corpus
-    checks = cmd_nightly_verify(spark, root)
-    assert checks["ok"] and checks["states_present"], checks
-
-    # crash-between-flip-and-archive replay: the ledger is already
-    # serving but the rotated dirs are still in place — the rerun
-    # completes ONLY the archive step, touching no store
-    shutil.move(f"{root}/state_archived_pre_ledger", f"{root}/state")
-    m2 = cmd_corpus_maintain(spark, root, ivf="skip", migrate_state=True)
-    assert m2["state_migrated"] == 0 and m2["state_archive_completed"] == 1
-    assert not os.path.exists(f"{root}/state")
-    assert os.path.isdir(f"{root}/state_archived_pre_ledger/n2")
-    assert resolve_store(spark, root, "state_ledger") == new_led
-
-    # a completed migration re-run fails fast, mutating nothing
-    with pytest.raises(ValueError, match="nothing to migrate"):
-        cmd_corpus_maintain(spark, root, ivf="skip", migrate_state=True)
-
-
 def test_root_writer_lease_cross_command_exclusion(spark, tmp_path):
     """r11 "what's missing" #2: the per-idx claims serialize two
     nights or two flips, but corpus-nightly / corpus-maintain /
@@ -476,76 +384,6 @@ def test_root_writer_lease_liveness(spark, tmp_path):
     assert h.release(spark) is False
     assert iofs.read_marker(spark, lease) == usurper
     iofs.delete(spark, lease)
-
-
-def test_migrate_state_crash_ahead_and_recreated_archive(spark, tmp_path):
-    """r12 verdict #4 + advice #2 — two migrate-state edges pinned:
-    (1) a state dir the night log does not record (a crashed night
-    ahead of the log) fails the migration fast, matching its own
-    replay-first docstring, instead of archiving the partial dir
-    wholesale and migrating a base that never saw it; (2) after a
-    completed migration, a manually recreated state/ dir alongside the
-    archive raises a migration-specific error naming both dirs, not
-    fs.rename's bare 'destination already exists'."""
-    import pytest
-
-    from radares_spark.cli import cmd_corpus_maintain
-    from radares_spark.pipeline.refresh import _state_read
-    from radares_spark.pipeline.state_ledger import LedgerState
-
-    A, B = _body("alpha"), _body("beta")
-    root = str(tmp_path / "root")
-    src1 = tmp_path / "p1"
-    _write_pages(spark, src1, [(1, "https://a.example.com/1", A),
-                               (2, "https://b.example.com/2", B)])
-    cmd_corpus_nightly(spark, str(src1), root, "n1", n_merges=8, ctx_len=16)
-
-    # downgrade to the legacy rotated-dirs layout (as the migration's
-    # target population actually looks)
-    led = f"{root}/state_ledger"
-    for t in ("features", "bands", "audit"):
-        _state_read(spark, LedgerState(led, 0), t).write.parquet(
-            f"{root}/state/n1/{t}"
-        )
-    spark.read.parquet(f"{led}/knobs").write.parquet(f"{root}/state/n1/knobs")
-    shutil.rmtree(led)
-
-    # (1) plant a crashed night AHEAD of the log: a partial state dir
-    # with no matching night-log row — the migration refuses
-    os.makedirs(f"{root}/state/n2_crashed/features")
-    with pytest.raises(ValueError, match="not in the night log"):
-        cmd_corpus_maintain(spark, root, ivf="skip", migrate_state=True)
-    assert os.path.isdir(f"{root}/state/n1")  # nothing archived
-    assert not os.path.exists(f"{root}/state_archived_pre_ledger")
-    shutil.rmtree(f"{root}/state/n2_crashed")
-
-    # the clean migration then proceeds
-    m = cmd_corpus_maintain(spark, root, ivf="skip", migrate_state=True)
-    assert m["state_migrated"] == 1 and m["state_base_epoch"] == 0
-    assert os.path.isdir(f"{root}/state_archived_pre_ledger/n1")
-
-    # (2) manual surgery: state/ recreated AFTER the completed
-    # migration — the crash-repair branch must name both dirs and the
-    # remedy instead of crashing in fs.rename
-    os.makedirs(f"{root}/state/n1")
-    with pytest.raises(ValueError, match="already completed.*recreated"):
-        cmd_corpus_maintain(spark, root, ivf="skip", migrate_state=True)
-    assert os.path.isdir(f"{root}/state_archived_pre_ledger/n1")
-
-    # nightly-verify on top of the same root: a healthy migrated root
-    # (archive + serving ledger) stays SILENT; an archive with NO
-    # serving ledger (only reachable by manual surgery — the tool
-    # flips the ledger before it archives) trips a named flag (r12
-    # verdict #6)
-    from radares_spark.cli import cmd_nightly_verify
-
-    shutil.rmtree(f"{root}/state")  # undo the surgery from (2)
-    checks = cmd_nightly_verify(spark, root)
-    assert checks["ok"] and "state_archive_consistent" not in checks, checks
-    shutil.rmtree(glob.glob(f"{root}/state_ledger.m*")[0])
-    checks2 = cmd_nightly_verify(spark, root)
-    assert checks2["state_archive_consistent"] is False
-    assert not checks2["ok"]
 
 
 def test_lease_heartbeat_refreshes_mtime(spark, tmp_path, monkeypatch):

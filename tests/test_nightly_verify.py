@@ -95,24 +95,31 @@ def test_nightly_verify_flags(spark, tmp_path, capsys):
     shutil.rmtree(ivf_assign)
     shutil.copytree(saved_assign, ivf_assign)
 
-    # --- pre-upgrade shards meta (r10 ADVICE): a store whose meta
-    # predates the `nights` column records only last_night — the
-    # audit must not demand the full prefix on such a healthy
-    # multi-night root (only that the last recorded night is the
-    # log's last)
+    # --- shards meta with no night tags: every night appends its
+    # shards under its tag, so a multi-night root whose shard store
+    # records none has lost them — the audit demands the full prefix
     meta_dir = f"{root}/shards/_meta"
-    meta = spark.read.parquet(meta_dir).head().asDict()
+    meta = spark.read.parquet(meta_dir)
     saved_meta = str(tmp_path / "saved_meta")
     shutil.copytree(meta_dir, saved_meta)
-    legacy = {k: v for k, v in meta.items() if k != "nights"}
+    untagged = {**meta.head().asDict(), "nights": [], "last_night": None}
     spark.createDataFrame(
-        [tuple(legacy.values())], list(legacy.keys())
+        [tuple(untagged[c] for c in meta.columns)], meta.schema
     ).repartition(1).write.mode("overwrite").parquet(meta_dir)
     checks = cmd_nightly_verify(spark, root)
-    assert checks["shards_nights_match"] is True
-    assert checks["ok"], checks
+    assert checks["shards_nights_match"] is False
+    assert not checks["ok"], checks
     shutil.rmtree(meta_dir)
     shutil.copytree(saved_meta, meta_dir)
+
+    # --- lost state ledger: completed nights with no refresh state
+    state_led = f"{root}/state_ledger"
+    saved_led = str(tmp_path / "saved_state_ledger")
+    shutil.move(state_led, saved_led)
+    checks = cmd_nightly_verify(spark, root)
+    assert checks["states_present"] is False and not checks["ok"]
+    shutil.move(saved_led, state_led)
+    assert cmd_nightly_verify(spark, root)["ok"]
 
     # --- foreign kept store: a resident the state never audited -------
     spark.createDataFrame([(888888, "foreign doc text")], "doc_id long, text string").withColumn(

@@ -12,19 +12,25 @@ from radares_spark.plans.library import ALL_LIBRARY_SPECS
 from tests.conftest import SF_ORACLE
 from tests.oracle import compare_query
 
-# Whole-module slow tier: every test here is a multi-second e2e /
-# sweep (r15 durations log); deselected by default so the driver's
-# verify window fits — run with -m slow (see COVERAGE.md).
-pytestmark = pytest.mark.slow
+# The sweep runs in the default tier except its one outlier (22.8 s
+# in the r15 durations log), which stays in the slow tier.
+SLOW = {"asof_salted_error_click"}
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
+def _names(specs) -> list:
+    return [
+        pytest.param(n, marks=pytest.mark.slow) if n in SLOW else n
+        for n in sorted(specs)
+    ]
+
+
+@pytest.mark.parametrize("name", _names(REGISTRY))
 def test_oracle_parity(spark, name):
     ok, msg = compare_query(spark, SF_ORACLE, name, REGISTRY[name])
     assert ok, f"{name}: {msg}"
 
 
-@pytest.mark.parametrize("name", sorted(ALL_LIBRARY_SPECS))
+@pytest.mark.parametrize("name", _names(ALL_LIBRARY_SPECS))
 def test_library_parity(spark, name):
     ok, msg = compare_query(spark, SF_ORACLE, name, ALL_LIBRARY_SPECS[name])
     assert ok, f"{name}: {msg}"
