@@ -248,8 +248,9 @@ def _calibration_plan(spark, sf_dir: str):
 
 def _construct_with_pin_spy(fn, spark, sf_dir):
     """Build the query frame while recording whether construction called
-    ``DataFrame.localCheckpoint`` anywhere in its lineage (``pin_stages``
-    / ``pin_batch`` plans). For such plans the WARM median measures a
+    ``DataFrame.localCheckpoint`` anywhere in its lineage (the crawl
+    curation and incremental admission plans pin their stages). For
+    such plans the WARM median measures a
     re-read of the pinned rows, NOT the pipeline — the honest
     throughput number is ``cold_s``, where construction (and therefore
     the pinned stages' real work) is inside the timer. The detected

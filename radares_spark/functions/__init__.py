@@ -5,7 +5,6 @@ from radares_spark.functions.cleaning import (
 )
 from radares_spark.functions.histogram import (
     bins_long,
-    percentile_from_bins,
     speeding_ratio,
     weighted_mean_speed,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "split_time_range",
     "with_slot_start",
     "bins_long",
-    "percentile_from_bins",
     "speeding_ratio",
     "weighted_mean_speed",
 ]

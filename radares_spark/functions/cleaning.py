@@ -33,21 +33,21 @@ def clean_direction(raw: Column) -> Column:
     return expr.otherwise(F.lit(None))
 
 
-def split_time_range(df: DataFrame, col: str = "time_range") -> DataFrame:
+def split_time_range(df: DataFrame) -> DataFrame:
     """Add ``initial_time``/``end_time`` "HH:mm" columns from
     ``"HH:MM as HH:MM"`` (1-based substring, matching the reference's
     0-based [0:5] / [9:14] slices)."""
-    return df.withColumn("initial_time", F.substring(F.col(col), 1, 5)).withColumn(
-        "end_time", F.substring(F.col(col), 10, 5)
+    return df.withColumn("initial_time", F.substring(F.col("time_range"), 1, 5)).withColumn(
+        "end_time", F.substring(F.col("time_range"), 10, 5)
     )
 
 
-def with_slot_start(df: DataFrame, pubdate: str = "pubdate", initial_time: str = "initial_time") -> DataFrame:
+def with_slot_start(df: DataFrame) -> DataFrame:
     """``slot_start = pubdate + initial_time`` as a proper timestamp."""
     return df.withColumn(
         "slot_start",
         F.to_timestamp(
-            F.concat_ws(" ", F.col(pubdate).cast("string"), F.col(initial_time)),
+            F.concat_ws(" ", F.col("pubdate").cast("string"), F.col("initial_time")),
             "yyyy-MM-dd HH:mm",
         ),
     )

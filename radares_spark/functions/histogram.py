@@ -75,11 +75,3 @@ def percentile_col(p: float = 0.85, bins: Bins = SPEED_BINS) -> Column:
         expr = F.when(cond, hi) if expr is None else expr.when(cond, hi)
     return expr.otherwise(F.lit(bins[-1][2]))
 
-
-def percentile_from_bins(df: DataFrame, group_cols: list[str], p: float = 0.85, bins: Bins = SPEED_BINS) -> DataFrame:
-    """Single aggregation, no window: returns
-    ``group_cols + [p<NN>_speed]`` via :func:`percentile_col`."""
-    return df.select(
-        *group_cols, percentile_col(p, bins).alias(f"p{int(p * 100)}_speed")
-    )
-

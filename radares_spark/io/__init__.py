@@ -1,3 +1,3 @@
-from radares_spark.io.tables import TABLES, load_table, load_tables, register_views
+from radares_spark.io.tables import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table"]

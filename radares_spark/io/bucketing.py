@@ -26,7 +26,7 @@ plain ``.parquet()`` writes silently drop bucket metadata.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -54,12 +54,3 @@ def write_bucketed(
         .saveAsTable(table)
     )
 
-
-def colocated_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two co-bucketed tables on their bucket keys. With matching
-    bucket specs the plan is SortMergeJoin over two bucketed scans —
-    zero Exchange, zero Sort (verify: tests/test_bucketing.py asserts
-    the plan shape)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)

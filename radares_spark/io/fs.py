@@ -40,11 +40,6 @@ def exists(spark: SparkSession, path_str: str) -> bool:
     return bool(fs.exists(path))
 
 
-def is_dir(spark: SparkSession, path_str: str) -> bool:
-    fs, path = _fs_and_path(spark, path_str)
-    return bool(fs.exists(path) and fs.getFileStatus(path).isDirectory())
-
-
 def has_parquet(spark: SparkSession, path_str: str) -> bool:
     """True when any ``*.parquet`` file exists under ``path_str``
     (recursive) — the 'has this store ever been written' probe guarding
@@ -73,22 +68,6 @@ def delete(spark: SparkSession, path_str: str) -> None:
     fs, path = _fs_and_path(spark, path_str)
     if fs.exists(path):
         fs.delete(path, True)
-
-
-def rename(spark: SparkSession, src: str, dst: str) -> None:
-    """Directory move via ``FileSystem.rename`` — the archive step of
-    offline migrations (atomic on HDFS/local; an O(n) server-side copy
-    on object stores, acceptable for a once-per-root operation).
-    Refuses a missing source or an existing destination: both mean the
-    caller's view of the migration state is stale."""
-    fs, s = _fs_and_path(spark, src)
-    _, d = _fs_and_path(spark, dst)
-    if not fs.exists(s):
-        raise ValueError(f"rename source {src!r} does not exist")
-    if fs.exists(d):
-        raise ValueError(f"rename destination {dst!r} already exists")
-    if not fs.rename(s, d):
-        raise OSError(f"rename {src!r} -> {dst!r} failed")
 
 
 # Root-writer-lease liveness knobs (defined here, with the marker

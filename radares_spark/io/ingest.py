@@ -100,6 +100,3 @@ def clean_flows(raw: DataFrame) -> DataFrame:
         F.col("total").cast("int").alias("total"),
     )
 
-
-def quarantined(raw: DataFrame) -> DataFrame:
-    return raw.filter(F.col("status") == "quarantined").select("file_path", "error")

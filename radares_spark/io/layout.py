@@ -6,9 +6,10 @@ Three effects, each worth orders of magnitude at scale:
 
 1. **Partition pruning.** Hive-style ``partitionBy(col)`` directories
    mean a query filtering on the column never LISTS — let alone
-   reads — the other partitions. ``read_pruned`` + the plan test
-   prove the filter lands in ``PartitionFilters`` (metadata-only),
-   not ``PushedFilters`` (still opens every file).
+   reads — the other partitions. An equality filter on the column
+   lands in ``PartitionFilters`` (metadata-only), not
+   ``PushedFilters`` (still opens every file); tests/test_layout.py
+   asserts it on the plan.
 2. **Row-group skipping.** ``sortWithinPartitions(sort_col)``
    clusters values so each parquet row group covers a narrow
    min/max range; a range predicate then skips whole row groups on
@@ -30,7 +31,7 @@ cardinality columns belong in the sort, not the partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -54,10 +55,3 @@ def write_layout(
         .parquet(path)
     )
 
-
-def read_pruned(spark: SparkSession, path: str, partition_col: str, value) -> DataFrame:
-    """Scan one partition of a :func:`write_layout` table. The
-    equality predicate resolves against directory names during
-    planning — the other partitions' files are never opened (plan
-    shows it under ``PartitionFilters``)."""
-    return spark.read.parquet(path).filter(F.col(partition_col) == value)

@@ -179,12 +179,3 @@ def load_jdbc(
     )
     return spark.read.format("jdbc").options(**opts).load()
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for ``spark.sql`` plans."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

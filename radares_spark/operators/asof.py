@@ -71,8 +71,6 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     by: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     value: str = "value_ts",
 ) -> DataFrame:
     """Latest ``right`` at-or-before each ``left`` row per ``by`` key.
@@ -85,12 +83,12 @@ def asof_join(
     lcols = left.columns
     l = left.withColumn("__side", F.lit(0))
     r = (
-        right.select(F.col(by), F.col(right_ts).alias("__rts"))
+        right.select(F.col(by), F.col("ts").alias("__rts"))
         .withColumn("__side", F.lit(1))
     )
     both = l.unionByName(r, allowMissingColumns=True)
     return both.groupBy(by).applyInPandas(
-        _make_kernel(lcols, left_ts, value), schema=_kernel_schema(left, value)
+        _make_kernel(lcols, "ts", value), schema=_kernel_schema(left, value)
     )
 
 
@@ -99,8 +97,6 @@ def asof_join_salted(
     right: DataFrame,
     by: str,
     bucket_seconds: int,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     value: str = "value_ts",
 ) -> DataFrame:
     """Skew-proof as-of join: groups are (key, time bucket), so a hot
@@ -119,11 +115,11 @@ def asof_join_salted(
     # epoch seconds via cast-through-timestamp: legal for both LTZ and
     # NTZ timestamps (bare NTZ->BIGINT is an AnalysisException) and a
     # no-op extra cast when the input is already TimestampType.
-    lsalt = F.floor(F.col(left_ts).cast("timestamp").cast("long") / bucket_seconds)
+    lsalt = F.floor(F.col("ts").cast("timestamp").cast("long") / bucket_seconds)
 
     l = left.withColumn("__side", F.lit(0)).withColumn("__salt", lsalt)
     r = (
-        right.select(F.col(by), F.col(right_ts).alias("__rts"))
+        right.select(F.col(by), F.col("ts").alias("__rts"))
         .withColumn("__side", F.lit(1))
         .withColumn(
             "__salt",
@@ -159,7 +155,7 @@ def asof_join_salted(
         boundary, allowMissingColumns=True
     )
     return both.groupBy(by, "__salt").applyInPandas(
-        _make_kernel(lcols, left_ts, value), schema=_kernel_schema(left, value)
+        _make_kernel(lcols, "ts", value), schema=_kernel_schema(left, value)
     )
 
 

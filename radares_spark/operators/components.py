@@ -26,15 +26,13 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b", max_iter: int = 10
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
     """(node, component) for every node in ``pairs``; component = min
     node id of the transitive group. Raises if not converged within
     ``max_iter`` (pathological diameter — raise the bound)."""
     edges = (
-        pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-        .unionByName(pairs.select(F.col(b).alias("u"), F.col(a).alias("v")))
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
         .distinct()
     )
     labels = (
@@ -74,22 +72,7 @@ def connected_components(
     raise RuntimeError(f"connected_components: no fixed point in {max_iter} rounds")
 
 
-def canonical_near_dup_drops(pairs: DataFrame) -> DataFrame:
-    """doc_ids to drop so each transitive near-dup GROUP keeps exactly
-    its minimum member — the exhaustive alternative to pairwise
-    keep-first (pipeline/corpus.near_dup_drops)."""
-    cc = connected_components(pairs)
-    return cc.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
-    )
-
-
-def cluster_representatives(
-    members: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "score",
-) -> DataFrame:
+def cluster_representatives(members: DataFrame, scores: DataFrame) -> DataFrame:
     """(doc_id, component, score, rep_doc_id, keep) — pick ONE
     representative per transitive duplicate group: the highest-score
     member, tie-broken by minimum id. ``members`` is
@@ -97,7 +80,7 @@ def cluster_representatives(
     every member id to a quality signal (length for the SlimPajama
     keep-longest policy, a classifier probability, ...).
 
-    min-id canonicalization (canonical_near_dup_drops) keeps an
+    min-id canonicalization (the component label) keeps an
     ARBITRARY member; real pipelines keep the best one — dropping a
     long original in favor of its truncated copy loses data for no
     reason. One window per component (groups are near-dup cliques —
@@ -105,17 +88,17 @@ def cluster_representatives(
     so the caller gets both the keep-list and the drop-list in one
     frame."""
     m = members.select(
-        F.col("node").alias(id_col), "component"
-    ).join(scores.select(id_col, score_col), id_col)
+        F.col("node").alias("doc_id"), "component"
+    ).join(scores.select("doc_id", "score"), "doc_id")
     w = W.partitionBy("component").orderBy(
-        F.col(score_col).desc_nulls_last(), F.col(id_col).asc()
+        F.col("score").desc_nulls_last(), F.col("doc_id").asc()
     )
     return m.select(
-        id_col,
+        "doc_id",
         "component",
-        score_col,
-        F.first(id_col).over(w).alias("rep_doc_id"),
+        "score",
+        F.first("doc_id").over(w).alias("rep_doc_id"),
     ).withColumn(
-        "keep", F.when(F.col(id_col) == F.col("rep_doc_id"), 1).otherwise(0)
+        "keep", F.when(F.col("doc_id") == F.col("rep_doc_id"), 1).otherwise(0)
     )
 

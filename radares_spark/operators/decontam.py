@@ -57,18 +57,16 @@ def eval_gram_set(eval_docs: DataFrame, n: int = DECON_N) -> DataFrame:
     return _gram_hashes(eval_docs, n).select("g").distinct()
 
 
-def contamination_audit(
-    docs: DataFrame, eval_docs: DataFrame, n: int = DECON_N
-) -> DataFrame:
+def contamination_audit(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """(doc_id, eval_grams_hit, contaminated) for EVERY corpus doc.
 
     ``eval_grams_hit`` counts distinct eval grams found in the doc;
     the distinct is computed AFTER the broadcast join, so the corpus
     gram stream is never shuffled — only hit rows reach the aggregate.
     """
-    eg = eval_gram_set(eval_docs, n)
+    eg = eval_gram_set(eval_docs)
     hits = (
-        _gram_hashes(docs, n)
+        _gram_hashes(docs, DECON_N)
         .join(F.broadcast(eg), "g")
         .groupBy("doc_id")
         .agg(F.count_distinct("g").alias("eval_grams_hit"))
@@ -84,29 +82,17 @@ def contamination_audit(
     )
 
 
-def contaminated_ids(
-    docs: DataFrame, eval_docs: DataFrame, n: int = DECON_N
-) -> DataFrame:
+def contaminated_ids(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """(doc_id) of every doc sharing an n-gram with the eval set —
     the id set is contamination-sized (broadcastable); the corpus gram
     stream meets the broadcast eval grams map-side, zero full-corpus
     shuffles."""
-    eg = eval_gram_set(eval_docs, n)
+    eg = eval_gram_set(eval_docs)
     return (
-        _gram_hashes(docs, n)
+        _gram_hashes(docs, DECON_N)
         .join(F.broadcast(eg), "g")
         .select("doc_id")
         .distinct()
-    )
-
-
-def decontaminate(
-    docs: DataFrame, eval_docs: DataFrame, n: int = DECON_N
-) -> DataFrame:
-    """Corpus minus every doc sharing an n-gram with the eval set —
-    a broadcast LEFT ANTI join against the (tiny) contaminated-id set."""
-    return docs.join(
-        F.broadcast(contaminated_ids(docs, eval_docs, n)), "doc_id", "left_anti"
     )
 
 

@@ -157,12 +157,12 @@ def shingle_rows(
     )
 
 
-def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
+def word_shingles(df: DataFrame) -> DataFrame:
     """(doc_id, shingle) distinct word n-grams."""
-    return shingle_rows(df, n).distinct()
+    return shingle_rows(df, 3).distinct()
 
 
-def minhash_signatures(df: DataFrame, n_perm: int = N_PERM) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """(doc_id, s0..s{k-1}) — per-doc minhash signature.
 
     Shape chosen for how Catalyst actually evaluates it:
@@ -193,26 +193,26 @@ def minhash_signatures(df: DataFrame, n_perm: int = N_PERM) -> DataFrame:
         "doc_id",
         *[
             ((F.lit(MH_A[i]) * F.col("h") + F.lit(MH_B[i])) % F.lit(MH_P)).alias(f"p{i}")
-            for i in range(n_perm)
+            for i in range(N_PERM)
         ],
     )
     return perms.groupBy("doc_id").agg(
-        *[F.min(f"p{i}").alias(f"s{i}") for i in range(n_perm)]
+        *[F.min(f"p{i}").alias(f"s{i}") for i in range(N_PERM)]
     )
 
 
-def lsh_bands(sig: DataFrame, n_bands: int = N_BANDS, r: int = BAND_R) -> DataFrame:
+def lsh_bands(sig: DataFrame) -> DataFrame:
     """Signature -> (doc_id, band, band_hash). Band hash = md5 of the
-    r concatenated signature values — the LSH bucket key."""
+    BAND_R concatenated signature values — the LSH bucket key."""
     bands = [
         _md5(
-            F.concat_ws("_", *[F.col(f"s{b * r + i}").cast("string") for i in range(r)])
+            F.concat_ws("_", *[F.col(f"s{b * BAND_R + i}").cast("string") for i in range(BAND_R)])
         ).alias(f"b{b}")
-        for b in range(n_bands)
+        for b in range(N_BANDS)
     ]
     wide = sig.select("doc_id", *bands)
     pairs = F.array(
-        *[F.struct(F.lit(b).alias("band"), F.col(f"b{b}").alias("band_hash")) for b in range(n_bands)]
+        *[F.struct(F.lit(b).alias("band"), F.col(f"b{b}").alias("band_hash")) for b in range(N_BANDS)]
     )
     return wide.select("doc_id", F.explode(pairs).alias("e")).select(
         "doc_id", "e.band", "e.band_hash"
@@ -866,9 +866,9 @@ SH_N_BANDS = 32 // SH_BAND_BITS
 SH_MAX_HAMMING = 3  # < SH_N_BANDS, so banded recall is EXACT (pigeonhole)
 
 
-def simhash_pairs(sigs: DataFrame, max_hamming: int = SH_MAX_HAMMING) -> DataFrame:
+def simhash_pairs(sigs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming) — every pair of signatures within
-    ``max_hamming`` bits, via disjoint-band blocking.
+    ``SH_MAX_HAMMING`` bits, via disjoint-band blocking.
 
     Unlike probabilistic minhash/hyperplane LSH, this blocking is
     EXACT: a pair differing in <= 3 of 32 bits cannot differ in all 4
@@ -913,7 +913,7 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = SH_MAX_HAMMING) -> DataFra
     )
     return (
         cand.withColumn("hamming", F.bit_count(F.expr("sa ^ sb")))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SH_MAX_HAMMING)
         .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
     )
 

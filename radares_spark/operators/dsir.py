@@ -62,13 +62,7 @@ def gram_buckets(
     )
 
 
-def dsir_weights(
-    docs: DataFrame,
-    is_target: Column,
-    n: int = NGRAM,
-    alpha: float = ALPHA,
-    n_buckets: int = N_BUCKETS,
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, is_target: Column) -> DataFrame:
     """(doc_id, n_grams, dsir_logweight) for EVERY doc.
 
     ``is_target`` is a boolean Column over ``docs`` marking the
@@ -87,7 +81,7 @@ def dsir_weights(
     # pipeline, the dominant cost, now evaluates once per aggregate
     # pass instead of twice.)
     grams = gram_buckets(
-        docs.select("doc_id", "text", is_target.alias("__t")), n=n, carry=("__t",)
+        docs.select("doc_id", "text", is_target.alias("__t")), carry=("__t",)
     )
     counts = grams.groupBy("b").agg(
         F.count(F.lit(1)).alias("c_raw"),
@@ -103,12 +97,12 @@ def dsir_weights(
         "b",
         (
             F.log(
-                (F.col("c_tgt") + F.lit(alpha))
-                / (F.sum("c_tgt").over(tot_w) + F.lit(alpha * n_buckets))
+                (F.col("c_tgt") + F.lit(ALPHA))
+                / (F.sum("c_tgt").over(tot_w) + F.lit(ALPHA * N_BUCKETS))
             )
             - F.log(
-                (F.col("c_raw") + F.lit(alpha))
-                / (F.sum("c_raw").over(tot_w) + F.lit(alpha * n_buckets))
+                (F.col("c_raw") + F.lit(ALPHA))
+                / (F.sum("c_raw").over(tot_w) + F.lit(ALPHA * N_BUCKETS))
             )
         ).alias("lr"),
     )
@@ -127,9 +121,7 @@ def dsir_weights(
     )
 
 
-def unigram_logprob(
-    docs: DataFrame, alpha: float = ALPHA, n_buckets: int = N_BUCKETS
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, avg_neg_logprob) — CCNet-style LM filter
     score with a hashed-unigram model trained on the corpus itself:
     average negative log-probability per token (high = surprising =
@@ -142,8 +134,8 @@ def unigram_logprob(
         "b",
         (
             -F.log(
-                (F.col("c") + F.lit(alpha))
-                / (F.sum("c").over(tot_w) + F.lit(alpha * n_buckets))
+                (F.col("c") + F.lit(ALPHA))
+                / (F.sum("c").over(tot_w) + F.lit(ALPHA * N_BUCKETS))
             )
         ).alias("nlp"),
     )
@@ -166,12 +158,7 @@ WEIGHT_BIN_SCALE = 4  # bins per unit of log-weight
 WEIGHT_BIN_CLAMP = 512  # |bin| cap -> <= 1025 occupied bins
 
 
-def dsir_resample(
-    docs: DataFrame,
-    is_target: Column,
-    budget_tokens: int,
-    n: int = NGRAM,
-) -> DataFrame:
+def dsir_resample(docs: DataFrame, is_target: Column, budget_tokens: int) -> DataFrame:
     """The paper's resample step, deterministic engine-native variant:
     take docs in DESCENDING importance-weight order (ties on doc_id)
     until ``budget_tokens`` whitespace tokens are admitted. Returns
@@ -186,7 +173,7 @@ def dsir_resample(
     runs over the <= 1025 occupied bins. Same greedy selection as
     sorting the whole corpus, never a corpus-wide sort.
     """
-    w = dsir_weights(docs, is_target, n=n)
+    w = dsir_weights(docs, is_target)
     # route through normalize_text, never an inline copy of its chain:
     # a hand-inlined variant silently missed the ASCII pre-strip when
     # normalization gained it (conformance-fuzz fix)
@@ -240,17 +227,13 @@ PPL_BIN_SCALE = 64  # bins per unit of avg-neg-logprob
 PPL_BIN_CLAMP = 1024  # anlp >= 0 always (smoothed probs < 1) -> <= 1025 bins
 
 
-def ccnet_buckets(
-    docs: DataFrame,
-    head_frac: float = HEAD_FRAC,
-    tail_frac: float = TAIL_FRAC,
-) -> DataFrame:
+def ccnet_buckets(docs: DataFrame) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020 §4.4): per
     language, order docs by LM perplexity ascending and cut the corpus
     into three buckets by TOKEN MASS — ``head`` = the lowest-perplexity
-    docs holding the first ``head_frac`` of the language's tokens
+    docs holding the first ``HEAD_FRAC`` of the language's tokens
     (closest to the LM's training distribution), ``tail`` = the last
-    ``tail_frac``, ``middle`` = the rest. Downstream pipelines keep
+    ``TAIL_FRAC``, ``middle`` = the rest. Downstream pipelines keep
     head+middle and drop or down-weight the tail.
 
     Engine-native stand-ins, stated: the score is
@@ -309,8 +292,8 @@ def ccnet_buckets(
         .orderBy(F.asc("avg_neg_logprob"), F.asc("doc_id"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    head_cut = F.col("__tot") * F.lit(head_frac)
-    tail_cut = F.col("__tot") * F.lit(1.0 - tail_frac)
+    head_cut = F.col("__tot") * F.lit(HEAD_FRAC)
+    tail_cut = F.col("__tot") * F.lit(1.0 - TAIL_FRAC)
     return (
         scored.join(F.broadcast(offsets), ["__lang", "__bin"])
         .join(F.broadcast(totals), "__lang")
@@ -464,9 +447,7 @@ CCNET_SQL = f"""
     FROM r
 """
 
-def bigram_logprob(
-    docs: DataFrame, alpha: float = ALPHA, n_buckets: int = N_BUCKETS
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, avg_neg_logprob) — the CONDITIONAL upgrade
     of :func:`unigram_logprob`: average -log p(w | prev) under a
     hashed-bigram model trained on the corpus itself, add-alpha
@@ -504,8 +485,8 @@ def bigram_logprob(
         "b2",
         (
             -F.log(
-                (F.col("c2") + F.lit(alpha))
-                / (F.col("c1") + F.lit(alpha * n_buckets))
+                (F.col("c2") + F.lit(ALPHA))
+                / (F.col("c1") + F.lit(ALPHA * N_BUCKETS))
             )
         ).alias("nlp"),
     )
@@ -536,7 +517,7 @@ def corpus_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 KN_DISCOUNT = 0.75  # Chen & Goodman 1998's fixed absolute discount
 
 
-def kn_bigram_logprob(docs: DataFrame, discount: float = KN_DISCOUNT) -> DataFrame:
+def kn_bigram_logprob(docs: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, avg_neg_logprob) — interpolated KNESER-NEY
     bigram scoring (Kneser & Ney 1995; fixed-discount form of Chen &
     Goodman 1998 §2.7): the proper-smoothing upgrade of
@@ -578,8 +559,8 @@ def kn_bigram_logprob(docs: DataFrame, discount: float = KN_DISCOUNT) -> DataFra
     cont = c2.groupBy("b2").agg(F.count(F.lit(1)).alias("n_before"))
     total = c2.agg(F.count(F.lit(1)).alias("t"))
     nlp = -F.log(
-        F.greatest(F.col("c2") - F.lit(discount), F.lit(0.0)) / F.col("c1")
-        + F.lit(discount)
+        F.greatest(F.col("c2") - F.lit(KN_DISCOUNT), F.lit(0.0)) / F.col("c1")
+        + F.lit(KN_DISCOUNT)
         * F.col("n_after")
         / F.col("c1")
         * (F.col("n_before") / F.col("t"))
@@ -614,7 +595,7 @@ def corpus_kn_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kn_bigram_logprob(docs)
 
 
-def kn_trigram_logprob(docs: DataFrame, discount: float = KN_DISCOUNT) -> DataFrame:
+def kn_trigram_logprob(docs: DataFrame) -> DataFrame:
     """(doc_id, n_trigrams, avg_neg_logprob) — the FULL RECURSIVE
     interpolated Kneser-Ney chain (Chen & Goodman 1998 §2.7) over
     hashed token buckets::
@@ -665,15 +646,15 @@ def kn_trigram_logprob(docs: DataFrame, discount: float = KN_DISCOUNT) -> DataFr
     bw = a23.groupBy("b3").agg(F.count(F.lit(1)).alias("bw"))
     total = a23.agg(F.count(F.lit(1)).alias("t"))
     p2 = (
-        F.greatest(F.col("a23") - F.lit(discount), F.lit(0.0)) / F.col("a_sum")
-        + F.lit(discount)
+        F.greatest(F.col("a23") - F.lit(KN_DISCOUNT), F.lit(0.0)) / F.col("a_sum")
+        + F.lit(KN_DISCOUNT)
         * F.col("nv")
         / F.col("a_sum")
         * (F.col("bw") / F.col("t"))
     )
     nlp = -F.log(
-        F.greatest(F.col("c3") - F.lit(discount), F.lit(0.0)) / F.col("c12")
-        + F.lit(discount) * F.col("n_after12") / F.col("c12") * p2
+        F.greatest(F.col("c3") - F.lit(KN_DISCOUNT), F.lit(0.0)) / F.col("c12")
+        + F.lit(KN_DISCOUNT) * F.col("n_after12") / F.col("c12") * p2
     )
     model = (
         c3.join(ctx3, ["b1", "b2"])

@@ -62,7 +62,6 @@ def hashed_tf(
     docs: DataFrame,
     dim: int = EMBED_DIM,
     tf_idf: bool = False,
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, embedding array<double>) — L2-normalized hashed
     bag-of-words vectors; ``doc_id`` keeps the input column's type
@@ -72,7 +71,7 @@ def hashed_tf(
     DROPPED: a zero vector poisons every cosine, the same rule
     ``embedding_store_health`` audits. Preserve a doc spine downstream
     with a left join."""
-    norm = normalize_text(F.coalesce(F.col(text_col), F.lit("")))
+    norm = normalize_text(F.coalesce(F.col("text"), F.lit("")))
     toks = (
         docs.select("doc_id", norm.alias("__t"))
         .filter(F.col("__t") != "")

@@ -20,7 +20,7 @@ audit idiom of pipeline/corpus.curate):
 2. ``exact_dup_batch``  — duplicate content within the batch (the
    minimum doc_id is kept);
 3. ``near_dup_corpus``  — an LSH band collision with an accepted doc
-   whose signature agrees on >= ``min_match`` of the 8 minhash mins
+   whose signature agrees on >= ``NEAR_MIN_MATCH`` of the 8 minhash mins
    (signature-estimated Jaccard — candidates come from band buckets,
    never all-pairs);
 4. ``near_dup_batch``   — same estimate within the batch; the higher
@@ -32,7 +32,7 @@ audit idiom of pipeline/corpus.curate):
 Precision contract (stated, not hidden): near-dup drops use the
 SIGNATURE estimate (matching mins / 8), not exact Jaccard — the
 ledger stores no text to verify against. E[matches/8] equals the true
-Jaccard, so ``min_match=7`` targets ~0.875+ overlap. The in-batch
+Jaccard, so ``NEAR_MIN_MATCH=7`` targets ~0.875+ overlap. The in-batch
 curation path (pipeline/corpus.curate) keeps its exact-Jaccard
 verification; this operator is the at-scale admission gate where
 re-reading accepted text would cost more than a rare false drop.
@@ -109,8 +109,6 @@ def _sig_score(left_prefix: str, right_prefix: str):
 def incremental_dedup(
     new_docs: DataFrame,
     ledger: DataFrame,
-    min_match: int = NEAR_MIN_MATCH,
-    pin_batch: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Admit ``new_docs`` against ``ledger`` (rows shaped like
     :func:`ledger_rows`; may be empty).
@@ -120,19 +118,16 @@ def incremental_dedup(
     ledger rows of the kept docs — append them (idempotently) and the
     next batch dedups against tonight's corpus too.
 
-    ``pin_batch`` materializes the batch's ledger rows once
+    The batch's ledger rows are materialized once
     (``localCheckpoint``): the admission logic consumes them from five
     branches (exact, signatures, bands, spine, append), and a lazy
     plan re-runs the shingle+minhash pipeline in EVERY branch —
     measured 14 Generate subtrees / 21 scans in the audit plan before
     pinning. The batch is nightly-crawl sized and the pinned rows are
     hashes+signatures only, so this is cheap by the same argument the
-    ledger itself is (module docstring). Pass False to keep a fully
-    lazy plan (e.g. for plan-shape inspection).
+    ledger itself is (module docstring).
     """
-    batch = ledger_rows(new_docs)
-    if pin_batch:
-        batch = batch.localCheckpoint(eager=True)
+    batch = ledger_rows(new_docs).localCheckpoint(eager=True)
     exact = batch.select("doc_id", "content_hash").distinct()
     sig = batch.select("doc_id", *SIG_COLS).distinct()
     bands = batch.select("doc_id", "band", "band_hash")
@@ -165,7 +160,7 @@ def incremental_dedup(
     f_near_corpus = (
         bands.join(sig, "doc_id")
         .join(led_bands, ["band", "band_hash"])
-        .filter(_sig_score("s", "t") >= min_match)
+        .filter(_sig_score("s", "t") >= NEAR_MIN_MATCH)
         .select("doc_id")
         .distinct()
         .withColumn("f_near_corpus", F.lit(True))
@@ -182,7 +177,7 @@ def incremental_dedup(
     f_near_batch = (
         a.join(b, ["band", "band_hash"])
         .filter(F.col("doc_id") > F.col("other_id"))
-        .filter(_sig_score("s", "t") >= min_match)
+        .filter(_sig_score("s", "t") >= NEAR_MIN_MATCH)
         .select("doc_id")
         .distinct()
         .withColumn("f_near_batch", F.lit(True))

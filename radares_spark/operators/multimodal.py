@@ -4,7 +4,7 @@ Images / audio / video ride through the engine as ``binary`` columns
 with typed metadata structs, processed by Arrow-batched pandas UDFs
 over ``mapInPandas``. The decode libraries (PIL / ffmpeg / torchcodec)
 are not in this container, so the decode step is a clearly-marked
-deterministic stub (`fake_decode_features`) — but everything Spark
+deterministic stub (`inspect_features`) — but everything Spark
 cares about is real and tested: the binary schema, the mapInPandas
 batch shape, the partitioning, and the metadata projection.
 
@@ -27,8 +27,9 @@ from pyspark.sql import functions as F
 from radares_spark.io.tables import load_table
 from radares_spark.registry import register
 
-DECODE_SCHEMA = (
-    "doc_id long, n_bytes int, width int, height int, channels int, mean_luma double"
+INSPECT_SCHEMA = (
+    "doc_id long, n_bytes int, width int, height int, channels int, mean_luma double, "
+    "payload_md5 string, magic string"
 )
 
 
@@ -41,26 +42,10 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def _decode_frame(pdf: pd.DataFrame, with_meta: bool) -> pd.DataFrame:
-    import hashlib
-
-    h = pdf["payload"].map(lambda b: hashlib.md5(bytes(b)).hexdigest())
-    out = {
-        "doc_id": pdf["doc_id"],
-        "n_bytes": pdf["payload"].map(len).astype("int32"),
-        "width": (h.map(lambda x: int(x[0:4], 16)) % 1920 + 1).astype("int32"),
-        "height": (h.map(lambda x: int(x[4:8], 16)) % 1080 + 1).astype("int32"),
-        "channels": (h.map(lambda x: int(x[8], 16)) % 3 + 1).astype("int32"),
-        "mean_luma": (h.map(lambda x: int(x[9:13], 16)) / 65535.0).round(6),
-    }
-    if with_meta:
-        out["payload_md5"] = h
-        out["magic"] = h.str[:8]
-    return pd.DataFrame(out)
-
-
-def fake_decode_features(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """STUB decoder (mapInPandas kernel).
+def inspect_features(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """STUB decoder + metadata (content hash / magic prefix) in the
+    same Arrow pass — the registered ``multimodal_inspect`` shape: one
+    scan, one mapInPandas, no second metadata projection or join.
 
     A real implementation decodes image bytes (PIL / libvips) and
     emits width/height/channels/feature stats. The container has no
@@ -69,111 +54,20 @@ def fake_decode_features(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     (Arrow batches in, typed rows out, one output row per input row)
     is exactly what a real decoder uses. Swap the body, keep the plan.
     """
+    import hashlib
+
     for pdf in it:
-        yield _decode_frame(pdf, with_meta=False)
-
-
-def inspect_features(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Decoder kernel + metadata (content hash / magic prefix) in the
-    same Arrow pass — the registered ``multimodal_inspect`` shape: one
-    scan, one mapInPandas, no second metadata projection or join."""
-    for pdf in it:
-        yield _decode_frame(pdf, with_meta=True)
-
-
-def decode_batch(df: DataFrame) -> DataFrame:
-    """Run the (stub) decoder over binary payloads — Arrow-batched, one
-    task per partition, no shuffle."""
-    return df.mapInPandas(fake_decode_features, schema=DECODE_SCHEMA)
-
-
-RESIZE_SCHEMA = "doc_id long, width int, height int, resized binary, scale double"
-
-
-def resize_kernel(target_w: int, target_h: int):
-    """STUB image resize (mapInPandas kernel factory).
-
-    A real implementation decodes, resamples (PIL ``Image.resize`` /
-    libvips thumbnail) and re-encodes. The stub derives the 'resized'
-    payload deterministically (truncated md5-keyed slice of the input
-    bytes, length proportional to the area ratio) so tests can assert
-    the contract a real kernel must honor: one row per input, target
-    dims in the metadata, payload smaller when downscaling, exact
-    scale factor recorded. Swap the body, keep the plan.
-    """
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = pdf["payload"].map(len)
-            # stand-in for decoded dims (same derivation as the decoder)
-            import hashlib
-
-            h = pdf["payload"].map(lambda b: hashlib.md5(bytes(b)).hexdigest())
-            w = h.map(lambda x: int(x[0:4], 16)) % 1920 + 1
-            hgt = h.map(lambda x: int(x[4:8], 16)) % 1080 + 1
-            scale = ((target_w * target_h) / (w * hgt)).clip(upper=1.0)
-            out_len = (n * scale).astype("int64").clip(lower=1)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "resized": [
-                        bytes(b)[:ln] for b, ln in zip(pdf["payload"], out_len)
-                    ],
-                    "scale": scale.round(6),
-                }
-            )
-
-    return kernel
-
-
-def resize_batch(df: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
-    return df.mapInPandas(resize_kernel(target_w, target_h), schema=RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame_ts double, frame binary"
-
-
-def frame_sample_kernel(fps_out: float):
-    """STUB video frame sampler (flatMap-shaped mapInPandas kernel:
-    one input row -> N output rows, the UDTF shape the xlsx parser
-    also uses).
-
-    A real implementation demuxes with ffmpeg/torchcodec and emits one
-    JPEG per sampled timestamp. The stub derives a deterministic
-    per-payload duration and emits ``duration * fps_out`` byte-slice
-    'frames' with their timestamps — so the row-explosion contract,
-    schema, and ordering are real and tested.
-    """
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in it:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                h = hashlib.md5(b).hexdigest()
-                duration_s = int(h[:4], 16) % 30 + 1  # 1..30 "seconds"
-                n_frames = max(1, int(duration_s * fps_out))
-                step = max(1, len(b) // n_frames)
-                for i in range(n_frames):
-                    rows.append(
-                        (doc_id, i, round(i / fps_out, 6), b[i * step : i * step + step])
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_ts", "frame"]
-            )
-
-    return kernel
-
-
-def frame_sample_batch(df: DataFrame, fps_out: float = 1.0) -> DataFrame:
-    return df.mapInPandas(frame_sample_kernel(fps_out), schema=FRAME_SCHEMA)
-
-
-INSPECT_SCHEMA = DECODE_SCHEMA + ", payload_md5 string, magic string"
+        h = pdf["payload"].map(lambda b: hashlib.md5(bytes(b)).hexdigest())
+        yield pd.DataFrame({
+            "doc_id": pdf["doc_id"],
+            "n_bytes": pdf["payload"].map(len).astype("int32"),
+            "width": (h.map(lambda x: int(x[0:4], 16)) % 1920 + 1).astype("int32"),
+            "height": (h.map(lambda x: int(x[4:8], 16)) % 1080 + 1).astype("int32"),
+            "channels": (h.map(lambda x: int(x[8], 16)) % 3 + 1).astype("int32"),
+            "mean_luma": (h.map(lambda x: int(x[9:13], 16)) / 65535.0).round(6),
+            "payload_md5": h,
+            "magic": h.str[:8],
+        })
 
 
 @register(

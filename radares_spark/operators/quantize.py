@@ -30,11 +30,11 @@ from radares_spark.registry import QuerySpec
 Q_LEVELS = 127  # int8 symmetric range
 
 
-def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """(vec_id, q array<tinyint>, scale double, qnrm double) — pure
     projection, whole-stage codegen'd (unrolled per-dimension terms;
     higher-order-function lambdas are interpreted per element)."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     amax = F.greatest(
         *[F.abs(F.element_at(v, i + 1).cast("double")) for i in range(DIM)]
     )
@@ -98,14 +98,14 @@ LIBRARY_SPECS: dict[str, QuerySpec] = {
 }
 
 
-def embedding_store_health(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def embedding_store_health(emb: DataFrame) -> DataFrame:
     """One-row health audit of an embedding store — the vector twin of
     ``corpus_health_report``, run before building/serving any index:
     row count, dimension violations, NULL vectors, zero-norm vectors
     (cosine is undefined on them — they poison every scorer), and the
     norm distribution (min/avg/max rounded). One aggregate, zero
     shuffles beyond it."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     nrm2 = None
     for i in range(DIM):
         t = F.coalesce(F.element_at(v, i + 1).cast("double"), F.lit(0.0)) ** 2

@@ -59,12 +59,12 @@ N_QUERY_DOCS = 6  # doc_id < 6 seed the spec's query set
 QUERY_LEN = 4  # first 4 tokens of each seed doc form its query
 
 
-def tokenize(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def tokenize(docs: DataFrame) -> DataFrame:
     """(doc_id, tok) token stream under the corpus-wide normalize_text
     alphabet ([a-z0-9 ] — the same cross-engine-safe normalization
     every dedup/DSIR/embed operator uses). Docs whose normalized text
     is empty produce no rows (no doc spine — rejoin downstream)."""
-    norm = normalize_text(F.coalesce(F.col(text_col), F.lit("")))
+    norm = normalize_text(F.coalesce(F.col("text"), F.lit("")))
     return (
         docs.select("doc_id", norm.alias("__t"))
         .filter(F.col("__t") != "")
@@ -72,14 +72,14 @@ def tokenize(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def corpus_postings(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_postings(docs: DataFrame) -> DataFrame:
     """(doc_id, tok, tf, dl) — the in-doc term frequencies plus the
     document length (total tokens), the per-posting payload BM25's
     length normalization needs. One aggregate on (doc_id, tok) then
     one doc-keyed window for dl: two shuffles total, both on keys the
     downstream score join reuses."""
     tf = (
-        tokenize(docs, text_col)
+        tokenize(docs)
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -110,11 +110,11 @@ def _bm25_term_score(k1: float, b: float):
     return idf * tf_part
 
 
-def query_terms(queries: DataFrame, text_col: str = "qtext") -> DataFrame:
+def query_terms(queries: DataFrame) -> DataFrame:
     """(query_id, tok) DISTINCT query terms (the Lucene convention:
     query term frequency is ignored). Callers pass a small frame —
     this side gets broadcast in bm25_topk."""
-    norm = normalize_text(F.coalesce(F.col(text_col), F.lit("")))
+    norm = normalize_text(F.coalesce(F.col("qtext"), F.lit("")))
     return (
         queries.select("query_id", norm.alias("__t"))
         .filter(F.col("__t") != "")
@@ -123,18 +123,11 @@ def query_terms(queries: DataFrame, text_col: str = "qtext") -> DataFrame:
     )
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int = TOP_K,
-    k1: float = K1,
-    b: float = B,
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = TOP_K) -> DataFrame:
     """(query_id, doc_id, score, rank) — top-k docs per query under
     BM25. The corpus statistics are computed from ``docs`` itself;
     for a pre-built index use bm25_topk_from_store."""
-    postings = corpus_postings(docs, text_col)
+    postings = corpus_postings(docs)
     df_tab, stats = _corpus_stats(postings)
     qterms = query_terms(queries)
     scored = (
@@ -142,7 +135,7 @@ def bm25_topk(
         .join(df_tab, "tok")  # vocabulary-sized: AQE decides, no hint
         .crossJoin(F.broadcast(stats))
         .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum(_bm25_term_score(k1, b)), 6).alias("score"))
+        .agg(F.round(F.sum(_bm25_term_score(K1, B)), 6).alias("score"))
     )
     rn = F.row_number().over(
         W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -171,7 +164,6 @@ def build_postings_store(
     docs: DataFrame,
     path: str,
     n_buckets: int = N_TERM_BUCKETS,
-    text_col: str = "text",
 ) -> None:
     """Materialize the inverted index: posting rows (tok, doc_id, tf,
     dl, df) written under ``path/postings`` partitioned by
@@ -183,7 +175,7 @@ def build_postings_store(
     once per query session, so an incremental refresh never leaves
     stale globals inside untouched buckets (the Lucene discipline:
     norms per posting, collection stats per segment header)."""
-    postings = corpus_postings(docs, text_col)
+    postings = corpus_postings(docs)
     df_tab, stats = _corpus_stats(postings)
     full = postings.join(df_tab, "tok").withColumn(
         "bucket", _term_bucket(F.col("tok"), n_buckets)
@@ -205,8 +197,6 @@ def bm25_topk_from_store(
     path: str,
     queries: DataFrame,
     k: int = TOP_K,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Serve top-k from a build_postings_store index, reading ONLY the
     term buckets the query set touches. The bucket IN-list is computed
@@ -240,7 +230,7 @@ def bm25_topk_from_store(
         .withColumn("n_docs", F.lit(n_docs))
         .withColumn("avgdl", F.lit(avgdl))
         .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum(_bm25_term_score(k1, b)), 6).alias("score"))
+        .agg(F.round(F.sum(_bm25_term_score(K1, B)), 6).alias("score"))
     )
     rn = F.row_number().over(
         W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -257,7 +247,6 @@ def refresh_postings_store(
     path: str,
     add_docs: DataFrame | None = None,
     remove_docs: DataFrame | None = None,
-    text_col: str = "text",
     night: str | None = None,
 ) -> dict[str, int]:
     """Bring a postings store in line with a corpus delta, rewriting
@@ -316,10 +305,10 @@ def refresh_postings_store(
         }
     empty = spark.createDataFrame([], "doc_id long, tok string, tf long, dl long")
     add_p = (
-        corpus_postings(add_docs, text_col) if add_docs is not None else empty
+        corpus_postings(add_docs) if add_docs is not None else empty
     ).localCheckpoint(eager=True)
     rem_p = (
-        corpus_postings(remove_docs, text_col)
+        corpus_postings(remove_docs)
         if remove_docs is not None
         else empty
     ).localCheckpoint(eager=True)
@@ -494,19 +483,17 @@ def sparse_cosine_topk(
     )
 
 
-def rrf_fuse(
-    rank_lists: list[DataFrame], k: int = TOP_K, k0: int = RRF_K0
-) -> DataFrame:
+def rrf_fuse(rank_lists: list[DataFrame], k: int = TOP_K) -> DataFrame:
     """(query_id, doc_id, rrf_score, rank) — reciprocal rank fusion
     (Cormack et al. 2009): score(d) = sum over lists of
-    1 / (k0 + rank_in_list(d)), summed only where d appears. Rank
+    1 / (RRF_K0 + rank_in_list(d)), summed only where d appears. Rank
     lists are any frames with (query_id, doc_id, rank); fusion sees
     ranks only, so wildly different score scales (BM25 vs cosine)
     need no calibration — the whole point of RRF."""
     contribs = None
     for rl in rank_lists:
         c = rl.select(
-            "query_id", "doc_id", (1.0 / (k0 + F.col("rank"))).alias("c")
+            "query_id", "doc_id", (1.0 / (RRF_K0 + F.col("rank"))).alias("c")
         )
         contribs = c if contribs is None else contribs.unionByName(c)
     fused = contribs.groupBy("query_id", "doc_id").agg(
@@ -570,52 +557,6 @@ def text_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed_tf(docs, EMBED_DIM), qids, k=RRF_POOL, query_emb=qemb
     )
     return rrf_fuse([lex, dense], k=TOP_K)
-
-
-def hybrid_rrf_from_stores(
-    spark: SparkSession,
-    postings_path: str,
-    ivf_path: str,
-    queries_text: DataFrame,
-    query_vecs: DataFrame,
-    n_probe: int,
-    dim: int | None = None,
-    k: int = TOP_K,
-    pool: int = RRF_POOL,
-) -> DataFrame:
-    """The SERVING twin of :func:`text_hybrid_rrf_topk`: BM25 top-pool
-    from the term-bucketed postings store (static partition pruning —
-    only query-term buckets read) fused by RRF with an ANN top-pool
-    from the IVF store (DPP cell pruning — only probed cells read).
-    ``queries_text`` = (query_id, qtext); ``query_vecs`` = (vec_id, v,
-    nrm) sharing the same ids. The probe keeps self-rows
-    (exclude_self=False), matching the inline retrievers.
-
-    With ``n_probe`` = the store's cell count the dense side is the
-    EXACT cosine ranking, and the fused output matches the inline
-    hybrid wherever each query has >= pool positive-cosine neighbors
-    (the inline sparse path never surfaces zero-overlap candidates;
-    an exhaustive probe scores them at 0.0 — a difference only when
-    the candidate pool can't be filled with positive cosines, pinned
-    in tests at both settings). Smaller n_probe trades recall for
-    reading n_probe/n_cells of the store — the production serving
-    knob."""
-    from radares_spark.operators.embed import EMBED_DIM
-    from radares_spark.operators.similarity import probe_stored_topk
-
-    lex = bm25_topk_from_store(spark, postings_path, queries_text, k=pool)
-    centroids = spark.read.parquet(f"{ivf_path}/_centroids")
-    dns = probe_stored_topk(
-        spark,
-        ivf_path,
-        centroids,
-        query_vecs,
-        n_probe=n_probe,
-        k=pool,
-        dim=EMBED_DIM if dim is None else dim,
-        exclude_self=False,
-    ).select("query_id", F.col("neighbor_id").alias("doc_id"), "rank")
-    return rrf_fuse([lex.select("query_id", "doc_id", "rank"), dns], k=k)
 
 
 _BM25_CTES = f"""norm AS (

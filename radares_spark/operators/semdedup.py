@@ -144,7 +144,6 @@ def semdedup_admit_from_store(
     delta_normed: DataFrame,
     tau: float = SEM_TAU,
     n_probe: int = 1,
-    dim: int | None = None,
 ) -> DataFrame:
     """Semantic ADMISSION: audit a nightly delta against the kept
     corpus's IVF serving store (the one ``corpus-refresh --ivf-store``
@@ -161,9 +160,9 @@ def semdedup_admit_from_store(
     brute-forcing 100 TB of embeddings. n_probe=1 is the paper's
     within-cluster discipline (a true semantic twin lands in its
     match's cell — pinned by the planted-twin test); raise it to trade
-    scan volume for boundary recall. ``exclude_self`` stays on: a
-    CHANGED doc re-embedded under its stored id must not match its own
-    stale vector (the refresh replaces it).
+    scan volume for boundary recall. The probe excludes each query's
+    own id: a CHANGED doc re-embedded under its stored id must not
+    match its own stale vector (the refresh replaces it).
 
     Composes with the store lifecycle: refresh_ivf_store's drift
     telemetry (retrain_due) is the signal that this gate's recall is
@@ -172,9 +171,7 @@ def semdedup_admit_from_store(
 
     # dim inferred from the store itself — the dot's unrolled/HOF fold
     # silently truncates on a wrong dim (build_ivf_index docstring)
-    centroids, store_dim_ = store_centroids(spark, ivf_dir)
-    if dim is None:
-        dim = store_dim_
+    centroids, dim = store_centroids(spark, ivf_dir)
     top1 = probe_stored_topk(
         spark,
         ivf_dir,
@@ -183,7 +180,6 @@ def semdedup_admit_from_store(
         n_probe=n_probe,
         k=1,
         dim=dim,
-        exclude_self=True,
     ).select(
         F.col("query_id").alias("vec_id"),
         F.col("neighbor_id").alias("match_id"),

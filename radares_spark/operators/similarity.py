@@ -178,12 +178,7 @@ def ivf_probe_topk(
     return _rank_topk(scored, k)
 
 
-def write_ivf_layout(
-    normed: DataFrame,
-    assignment: DataFrame,
-    path: str,
-    max_records_per_file: int = 4_000_000,
-) -> None:
+def write_ivf_layout(normed: DataFrame, assignment: DataFrame, path: str) -> None:
     """Materialize the corpus partitioned by trained IVF cell — the
     serving layout that turns probe routing into PARTITION PRUNING:
     a probe of ``n_probe`` of ``n_cells`` cells lists and reads only
@@ -196,7 +191,7 @@ def write_ivf_layout(
         path,
         partition_col="cell",
         sort_col="vec_id",
-        max_records_per_file=max_records_per_file,
+        max_records_per_file=4_000_000,
     )
 
 
@@ -315,9 +310,13 @@ def refresh_ivf_store(
                     f"delta rows lack store columns {sorted(missing)}; the "
                     "rewrite would null them out for every row in a touched cell"
                 )
-            fresh = (
-                delta_normed.join(delta_assign, "vec_id")
-                .select(*data_cols, "cell")
+            # cast to the store's own column types: a delta carrying
+            # array<double> over an array<float> store would otherwise
+            # write files whose footers disagree, and a later read of
+            # the store fails on whichever type it did not infer
+            types = {f.name: f.dataType for f in stored.schema.fields}
+            fresh = delta_normed.join(delta_assign, "vec_id").select(
+                *[F.col(c).cast(types[c]).alias(c) for c in data_cols], "cell"
             )
             rows = survivors.unionByName(fresh).localCheckpoint()
         else:
@@ -391,7 +390,6 @@ def retrain_ivf_store(
     out_dir: str,
     n_cells: int | None = None,
     iters: int = 3,
-    dim: int | None = None,
 ) -> dict:
     """The remedy for ``retrain_due`` — rebuild the IVF store from its
     own resident vectors under FRESHLY TRAINED centroids, into a NEW
@@ -408,8 +406,8 @@ def retrain_ivf_store(
     broadcast-assign passes over the resident vectors plus one
     partitioned rewrite — scheduled off the telemetry, never nightly.
 
-    ``n_cells``/``dim`` default to the old store's (centroid count /
-    vector length). Returns ``{"n_vectors", "n_cells",
+    ``n_cells`` defaults to the old store's centroid count; the vector
+    length is the old store's. Returns ``{"n_vectors", "n_cells",
     "train_mean_cos"}`` for the operator's log."""
     from radares_spark.operators.semdedup import store_centroids
 
@@ -420,9 +418,7 @@ def retrain_ivf_store(
         )
     from radares_spark.io.fs import list_names
 
-    old_centroids, store_dim = store_centroids(spark, ivf_dir)
-    if dim is None:
-        dim = store_dim
+    old_centroids, dim = store_centroids(spark, ivf_dir)
     if n_cells is None:
         n_cells = old_centroids.count()
     if not any(n.startswith("cell=") for n in list_names(spark, ivf_dir)):
@@ -462,23 +458,20 @@ def probe_stored_topk(
     n_probe: int = N_PROBE,
     k: int = TOP_K,
     dim: int = DIM,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """ANN top-k against a :func:`write_ivf_layout` store. The
     broadcast probe join's cell keys reach the scan as a
     DynamicPruningExpression in ``PartitionFilters`` (asserted in
     tests/test_ivf.py) — unprobed cells' files are never read, making
     "searched fraction = n_probe/n_cells" literal I/O, not just
-    row-filter arithmetic. ``exclude_self`` drops the query's own row
-    (the neighbor-search default); doc-seeded retrieval pools
-    (hybrid_rrf_from_stores) keep it, matching the inline retrievers
-    where a query doc ranks itself first."""
+    row-filter arithmetic. The query's own row is dropped (neighbor
+    search)."""
     probes = _route_probes(queries, centroids, n_probe, dim)
     stored = spark.read.parquet(path)
     cos = F.round(pair_dot("qv", "v") / (F.col("qn") * F.col("nrm")), 4)
-    scored = stored.join(F.broadcast(probes), "cell")
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
+    scored = stored.join(F.broadcast(probes), "cell").filter(
+        F.col("query_id") != F.col("vec_id")
+    )
     scored = scored.select(
         "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim")
     )

@@ -1,18 +1,10 @@
-"""Skew mitigation: salted two-phase aggregation.
+"""Skew diagnostics: the heavy-hitter report.
 
 AQE's skew-join splitting (on in session.py) fixes skewed JOINS at
 runtime, but a skewed AGGREGATION key still lands every row of the hot
 key in one reducer — at 100 TB one task runs for hours while the rest
-idle. The standard fix is salting: aggregate on (key, salt) first so
-the hot key's rows spread over ``n_salts`` reducers, then combine the
-per-salt partials. Works for any decomposable aggregate; avg is
-decomposed to sum/count.
-
-Salt choice: ``xxhash64`` over all row columns — deterministic (same
-input -> same result, unlike rand()) and spreads a hot key as long as
-its rows differ anywhere. The cost is one extra (cheap, ``n_keys x
-n_salts``-row) shuffle — only worth paying when a key is genuinely
-hot; for uniform keys use a plain groupBy.
+idle. :func:`skew_report` names the hot keys and their share of the
+table before such a job runs.
 """
 
 from __future__ import annotations
@@ -20,55 +12,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# aggregate -> (partial fn, final fn) names; avg handled specially
-_DECOMP = {
-    "sum": ("sum", "sum"),
-    "count": ("count", "sum"),
-    "min": ("min", "min"),
-    "max": ("max", "max"),
-}
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    specs: list[tuple[str, str, str]],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation over ``keys`` with salt spreading.
-
-    ``specs`` = [(column, agg, alias)] with agg in sum/count/min/max/avg.
-    Result is identical to ``df.groupBy(keys).agg(...)`` (tested), with
-    the hot-key reduce fanned out over ``n_salts`` partial groups.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    partials, finals = [], []
-    for col, agg, alias in specs:
-        if agg == "avg":
-            partials += [
-                F.sum(col).alias(f"__s_{alias}"),
-                F.count(col).alias(f"__c_{alias}"),
-            ]
-            finals.append(
-                (F.sum(f"__s_{alias}") / F.sum(f"__c_{alias}")).alias(alias)
-            )
-        elif agg in _DECOMP:
-            p, f = _DECOMP[agg]
-            partials.append(getattr(F, p)(col).alias(f"__p_{alias}"))
-            finals.append(getattr(F, f)(f"__p_{alias}").alias(alias))
-        else:
-            raise ValueError(f"non-decomposable aggregate: {agg}")
-    partial = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(*partials)
-    return partial.groupBy(*keys).agg(*finals)
-
 
 def skew_report(df: DataFrame, keys: list[str], top_n: int = 20) -> DataFrame:
     """Heavy-hitter diagnostic: the ``top_n`` hottest keys by row
     count, with each key's share of the table — the report you run
-    BEFORE a 100 TB join/agg to decide whether ``salted_agg``, AQE
-    skew splitting, or a broadcast cap is needed (and the engine's own
-    hot-bucket caps feed on exactly this shape:
-    ``dedup.lsh_pairs_capped``, ``text_ext.dup_span_stats_capped``).
+    BEFORE a 100 TB join/agg to decide whether salting, AQE skew
+    splitting, or a broadcast cap is needed (and the engine's own
+    hot-bucket cap feeds on exactly this shape:
+    ``dedup.lsh_pairs_capped``).
 
     Returns (*keys, n_rows, share, key_rank), rank 1 = hottest;
     ties broken by key ascending so the report is deterministic.

@@ -22,10 +22,6 @@ Scale shapes:
   per-rule ``regexp_count``, whole-stage-codegen'd, zero shuffles.
   Patterns use explicit ASCII classes only, so Java regex (Spark) and
   RE2 (DuckDB) agree byte-for-byte.
-- ``strip_boilerplate`` — CCNet line-frequency dedup: one shuffle to
-  count distinct docs per (group, normalized-line hash), broadcast of
-  the (tiny, threshold-crossing) boilerplate set back onto the line
-  stream, one regroup on doc_id to reassemble texts.
 """
 
 from __future__ import annotations
@@ -128,9 +124,9 @@ def extract_html_text(docs: DataFrame, html_col: str = "html") -> DataFrame:
     return out.withColumn("plain_text", txt)
 
 
-def html_extract_sql(table: str, html_col: str = "html") -> str:
+def html_extract_sql(table: str) -> str:
     """DuckDB mirror of :func:`extract_html_text` over ``table``."""
-    txt = html_col
+    txt = "html"
     for pat, repl in HTML_STRIP_RULES:
         txt = f"regexp_replace({txt}, '{pat}', '{repl}', 'g')"
     for ent, ch in HTML_ENTITIES:
@@ -139,115 +135,10 @@ def html_extract_sql(table: str, html_col: str = "html") -> str:
     txt = f"trim(regexp_replace({txt}, '\\s+', ' ', 'g'))"
     return f"""
     SELECT *,
-           len(regexp_extract_all({html_col}, '<[^>]+>'))::INT AS n_tags,
-           len(regexp_extract_all({html_col}, '(?i)<a\\b'))::INT AS n_links,
+           len(regexp_extract_all(html, '<[^>]+>'))::INT AS n_tags,
+           len(regexp_extract_all(html, '(?i)<a\\b'))::INT AS n_links,
            {txt} AS plain_text
     FROM {table}
-    """
-
-
-def strip_boilerplate(
-    docs: DataFrame,
-    min_docs: int = 3,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """CCNet-style line-level boilerplate removal: a line whose
-    normalized hash appears in >= ``min_docs`` distinct docs of the
-    same ``group_col`` (domain/shard) is navigation chrome, cookie
-    banners, footers — drop it from every doc; unique prose survives.
-
-    Output: ``doc_id``, ``clean_text`` (kept lines re-joined in
-    original order; '' if everything was boilerplate), ``n_lines``,
-    ``n_removed``. Lines that normalize to '' (blank/punctuation-only)
-    are never counted as boilerplate and are kept, so paragraph
-    structure survives.
-
-    Scale shape: explode to (doc, pos, line) rows — map-side; the
-    line-frequency table is ONE shuffle on (group, line-hash) with a
-    map-side-combined distinct count; the boilerplate set it yields is
-    tiny by construction (only hashes crossing the min_docs bar), so
-    the anti-join back onto the line stream broadcasts; the final
-    regroup is one shuffle on doc_id. Nothing is quadratic and no
-    full-corpus byte ever moves twice.
-    """
-    lines = docs.select(
-        "doc_id",
-        group_col,
-        F.posexplode(F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")).alias(
-            "pos", "line"
-        ),
-    )
-    keyed = lines.withColumn("nl", normalize_text(F.col("line")))
-    freq = (
-        keyed.filter(F.col("nl") != "")
-        .groupBy(group_col, "nl")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-    )
-    boiler = freq.filter(F.col("n_docs") >= min_docs).select(group_col, "nl")
-    kept = keyed.join(
-        F.broadcast(boiler),
-        [group_col, "nl"],
-        "left_anti",
-    )
-    agg = kept.groupBy("doc_id").agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda s: s["line"],
-            ),
-        ).alias("clean_text"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    tot = keyed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_lines"))
-    return (
-        tot.join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            "n_lines",
-            (F.col("n_lines") - F.coalesce("n_kept", F.lit(0))).alias("n_removed"),
-        )
-    )
-
-
-def boilerplate_sql(table: str, min_docs: int = 3) -> str:
-    """DuckDB mirror of :func:`strip_boilerplate` over ``table``."""
-    norm = NORM_SQL.format(c="line")
-    return f"""
-    WITH lines AS (
-        SELECT doc_id, source, lr.pos AS pos, lr.line AS line
-        FROM (
-            SELECT doc_id, source,
-                   unnest(list_transform(
-                       string_split(coalesce(text, ''), chr(10)),
-                       (x, i) -> struct_pack(pos := i, line := x))) AS lr
-            FROM {table}
-        )
-    ),
-    keyed AS (SELECT doc_id, source, pos, line, {norm} AS nl FROM lines),
-    freq AS (
-        SELECT source, nl, count(DISTINCT doc_id) AS n_docs
-        FROM keyed WHERE nl <> '' GROUP BY source, nl
-    ),
-    boiler AS (SELECT source, nl FROM freq WHERE n_docs >= {min_docs}),
-    kept AS (
-        SELECT k.* FROM keyed k
-        LEFT JOIN boiler b ON k.source = b.source AND k.nl = b.nl
-        WHERE b.nl IS NULL
-    ),
-    agg AS (
-        SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-               count(*) AS n_kept
-        FROM kept GROUP BY doc_id
-    ),
-    tot AS (SELECT doc_id, count(*) AS n_lines FROM keyed GROUP BY doc_id)
-    SELECT t.doc_id,
-           coalesce(a.clean_text, '') AS clean_text,
-           t.n_lines::BIGINT AS n_lines,
-           (t.n_lines - coalesce(a.n_kept, 0))::BIGINT AS n_removed
-    FROM tot t LEFT JOIN agg a USING (doc_id)
     """
 
 
@@ -368,10 +259,9 @@ def dup_span_stats(docs: DataFrame, w: int = DUP_SPAN_W) -> DataFrame:
 
     Straggler note: a span shared by N docs puts N rows in one window
     partition — linear and spillable, but at crawl scale a universal
-    boilerplate sentence makes one long task. Production callers use
-    :func:`dup_span_stats_capped`, which bounds the window partition
-    at ``max_docs_per_span`` rows and reports the hot spans, with
-    EXACTLY the same output.
+    boilerplate sentence makes one long task. A bound would salt hot
+    hashes apart from the window, as ``dedup.lsh_pairs_capped`` does
+    for LSH buckets (a hot hash is dup by definition).
     """
     # the hash is unhex'd to BINARY(16) before it ever shuffles: the
     # 32-char hex string is 3x the bytes for the same identity
@@ -414,100 +304,6 @@ def dup_span_stats(docs: DataFrame, w: int = DUP_SPAN_W) -> DataFrame:
             .alias("dup_frac"),
         )
     )
-
-
-DUP_SPAN_MAX_DOCS = 10_000  # production hot-span bound (distinct docs)
-
-
-def dup_span_stats_capped(
-    docs: DataFrame,
-    w: int = DUP_SPAN_W,
-    max_docs_per_span: int = DUP_SPAN_MAX_DOCS,
-) -> tuple[DataFrame, DataFrame]:
-    """:func:`dup_span_stats` with the hot-hash straggler capped — the
-    same cap-and-report hardening as ``dedup.lsh_pairs_capped``.
-
-    The uncapped count window partitions by the span hash, so a
-    universal boilerplate sentence ("all rights reserved") shared by
-    10^8 docs becomes ONE window task of 10^8 rows — linear and
-    spillable, but a straggler. Here span hashes whose distinct-doc
-    count exceeds ``max_docs_per_span`` are split out FIRST via a
-    map-side-combined aggregate (each map partition emits <= 1 row per
-    hash, so the reduce side of a universal hash sees <= n_partitions
-    rows — the sizing pass cannot itself straggle), and:
-
-    - **hot** hashes are dup spans BY DEFINITION (distinct docs >
-      max >= 2), so their windows count toward ``n_dup_windows``
-      without ever needing the exact distinct-doc number — the result
-      is EXACT, not an approximation, which is why the library parity
-      of the cold path carries over unchanged;
-    - a broadcast LEFT join marks hot rows, and the count window
-      partitions on ``(h, salt)`` where salt is constant for cold rows
-      and the doc_id for hot rows: cold partitions hold the true
-      distinct-doc count and are <= max_docs_per_span rows BY
-      CONSTRUCTION; hot rows fall into singleton partitions (their
-      window count is ignored — the marker decides). This keeps the
-      whole per-doc rollup to ONE pass over the (doc, hash) stream:
-      the first formulation split cold/hot into anti+semi joined
-      branches and re-evaluated the dominant shingle+md5 pipeline
-      three times (review finding; measured 2.3x slower than the
-      uncapped operator at sf0.1 — worse than the straggler it fixed);
-    - ``hot_spans`` (h, n_docs) is the pathology report — tiny by
-      nature, broadcast both ways.
-
-    Returns ``(stats, hot_spans)`` with ``stats`` exactly equal to the
-    uncapped :func:`dup_span_stats` output.
-    """
-    # binary(16) hash internally (see dup_span_stats); the hot REPORT
-    # converts back to the hex-string contract at the boundary below
-    wins = shingle_rows(docs, n=w).select(
-        "doc_id", F.unhex(F.md5(F.encode(F.col("shingle"), "UTF-8"))).alias("h")
-    )
-    doc_h = wins.groupBy("doc_id", "h").agg(F.count(F.lit(1)).alias("c"))
-    sizes = doc_h.groupBy("h").agg(F.count(F.lit(1)).alias("n_docs"))
-    hot = sizes.filter(F.col("n_docs") > max_docs_per_span)
-
-    marked = doc_h.join(
-        F.broadcast(hot.select("h", F.lit(True).alias("__hot"))), "h", "left"
-    ).withColumn(
-        # doc_id >= 0 everywhere in this engine; -1 can't collide, and
-        # a hot hash has NO unmarked rows, so cold partitions are pure
-        "__salt",
-        F.when(F.col("__hot"), F.col("doc_id")).otherwise(F.lit(-1)),
-    )
-    nd = F.count(F.lit(1)).over(W.partitionBy("h", "__salt"))
-    per_doc = (
-        marked.withColumn("nd", nd)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("n_windows"),
-            F.sum(
-                F.when(F.col("__hot") | (F.col("nd") >= 2), F.col("c")).otherwise(0)
-            ).alias("n_dup_windows"),
-        )
-    )
-    merged = (
-        docs.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_windows", F.lit(0)).alias("n_windows"),
-            F.coalesce("n_dup_windows", F.lit(0)).alias("n_dup_windows"),
-        )
-    )
-    stats = merged.select(
-        "doc_id",
-        "n_windows",
-        "n_dup_windows",
-        F.when(F.col("n_windows") == 0, F.lit(0.0))
-        .otherwise(
-            F.round(F.col("n_dup_windows") / F.col("n_windows").cast("double"), 6)
-        )
-        .alias("dup_frac"),
-    )
-    # hex back at the report boundary only — (h, n_docs) keeps its
-    # md5-hex string contract while everything internal stays binary
-    return stats, hot.select(F.lower(F.hex("h")).alias("h"), "n_docs")
 
 
 def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -606,13 +402,11 @@ def _covered_positions(
     )
 
 
-def remove_dup_spans(
-    docs: DataFrame, w: int = DUP_SPAN_W, min_docs: int = 2
-) -> DataFrame:
+def remove_dup_spans(docs: DataFrame) -> DataFrame:
     """Cross-document duplicate-span REMOVAL — the transform stage of
     Lee et al. 2021 substring dedup (``dup_span_stats`` is the detect
-    stage): every token covered by a rolling ``w``-word window whose
-    hash occurs in >= ``min_docs`` DISTINCT documents is excised, and
+    stage): every token covered by a rolling ``DUP_SPAN_W``-word window
+    whose hash occurs in >= 2 DISTINCT documents is excised, and
     the survivors are reassembled in order.
 
     Returns one row per input doc:
@@ -629,7 +423,7 @@ def remove_dup_spans(
       count-over-hash window as ``dup_span_stats`` — no semi-join
       back onto a second evaluation of the shingle+md5 pipeline (the
       first formulation did exactly that and measured 1.5x slower at sf0.1);
-    - covered positions = dup windows x ``w`` offsets, deduplicated
+    - covered positions = dup windows x ``DUP_SPAN_W`` offsets, deduplicated
       per (doc, pos): proportional to actually-duplicated text, not
       the corpus;
     - per-doc token totals come from a PROJECTION (array length), not
@@ -646,10 +440,10 @@ def remove_dup_spans(
 
     Skew note: the count-over-hash window puts one row per containing
     doc in a hash's partition — linear and spillable; at crawl scale
-    a universal boilerplate span wants the salted-window cap of
-    ``dup_span_stats_capped`` (hot hashes are dup by definition).
+    a universal boilerplate span makes one long task (see the
+    straggler note on :func:`dup_span_stats`).
     """
-    cov_doc = _cov_doc(docs, w, min_docs)
+    cov_doc = _cov_doc(docs, DUP_SPAN_W, 2)
     norm = normalize_text(F.coalesce(F.col("text"), F.lit("")))
     side = docs.select("doc_id", F.split(norm, " ").alias("w")).withColumn(
         "n",
@@ -684,9 +478,7 @@ def text_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return remove_dup_spans(docs)
 
 
-def longest_dup_span(
-    docs: DataFrame, w: int = DUP_SPAN_W, min_docs: int = 2
-) -> DataFrame:
+def longest_dup_span(docs: DataFrame) -> DataFrame:
     """Per-doc length (in tokens) of the LONGEST contiguous duplicated
     region — the signal Lee et al. 2021 threshold on (their removal
     targets substrings over ~50 tokens; ``dup_frac`` alone can't tell
@@ -702,7 +494,7 @@ def longest_dup_span(
     partition by doc (and island), so per-task work is bounded by a
     single document's covered tokens.
     """
-    covered = _covered_positions(docs, w, min_docs)
+    covered = _covered_positions(docs, DUP_SPAN_W, 2)
     island = (
         F.col("pos")
         - F.row_number().over(W.partitionBy("doc_id").orderBy("pos"))
@@ -954,15 +746,14 @@ WINNOW_K = 3  # gram size (words)
 WINNOW_W = 4  # winnowing window (grams)
 
 
-def winnow_fingerprints(
-    docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al. 2003, the
-    MOSS algorithm): hash every ``k``-word gram, slide a ``w``-gram
-    window, and select each window's minimal hash (rightmost on ties)
-    — a position-robust fingerprint set with the paper's guarantee
-    that any shared run of ``w + k - 1`` words shares at least one
-    fingerprint, at ~2/(w+1) the volume of the full gram stream. The
+    MOSS algorithm): hash every k-word gram (k = ``WINNOW_K``), slide
+    a w-gram window (w = ``WINNOW_W``), and select each window's
+    minimal hash (rightmost on ties) — a position-robust fingerprint
+    set with the paper's guarantee that any shared run of w + k - 1
+    words shares at least one fingerprint, at ~2/(w+1) the volume of
+    the full gram stream. The
     selective sibling of ``dup_span_stats``: where spans flag ALL
     shared windows, winnowing emits a sparse, index-friendly subset.
 
@@ -984,13 +775,13 @@ def winnow_fingerprints(
     # min-struct window's comparator dominates this operator, not
     # shuffle bytes, and UTF8String compare beats BinaryType compare
     # under the aggregate. Hex stays.
-    grams = shingle_rows(docs, n=k, with_pos=True).select(
+    grams = shingle_rows(docs, n=WINNOW_K, with_pos=True).select(
         "doc_id",
         F.col("shingle_pos").alias("pos"),
         F.md5(F.encode(F.col("shingle"), "UTF-8")).alias("h"),
     )
     win = (
-        W.partitionBy("doc_id").orderBy("pos").rowsBetween(-(w - 1), 0)
+        W.partitionBy("doc_id").orderBy("pos").rowsBetween(-(WINNOW_W - 1), 0)
     )
     sel = grams.withColumn(
         "m", F.min(F.struct(F.col("h"), (-F.col("pos")).alias("np"))).over(win)
@@ -1059,8 +850,6 @@ WINNOW_MIN_SHARED = 2
 
 def winnow_pairs(
     docs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
     min_shared: int = WINNOW_MIN_SHARED,
     max_bucket: int | None = None,
 ) -> DataFrame:
@@ -1071,8 +860,8 @@ def winnow_pairs(
     AT A DIFFERENT OFFSET keeps its fingerprints (window minima are
     content-addressed, not position-addressed), so shifted plagiarism
     that MinHash-at-default-bands misses still collides here, with the
-    paper's guarantee that any shared run of w + k - 1 words shares a
-    fingerprint.
+    paper's guarantee that any shared run of WINNOW_W + WINNOW_K - 1
+    words shares a fingerprint.
 
     Returns (doc_a, doc_b, n_shared, fp_jaccard, fp_containment) with
     doc_a < doc_b. ``n_shared`` counts distinct shared hashes, so both
@@ -1092,8 +881,8 @@ def winnow_pairs(
     buckets of |bucket|^2, and ``max_bucket`` drops over-shared
     fingerprints exactly as MOSS does for boilerplate (a
     stop-fingerprint list) — the same straggler bound as
-    ``lsh_pairs_capped``/``dup_span_stats_capped``."""
-    fps = winnow_fingerprints(docs, k, w).select("doc_id", "fp_hash")
+    ``dedup.lsh_pairs_capped``."""
+    fps = winnow_fingerprints(docs).select("doc_id", "fp_hash")
     # collect_set dedups a hash selected at several positions of the
     # same doc; sort_array pins deterministic pair order
     buckets = fps.groupBy("fp_hash").agg(
@@ -1183,11 +972,7 @@ LIBRARY_SPECS["text_winnow_pairs"] = QuerySpec(
 SPAM_BLOCKLIST = ["casino", "lottery", "jackpot", "viagra", "xxx"]
 
 
-def blocklist_stats(
-    docs: DataFrame,
-    words: list[str] | None = None,
-    text_col: str = "text",
-) -> DataFrame:
+def blocklist_stats(docs: DataFrame, words: list[str] | None = None) -> DataFrame:
     """Per-doc banned-word statistics + the C4 gate (Raffel et al.
     2020 dropped any page containing ANY list entry): (doc_id,
     n_tokens, n_banned, banned_ratio, blocklist_pass) — pass = zero
@@ -1223,7 +1008,7 @@ def blocklist_stats(
             "blocklist entries must be normalize_text-stable lowercase "
             f"[a-z0-9]+ words (pre-normalize your list); offending: {bad[:5]}"
         )
-    norm = normalize_text(F.coalesce(F.col(text_col), F.lit("")))
+    norm = normalize_text(F.coalesce(F.col("text"), F.lit("")))
     staged = docs.select("doc_id", norm.alias("__t"))
     toks = F.when(F.col("__t") == "", F.lit(0)).otherwise(
         F.size(F.split(F.col("__t"), " "))
@@ -1291,7 +1076,6 @@ def chunk_windows(
     docs: DataFrame,
     chunk_len: int = CHUNK_LEN,
     stride: int = CHUNK_STRIDE,
-    text_col: str = "text",
     with_text: bool = False,
 ) -> DataFrame:
     """Overlapping fixed-length word-window chunks per document — the
@@ -1329,7 +1113,7 @@ def chunk_windows(
             f"stride={stride} > chunk_len={chunk_len} would leave "
             "uncovered word gaps between consecutive chunks"
         )
-    norm = normalize_text(F.coalesce(F.col(text_col), F.lit("")))
+    norm = normalize_text(F.coalesce(F.col("text"), F.lit("")))
     staged = docs.select("doc_id", norm.alias("__t")).filter(F.col("__t") != "")
     # the split array is STAGED once per doc (its own projection, not
     # inlined) — referenced from inside the transform lambda it would

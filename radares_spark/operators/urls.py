@@ -70,10 +70,8 @@ def _canonical_parts(url: Column) -> dict[str, Column]:
     return {"scheme": scheme, "host": host, "path": path, "query": query}
 
 
-def with_canonical_url(
-    df: DataFrame, url_col: str = "url", out_col: str = "canonical_url"
-) -> DataFrame:
-    """Adds ``out_col`` (+ ``url_host`` for per-domain grouping)."""
+def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """Adds ``canonical_url`` (+ ``url_host`` for per-domain grouping)."""
     p = _canonical_parts(F.col(url_col))
     # materialize the split BEFORE the lambdas: inlining it would make
     # CollapseProject re-run the regexp chain once per array element
@@ -101,32 +99,30 @@ def with_canonical_url(
         F.when(qs == "", F.lit("")).otherwise(F.concat(F.lit("?"), qs)),
     )
     return (
-        staged.withColumn(out_col, canon)
+        staged.withColumn("canonical_url", canon)
         .withColumn("url_host", F.col("__host"))
         .drop("__scheme", "__host", "__path", "__params")
     )
 
 
-def url_dedup_audit(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def url_dedup_audit(df: DataFrame, url_col: str = "url") -> DataFrame:
     """(id, canonical_url, outcome) — ``kept`` for the smallest id per
     canonical URL, ``url_dup`` for the rest. Same keeper shape as
     ``dedup_exact``: one shuffle on the canonical key."""
-    canon = with_canonical_url(df, url_col).select(id_col, "canonical_url")
+    canon = with_canonical_url(df, url_col).select("doc_id", "canonical_url")
     keeper = canon.filter(F.col("canonical_url").isNotNull()).groupBy(
         "canonical_url"
-    ).agg(F.min(id_col).alias("__keep"))
+    ).agg(F.min("doc_id").alias("__keep"))
     # LEFT join: a NULL canonical (NULL input url) never equi-joins, and
     # an inner join would silently drop the doc from the audit spine —
     # the invariant everywhere else is one audit row per input row
     return (
         canon.join(keeper, "canonical_url", "left")
         .select(
-            id_col,
+            "doc_id",
             "canonical_url",
             F.when(
-                F.col("__keep").isNull() | (F.col(id_col) == F.col("__keep")),
+                F.col("__keep").isNull() | (F.col("doc_id") == F.col("__keep")),
                 F.lit("kept"),
             )
             .otherwise(F.lit("url_dup"))
@@ -135,9 +131,9 @@ def url_dedup_audit(
     )
 
 
-def canonical_url_sql(table: str, url_col: str = "url") -> str:
+def canonical_url_sql(table: str) -> str:
     """DuckDB mirror of :func:`with_canonical_url` over ``table``."""
-    base = f"regexp_replace({url_col}, '#.*$', '')"
+    base = "regexp_replace(url, '#.*$', '')"
     scheme = f"lower(regexp_extract({base}, '{_SCHEME_RE}', 1))"
     rest = f"regexp_replace({base}, '{_SCHEME_RE}', '')"
     hostport = (
@@ -178,7 +174,6 @@ def domain_cap(
     k: int,
     quality: Column,
     url_col: str = "url",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-domain quota — the crawl-curation stage that stops a single
     site from dominating the corpus (RefinedWeb/Dolma cap documents
@@ -198,22 +193,22 @@ def domain_cap(
     not 100M (the same shape as ``corpus.stratified_sample``).
     """
     canon = with_canonical_url(df, url_col).select(
-        id_col, "url_host", quality.cast("double").alias("__q")
+        "doc_id", "url_host", quality.cast("double").alias("__q")
     )
     # desc_nulls_last: Spark's desc already sinks NULL quality, but
     # DuckDB's DESC floats it — pin the same rule on both sides (the
     # oracle orders NULLS LAST) so a NULL-quality doc never outranks
     # real scores
-    w = W.partitionBy("url_host").orderBy(F.desc_nulls_last("__q"), F.asc(id_col))
+    w = W.partitionBy("url_host").orderBy(F.desc_nulls_last("__q"), F.asc("doc_id"))
     ranked = (
         canon.filter(F.col("url_host").isNotNull() & (F.col("url_host") != ""))
         .withColumn("host_rank", F.row_number().over(w))
         .filter(F.col("host_rank") <= k)
-        .select(id_col, "url_host", "host_rank")
+        .select("doc_id", "url_host", "host_rank")
     )
     passthrough = canon.filter(
         F.col("url_host").isNull() | (F.col("url_host") == "")
-    ).select(id_col, F.lit(None).cast("string").alias("url_host"), F.lit(1).alias("host_rank"))
+    ).select("doc_id", F.lit(None).cast("string").alias("url_host"), F.lit(1).alias("host_rank"))
     return ranked.unionByName(passthrough)
 
 
@@ -305,9 +300,7 @@ OUT_URL_DUP_BATCH = "url_dup_batch"
 OUT_URL_KEPT = "kept"
 
 
-def url_ledger_rows(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def url_ledger_rows(df: DataFrame) -> DataFrame:
     """(id, canonical_url) — the URL ledger representation of a fetched
     batch: canonical URLs only, one row per doc. NULL canonicals (NULL
     input url) are excluded — they carry no URL identity, so they must
@@ -315,8 +308,8 @@ def url_ledger_rows(
     ``incremental.ledger_rows``: hashes/strings only, never content
     bytes, so a year of nightly crawls stays a compact string table."""
     return (
-        with_canonical_url(df, url_col)
-        .select(id_col, "canonical_url")
+        with_canonical_url(df)
+        .select("doc_id", "canonical_url")
         .filter(F.col("canonical_url").isNotNull())
     )
 
@@ -324,9 +317,6 @@ def url_ledger_rows(
 def incremental_url_dedup(
     new_pages: DataFrame,
     ledger: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    pin_batch: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Admit tonight's fetch list against every canonical URL ever
     crawled — closing the gap that made ``url_dedup_audit`` batch-only
@@ -352,38 +342,39 @@ def incremental_url_dedup(
     canonical (no identity — the ``url_dedup_audit`` spine rule) and
     never enter the ledger.
 
-    ``pin_batch`` materializes the canonicalized batch once
-    (``localCheckpoint``): four branches consume it (ledger semi-join,
-    keeper, audit spine, append set), and a lazy plan re-runs the
-    regex canonicalization chain in each — the same multi-branch
-    recomputation ``incremental_dedup``'s pin_batch and
-    ``curate_crawl``'s pin_stages solve. The pinned rows are
-    (id, canonical_url) strings, batch-sized. Pass False for a fully
-    lazy plan."""
-    canon = with_canonical_url(new_pages, url_col).select(id_col, "canonical_url")
-    if pin_batch:
-        canon = canon.localCheckpoint(eager=True)
+    The canonicalized batch is materialized once (``localCheckpoint``):
+    four branches consume it (ledger semi-join, keeper, audit spine,
+    append set), and a lazy plan would re-run the regex
+    canonicalization chain in each — the same multi-branch
+    recomputation ``incremental_dedup`` and ``curate_crawl`` pin
+    against. The pinned rows are (id, canonical_url) strings,
+    batch-sized."""
+    canon = (
+        with_canonical_url(new_pages)
+        .select("doc_id", "canonical_url")
+        .localCheckpoint(eager=True)
+    )
     with_url = canon.filter(F.col("canonical_url").isNotNull())
 
     f_ledger = (
         with_url.join(
             ledger.select("canonical_url"), "canonical_url", "left_semi"
         )
-        .select(id_col)
+        .select("doc_id")
         .withColumn("__f_led", F.lit(True))
     )
-    keeper = with_url.groupBy("canonical_url").agg(F.min(id_col).alias("__keep"))
+    keeper = with_url.groupBy("canonical_url").agg(F.min("doc_id").alias("__keep"))
     f_batch = (
         with_url.join(keeper, "canonical_url")
-        .filter(F.col(id_col) != F.col("__keep"))
-        .select(id_col)
+        .filter(F.col("doc_id") != F.col("__keep"))
+        .select("doc_id")
         .withColumn("__f_bat", F.lit(True))
     )
     audit = (
-        canon.join(f_ledger, id_col, "left")
-        .join(f_batch, id_col, "left")
+        canon.join(f_ledger, "doc_id", "left")
+        .join(f_batch, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "canonical_url",
             F.when(F.col("__f_led"), F.lit(OUT_URL_DUP_LEDGER))
             .when(F.col("__f_bat"), F.lit(OUT_URL_DUP_BATCH))
@@ -392,8 +383,8 @@ def incremental_url_dedup(
         )
     )
     append_rows = with_url.join(
-        audit.filter(F.col("outcome") == OUT_URL_KEPT).select(id_col),
-        id_col,
+        audit.filter(F.col("outcome") == OUT_URL_KEPT).select("doc_id"),
+        "doc_id",
         "left_semi",
     )
     return audit, append_rows

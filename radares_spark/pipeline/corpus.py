@@ -103,7 +103,6 @@ def outcome_ladder(keep_langs: tuple[str, ...], sample_pct: int) -> Column:
 
 def near_dup_drops(
     docs: DataFrame,
-    jaccard_threshold: float = 0.8,
     max_bucket: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """``(drops, hot_buckets)`` — drops: doc_ids to drop, the HIGHER id
@@ -116,7 +115,7 @@ def near_dup_drops(
        never all-pairs);
     2. each candidate is verified with the EXACT word-3-shingle Jaccard
        (intersection via an equi-join on (doc, shingle) keyed per pair)
-       and only pairs at/above ``jaccard_threshold`` drop their higher
+       and only pairs at/above 0.8 drop their higher
        doc_id. Random band collisions — which LSH produces by design —
        therefore never delete a document.
 
@@ -142,7 +141,7 @@ def near_dup_drops(
         # pipeline is evaluated ONCE (the self-join provably ran it
         # twice — see bucket_pairs' docstring)
         pairs = bucket_pairs(bands)
-    verified = verify_near_pairs(pairs.select("doc_a", "doc_b"), docs, jaccard_threshold)
+    verified = verify_near_pairs(pairs.select("doc_a", "doc_b"), docs, 0.8)
     return verified.select(F.col("doc_b").alias("doc_id")).distinct(), hot
 
 
@@ -182,7 +181,6 @@ def curate(
     docs: DataFrame,
     keep_langs: tuple[str, ...] = ("en",),
     sample_pct: int = 100,
-    jaccard_threshold: float = 0.8,
     max_bucket: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Run the full curation pipeline.
@@ -215,9 +213,7 @@ def curate(
         .join(exact, "doc_id")
         .filter(F.col("quality_pass") & F.col("pred_lang").isin(*keep_langs) & F.col("exact_keep"))
     )
-    near, hot = near_dup_drops(
-        alive.select("doc_id", "text"), jaccard_threshold, max_bucket
-    )
+    near, hot = near_dup_drops(alive.select("doc_id", "text"), max_bucket=max_bucket)
     near = near.withColumn("near_drop", F.lit(True))
 
     audit = (
@@ -297,8 +293,7 @@ def _unit_hash(col: Column, salt: str) -> Column:
     the same partitioning-independent idiom as the budget buckets
     above (and DuckDB-mirrorable:
     ``('0x' || substr(md5(...), 1, 8))::BIGINT % 1000000``). Distinct
-    salts give independent streams, so mixing and split assignment
-    never correlate."""
+    salts give independent streams, so samples never correlate."""
     return (
         F.conv(F.substring(_md5(F.concat(F.lit(salt + ":"), col.cast("string"))), 1, 8), 16, 10)
         .cast("long")
@@ -306,42 +301,14 @@ def _unit_hash(col: Column, salt: str) -> Column:
     )
 
 
-def mix_corpus(
-    docs: DataFrame, weights: dict[str, float], source_col: str = "source"
-) -> DataFrame:
-    """Domain mixing: keep each source's docs at that source's
-    sampling rate (the "data mixture" step of a pretraining pipeline —
-    e.g. web 10%, books 100%).
-
-    Deterministic per doc_id (same corpus → byte-identical mixture,
-    regardless of partitioning or cluster size) and single-pass: the
-    per-source threshold is a CASE expression evaluated in the scan —
-    no per-source jobs, no shuffle, no rand(). Sources absent from
-    ``weights`` are dropped (weight 0). Rates are exact in expectation
-    per source; hold-out exactness at a token budget belongs to
-    :func:`sample_to_token_budget`, which composes downstream of this.
-    """
-    u = _unit_hash(F.col("doc_id"), "mix")
-    thresh = None
-    for src, w in weights.items():
-        cut = F.lit(int(w * 1_000_000))
-        thresh = F.when(F.col(source_col) == src, cut) if thresh is None else thresh.when(
-            F.col(source_col) == src, cut
-        )
-    thresh = thresh.otherwise(F.lit(0)) if thresh is not None else F.lit(0)
-    return docs.filter(u < thresh)
-
-
-def stratified_sample(
-    docs: DataFrame, k: int, group_col: str = "source", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exactly ``k`` docs per group, deterministically: rank every doc
+def stratified_sample(docs: DataFrame, k: int) -> DataFrame:
+    """Exactly ``k`` docs per source, deterministically: rank every doc
     by its salted content-hash within the group and keep rank <= k.
 
     The hash order makes the sample a pure function of identity (same
     corpus -> byte-identical sample on any cluster), and distinct
-    salts keep it independent of the mixing/split streams above. The
-    plan is ONE hash-partition shuffle on ``group_col``: Spark's
+    salts keep it independent of the other sampling streams. The
+    plan is ONE hash-partition shuffle on ``source``: Spark's
     WindowGroupLimit rewrite (rank <= k over a window) runs a partial
     top-k per input partition BEFORE the exchange, so only k rows per
     group per upstream partition cross the wire — at 100 TB the
@@ -349,68 +316,12 @@ def stratified_sample(
     A single monster group still sorts k-bounded heaps, never the
     whole group. Plan-asserted in tests/test_corpus.py.
     """
-    tagged = docs.withColumn("__u", _unit_hash(F.col(id_col), "strat"))
-    w = W.partitionBy(group_col).orderBy("__u", id_col)
+    tagged = docs.withColumn("__u", _unit_hash(F.col("doc_id"), "strat"))
+    w = W.partitionBy("source").orderBy("__u", "doc_id")
     return (
         tagged.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= k)
         .drop("__u", "__rk")
-    )
-
-
-def pack_sequences(docs: DataFrame, ctx_len: int) -> DataFrame:
-    """Concat-and-chunk sequence packing: lay every doc's tokens end
-    to end in the deterministic (hash-bucket, doc_id) corpus order and
-    cut fixed ``ctx_len`` windows — the standard pretraining packing
-    that wastes zero tokens to padding (docs straddle boundaries).
-
-    Returns one row per doc: its token count, global token offset, and
-    the first/last sequence ids it lands in — the manifest a reader
-    needs to assemble any sequence (``seq k`` = docs with
-    ``first_seq <= k <= last_seq``, sliced at ``k*ctx_len`` relative
-    to each offset).
-
-    Scale shape: the global token offset is the SAME two-phase
-    distributed prefix sum as :func:`sample_to_token_budget` — the
-    only single-partition window is over the ``N_BUDGET_BUCKETS``
-    per-bucket totals; everything else is per-bucket parallel. No
-    driver-side loop ever sees a doc.
-    """
-    toks = F.size(F.split(normalize_text(F.col("text")), " "))
-    bucketed = docs.withColumn(
-        "__bucket",
-        F.conv(F.substring(_md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % N_BUDGET_BUCKETS,
-    ).withColumn("n_tokens", toks.cast("long"))
-
-    per_bucket = bucketed.groupBy("__bucket").agg(F.sum("n_tokens").alias("__btok"))
-    off_w = W.orderBy("__bucket").rowsBetween(W.unboundedPreceding, W.currentRow)
-    offsets = per_bucket.select(
-        "__bucket", (F.sum("__btok").over(off_w) - F.col("__btok")).alias("__offset")
-    )
-    in_w = (
-        W.partitionBy("__bucket")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        bucketed.join(F.broadcast(offsets), "__bucket")
-        .withColumn(
-            "token_offset",
-            F.col("__offset") + F.sum("n_tokens").over(in_w) - F.col("n_tokens"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "token_offset",
-            F.floor(F.col("token_offset") / ctx_len).alias("first_seq"),
-            # empty docs occupy no window: collapse onto first_seq
-            F.greatest(
-                F.floor((F.col("token_offset") + F.col("n_tokens") - 1) / ctx_len),
-                F.floor(F.col("token_offset") / ctx_len),
-            ).alias("last_seq"),
-        )
     )
 
 
@@ -588,8 +499,8 @@ def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def emit_sequences(docs: DataFrame, ctx_len: int) -> DataFrame:
-    """Materialize the fixed-length training sequences that
-    :func:`pack_sequences` only describes: lay every doc's tokens end
+    """Materialize the fixed-length training sequences (concat-and-chunk
+    packing, zero tokens wasted on padding): lay every doc's tokens end
     to end in the deterministic (hash-bucket, doc_id) corpus order and
     emit one row per ``ctx_len`` window — (seq_id, n_docs,
     n_seq_tokens, seq_text). Every sequence is exactly ``ctx_len``
@@ -597,7 +508,7 @@ def emit_sequences(docs: DataFrame, ctx_len: int) -> DataFrame:
     (zero padding waste).
 
     Scale shape: the global token offset is the same two-phase prefix
-    sum as :func:`pack_sequences`; each doc then EXPLODES into only
+    sum as :func:`sample_to_token_budget`; each doc then EXPLODES into only
     the sequences it touches (1 + n_tokens/ctx_len rows — linear) and
     contributes its slice via one ``F.slice`` on the already-split
     token array. Reassembly is one shuffle on seq_id with the
@@ -734,7 +645,7 @@ def chunk_documents(
     docs: DataFrame, chunk_tokens: int, overlap: int = 0
 ) -> DataFrame:
     """Overlapping fixed-size chunking — the retrieval-side sibling of
-    :func:`pack_sequences` (training packs docs ACROSS boundaries; a
+    :func:`emit_sequences` (training packs docs ACROSS boundaries; a
     RAG/embedding index chunks WITHIN each doc, with overlap so no
     answer span straddles a cut unseen).
 
@@ -823,7 +734,7 @@ def corpus_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(docs, CHUNK_TOKENS, CHUNK_OVERLAP)
 
 
-def corpus_health_report(docs: DataFrame, source_col: str = "source") -> DataFrame:
+def corpus_health_report(docs: DataFrame) -> DataFrame:
     """Per-source operational health — the one-query audit an operator
     runs before/after every intake (the corpus twin of the reference's
     verify_dates completeness audit): doc and token volumes, NULL-text
@@ -840,13 +751,13 @@ def corpus_health_report(docs: DataFrame, source_col: str = "source") -> DataFra
     norm = normalize_text(F.coalesce(F.col("text"), F.lit("")))
     base = docs.select(
         "doc_id",
-        source_col,
+        "source",
         F.when(F.col("text").isNull(), 1).otherwise(0).alias("is_null"),
         F.size(F.split(norm, " ")).cast("long").alias("ntok"),
         _md5(norm).alias("th"),
     )
     perdoc = base.join(quality, "doc_id").join(lang, "doc_id")
-    return perdoc.groupBy(source_col).agg(
+    return perdoc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("ntok").alias("n_tokens"),
         F.sum("is_null").alias("n_null_text"),
@@ -898,7 +809,6 @@ def temperature_rates(
     docs: DataFrame,
     temperature: float,
     budget_tokens: int,
-    source_col: str = "source",
 ) -> DataFrame:
     """Temperature-scaled source allocation — the multilingual /
     multi-domain rebalancing rule (mT5 / UniMax lineage): sampling
@@ -908,14 +818,13 @@ def temperature_rates(
     data (rate capped at 1 — the UniMax constraint).
 
     Returns one row per source: (source, n_tokens, rate_ppm) where
-    rate_ppm/1e6 is the keep-probability :func:`temperature_mix`
-    applies. Everything downstream of the per-source count aggregate
-    operates on a frame with ONE ROW PER SOURCE — kilobytes forever —
+    rate_ppm/1e6 is each source's keep-probability. Everything
+    downstream of the per-source count aggregate operates on a frame with ONE ROW PER SOURCE — kilobytes forever —
     so the single-partition window over it is bounded by the source
     vocabulary, same sanction as the DSIR bin window.
     """
     toks = F.size(F.split(normalize_text(F.coalesce(F.col("text"), F.lit(""))), " "))
-    sizes = docs.groupBy(source_col).agg(
+    sizes = docs.groupBy("source").agg(
         F.sum(toks.cast("long")).alias("n_tokens")
     )
     mass = F.pow(F.col("n_tokens").cast("double"), 1.0 / temperature)
@@ -925,32 +834,13 @@ def temperature_rates(
         F.col("__mass") / F.sum("__mass").over(total_w) * F.lit(float(budget_tokens)),
     )
     return rated.select(
-        source_col,
+        "source",
         "n_tokens",
         F.floor(
             F.least(F.lit(1.0), F.col("__target") / F.col("n_tokens")) * 1_000_000
         )
         .cast("long")
         .alias("rate_ppm"),
-    )
-
-
-def temperature_mix(
-    docs: DataFrame,
-    temperature: float,
-    budget_tokens: int,
-    source_col: str = "source",
-) -> DataFrame:
-    """Apply :func:`temperature_rates`: keep each doc with its
-    source's probability, deterministically (md5 unit hash on doc_id —
-    same partitioning-independent idiom as :func:`mix_corpus`). The
-    rates frame is one row per source, broadcast onto the scan."""
-    rates = temperature_rates(docs, temperature, budget_tokens, source_col)
-    u = _unit_hash(F.col("doc_id"), "tmix")
-    return (
-        docs.join(F.broadcast(rates.select(source_col, "rate_ppm")), source_col)
-        .filter(u < F.col("rate_ppm"))
-        .drop("rate_ppm")
     )
 
 
@@ -1109,7 +999,7 @@ LIBRARY_SPECS: dict[str, QuerySpec] = {
         fn=corpus_pack_emit,
         oracle=EMIT_SQL,
         survey="LLM-pipeline (packed-sequence materialization — the "
-        "reader side of pack_sequences' manifest)",
+        "reader side of concat-and-chunk packing)",
         doc=f"One row per {PACK_CTX}-token training sequence: docs laid "
         "end to end in (hash-bucket, doc_id) order, sliced at sequence "
         "boundaries, reassembled per seq_id. Each doc explodes into "

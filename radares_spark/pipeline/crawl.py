@@ -21,13 +21,12 @@ contract as ``curate`` and ``url_dedup_audit``.
 Scale notes: stages 1–3 are projections plus one canonical-URL
 shuffle; stage 4 is the WindowGroupLimit host shuffle; stage 5 is the
 curate() plan whose shapes are documented on their operators. Nothing
-here adds a new shuffle beyond its constituents. By default the URL
-audit and the extracted+scrubbed text ARE materialized once
-(``pin_stages``, r6): ``curate`` consumes its input from ~6 branches,
-and a fully lazy composition re-ran the regex-heavy extract+scrub
-chain in every one (measured 4.7x at sf0.1 — see
-:func:`curate_crawl`); a production crawl lands extracted text
-between stages anyway.
+here adds a new shuffle beyond its constituents. The URL audit and
+the extracted+scrubbed text ARE materialized once: ``curate``
+consumes its input from ~6 branches, and a fully lazy composition
+re-ran the regex-heavy extract+scrub chain in every one (measured
+4.7x at sf0.1 — see :func:`curate_crawl`); a production crawl lands
+extracted text between stages anyway.
 """
 
 from __future__ import annotations
@@ -46,11 +45,8 @@ OUT_DOMAIN_CAP = "domain_capped"
 
 def curate_crawl(
     pages: DataFrame,
-    keep_langs: tuple[str, ...] = ("en",),
     max_per_domain: int | None = None,
-    jaccard_threshold: float = 0.8,
     max_bucket: int | None = None,
-    pin_stages: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """``pages`` = (doc_id, url, html). Returns ``(kept, audit)``:
     kept = (doc_id, url, text) surviving docs with extracted, scrubbed
@@ -58,19 +54,16 @@ def curate_crawl(
     ``kept`` or the first stage that dropped it (``url_dup``,
     ``domain_capped``, or a ``curate`` stage name).
 
-    ``pin_stages`` materializes the URL audit and the extracted+
-    scrubbed text ONCE (``localCheckpoint``): ``curate`` consumes its
+    The URL audit and the extracted+scrubbed text are materialized
+    ONCE (``localCheckpoint``): ``curate`` consumes its
     input from ~6 branches (quality/lang/hash/alive/spine/keeper), and
     a fully lazy plan re-runs the regex-heavy HTML-extract + PII-scrub
     chain in EVERY branch — measured 92 parquet-scan subtrees / ~3000
     regex nodes / 13.8 s warm at sf0.1 before pinning vs 2 scans /
     ~3.5 s after. A production crawl lands extracted text between
     stages anyway (the same argument as ``incremental_dedup``'s
-    pin_batch); pass False for a fully lazy plan (plan-shape
-    inspection)."""
-    url_audit = url_dedup_audit(pages, url_col="url")
-    if pin_stages:
-        url_audit = url_audit.localCheckpoint(eager=True)
+    pinned batch)."""
+    url_audit = url_dedup_audit(pages, url_col="url").localCheckpoint(eager=True)
     url_kept = pages.join(
         url_audit.filter(F.col("outcome") == OUT_KEPT).select("doc_id"),
         "doc_id",
@@ -80,11 +73,11 @@ def curate_crawl(
     extracted = extract_html_text(url_kept, html_col="html").select(
         "doc_id", "url", F.col("plain_text").alias("text"), "n_tags", "n_links"
     )
-    scrubbed = scrub_pii(extracted, text_col="text").select(
-        "doc_id", "url", F.col("clean_text").alias("text")
+    scrubbed = (
+        scrub_pii(extracted, text_col="text")
+        .select("doc_id", "url", F.col("clean_text").alias("text"))
+        .localCheckpoint(eager=True)
     )
-    if pin_stages:
-        scrubbed = scrubbed.localCheckpoint(eager=True)
 
     if max_per_domain is not None:
         capped_ids = domain_cap(
@@ -98,18 +91,14 @@ def curate_crawl(
         domain_kept = scrubbed
 
     curated, content_audit, _hot = curate(
-        domain_kept.select("doc_id", "text"),
-        keep_langs=keep_langs,
-        jaccard_threshold=jaccard_threshold,
-        max_bucket=max_bucket,
+        domain_kept.select("doc_id", "text"), max_bucket=max_bucket
     )
-    if pin_stages:
-        # kilobyte-scale (doc_id, outcome) rows; BOTH return values
-        # consume it (kept's semi-join and audit's union), and lazily
-        # each re-ran the entire curate() DAG — a dual-output caller
-        # (the CLI writing kept/ then audit/) paid the curation
-        # shuffles twice (review finding)
-        content_audit = content_audit.localCheckpoint(eager=True)
+    # kilobyte-scale (doc_id, outcome) rows; BOTH return values
+    # consume it (kept's semi-join and audit's union), and lazily
+    # each re-ran the entire curate() DAG — a dual-output caller
+    # (the CLI writing kept/ then audit/) paid the curation
+    # shuffles twice (review finding)
+    content_audit = content_audit.localCheckpoint(eager=True)
     kept = domain_kept.join(
         content_audit.filter(F.col("outcome") == OUT_KEPT).select("doc_id"),
         "doc_id",

@@ -1068,7 +1068,6 @@ def init_ivf_from_state(
     docs: DataFrame,
     state_dir,
     ivf_dir: str,
-    dim: int | None = None,
     n_cells: int = 8,
 ) -> None:
     """Night zero of the ANN serving store: hashed_tf vectors of the
@@ -1077,11 +1076,10 @@ def init_ivf_from_state(
     from radares_spark.operators.embed import EMBED_DIM
     from radares_spark.operators.similarity import build_ivf_index, write_ivf_store
 
-    d = EMBED_DIM if dim is None else dim
     normed = _kept_vectors(
-        docs.join(_kept(spark, state_dir), "doc_id", "left_semi"), d
+        docs.join(_kept(spark, state_dir), "doc_id", "left_semi"), EMBED_DIM
     ).localCheckpoint()
-    assignment, centroids = build_ivf_index(normed, n_cells=n_cells, dim=d)
+    assignment, centroids = build_ivf_index(normed, n_cells=n_cells, dim=EMBED_DIM)
     write_ivf_store(spark, normed, assignment, centroids, ivf_dir)
 
 
@@ -1091,7 +1089,6 @@ def apply_refresh_to_ivf_store(
     state_in,
     state_out,
     ivf_dir: str,
-    dim: int | None = None,
     churn: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> dict[str, int]:
     """Bring the IVF store in line with one night's kept-set churn —
@@ -1104,13 +1101,12 @@ def apply_refresh_to_ivf_store(
     from radares_spark.operators.embed import EMBED_DIM
     from radares_spark.operators.similarity import refresh_ivf_store
 
-    d = EMBED_DIM if dim is None else dim
     entered, left, rewritten = churn or kept_churn(spark, state_in, state_out)
     delta = _kept_vectors(
         new_docs.join(
             entered.unionByName(rewritten).distinct(), "doc_id", "left_semi"
         ),
-        d,
+        EMBED_DIM,
     )
     removed = left.unionByName(rewritten).distinct().withColumnRenamed(
         "doc_id", "vec_id"

@@ -3,7 +3,7 @@ sequences, stored APPEND-ONLY with a token frontier — the terminal
 artifact of the whole pipeline (crawl -> curate -> tokenize -> pack
 -> training shards).
 
-``corpus.pack_sequences`` / ``emit_sequences`` pack whitespace WORDS
+``corpus.emit_sequences`` packs whitespace WORDS
 (the oracle-checkable packing semantics); a trainer consumes integer
 token ids under the trained tokenizer. This module closes that gap
 and adds the lifecycle piece none of the batch operators have: a
@@ -35,7 +35,7 @@ with the sym -> id mapping applied at the WORD level (vocabulary-sized
 work — the corpus token stream never probes a map: Spark's map
 ``element_at`` is a linear scan, so a per-token probe would be
 O(|vocab|) per token); placement is the same two-phase distributed
-prefix sum as ``corpus.pack_sequences`` (the only single-partition
+prefix sum as ``corpus.emit_sequences`` (the only single-partition
 window is over 1024 bucket totals); a night's append touches the
 delta + the <= ctx_len-token frontier and writes one fresh epoch
 partition — prior epochs are not listed, read, or rewritten (pinned
@@ -115,7 +115,6 @@ def encode_ids(
     word_syms: DataFrame,
     merges: list[tuple[str, str]] | None = None,
     vocab: DataFrame | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, input_ids array<int>, n_tokens) — ``bpe_encode``'s
     exact tokenization contract (dictionary join for in-vocabulary
@@ -129,7 +128,7 @@ def encode_ids(
     token stream."""
     if vocab is None:
         vocab = token_vocab(word_syms, merges)
-    norm = normalize_text(F.coalesce(F.col(text_col), F.lit("")))
+    norm = normalize_text(F.coalesce(F.col("text"), F.lit("")))
     toks = docs.select(
         "doc_id", F.posexplode(F.split(norm, " ")).alias("pos", "word")
     ).filter(F.col("word") != "")
@@ -218,10 +217,10 @@ def _placed(encoded: DataFrame, token_start: int) -> DataFrame:
     """(doc_id, input_ids, n, off) — global token offsets in the
     deterministic (hash-bucket, doc_id) corpus order starting at
     ``token_start``; the two-phase distributed prefix sum of
-    ``corpus.pack_sequences`` (per-bucket parallel sums; the only
+    ``corpus.emit_sequences`` (per-bucket parallel sums; the only
     single-partition window covers the 1024 bucket totals).
 
-    Unlike ``pack_sequences`` (whose upstream is one cheap
+    Unlike ``emit_sequences`` (whose upstream is one cheap
     projection), the upstream here is the FULL encode — two joins and
     two regroups — so the per-bucket totals are derived from the
     in-bucket running sum's OUTPUT (``max`` of a running total is the
@@ -320,15 +319,13 @@ def _sequences(placed: DataFrame, ctx_len: int) -> DataFrame:
     )
 
 
-def pack_ids(
-    encoded: DataFrame, ctx_len: int = SHARD_CTX, token_start: int = 0
-) -> DataFrame:
+def pack_ids(encoded: DataFrame, ctx_len: int = SHARD_CTX) -> DataFrame:
     """The pure packing plan (no store I/O): encoded docs (doc_id,
     input_ids, n_tokens) -> sequence rows (seq_id, n_docs, input_ids,
     doc_spans), the last sequence possibly partial. ``append_shards``
     is this plus the frontier/epoch lifecycle; exposed so benchmarks
     and batch one-shot exports time/run packing alone."""
-    return _sequences(_placed(encoded, token_start), ctx_len)
+    return _sequences(_placed(encoded, 0), ctx_len)
 
 
 def training_order(
@@ -549,7 +546,6 @@ def append_shards(
     delta_docs: DataFrame,
     word_syms: DataFrame,
     merges: list[tuple[str, str]] | None = None,
-    text_col: str = "text",
     night: str | None = None,
     vocab: DataFrame | None = None,
 ) -> dict[str, int]:
@@ -616,7 +612,7 @@ def append_shards(
             "n_total_tokens": prior_total,
         }
 
-    encoded = encode_ids(delta_docs, word_syms, merges, vocab, text_col)
+    encoded = encode_ids(delta_docs, word_syms, merges, vocab)
     placed = _placed(encoded, prior_total).localCheckpoint()
     n_delta_tokens = placed.agg(F.coalesce(F.sum("n"), F.lit(0))).head()[0]
     n_delta_docs = placed.count()
@@ -687,8 +683,6 @@ def reshard_shards(
     docs: DataFrame,
     word_syms: DataFrame,
     merges: list[tuple[str, str]] | None = None,
-    text_col: str = "text",
-    ctx_len: int | None = None,
     night: str | None = None,
 ) -> dict:
     """The remedy for a tokenizer bump — the ONE lifecycle event
@@ -703,8 +697,8 @@ def reshard_shards(
     vocab's fingerprint + one append of the full kept corpus — one
     encode pass + one packing shuffle, the same cost as the original
     night-zero, scheduled off the tokenizer release, never nightly.
-    ``ctx_len`` defaults to the old store's (sequence length is a
-    training contract that survives a vocab bump); ``night`` adds the
+    The sequence length is the old store's (a training contract that
+    survives a vocab bump); ``night`` adds the
     rebuild's own tag. The old store's completed-night tags are
     CARRIED into the new meta: the resharded store contains those
     nights' docs (they are the kept corpus), so a replay of any of
@@ -720,8 +714,7 @@ def reshard_shards(
             "must differ from the serving store"
         )
     old_meta = _meta_row(spark, shards_dir)
-    if ctx_len is None:
-        ctx_len = int(old_meta["ctx_len"])
+    ctx_len = int(old_meta["ctx_len"])
     # pinned once and threaded through: init and append would each
     # rebuild + re-fingerprint the vocabulary otherwise (~0.5 s each)
     vocab = token_vocab(word_syms, merges).localCheckpoint()
@@ -733,7 +726,6 @@ def reshard_shards(
         docs,
         word_syms,
         merges,
-        text_col=text_col,
         night=night,
         vocab=vocab,
     )

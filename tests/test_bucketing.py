@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from radares_spark.io.bucketing import colocated_join, write_bucketed
+from radares_spark.io.bucketing import write_bucketed
 from radares_spark.io.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -42,7 +42,7 @@ def test_colocated_join_has_no_exchange_or_sort(spark, bucketed):
     # safe here because write_bucketed guarantees one file per bucket
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     try:
-        joined = colocated_join(spark, "li_b", "orders_b", ["l_orderkey"])
+        joined = spark.table("li_b").join(spark.table("orders_b"), ["l_orderkey"])
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
         assert "Exchange hashpartitioning" not in plan, "bucketing must eliminate the shuffle"
@@ -62,7 +62,7 @@ def test_colocated_join_matches_plain_join(spark, bucketed):
     ).agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("l_extendedprice"), 2).alias("s")
     ).collect()[0]
-    got = colocated_join(spark, "li_b", "orders_b", ["l_orderkey"]).agg(
+    got = spark.table("li_b").join(spark.table("orders_b"), ["l_orderkey"]).agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("l_extendedprice"), 2).alias("s")
     ).collect()[0]
     assert (got["n"], got["s"]) == (expect["n"], expect["s"])

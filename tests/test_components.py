@@ -10,12 +10,7 @@ import pytest
 # window fits — run with -m slow (see COVERAGE.md).
 pytestmark = pytest.mark.slow
 
-from pyspark.sql import functions as F
-
-from radares_spark.operators.components import (
-    canonical_near_dup_drops,
-    connected_components,
-)
+from radares_spark.operators.components import connected_components
 
 
 def _cc(spark, edges):
@@ -53,30 +48,19 @@ def test_string_node_ids(spark):
     assert got == {"aa": "aa", "bb": "aa", "cc": "aa", "zz": "yy", "yy": "yy"}
 
 
-def test_canonical_drops_keep_one_per_group(spark):
-    pairs = spark.createDataFrame(
-        [(1, 5), (3, 5), (10, 11)], "doc_a long, doc_b long"
-    )
-    # transitive group {1, 3, 5} (1 and 3 connected only via 5) + {10, 11}
-    dropped = {r["doc_id"] for r in canonical_near_dup_drops(pairs).collect()}
-    assert dropped == {3, 5, 11}  # keeps 1 and 10
-
-
 def test_on_real_lsh_pairs(spark):
-    """Canonicalizing the testdata LSH pairs: every pair ends up with
-    at least one member dropped, minima survive."""
+    """Components over the testdata LSH pairs: both members of every
+    pair share one component, labelled by a member that is its
+    minimum."""
     from radares_spark.operators.dedup import dedup_minhash_pairs
     from tests.conftest import SF_ORACLE
 
     pairs = dedup_minhash_pairs(spark, SF_ORACLE).select("doc_a", "doc_b").cache()
-    dropped = {r["doc_id"] for r in canonical_near_dup_drops(pairs).collect()}
-    # every pair loses at least one member...
+    label = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
     for r in pairs.collect():
-        assert r["doc_a"] in dropped or r["doc_b"] in dropped
-    # ...but each group's minimum always survives
-    cc = connected_components(pairs)
-    minima = {r["component"] for r in cc.collect()}
-    assert minima.isdisjoint(dropped)
+        assert label[r["doc_a"]] == label[r["doc_b"]]
+    for node, comp in label.items():
+        assert label[comp] == comp and comp <= node
 
 
 def test_cluster_representatives_keeps_best_not_min(spark):

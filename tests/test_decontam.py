@@ -11,8 +11,8 @@ from radares_spark.operators.decontam import (
     DECON_N,
     EVAL_SOURCE,
     contamination_audit,
+    contaminated_ids,
     corpus_decontaminate,
-    decontaminate,
     eval_gram_set,
 )
 from radares_spark.plans import REGISTRY
@@ -53,7 +53,8 @@ def test_eval_docs_flag_themselves_and_near_dups_are_caught(spark):
 def test_clean_corpus_shares_no_gram_with_eval(spark):
     docs = _docs(spark, SF_SMOKE)
     eval_docs = docs.filter(F.col("source") == EVAL_SOURCE)
-    clean = decontaminate(docs, eval_docs)
+    # the form the crawl night runs: anti-join on the contaminated ids
+    clean = docs.join(contaminated_ids(docs, eval_docs), "doc_id", "left_anti")
     overlap = (
         eval_gram_set(clean, DECON_N)
         .join(eval_gram_set(eval_docs, DECON_N), "g")

@@ -33,7 +33,6 @@ def test_fs_helpers_on_file_uris(spark, tmp_path):
         "epoch", F.lit(3)
     ).write.partitionBy("epoch").parquet(_furi(d))
     assert fs.exists(spark, _furi(d))
-    assert fs.is_dir(spark, _furi(d))
     assert fs.has_parquet(spark, _furi(d))
     assert "epoch=3" in fs.list_names(spark, _furi(d))
     assert fs.epoch_partitions(spark, _furi(d)) == [3]
@@ -42,19 +41,6 @@ def test_fs_helpers_on_file_uris(spark, tmp_path):
     assert fs.epoch_partitions(spark, _furi(d)) == []
     assert not fs.has_parquet(spark, _furi(d))
     fs.delete(spark, _furi(d / "epoch=3"))  # missing path is a no-op
-
-    # rename: the migration-archive primitive — directory move; stale
-    # views (missing source, existing destination) refuse loudly
-    import pytest
-
-    moved = tmp_path / "store_archived"
-    fs.rename(spark, _furi(d), _furi(moved))
-    assert not fs.exists(spark, _furi(d)) and fs.is_dir(spark, _furi(moved))
-    with pytest.raises(ValueError, match="does not exist"):
-        fs.rename(spark, _furi(d), _furi(tmp_path / "x"))
-    (tmp_path / "other").mkdir()
-    with pytest.raises(ValueError, match="already exists"):
-        fs.rename(spark, _furi(tmp_path / "other"), _furi(moved))
 
 
 def test_admission_compaction_over_file_uri(spark, tmp_path):

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from radares_spark.functions.cleaning import clean_direction, split_time_range, with_slot_start
 from radares_spark.functions.histogram import (
     bins_long,
-    percentile_from_bins,
+    percentile_col,
     speeding_ratio,
     weighted_mean_speed,
 )
@@ -66,7 +66,7 @@ def test_weighted_mean_and_ratio(spark):
 
 
 def test_percentile_from_bins(spark):
-    rows = percentile_from_bins(_hist_df(spark), ["g"], 0.85, BINS).collect()
+    rows = _hist_df(spark).select("g", percentile_col(0.85, BINS).alias("p85_speed")).collect()
     d = {r["g"]: r["p85_speed"] for r in rows}
     assert d["g1"] == 30  # cum: 10,20,100 -> first >= 85 is b2 (hi=30)
     assert d["g2"] == 10  # cum: 90 -> first >= 85 is b0 (hi=10)

@@ -11,7 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from radares_spark.io.ingest import clean_flows, parse_reports, quarantined
+from radares_spark.io.ingest import clean_flows, parse_reports
 from radares_spark.io.report_parser import build_bad_report, build_report
 from radares_spark.pipeline.audit import completeness_audit
 from radares_spark.pipeline.backfill import backfill_plan
@@ -39,7 +39,7 @@ def test_parse_and_quarantine(spark, landing):
     # t1=96, t2=192, t3=192 rows per file, 2 days each + 1 bad file
     assert counts["parsed"] == 2 * (96 + 192 + 192)
     assert counts["quarantined"] == 1
-    q = quarantined(raw).collect()
+    q = raw.filter(F.col("status") == "quarantined").collect()
     assert len(q) == 1 and "unknown layout" in q[0]["error"]
 
 
@@ -81,7 +81,7 @@ def test_e2e_ingested_flows_feed_analytics(spark, landing, tmp_path):
     loop plus the analysis Postgres was supposed to serve."""
     from radares_spark.functions.histogram import (
         bins_long,
-        percentile_from_bins,
+        percentile_col,
         speeding_ratio,
         weighted_mean_speed,
     )
@@ -106,7 +106,7 @@ def test_e2e_ingested_flows_feed_analytics(spark, landing, tmp_path):
         assert 0.0 <= r["wm"] <= 120.0  # inside the bin range
         assert 0.0 <= r["sr"] <= 1.0
 
-    p85 = percentile_from_bins(hist, ["equipment", "pubdate"], 0.85).collect()
+    p85 = hist.select(percentile_col(0.85).alias("p85_speed")).collect()
     uppers = {hi for _, _, hi in SPEED_BINS}
     assert all(r["p85_speed"] in uppers for r in p85)
 

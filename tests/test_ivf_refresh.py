@@ -285,9 +285,17 @@ def test_retrain_consumes_retrain_due_and_resets_drift(spark, tmp_path):
         none_removed, path,
     )
     assert s["retrain_due"], s
+    # the array<double> delta landed in the store's own vector type:
+    # one element type across every file, or a later whole-store read
+    # fails on whichever footer Spark did not infer the schema from
+    import pyarrow.parquet as pq
 
-    import glob
-    import os
+    v_types = {
+        str(pq.read_schema(f).field("v").type)
+        for f in glob.glob(f"{path}/**/*.parquet", recursive=True)
+        if "/cell=" in f
+    }
+    assert len(v_types) == 1, v_types
 
     before = {
         f: os.stat(f).st_mtime_ns

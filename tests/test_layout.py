@@ -10,7 +10,7 @@ import glob
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from radares_spark.io.layout import read_pruned, write_layout
+from radares_spark.io.layout import write_layout
 from radares_spark.io.tables import load_table
 from radares_spark.operators.dedup import normalize_text
 from radares_spark.operators.text import LANG_MARKERS, stopword_hits
@@ -45,7 +45,7 @@ def test_partition_pruning_is_metadata_only(spark, tmp_path):
     path = str(tmp_path / "corpus")
     feats = _write_docs_layout(spark, path)
 
-    pruned = read_pruned(spark, path, "pred_lang", "en")
+    pruned = spark.read.parquet(path).filter(F.col("pred_lang") == "en")
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(pred_lang" in plan
     assert "(pred_lang" in plan.split("PartitionFilters:")[1].split("]")[0]

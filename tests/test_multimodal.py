@@ -1,17 +1,15 @@
-"""Multimodal kernels (operators/multimodal.py): decode, resize and
-frame-sample plumbing — schema, row contracts, determinism. Kernels
-are honest stubs (no image/video libs in the container); what these
-tests pin down is the Spark-side contract a real kernel must honor."""
+"""Multimodal kernel (operators/multimodal.py): the decode plumbing's
+row contract. The kernel is an honest stub (no image libs in the
+container); what this test pins down is the Spark-side contract a real
+kernel must honor. Value parity runs in the registry sweep
+(multimodal_inspect)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from radares_spark.io.tables import load_table
 from radares_spark.operators.multimodal import (
-    decode_batch,
-    frame_sample_batch,
-    resize_batch,
+    INSPECT_SCHEMA,
+    inspect_features,
     with_binary_payload,
 )
 from tests.conftest import SF_SMOKE
@@ -23,53 +21,8 @@ def _payloads(spark):
 
 def test_decode_one_row_per_input(spark):
     src = _payloads(spark)
-    out = decode_batch(src)
+    out = src.mapInPandas(inspect_features, schema=INSPECT_SCHEMA)
     assert out.count() == src.count()
     r = out.first()
     assert 1 <= r["width"] <= 1920 and 1 <= r["height"] <= 1080
     assert 1 <= r["channels"] <= 3 and 0.0 <= r["mean_luma"] <= 1.0
-
-
-def test_resize_contract(spark):
-    src = _payloads(spark)
-    out = resize_batch(src, 224, 224).cache()
-    assert out.count() == src.count()
-    dims = out.select("width", "height").distinct().collect()
-    assert [(r["width"], r["height"]) for r in dims] == [(224, 224)]
-    rows = out.select("scale", F.length("resized").alias("n")).collect()
-    for r in rows:
-        assert 0.0 < r["scale"] <= 1.0
-        assert r["n"] >= 1
-    # downscale shrinks payload bytes proportionally (stub contract)
-    joined = (
-        out.join(src.select("doc_id", F.length("payload").alias("orig")), on=out.doc_id == src.doc_id)
-        .select("scale", "orig", F.length("resized").alias("n"))
-        .collect()
-    )
-    for r in joined:
-        assert r["n"] <= r["orig"]
-
-
-def test_frame_sample_explodes_rows(spark):
-    src = _payloads(spark)
-    out = frame_sample_batch(src, fps_out=1.0).cache()
-    # flatMap shape: >= one frame per doc, indices contiguous from 0
-    per_doc = out.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("frame_idx").alias("lo"),
-        F.max("frame_idx").alias("hi"),
-    )
-    for r in per_doc.collect():
-        assert r["lo"] == 0 and r["hi"] == r["n"] - 1
-        assert 1 <= r["n"] <= 30
-    assert out.count() >= src.count()
-    # timestamps follow the sampling rate
-    bad_ts = out.filter(F.abs(F.col("frame_ts") - F.col("frame_idx") / 1.0) > 1e-6).count()
-    assert bad_ts == 0
-
-
-def test_kernels_are_deterministic(spark):
-    src = _payloads(spark)
-    a = {(r["doc_id"], r["frame_idx"]): bytes(r["frame"]) for r in frame_sample_batch(src).collect()}
-    b = {(r["doc_id"], r["frame_idx"]): bytes(r["frame"]) for r in frame_sample_batch(src).collect()}
-    assert a == b

@@ -1,75 +1,12 @@
-"""Sequence packing (pipeline/corpus.py::pack_sequences): exact
-DuckDB-oracle parity for the distributed prefix sum + window math, and
-the packing invariants (contiguous offsets, zero waste)."""
+"""Sequence packing (pipeline/corpus.py::emit_sequences): the packing
+invariants (full windows, gapless ids, corpus order reconstructed),
+plus retrieval-side chunking. DuckDB parity for both runs in the
+library sweep (corpus_pack_emit, corpus_chunks)."""
 
 from __future__ import annotations
 
 from radares_spark.io.tables import load_table
-from radares_spark.operators.dedup import NORM_SQL
-from radares_spark.pipeline.corpus import N_BUDGET_BUCKETS, pack_sequences
 from tests.conftest import SF_ORACLE
-from tests.oracle import compare_frames, duckdb_conn
-
-CTX = 512
-
-PACK_ORACLE = f"""
-WITH toks AS (
-    SELECT doc_id,
-           len(string_split({NORM_SQL.format(c='text')}, ' '))::BIGINT AS n_tokens,
-           ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
-               % {N_BUDGET_BUCKETS} AS bucket
-    FROM documents
-),
-pref AS (
-    SELECT doc_id, n_tokens,
-           (sum(n_tokens) OVER (ORDER BY bucket, doc_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                         AND CURRENT ROW))::BIGINT
-               - n_tokens AS token_offset
-    FROM toks
-)
-SELECT doc_id, n_tokens, token_offset,
-       token_offset // {CTX} AS first_seq,
-       greatest((token_offset + n_tokens - 1) // {CTX},
-                token_offset // {CTX}) AS last_seq
-FROM pref
-"""
-
-
-def test_pack_sequences_oracle_parity(spark):
-    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
-    sdf = pack_sequences(docs, CTX)
-    con = duckdb_conn(SF_ORACLE)
-    try:
-        tbl = con.execute(PACK_ORACLE).arrow()
-    finally:
-        con.close()
-    ok, msg = compare_frames(sdf, tbl)
-    assert ok, msg
-
-
-def test_packing_invariants(spark):
-    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
-    rows = sorted(
-        pack_sequences(docs, CTX).collect(), key=lambda r: r["token_offset"]
-    )
-    # contiguous, zero-waste layout: each doc starts where the
-    # previous one ends
-    pos = 0
-    for r in rows:
-        assert r["token_offset"] == pos
-        assert r["first_seq"] == pos // CTX
-        end = pos + r["n_tokens"]
-        assert r["last_seq"] == max((end - 1) // CTX, pos // CTX)
-        pos = end
-    total = pos
-    # every ctx window up to the end is reachable from some doc
-    n_seqs = (total + CTX - 1) // CTX
-    covered = set()
-    for r in rows:
-        covered.update(range(r["first_seq"], r["last_seq"] + 1))
-    assert covered == set(range(n_seqs))
-
 
 # ---- sequence EMISSION (materialized training windows) ----
 
@@ -119,33 +56,6 @@ def test_emit_sequences_invariants(spark):
     want = " ".join(r["t"] for r in order)
     got = " ".join(t for _, _, t in seqs)
     assert got == want
-
-
-def test_emit_sequences_matches_manifest(spark):
-    """The emitted per-sequence doc counts agree with pack_sequences'
-    manifest: a doc appears in exactly the sequences [first_seq,
-    last_seq] the manifest assigns it."""
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-
-    from radares_spark.pipeline.corpus import emit_sequences, pack_sequences
-
-    docs = (
-        load_table(spark, SF_ORACLE, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 120)
-    )
-    ctx = 64
-    manifest = pack_sequences(docs, ctx).filter(F.col("n_tokens") > 0).collect()
-    expect = Counter()
-    for r in manifest:
-        for s in range(r["first_seq"], r["last_seq"] + 1):
-            expect[s] += 1
-    got = {
-        r["seq_id"]: r["n_docs"] for r in emit_sequences(docs, ctx).collect()
-    }
-    assert got == dict(expect)
 
 
 # ---- retrieval-side overlapping chunking ----

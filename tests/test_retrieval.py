@@ -427,83 +427,6 @@ def test_hybrid_oracle_drops_sign_cancelled_zero_cells(spark, tmp_path):
 
 
 @pytest.mark.slow  # >=10 s in the r15 full-suite durations log
-def test_store_served_hybrid_matches_inline_and_prunes(spark, tmp_path):
-    """r7 verdict #3: the serving twin (bm25_topk_from_store +
-    probe_stored_topk -> rrf_fuse) composed and pinned. Exhaustive
-    probe (n_probe = n_cells) must equal the inline hybrid row for
-    row on the real corpus; the pruned probe (n_probe=2) must show
-    BOTH scans partition-pruned in one executed plan — postings
-    bucket IN-list (static) + IVF cell DPP."""
-    from pyspark.sql import functions as F
-
-    from radares_spark.operators.embed import EMBED_DIM, hashed_tf
-    from radares_spark.operators.retrieval import (
-        N_QUERY_DOCS,
-        _seed_queries,
-        hybrid_rrf_from_stores,
-        text_hybrid_rrf_topk,
-    )
-    from radares_spark.operators.similarity import build_ivf_index, write_ivf_store
-
-    N_CELLS = 8
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    pst = str(tmp_path / "pst")
-    ivf = str(tmp_path / "ivf")
-    build_postings_store(docs, pst, n_buckets=16)
-    normed = (
-        hashed_tf(docs, EMBED_DIM)
-        .select(
-            F.col("doc_id").alias("vec_id"),
-            F.col("embedding").alias("v"),
-            F.lit(1.0).alias("nrm"),
-        )
-        .localCheckpoint()
-    )
-    assignment, centroids = build_ivf_index(normed, n_cells=N_CELLS, dim=EMBED_DIM)
-    write_ivf_store(spark, normed, assignment, centroids, ivf)
-
-    queries_text = _seed_queries(docs)
-    query_vecs = normed.filter(F.col("vec_id") < N_QUERY_DOCS)
-
-    inline = sorted(
-        tuple(r) for r in text_hybrid_rrf_topk(spark, SF_SMOKE).collect()
-    )
-    served = hybrid_rrf_from_stores(
-        spark, pst, ivf, queries_text, query_vecs, n_probe=N_CELLS
-    )
-    assert sorted(tuple(r) for r in served.collect()) == inline
-
-    pruned = hybrid_rrf_from_stores(
-        spark, pst, ivf, queries_text, query_vecs, n_probe=2
-    )
-    got = pruned.collect()
-    assert len(got) > 0
-    # identify scans by their columns (toString truncates long tmp
-    # paths): postings = tok#+bucket#; ivf data = vec_id#+cell#
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    post_scans = [
-        ln
-        for ln in plan.splitlines()
-        if "FileScan" in ln and "tok#" in ln and "bucket#" in ln
-    ]
-    assert post_scans, "postings store never scanned"
-    for ln in post_scans:
-        pf = ln.split("PartitionFilters:")[1].split("]")[0]
-        assert "bucket" in pf, ln
-    ivf_scans = [
-        ln
-        for ln in plan.splitlines()
-        if "FileScan" in ln and "vec_id#" in ln and "cell#" in ln
-    ]
-    assert ivf_scans, "ivf store never scanned"
-    assert any(
-        "dynamicpruningexpression(cell#" in ln for ln in ivf_scans
-    ), "ivf probe did not prune cells"
-
-
-@pytest.mark.slow  # >=10 s in the r15 full-suite durations log
 def test_refresh_crash_rerun_is_idempotent(spark, tmp_path):
     """r9 hardening: the touched-bucket rewrite is a pure function
     (survivors exclude ADDED ids too; df recomputed from the written

@@ -1,69 +1,9 @@
-"""Salted two-phase aggregation: result parity with the plain groupBy
-and the expected two-exchange plan shape (operators/skew.py)."""
+"""Skew handling: AQE's runtime skew-join split, and the heavy-hitter
+report (operators/skew.py::skew_report)."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
-
-from radares_spark.io.tables import load_table
-from radares_spark.operators.skew import salted_agg
-from tests.conftest import SF_SMOKE
-
-SPECS = [
-    ("l_quantity", "sum", "sum_qty"),
-    ("l_extendedprice", "max", "max_price"),
-    ("l_discount", "min", "min_disc"),
-    ("l_orderkey", "count", "n"),
-    ("l_extendedprice", "avg", "avg_price"),
-]
-
-
-def test_salted_agg_matches_plain_agg(spark):
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    plain = {
-        r["l_returnflag"]: (r["sum_qty"], r["max_price"], r["min_disc"], r["n"], r["avg_price"])
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.max("l_extendedprice").alias("max_price"),
-            F.min("l_discount").alias("min_disc"),
-            F.count("l_orderkey").alias("n"),
-            F.avg("l_extendedprice").alias("avg_price"),
-        )
-        .collect()
-    }
-    salted = {
-        r["l_returnflag"]: (r["sum_qty"], r["max_price"], r["min_disc"], r["n"], r["avg_price"])
-        for r in salted_agg(li, ["l_returnflag"], SPECS, n_salts=8).collect()
-    }
-    assert set(plain) == set(salted)
-    for k, (s, mx, mn, n, _) in plain.items():
-        s2, mx2, mn2, n2, _ = salted[k]
-        assert (mx, mn, n) == (mx2, mn2, n2)
-        assert s == pytest.approx(s2, rel=1e-9)
-        assert plain[k][4] == pytest.approx(salted[k][4], rel=1e-9)
-
-
-def test_salted_agg_spreads_hot_key(spark):
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    out = salted_agg(li, ["l_returnflag"], SPECS, n_salts=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # two-phase: (key, salt) exchange then key exchange
-    assert plan.count("Exchange hashpartitioning") == 2
-    # the partial groupBy really fans the hot key out over the salts
-    partial = li.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in li.columns]), F.lit(8))
-    ).groupBy("l_returnflag", "__salt").count()
-    per_key = partial.groupBy("l_returnflag").count().collect()
-    assert all(r["count"] == 8 for r in per_key)
-
-
-def test_rejects_non_decomposable(spark):
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    with pytest.raises(ValueError, match="non-decomposable"):
-        salted_agg(li, ["l_returnflag"], [("l_quantity", "median", "m")])
 
 
 _AQE_CONFS = {
@@ -82,7 +22,7 @@ def test_aqe_splits_skewed_shuffle_join(spark):
     """The claim operators/asof.py and skew.py's docstrings rest on:
     AQE really does split a skewed SHUFFLE-JOIN partition at runtime
     (it does NOT apply to grouped-map aggregation — that is what
-    salted_agg / asof_join_salted are for). 90% of the left side
+    asof_join_salted is for). 90% of the left side
     shares one key; after execution the final adaptive plan must show
     the skew-split merge join, and the result must be exact."""
     old = {k: spark.conf.get(k, None) for k in _AQE_CONFS}

@@ -94,59 +94,6 @@ def test_rules_cover_expected_families():
     assert [n for n, _, _ in PII_RULES] == ["email", "ipv4", "phone"]
 
 
-# --- boilerplate removal ----------------------------------------------------
-
-BP_HEADER = "Cookie Notice: we use cookies"
-BP_FOOTER = "(c) 2024 Example Corp - All Rights Reserved"
-BP_DOCS = pd.DataFrame(
-    {
-        "doc_id": [0, 1, 2, 3, 4, 5],
-        "source": ["web"] * 4 + ["books"] * 2,
-        "text": [
-            f"{BP_HEADER}\nunique prose about sparks\n\n{BP_FOOTER}",
-            f"{BP_HEADER}\ndifferent unique body here\n{BP_FOOTER}",
-            f"{BP_HEADER}\nthird page distinct content\n{BP_FOOTER}",
-            f"{BP_HEADER}\n{BP_FOOTER}",  # all boilerplate
-            # same header in ANOTHER source: below min_docs there
-            f"{BP_HEADER}\na book paragraph stands alone",
-            None,  # null text -> one empty line, kept
-        ],
-    }
-)
-
-
-def test_boilerplate_duckdb_parity(spark):
-    from radares_spark.operators.text_ext import boilerplate_sql, strip_boilerplate
-
-    sdf = strip_boilerplate(spark.createDataFrame(BP_DOCS), min_docs=3)
-    con = duckdb.connect()
-    try:
-        con.register("bp_docs", BP_DOCS)
-        tbl = con.execute(boilerplate_sql("bp_docs", min_docs=3)).arrow()
-    finally:
-        con.close()
-    ok, msg = compare_frames(sdf, tbl)
-    assert ok, msg
-
-
-def test_boilerplate_semantics(spark):
-    from radares_spark.operators.text_ext import strip_boilerplate
-
-    got = {
-        r["doc_id"]: r
-        for r in strip_boilerplate(spark.createDataFrame(BP_DOCS), min_docs=3).collect()
-    }
-    # header+footer hit 3+ web docs -> stripped; unique prose survives
-    assert got[0]["clean_text"] == "unique prose about sparks\n"  # blank line kept
-    assert got[0]["n_removed"] == 2 and got[0]["n_lines"] == 4
-    assert got[1]["clean_text"] == "different unique body here"
-    assert got[3]["clean_text"] == "" and got[3]["n_removed"] == 2
-    # same header under 'books' is below min_docs there -> untouched
-    assert got[4]["clean_text"] == BP_DOCS["text"][4]
-    assert got[5]["clean_text"] == "" and got[5]["n_removed"] == 0
-    assert len(got) == 6
-
-
 HTML_DOCS = __import__("pandas").DataFrame(
     {
         "doc_id": [1, 2, 3, 4],
