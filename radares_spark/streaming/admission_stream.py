@@ -91,10 +91,11 @@ def run_admission_stream(
     ledger_dir: str,
     audit_dir: str,
     checkpoint: str,
+    max_files_per_trigger: int | None = None,
 ) -> None:
     """One AvailableNow pass: admit every new file's docs against the
     ledger, append audit + kept ledger rows, stop. Re-runnable."""
-    docs = stream_docs(spark, landing_dir)
+    docs = stream_docs(spark, landing_dir, max_files_per_trigger)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession

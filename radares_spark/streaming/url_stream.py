@@ -54,16 +54,18 @@ def run_url_admission_stream(
     ledger_dir: str,
     audit_dir: str,
     checkpoint: str,
+    max_files_per_trigger: int | None = None,
 ) -> None:
     """One AvailableNow pass: admit every new file's URLs against the
     canonical-URL ledger, append audit + kept rows, stop. Re-runnable:
     the next invocation picks up only files the checkpoint has not
     assigned yet."""
-    stream = (
-        spark.readStream.schema(URLS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(landing_dir)
+    reader = spark.readStream.schema(URLS_SCHEMA).option(
+        "recursiveFileLookup", "true"
     )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    stream = reader.parquet(landing_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession

@@ -9,7 +9,8 @@
   spec tables, ``(module, name)`` pairs);
 - **parameters** — a defaulted parameter of a public top-level engine
   function must be set by at least one caller (product code, bench,
-  perfbench or tests); a value nobody passes is an option nobody uses.
+  perfbench, tests or the ``plans/`` scripts); a value nobody passes
+  is an option nobody uses.
 
 Code that only tests reach is surface nobody runs; delete it with its
 tests, or wire it in. Each guard has an allowlist with a reason per
@@ -344,38 +345,54 @@ def _defaulted(fn: ast.FunctionDef) -> dict[str, int | None]:
     return out
 
 
-def _is_partial(func: ast.expr) -> bool:
-    return (isinstance(func, ast.Name) and func.id == "partial") or (
-        isinstance(func, ast.Attribute) and func.attr == "partial"
-    )
+def _parameters_set_in(path: Path) -> dict[Fn, set[str]]:
+    """Per engine function, the defaulted parameters some call in the
+    file passes. The count errs toward "set": a call with
+    ``*args``/``**kw`` sets all of them, so does passing a value equal
+    to the default, and so does any reference to the function that is
+    not the callee of a call (``partial(f, ...)``, ``runner=f``,
+    ``_one(key, frame, f)``), since the call made through that value
+    is out of the scan's sight."""
+    tree = _tree(path)
+    callees = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+    found: dict[Fn, set[str]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in callees:
+            fn = _resolve(node, path)
+            if fn:
+                found.setdefault(fn, set()).update(_defaulted(_defs(fn[0])[fn[1]]))
+            continue
+        if not isinstance(node, ast.Call):
+            continue
+        fn = _resolve(node.func, path)
+        if fn is None:
+            continue
+        params = _defaulted(_defs(fn[0])[fn[1]])
+        got = found.setdefault(fn, set())
+        if any(isinstance(a, ast.Starred) for a in node.args) or any(
+            k.arg is None for k in node.keywords
+        ):
+            got |= set(params)
+            continue
+        got |= {p for p, i in params.items() if i is not None and i < len(node.args)}
+        got |= {k.arg for k in node.keywords}
+    return found
 
 
 @cache
 def parameters_set() -> dict[Fn, set[str]]:
-    """Per engine function, the defaulted parameters some call passes.
-    A call with ``*args``/``**kw`` counts as setting all of them, and
-    so does passing a value equal to the default."""
-    files = [*MODULES.values(), *EXTERNAL_ENTRY_FILES, *sorted((ROOT / "tests").glob("*.py"))]
+    """``_parameters_set_in`` over product code, bench, perfbench, the
+    tests and the ``plans/`` scripts."""
+    files = [
+        *MODULES.values(),
+        *EXTERNAL_ENTRY_FILES,
+        *sorted((ROOT / "tests").glob("*.py")),
+        *sorted((ROOT / "plans").rglob("*.py")),
+    ]
     found: dict[Fn, set[str]] = {}
     for path in files:
-        for call in ast.walk(_tree(path)):
-            if not isinstance(call, ast.Call):
-                continue
-            args, keywords = call.args, call.keywords
-            fn = _resolve(call.func, path)
-            if fn is None and _is_partial(call.func) and args:
-                fn, args = _resolve(args[0], path), args[1:]
-            if fn is None:
-                continue
-            params = _defaulted(_defs(fn[0])[fn[1]])
-            got = found.setdefault(fn, set())
-            if any(isinstance(a, ast.Starred) for a in args) or any(
-                k.arg is None for k in keywords
-            ):
-                got |= set(params)
-                continue
-            got |= {p for p, i in params.items() if i is not None and i < len(args)}
-            got |= {k.arg for k in keywords}
+        for fn, params in _parameters_set_in(path).items():
+            found.setdefault(fn, set()).update(params)
     return found
 
 
@@ -410,3 +427,22 @@ def test_parameter_allowlist_entries_exist_and_are_unset():
         assert (mod, name, p) in unset, (
             f"allowlisted parameter {mod}.{name}({p}) is now set, or gone"
         )
+
+
+def test_a_function_passed_as_a_value_counts_every_parameter_as_set(tmp_path):
+    """bench.py's streaming section hands each runner to a helper that
+    calls it with ``max_files_per_trigger=1``; the guard cannot follow
+    that call, so the reference itself must count as setting it."""
+    caller = tmp_path / "caller.py"
+    caller.write_text(
+        "from radares_spark.streaming.admission_stream import run_admission_stream\n"
+        "from radares_spark.streaming import url_stream\n"
+        "def _one(key, runner):\n"
+        "    runner(None, 'landing', 'ledger', 'audit', 'ckpt', max_files_per_trigger=1)\n"
+        "_one('admission', run_admission_stream)\n"
+        "_one('url_admission', runner=url_stream.run_url_admission_stream)\n"
+    )
+    got = _parameters_set_in(caller)
+    for name in ("admission_stream.run_admission_stream", "url_stream.run_url_admission_stream"):
+        mod, fn = f"radares_spark.streaming.{name}".rsplit(".", 1)
+        assert "max_files_per_trigger" in got.get((mod, fn), set()), name
