@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from radares_spark.io.fetcher import fetch_reports, login
 from radares_spark.pipeline.audit import TOTAL_EQUIP, completeness_audit
 from radares_spark.pipeline.backfill import backfill_plan
-from radares_spark.pipeline.run_log import append_run_log, fetch_run_log
+from radares_spark.pipeline.run_log import fetch_run_log
 from radares_spark.streaming.ingest_stream import run_ingest_stream
 
 
@@ -324,8 +324,7 @@ def cmd_scrape(
     per device and recorded in the run log — never abort the batch."""
     day = day or (dt.date.today() - dt.timedelta(days=1))
     results = fetch_reports(http, report_url, [(e, day) for e in devices], landing)
-    append_run_log(fetch_run_log(spark, results), warehouse)
-    run_ingest_stream(spark, landing, warehouse, checkpoint)
+    run_ingest_stream(spark, landing, warehouse, checkpoint, fetch_run_log(spark, results))
 
 
 def cmd_backload(
@@ -356,8 +355,7 @@ def cmd_backload(
     if not work:
         return 0
     results = fetch_reports(http, report_url, work, landing)
-    append_run_log(fetch_run_log(spark, results), warehouse)
-    run_ingest_stream(spark, landing, warehouse, checkpoint)
+    run_ingest_stream(spark, landing, warehouse, checkpoint, fetch_run_log(spark, results))
     return len(work)
 
 

@@ -5,14 +5,20 @@ with a Postgres unique index + check-then-insert
 (database/schema.sql:31-33, src/clean_data.py:168-180). Without a
 transactional RDBMS, the engine gets the same exactly-once semantics
 from: deterministic surrogate keys (hash of the natural key — replaces
-SERIAL, SURVEY §1.2), a left-anti join against the ledger before
+SERIAL, SURVEY §1.2), a key-set difference against the ledger before
 append, and partition-scoped parquet writes.
 
-Scale: the anti-join broadcasts the *new* side's keys when small, or
-shuffles on (pubdate, equipment) otherwise; the fact write is
+Scale: a batch's key set — its distinct (pubdate, equipment) — is
+bounded by devices x days, the same bound the backfill planner relies
+on when it collects its work list, so the append works on that set on
+the driver. It reads only the ledger rows of the batch's pubdates
+(parquet filter pushdown), takes the set difference in Python, and
+broadcasts the new keys into a semi-join with the batch. The flows row
+count comes from an ``Observation`` on the flows write, and the ledger
+rows are built from the key frame: one collect for the keys, one for
+the held keys, and the two writes. The fact write is
 ``partitionBy(pubdate)`` so each ingest touches only its own
-partitions (dynamic overwrite would give atomic re-ingest per
-partition; Delta/Iceberg MERGE is the drop-in upgrade when those jars
+partitions (Delta/Iceberg MERGE is the drop-in upgrade when those jars
 are on the classpath).
 """
 
@@ -20,12 +26,17 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from radares_spark.io import fs as iofs
+from radares_spark.session import driver_frame
 
 NATURAL_KEY = ["pubdate", "equipment"]
+KEY_SCHEMA = T.StructType(
+    [T.StructField("pubdate", T.DateType()), T.StructField("equipment", T.StringType())]
+)
 
 
 def file_id(pubdate_col, equipment_col):
@@ -34,21 +45,17 @@ def file_id(pubdate_col, equipment_col):
     return F.xxhash64(pubdate_col.cast("string"), equipment_col)
 
 
-def build_ledger(flows: DataFrame) -> DataFrame:
-    """One ledger row per ingested (pubdate, equipment) — the
+def build_ledger(keys: DataFrame) -> DataFrame:
+    """Distinct (pubdate, equipment) keys -> their ledger rows: the
     equipment_files table (schema.sql:22-29) with a hash id."""
-    return (
-        flows.select(*NATURAL_KEY)
-        .distinct()
-        .select(
-            file_id(F.col("pubdate"), F.col("equipment")).alias("id"),
-            F.concat_ws(
-                "/", F.col("equipment"), F.concat(F.col("pubdate").cast("string"), F.lit(".csv"))
-            ).alias("file_name"),
-            "pubdate",
-            "equipment",
-            F.current_timestamp().alias("date_created"),
-        )
+    return keys.select(
+        file_id(F.col("pubdate"), F.col("equipment")).alias("id"),
+        F.concat_ws(
+            "/", F.col("equipment"), F.concat(F.col("pubdate").cast("string"), F.lit(".csv"))
+        ).alias("file_name"),
+        "pubdate",
+        "equipment",
+        F.current_timestamp().alias("date_created"),
     )
 
 
@@ -58,31 +65,39 @@ def idempotent_append(
     """Append only not-yet-ingested (pubdate, equipment) groups.
 
     Returns (n_rows_written, n_groups_skipped). Re-running the same
-    input is a no-op — the reference's unique-index guard, as a plan.
+    input is a no-op — the reference's unique-index guard. A null key
+    raises ``ValueError`` before anything is written.
     """
     flows_path = os.path.join(warehouse, "flows")
     ledger_path = os.path.join(warehouse, "equipment_files")
 
-    new = flows
-    skipped = 0
+    keys = {tuple(r) for r in flows.select(*NATURAL_KEY).distinct().collect()}
+    if any(None in k for k in keys):
+        # the parser validates both (io/report_parser.py); a null key
+        # would never match its own ledger row and re-append every run
+        raise ValueError("flows carry a null (pubdate, equipment) key")
+    held: set[tuple] = set()
     # First-write detection must be EXPLICIT: a broad except here would
     # treat any transient read failure (corrupt footer, permissions,
     # storage blip) as "no ledger yet" and re-append the full input,
     # silently breaking the unique-(pubdate, equipment) guarantee the
     # reference enforces with a DB index (schema.sql:31-33). Only a
-    # genuinely missing ledger path skips the anti-join; every other
+    # genuinely missing ledger path skips the lookup; every other
     # error propagates and fails the ingest.
-    if iofs.exists(spark, ledger_path):
-        existing = spark.read.parquet(ledger_path).select(*NATURAL_KEY)
-        before = flows.select(*NATURAL_KEY).distinct()
-        new_keys = before.join(existing, NATURAL_KEY, "left_anti")
-        skipped = before.count() - new_keys.count()
-        new = flows.join(F.broadcast(new_keys), NATURAL_KEY, "left_semi")
+    if keys and iofs.exists(spark, ledger_path):
+        pubdates = sorted({p for p, _ in keys})
+        existing = spark.read.schema(KEY_SCHEMA).parquet(ledger_path)
+        held = {tuple(r) for r in existing.filter(F.col("pubdate").isin(pubdates)).collect()}
+    new_keys = sorted(keys - held)
+    if not new_keys:
+        return 0, len(keys)
 
-    new = new.withColumn("equipment_files_id", file_id(F.col("pubdate"), F.col("equipment")))
-    n = new.count()
-    if n:
-        new.write.mode("append").partitionBy("pubdate").parquet(flows_path)
-        build_ledger(new).write.mode("append").parquet(ledger_path)
-    return n, skipped
-
+    key_frame = driver_frame(spark, new_keys, KEY_SCHEMA)
+    new = flows.join(F.broadcast(key_frame), NATURAL_KEY, "left_semi").withColumn(
+        "equipment_files_id", file_id(F.col("pubdate"), F.col("equipment"))
+    )
+    written = Observation()
+    new = new.observe(written, F.count(F.lit(1)).alias("rows"))
+    new.write.mode("append").partitionBy("pubdate").parquet(flows_path)
+    build_ledger(key_frame).coalesce(1).write.mode("append").parquet(ledger_path)
+    return written.get["rows"], len(keys) - len(new_keys)

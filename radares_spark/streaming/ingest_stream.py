@@ -10,7 +10,9 @@ are picked up on the next trigger with no special casing.
 
 ``foreachBatch`` bridges to the idempotent ledger writer, so even a
 re-landed duplicate file (same pubdate+equipment) is skipped — the
-two idempotency layers compose.
+two idempotency layers compose. The night's run log is one append: the
+first epoch writes the fetch rows with its parse rows, after the flows
+and the ledger (the crash order is flows, ledger, log).
 """
 
 from __future__ import annotations
@@ -45,18 +47,31 @@ def stream_reports(spark: SparkSession, landing_dir: str) -> DataFrame:
 
 
 def run_ingest_stream(
-    spark: SparkSession, landing_dir: str, warehouse: str, checkpoint: str
+    spark: SparkSession,
+    landing_dir: str,
+    warehouse: str,
+    checkpoint: str,
+    fetch_log: DataFrame | None = None,
 ) -> None:
     """One AvailableNow pass: parse everything new, idempotent-append
-    to the warehouse, stop. Re-runnable; exactly-once per file."""
+    to the warehouse, stop. Re-runnable; exactly-once per file.
+
+    ``fetch_log`` (the night's fetch run-log rows) goes out in the same
+    run-log append as the first epoch's parse rows, or alone when no
+    epoch runs."""
     raw = stream_reports(spark, landing_dir)
+    pending = [fetch_log] if fetch_log is not None else []
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)  # parse once, use twice
         idempotent_append(batch_df.sparkSession, clean_flows(batch_df), warehouse)
-        # K5: per-file processed/fail rows, appended with the same batch
-        # (reference scrape.py:121-123 writes its JSON log after the loop)
-        append_run_log(parse_run_log(batch_df), warehouse)
+        # K5: per-file processed/fail rows, with the night's fetch rows
+        # in one append (reference scrape.py:121-123 writes its JSON log
+        # once, after the loop)
+        log = parse_run_log(batch_df)
+        if pending:
+            log = pending.pop().unionByName(log)
+        append_run_log(log, warehouse)
 
     q = (
         raw.writeStream.foreachBatch(sink)
@@ -65,3 +80,5 @@ def run_ingest_stream(
         .start()
     )
     q.awaitTermination()
+    if pending:
+        append_run_log(pending.pop(), warehouse)
