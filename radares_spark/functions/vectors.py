@@ -41,13 +41,22 @@ def pair_dot(a, b):
     ``list_reduce`` — numpy's pairwise ``np.dot`` summation would
     diverge in the last ulp and break oracle hash parity.
 
+    Its NaN results reach Spark as null (pandas NaN -> Arrow null).
+
     NOTE (r15 A/B, plans/r15/ab_pairdot.py): two kernel variants
     measured and rejected — a cumsum(axis=1) form (bit-identical) was
-    flat across two sessions (the dedup_semantic wall is the Arrow
-    pair-stream transfer, not this loop), and float32 accumulation
-    (~2% over cumsum) breaks this module's bit-identity contract,
-    which similarity.py's UNROUNDED IVF cell-routing argmax depends
-    on. Larger Arrow batches (40k/100k records) also measured slower.
+    flat across two sessions (the wall was the Arrow pair-stream
+    transfer, not this loop), and float32 accumulation (~2% over
+    cumsum) breaks this module's bit-identity contract, which
+    similarity.py's UNROUNDED IVF cell-routing argmax depends on.
+    Larger Arrow batches (40k/100k records) also measured slower.
+    That transfer is why semdedup_audit does not stream pairs here:
+    its grouped kernel ships each cluster once and accumulates the
+    same bracketing itself. Callers: similarity.py
+    (``cosine_topk``, ``build_ivf_index``, ``assign_to_centroids``,
+    ``_assigned_cos``, ``similarity_ivf_topk``, ``ivf_probe_topk``,
+    ``probe_stored_topk``) and dedup.py (``embedding_lsh_pairs``);
+    each is a candidate for the same per-group crossing.
     """
     import numpy as np
     import pandas as pd

@@ -98,5 +98,6 @@ def clean_flows(raw: DataFrame) -> DataFrame:
         "slot_start",
         *[F.col(c).cast("int").alias(c) for c in BIN_COLS],
         F.col("total").cast("int").alias("total"),
+        "file_path",  # the ledger's per-key file pick; not written
     )
 

@@ -27,8 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from radares_spark.functions.vectors import COSINE_SQL_CTE, DIM, dot, pair_dot
+from radares_spark.functions.vectors import COSINE_SQL_CTE, DIM
 from radares_spark.registry import QuerySpec
 
 SEM_TAU = 0.35
@@ -41,6 +42,21 @@ SEM_TAU = 0.35
 # + centroid-rank keep rule — is threshold-independent.
 
 
+# Rows of a cluster scored per kernel step: a step holds a few
+# (tile x n) float64 buffers, so a 10k-vector cluster peaks at tens of
+# MB, not at n^2 doubles.
+_TILE_ROWS = 128
+
+# centroid dot as one JVM expression at any dim: a left-to-right fold,
+# ((0 + p0) + p1) + ..., the bracketing pair_dot and the kernel use.
+# Not the unrolled dot(): it names element_at up to DIM, which fails
+# under ANSI on shorter vectors.
+_CENTROID_DOT = (
+    "aggregate(zip_with(v, cv, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+    " CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)"
+)
+
+
 def semdedup_audit(
     members: DataFrame, centroids: DataFrame, tau: float = SEM_TAU
 ) -> DataFrame:
@@ -49,47 +65,101 @@ def semdedup_audit(
     ``members``: (vec_id, cell, v array, nrm) — embeddings with their
     cluster assignment. ``centroids``: (cell, cv array<double>, cn) —
     e.g. from ``build_ivf_index``. Returns
-    (vec_id, cell, centroid_sim, kept).
+    (vec_id, cell, centroid_sim, kept); ``cell`` keeps its input type.
 
-    Plan shape: one broadcast (centroids) for the rank projection,
-    then ONE hash shuffle on ``cell`` for the within-cluster pair
-    join whose verdict is folded into a map-side-combinable max-flag
-    aggregate — no drop-set distinct, no corpus-wide join back (the
-    first formulation paid a full SortMergeJoin on vec_id for that).
-    Nothing crosses cluster boundaries; per-task cost is
-    |cluster|^2 * DIM, bounded by the trainer's k choice — at corpus
-    scale pick k ~ N/5k so a task scores ~25M pairs worst case.
+    Plan shape: one broadcast (centroids) for the rank projection, a
+    JVM expression, then ONE hash shuffle on ``cell`` into a grouped
+    Arrow kernel (:func:`_best_lower_cos`): each cluster crosses to
+    Python once, as its n vectors, never as its n^2 pairs. Nothing
+    crosses cluster boundaries; per-cluster cost is n^2/2 * dim
+    multiply-adds in row tiles of ``_TILE_ROWS``, so the kernel holds
+    O(tile x n) doubles, never n^2 — at corpus scale pick k ~ N/5k so a
+    cluster is ~5k vectors.
+
+    The kernel returns, per vector, the largest UNROUNDED cosine to a
+    lower-ranked partner; Spark rounds it. ``round`` is monotone, so
+    ``round(max) >= tau`` holds exactly when some pair's rounded
+    cosine does — the pairwise keep rule — and Python never has to
+    reproduce Spark's HALF_UP rounding.
     """
-    csim = F.round(pair_dot("v", "cv") / (F.col("nrm") * F.col("cn")), 4)
+    # a NaN dot (an inf x 0 term) is null, as pair_dot returns it
+    dot = F.nanvl(F.expr(_CENTROID_DOT), F.lit(None).cast("double"))
+    same_dim = F.size("v") == F.size("cv")
+    mismatch = F.raise_error(F.lit("semdedup_audit: a vector and its centroid differ in length"))
+    csim = F.when(same_dim, F.round(dot / (F.col("nrm") * F.col("cn")), 4)).otherwise(mismatch)
     ranked = members.join(F.broadcast(centroids), "cell").select(
         "vec_id", "cell", "v", "nrm", csim.alias("centroid_sim")
     )
+    schema = T.StructType(
+        [
+            ranked.schema["vec_id"],
+            ranked.schema["cell"],
+            ranked.schema["centroid_sim"],
+            T.StructField("best", T.DoubleType()),
+        ]
+    )
+    best = ranked.groupBy("cell").applyInArrow(_best_lower_cos, schema)
+    # no lower-ranked partner (null best): kept
+    kept = F.col("best").isNull() | ~(F.round("best", 4) >= tau)
+    return best.select("vec_id", "cell", "centroid_sim", kept.alias("kept"))
 
-    other = ranked.select(
-        F.col("vec_id").alias("o_id"),
-        "cell",
-        F.col("v").alias("ov"),
-        F.col("nrm").alias("onrm"),
-        F.col("centroid_sim").alias("o_csim"),
-    )
-    pair_cos = F.round(pair_dot("v", "ov") / (F.col("nrm") * F.col("onrm")), 4)
-    # drop when a LESS centroid-similar (kept-for-diversity) example is
-    # within tau; ties on centroid_sim break toward the smaller vec_id
-    lower_rank = (F.col("o_csim") < F.col("centroid_sim")) | (
-        (F.col("o_csim") == F.col("centroid_sim")) & (F.col("o_id") < F.col("vec_id"))
-    )
-    dropped = F.when(
-        F.col("o_id").isNotNull()
-        & (F.col("o_id") != F.col("vec_id"))
-        & lower_rank
-        & (pair_cos >= tau),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    # LEFT join keeps singleton-cluster vectors (no partner rows)
-    return (
-        ranked.join(other, "cell", "left")
-        .groupBy("vec_id", "cell", "centroid_sim")
-        .agg((F.max(dropped) == 0).alias("kept"))
+
+def _best_lower_cos(table):
+    """applyInArrow kernel: one cluster's (vec_id, cell, v, nrm,
+    centroid_sim) -> (vec_id, cell, centroid_sim, best), where ``best``
+    is the max unrounded cosine to a LOWER-RANKED partner, null when
+    there is none.
+
+    Rank follows Spark's ordering of (centroid_sim, vec_id): NaN above
+    every number, NaN equal to NaN, ties to the smaller vec_id. Sorted
+    that way, row i's lower-ranked partners are rows 0..i-1, so each
+    tile scores only the lower triangle. A null centroid_sim compares
+    as null in Spark: such a vector has no partner and is none.
+
+    Pair dots accumulate dimension by dimension in float64 — pair_dot's
+    ((a0*b0 + a1*b1) + a2*b2)... bracketing — and divide by
+    ``nrm_i * nrm_j``, as a Spark division of pair_dot's result would,
+    so every cosine is bit-identical to the per-pair form. A NaN dot
+    (an inf x 0 term) is null from pair_dot, so it gives no verdict; a
+    NaN cosine from the division (inf / inf) does: Spark orders NaN
+    above every number, so the max keeps it and it is >= tau.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    n = table.num_rows
+    best = np.full(n, -np.inf)  # -inf: no scored partner (null)
+    csim_col = table.column("centroid_sim").combine_chunks()
+    rows = np.flatnonzero(csim_col.is_valid().to_numpy(zero_copy_only=False))
+    m = len(rows)
+    if m > 1:
+        # every ranked vector has its centroid's length (checked in Spark)
+        flat = table.column("v").take(rows).combine_chunks().flatten()
+        vt = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(m, -1).T.copy()
+        nrm = table.column("nrm").to_numpy()[rows].astype(np.float64)
+        ids = table.column("vec_id").to_numpy()[rows]
+        csim = csim_col.to_numpy(zero_copy_only=False)[rows]
+        order = np.lexsort((ids, csim))  # numpy sorts NaN last, as Spark
+        vt, nrm, rows = vt[:, order], nrm[order], rows[order]
+        for s in range(1, m, _TILE_ROWS):  # row 0 has no partner
+            e = min(s + _TILE_ROWS, m)
+            acc = np.zeros((e - s, e))
+            tmp = np.empty_like(acc)
+            for d in range(vt.shape[0]):
+                np.multiply(vt[d, s:e, None], vt[d, None, :e], out=tmp)
+                acc += tmp
+            # row i of the tile keeps partners 0..i-1 (global order)
+            skip = np.isnan(acc) | (np.arange(e)[None, :] >= np.arange(s, e)[:, None])
+            acc /= nrm[s:e, None] * nrm[None, :e]
+            acc[skip] = -np.inf
+            best[rows[s:e]] = acc.max(axis=1)
+    return pa.table(
+        {
+            "vec_id": table.column("vec_id"),
+            "cell": table.column("cell"),
+            "centroid_sim": table.column("centroid_sim"),
+            "best": pa.array(best, mask=best == -np.inf),
+        }
     )
 
 

@@ -13,7 +13,10 @@ bounded by devices x days, the same bound the backfill planner relies
 on when it collects its work list, so the append works on that set on
 the driver. It reads only the ledger rows of the batch's pubdates
 (parquet filter pushdown), takes the set difference in Python, and
-broadcasts the new keys into a semi-join with the batch. The flows row
+broadcasts the new keys into a semi-join with the batch. A report
+landed twice in one batch (two files, one key) is ingested once: the
+collected set carries each key's file paths, and the semi-join keeps
+only the smallest path per key. The flows row
 count comes from an ``Observation`` on the flows write, and the ledger
 rows are built from the key frame: one collect for the keys, one for
 the held keys, and the two writes. The fact write is
@@ -37,6 +40,7 @@ NATURAL_KEY = ["pubdate", "equipment"]
 KEY_SCHEMA = T.StructType(
     [T.StructField("pubdate", T.DateType()), T.StructField("equipment", T.StringType())]
 )
+FILE_KEY_SCHEMA = T.StructType([*KEY_SCHEMA.fields, T.StructField("file_path", T.StringType())])
 
 
 def file_id(pubdate_col, equipment_col):
@@ -64,14 +68,20 @@ def idempotent_append(
 ) -> tuple[int, int]:
     """Append only not-yet-ingested (pubdate, equipment) groups.
 
-    Returns (n_rows_written, n_groups_skipped). Re-running the same
-    input is a no-op — the reference's unique-index guard. A null key
-    raises ``ValueError`` before anything is written.
+    ``flows`` carries ``file_path``, the report each row came from; of
+    the files holding one key, only the smallest path is appended, and
+    the column is not written. Returns (n_rows_written,
+    n_groups_skipped). Re-running the same input is a no-op — the
+    reference's unique-index guard. A null key raises ``ValueError``
+    before anything is written.
     """
     flows_path = os.path.join(warehouse, "flows")
     ledger_path = os.path.join(warehouse, "equipment_files")
 
-    keys = {tuple(r) for r in flows.select(*NATURAL_KEY).distinct().collect()}
+    first: dict[tuple, str] = {}  # key -> its smallest file path
+    for p, e, f in flows.select(*NATURAL_KEY, "file_path").distinct().collect():
+        first[(p, e)] = min(f, first.get((p, e), f))
+    keys = set(first)
     if any(None in k for k in keys):
         # the parser validates both (io/report_parser.py); a null key
         # would never match its own ledger row and re-append every run
@@ -92,9 +102,11 @@ def idempotent_append(
     if not new_keys:
         return 0, len(keys)
 
-    key_frame = driver_frame(spark, new_keys, KEY_SCHEMA)
-    new = flows.join(F.broadcast(key_frame), NATURAL_KEY, "left_semi").withColumn(
-        "equipment_files_id", file_id(F.col("pubdate"), F.col("equipment"))
+    key_frame = driver_frame(spark, [(*k, first[k]) for k in new_keys], FILE_KEY_SCHEMA)
+    new = (
+        flows.join(F.broadcast(key_frame), [*NATURAL_KEY, "file_path"], "left_semi")
+        .drop("file_path")
+        .withColumn("equipment_files_id", file_id(F.col("pubdate"), F.col("equipment")))
     )
     written = Observation()
     new = new.observe(written, F.count(F.lit(1)).alias("rows"))

@@ -20,7 +20,10 @@ Scale notes (100 TB design rules applied throughout):
 - Money sums are ``round(x, 2)`` / ratios ``round(x, 4-6)`` so results
   are stable under any aggregation order (floating-point sums are
   order-sensitive in the last ulp; rounding makes Spark and the DuckDB
-  oracle agree bit-for-bit).
+  oracle agree bit-for-bit). Rounding alone fails when a double sum
+  lands on a half cent, where the two orders round to neighbouring
+  cents; q1's and q3's money sums therefore add in DECIMAL (:func:`_cents`),
+  exact in any order on both engines, and return doubles.
 - No ``collect()`` anywhere; top-k uses window rank, not a driver sort.
 
 Reference parity: the reference has no analytical queries of its own
@@ -56,6 +59,18 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _cents(name: str):
+    """A 2-decimal money or quantity column as DECIMAL(12,2): exact for
+    the generated values, so a sum of it is order-independent. The
+    oracles cast the same way (``::DECIMAL(12,2)``)."""
+    return F.col(name).cast("decimal(12,2)")
+
+
+def _money_sum(expr):
+    """``round(sum(expr), 2)`` of a DECIMAL expression, as a double."""
+    return F.round(F.sum(expr), 2).cast("double")
+
+
 # ---------------------------------------------------------------------------
 # Aggregations (SURVEY §2.7 A3; TPC-H Q1 shape)
 # ---------------------------------------------------------------------------
@@ -65,9 +80,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "q1_pricing_summary",
     oracle="""
     SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2)                                   AS sum_qty,
-           round(sum(l_extendedprice), 2)                              AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2)           AS sum_disc_price,
+           round(sum(l_quantity::DECIMAL(12,2)), 2)::DOUBLE              AS sum_qty,
+           round(sum(l_extendedprice::DECIMAL(12,2)), 2)::DOUBLE         AS sum_base_price,
+           round(sum(l_extendedprice::DECIMAL(12,2)
+                     * (1 - l_discount::DECIMAL(12,2))), 2)::DOUBLE      AS sum_disc_price,
            round(avg(l_quantity), 4)                                   AS avg_qty,
            round(avg(l_extendedprice), 4)                              AS avg_price,
            round(avg(l_discount), 4)                                   AS avg_disc,
@@ -86,9 +102,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+            _money_sum(_cents("l_quantity")).alias("sum_qty"),
+            _money_sum(_cents("l_extendedprice")).alias("sum_base_price"),
+            _money_sum(_cents("l_extendedprice") * (1 - _cents("l_discount"))).alias(
                 "sum_disc_price"
             ),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
@@ -102,7 +118,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q3_shipping_priority",
     oracle="""
-    SELECT o_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    SELECT o_orderkey,
+           round(sum(l_extendedprice::DECIMAL(12,2)
+                     * (1 - l_discount::DECIMAL(12,2))), 2)::DOUBLE AS revenue
     FROM customer JOIN orders ON c_custkey = o_custkey
                   JOIN lineitem ON l_orderkey = o_orderkey
     WHERE c_mktsegment = 'BUILDING'
@@ -127,7 +145,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("o_orderkey")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(_money_sum(_cents("l_extendedprice") * (1 - _cents("l_discount"))).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
         .limit(10)
     )

@@ -7,7 +7,7 @@
 - **Key-set append.** ``idempotent_append`` works on the batch's
   distinct (pubdate, equipment) set: exact (rows written, groups
   skipped), one ledger row per key, replay is a no-op, null keys are
-  refused.
+  refused; a report landed as two files in one batch is appended once.
 - **One run-log append per night.** Fetch and parse rows go out in one
   commit; a night with nothing to parse still records its fetches; the
   Arrow-built fetch rows store the same instant as the list-built ones.
@@ -30,6 +30,7 @@ from radares_spark.io.report_parser import build_report
 from radares_spark.pipeline.ledger import file_id, idempotent_append
 from radares_spark.pipeline.run_log import fetch_run_log, read_run_log
 from radares_spark.schemas import RUN_LOG_SCHEMA
+from radares_spark.streaming.ingest_stream import run_ingest_stream
 
 DEVICES = [f"FS{500 + i}JOI" for i in range(8)]
 DAY = dt.date(2024, 5, 1)
@@ -105,7 +106,10 @@ def test_warm_night_job_budget(spark, tmp_path):
 
 
 def _flows(spark, rows):
-    return spark.createDataFrame(rows, "pubdate date, equipment string, slot int")
+    return spark.createDataFrame(
+        [(p, e, s, f"{e}/{p}.xlsx") for p, e, s in rows],
+        "pubdate date, equipment string, slot int, file_path string",
+    )
 
 
 def test_key_set_append_contract(spark, tmp_path):
@@ -145,6 +149,17 @@ def test_key_set_append_contract(spark, tmp_path):
     with pytest.raises(ValueError, match="null"):
         idempotent_append(spark, _flows(spark, [(None, "C", 0)]), wh)
     assert spark.read.parquet(f"{wh}/flows").count() == 9
+
+
+def test_report_landed_twice_in_one_batch_is_ingested_once(spark, tmp_path):
+    landing, wh, ckpt = _dirs(tmp_path)
+    report = build_report(1, DAY, "FS551JOI")
+    os.makedirs(os.path.join(landing, "FS551JOI"))
+    for name in ("a.xlsx", "b.xlsx"):
+        Path(landing, "FS551JOI", name).write_bytes(report)
+    run_ingest_stream(spark, landing, wh, ckpt)
+    assert spark.read.parquet(f"{wh}/flows").count() == 96
+    assert spark.read.parquet(f"{wh}/equipment_files").count() == 1
 
 
 def test_one_run_log_commit_per_night(spark, tmp_path):

@@ -3,39 +3,54 @@ cross-doc duplicate-span detection (operators/text_ext.dup_span_stats).
 The oracle-parity sweep (test_oracle_parity.py over ALL_LIBRARY_SPECS)
 value-checks both against DuckDB on testdata; these tests pin the
 SEMANTICS on hand-built inputs where the right answer is computable by
-eye."""
+eye.
+
+The semdedup_audit tests on hand-built and testdata clusters run in the
+default tier, so it exercises the grouped-Arrow kernel; the dup-span
+tests and the multi-second end-to-end ones stay in the slow tier."""
 
 from __future__ import annotations
 
-import pytest
-
-# Whole-module slow tier (r15): multi-second Spark e2e tests dominate
-# this module's wall; deselected by default so the driver's verify
-# window fits — run with -m slow (see COVERAGE.md).
-pytestmark = pytest.mark.slow
-
 import math
+import re
+from contextlib import contextmanager
+
+import numpy as np
+import pyarrow as pa
+import pytest
 
 from pyspark.sql import functions as F
 
-from radares_spark.functions.vectors import l2norm
-from radares_spark.operators.semdedup import semdedup_audit
+from radares_spark.functions.vectors import l2norm, pair_dot
+from radares_spark.operators.semdedup import _TILE_ROWS, semdedup_audit
 from radares_spark.operators.text_ext import dup_span_stats
+
+
+def _arrow_frame(spark, rows, fields):
+    """A one-partition local relation built through Arrow: a list-built
+    frame scans through Python workers on every action, one task per
+    core (seconds per test), and the pandas path turns NaN elements
+    into nulls."""
+    table = pa.table({n: pa.array(c, t) for (n, t), c in zip(fields, zip(*rows))})
+    return spark.createDataFrame(table).coalesce(1)
+
+
+VEC = pa.list_(pa.float64())
 
 
 def _members(spark, rows):
     """rows: (vec_id, cell, vector list) -> members frame with norms."""
-    df = spark.createDataFrame(
+    df = _arrow_frame(
+        spark,
         [(i, c, [float(x) for x in v]) for i, c, v in rows],
-        "vec_id long, cell string, v array<double>",
+        [("vec_id", pa.int64()), ("cell", pa.string()), ("v", VEC)],
     )
     return df.select("vec_id", "cell", "v", l2norm("v", dim=4).alias("nrm"))
 
 
 def _centroids(spark, rows):
-    df = spark.createDataFrame(
-        [(c, [float(x) for x in v]) for c, v in rows],
-        "cell string, cv array<double>",
+    df = _arrow_frame(
+        spark, [(c, [float(x) for x in v]) for c, v in rows], [("cell", pa.string()), ("cv", VEC)]
     )
     return df.select("cell", "cv", l2norm("cv", dim=4).alias("cn"))
 
@@ -89,6 +104,137 @@ def test_semdedup_tie_breaks_on_vec_id(spark):
     assert out == {7: True, 9: False}
 
 
+def _pairwise_audit(members, centroids, tau):
+    """The keep rule in its per-pair form, as the reference: a self-join
+    on the cell, every pair scored with pair_dot and rounded in Spark."""
+    csim = F.round(pair_dot("v", "cv") / (F.col("nrm") * F.col("cn")), 4)
+    ranked = members.join(F.broadcast(centroids), "cell").select(
+        "vec_id", "cell", "v", "nrm", csim.alias("centroid_sim")
+    )
+    other = ranked.select(
+        F.col("vec_id").alias("o_id"),
+        "cell",
+        F.col("v").alias("ov"),
+        F.col("nrm").alias("onrm"),
+        F.col("centroid_sim").alias("o_csim"),
+    )
+    pair_cos = F.round(pair_dot("v", "ov") / (F.col("nrm") * F.col("onrm")), 4)
+    lower_rank = (F.col("o_csim") < F.col("centroid_sim")) | (
+        (F.col("o_csim") == F.col("centroid_sim")) & (F.col("o_id") < F.col("vec_id"))
+    )
+    dropped = F.when(
+        F.col("o_id").isNotNull()
+        & (F.col("o_id") != F.col("vec_id"))
+        & lower_rank
+        & (pair_cos >= tau),
+        F.lit(1),
+    ).otherwise(F.lit(0))
+    return (
+        ranked.join(other, "cell", "left")
+        .groupBy("vec_id", "cell", "centroid_sim")
+        .agg((F.max(dropped) == 0).alias("kept"))
+    )
+
+
+def _by_id(df):
+    """vec_id -> row, with NaN spelled out so it compares equal."""
+    return {
+        r["vec_id"]: tuple("NaN" if isinstance(x, float) and math.isnan(x) else x for x in r)
+        for r in df.collect()
+    }
+
+
+@contextmanager
+def _ansi(spark, on):
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(on).lower())
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+def test_kernel_matches_the_pairwise_plan(spark):
+    """The grouped kernel's rows equal the per-pair self-join's, row
+    for row, on a cluster larger than one tile, a centroid_sim tie, a
+    singleton cluster, vectors whose cosines are NaN and a zero vector."""
+    rng = np.random.default_rng(7)
+    n_big = _TILE_ROWS + 72
+    assert n_big > _TILE_ROWS
+    base = rng.normal(size=4)
+    big = [(i, "big", base + rng.normal(scale=0.6, size=4)) for i in range(n_big)]
+    rows = big + [
+        # same centroid_sim: an identical pair (the larger id drops) and
+        # a partner at the same angle to the centroid (cosine 0.5)
+        (500, "tie", [1, 1, 0, 0]),
+        (501, "tie", [1, 1, 0, 0]),
+        (502, "tie", [1, 0, 1, 0]),
+        (600, "one", [0, 0, 0, 1]),
+        # degenerate vectors. 700 has a NaN dot with everything: a null
+        # rank, kept. 701 and 704 rank above every number (inf / inf =
+        # NaN) and tie there; 701's NaN cosine with 702 drops it.
+        # 710's only partner gives a NaN dot, which is no verdict.
+        (700, "nan", [math.nan, 0, 0, 0]),
+        (701, "nan", [math.inf, 1, 0, 0]),
+        (702, "nan", [1, 1, 0, 0]),
+        (703, "nan", [0, 1, 0.1, 0]),
+        (704, "nan", [math.inf, 0, 0, 0]),
+        (710, "inf", [math.inf, 0, 0, 0]),
+        (711, "inf", [0, 1, 0, 0]),
+    ]
+    cen = _centroids(
+        spark,
+        [
+            ("big", base),
+            ("tie", [1, 0, 0, 0]),
+            ("one", [0, 0, 0, 1]),
+            ("nan", [1, 1, 0, 0]),
+            ("inf", [1, 1, 0, 0]),
+        ],
+    )
+    members = _members(spark, rows)
+    tau = 0.9
+    got = _by_id(semdedup_audit(members, cen, tau=tau))
+    assert got == _by_id(_pairwise_audit(members, cen, tau))
+    assert len(got) == len(rows)
+    kept = {i: r[3] for i, r in got.items()}
+    assert 0 < sum(kept[i] for i in range(n_big)) < n_big
+    assert (kept[500], kept[501], kept[502]) == (True, False, True)
+    assert kept[600] and kept[700] and got[700][2] is None
+    assert got[701][2] == got[704][2] == "NaN" and not kept[701] and not kept[704]
+    assert kept[710]
+    assert semdedup_audit(members, cen, tau=tau).schema["cell"].dataType.simpleString() == "string"
+
+    # a zero vector: its centroid rank divides by a zero norm in both
+    # plans — an error under ANSI, a null rank (kept, nobody's
+    # partner) without it
+    zero = _members(spark, rows[-7:] + [(800, "nan", [0, 0, 0, 0])])
+    for plan in (semdedup_audit, _pairwise_audit):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            plan(zero, cen, tau).collect()
+    with _ansi(spark, False):
+        got = _by_id(semdedup_audit(zero, cen, tau=tau))
+        assert got == _by_id(_pairwise_audit(zero, cen, tau))
+    assert got[800][2:] == (None, True)
+
+    # a vector whose length is not its centroid's cannot be ranked
+    ragged = _members(spark, [(1, "r", [1, 0, 0, 0, 0]), (2, "r", [1, 0, 0, 0])])
+    with pytest.raises(Exception, match="differ in length"):
+        semdedup_audit(ragged, _centroids(spark, [("r", [1, 0, 0, 0])]), tau).collect()
+
+
+def test_dedup_semantic_crosses_to_python_once(spark):
+    """dedup_semantic's executed plan has exactly one Python node, the
+    grouped kernel: no per-pair UDF stage can come back unnoticed."""
+    from radares_spark.plans.library import ALL_LIBRARY_SPECS
+    from tests.conftest import SF_SMOKE
+
+    sd = ALL_LIBRARY_SPECS["dedup_semantic"].fn(spark, SF_SMOKE)
+    plan = sd._jdf.queryExecution().executedPlan().toString()
+    nodes = re.findall(r"\b(?:\w+EvalPython|\w+In(?:Pandas|Arrow))\b", plan)
+    assert nodes == ["FlatMapGroupsInArrow"], plan
+
+
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -96,6 +242,7 @@ def _docs(spark, rows):
 SPAN = "alpha bravo charlie delta echo foxtrot golf hotel"  # 8 words
 
 
+@pytest.mark.slow
 def test_dup_spans_flags_shared_window(spark):
     docs = _docs(
         spark,
@@ -115,6 +262,7 @@ def test_dup_spans_flags_shared_window(spark):
     )
 
 
+@pytest.mark.slow
 def test_dup_spans_short_and_empty_docs_survive(spark):
     docs = _docs(spark, [(1, "only four words here"), (2, None), (3, "")])
     out = {r["doc_id"]: r for r in dup_span_stats(docs, w=8).collect()}
@@ -123,6 +271,7 @@ def test_dup_spans_short_and_empty_docs_survive(spark):
         assert r["n_windows"] == 0 and r["n_dup_windows"] == 0 and r["dup_frac"] == 0.0
 
 
+@pytest.mark.slow  # >=10 s: k-means training plus a driver-side replay
 def test_semdedup_with_trained_kmeans_cells(spark):
     """End-to-end production path: IVF k-means trainer supplies the
     cells, semdedup audits within them — verified against a driver-side
@@ -165,6 +314,7 @@ def test_semdedup_with_trained_kmeans_cells(spark):
         assert kept == (not should_drop), vid
 
 
+@pytest.mark.slow
 def test_plan_shapes_are_pinned(spark):
     """The scale claims in the docstrings, held in the executed plans
     (same contract as tests/test_plans.py for registered queries)."""
@@ -188,6 +338,7 @@ def test_plan_shapes_are_pinned(spark):
     assert "BroadcastHashJoin [doc_id" in plan
 
 
+@pytest.mark.slow
 def test_dup_spans_internal_repeat_is_not_cross_doc(spark):
     """A window repeated twice WITHIN one doc only is not shared
     boilerplate — the >= 2 distinct-docs rule must not fire."""
