@@ -361,11 +361,11 @@ def _bench_nightly_refresh(spark, sf_dir: str) -> dict:
         store = os.path.join(root, "store")
         postings = os.path.join(root, "postings")
         ivf = os.path.join(root, "ivf")
-        s = [LedgerState(led, e) for e in range(8)]
-        init_state(spark, docs, s[0])
-        init_store(spark, docs, s[0], store)
-        init_postings_from_state(spark, docs, s[0], postings)
-        init_ivf_from_state(spark, docs, s[0], ivf)
+        base = LedgerState(led, 0)
+        init_state(spark, docs, base)
+        init_store(spark, docs, base, store)
+        init_postings_from_state(spark, docs, base, postings)
+        init_ivf_from_state(spark, docs, base, ivf)
         n_resident = docs.count()
 
         def night(idx: int, mod: int, tag: str) -> dict:
@@ -387,22 +387,18 @@ def _bench_nightly_refresh(spark, sf_dir: str) -> dict:
             )
             n_delta = tonight.count()
             t0 = time.perf_counter()
-            _, stats = refresh_night(spark, tonight, s[idx - 1], s[idx], store)
-            churn = tuple(
-                f.localCheckpoint()
-                for f in kept_churn(spark, s[idx - 1], s[idx])
-            )
+            state = LedgerState(led, idx)
+            _, stats = refresh_night(spark, tonight, state, store)
+            churn = tuple(f.localCheckpoint() for f in kept_churn(spark, state))
             apply_refresh_to_postings_store(
-                spark, tonight, s[idx - 1], s[idx], store, postings,
+                spark, tonight, state, store, postings,
                 night=f"n{idx}", churn=churn,
             )
-            apply_refresh_to_ivf_store(
-                spark, tonight, s[idx - 1], s[idx], ivf, churn=churn
-            )
+            apply_refresh_to_ivf_store(spark, tonight, state, ivf, churn=churn)
             apply_refresh_to_store(
                 spark,
                 night_snapshot_source(spark, tonight, store, churn),
-                s[idx - 1], s[idx], store, churn=churn,
+                state, store, churn=churn,
             )
             t = time.perf_counter() - t0
             return {

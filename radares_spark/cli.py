@@ -409,8 +409,7 @@ def cmd_snapshot_diff(
 def cmd_corpus_refresh(
     spark: SparkSession,
     docs_path: str,
-    state_out,
-    state_in=None,
+    state,
     store_dir: str | None = None,
     postings_dir: str | None = None,
     ivf_dir: str | None = None,
@@ -421,14 +420,18 @@ def cmd_corpus_refresh(
     jaccard_threshold: float = 0.8,
     max_bucket: int | None = None,
 ) -> dict[str, int]:
-    """Nightly incremental curation (pipeline/refresh.py): without
-    ``--state-in`` runs the night-zero batch (init_state); with it,
-    refreshes only the delta against the prior night's state. One
-    snapshot diff then carries every serving store the caller opted
-    into: ``--store`` (kept-corpus parquet, churned-doc-bucket
-    rewrites), ``--postings-store`` (BM25 inverted index, touched-term
-    -bucket rewrites) and ``--ivf-store`` (ANN vector store,
-    affected-cell rewrites). ORDER MATTERS on refresh nights: the
+    """Nightly incremental curation (pipeline/refresh.py) into one
+    epoch of a delta state ledger (``--state-ledger DIR --epoch N``,
+    a ``LedgerState``): epoch 0 runs the night-zero batch
+    (init_state); epoch N > 0 refreshes only the delta against epoch
+    N-1 of the same ledger, appending just the night's changed rows.
+    The epoch is always explicit — a crashed partial epoch N would
+    make "latest epoch + 1" skip the replay. One snapshot diff then
+    carries every serving store the caller opted into: ``--store``
+    (kept-corpus parquet, churned-doc-bucket rewrites),
+    ``--postings-store`` (BM25 inverted index, touched-term-bucket
+    rewrites) and ``--ivf-store`` (ANN vector store, affected-cell
+    rewrites). ORDER MATTERS on refresh nights: the
     postings refresh reads removed docs' OLD text from the kept store,
     so it runs before the kept store is rewritten (the IVF refresh
     removes by id and has no such dependency). Prints per-outcome
@@ -439,7 +442,7 @@ def cmd_corpus_refresh(
     TONIGHT'S docs only (not a full snapshot) and the refresh runs
     against the virtual snapshot ``kept_store ∖ tonight ∪ tonight``
     via ``refresh_night`` — no corpus-sized write, read or hash
-    (requires ``--state-in`` and ``--store``; every store apply then
+    (requires an epoch N > 0 and ``--store``; every store apply then
     sources stable text through pruned kept-store point reads).
 
     The four curation knobs (``keep_langs/sample_pct/
@@ -465,9 +468,9 @@ def cmd_corpus_refresh(
             "inverted index needs its text AS INDEXED, and the kept store "
             "is where last night's kept text persists"
         )
-    if delta_direct and not (state_in and store_dir):
+    if delta_direct and not (state.epoch and store_dir):
         raise ValueError(
-            "--delta-direct requires --state-in and --store: the virtual "
+            "--delta-direct requires --epoch >= 1 and --store: the virtual "
             "snapshot is tonight's docs plus the kept store's residents"
         )
     knobs = dict(
@@ -477,22 +480,20 @@ def cmd_corpus_refresh(
         max_bucket=max_bucket,
     )
     docs = spark.read.parquet(docs_path).select("doc_id", "text")
-    if state_in is None:
-        audit = init_state(spark, docs, state_out, **knobs)
+    if state.epoch == 0:
+        audit = init_state(spark, docs, state, **knobs)
         stats: dict[str, int] = {}
         if store_dir:
-            init_store(spark, docs, state_out, store_dir)
+            init_store(spark, docs, state, store_dir)
         if postings_dir:
-            init_postings_from_state(spark, docs, state_out, postings_dir)
+            init_postings_from_state(spark, docs, state, postings_dir)
         if ivf_dir:
-            init_ivf_from_state(spark, docs, state_out, ivf_dir)
+            init_ivf_from_state(spark, docs, state, ivf_dir)
     else:
         if delta_direct:
-            audit, stats = refresh_night(
-                spark, docs, state_in, state_out, store_dir, **knobs
-            )
+            audit, stats = refresh_night(spark, docs, state, store_dir, **knobs)
         else:
-            audit, stats = refresh(spark, docs, state_in, state_out, **knobs)
+            audit, stats = refresh(spark, docs, state, **knobs)
         churn = None
         if store_dir or postings_dir or ivf_dir:
             # ONE churn computation shared by every store apply (the
@@ -500,10 +501,7 @@ def cmd_corpus_refresh(
             # joins); the three frames are audit-sized id lists
             from radares_spark.pipeline.refresh import kept_churn
 
-            churn = tuple(
-                f.localCheckpoint()
-                for f in kept_churn(spark, state_in, state_out)
-            )
+            churn = tuple(f.localCheckpoint() for f in kept_churn(spark, state))
         if postings_dir:  # BEFORE the kept-store rewrite (old text)
             # delta-direct: add_ids (entered ∪ rewritten) are all
             # tonight's docs, so tonight's frame covers the add side;
@@ -512,8 +510,8 @@ def cmd_corpus_refresh(
                 {
                     f"postings_{k}": v
                     for k, v in apply_refresh_to_postings_store(
-                        spark, docs, state_in, state_out, store_dir,
-                        postings_dir, night=night, churn=churn,
+                        spark, docs, state, store_dir, postings_dir,
+                        night=night, churn=churn,
                     ).items()
                 }
             )
@@ -524,8 +522,7 @@ def cmd_corpus_refresh(
                 {
                     f"ivf_{k}": v
                     for k, v in apply_refresh_to_ivf_store(
-                        spark, docs, state_in, state_out, ivf_dir,
-                        churn=churn,
+                        spark, docs, state, ivf_dir, churn=churn,
                     ).items()
                 }
             )
@@ -539,7 +536,7 @@ def cmd_corpus_refresh(
             )
             stats.update(
                 apply_refresh_to_store(
-                    spark, src, state_in, state_out, store_dir, churn=churn
+                    spark, src, state, store_dir, churn=churn
                 )
             )
     counts = {
@@ -1018,9 +1015,9 @@ def _corpus_nightly_run(
     # the curation knobs change
     from radares_spark.pipeline.state_ledger import LedgerState
 
-    state_led = resolve_store(spark, root_dir, "state_ledger")
-    prior_state = LedgerState(state_led, len(done) - 1) if done else None
-    state_dir = LedgerState(state_led, len(done))
+    state = LedgerState(
+        resolve_store(spark, root_dir, "state_ledger"), len(done)
+    )
 
     _check_root_lease(root_dir)  # next: crawl mutates ledgers/out_dir
     counts = cmd_crawl_nightly(
@@ -1094,8 +1091,7 @@ def _corpus_nightly_run(
             for k, v in cmd_corpus_refresh(
                 spark,
                 kept_dir,
-                state_dir,
-                state_in=prior_state,
+                state,
                 store_dir=kept_store,
                 postings_dir=postings,
                 ivf_dir=ivf,
@@ -1587,6 +1583,8 @@ def _corpus_reinit_run(
         init_postings_from_state,
         init_state,
         init_store,
+        knobs_row,
+        ledger_knobs,
     )
     from radares_spark.pipeline.state_ledger import LedgerState
     from radares_spark.pipeline.stores import (
@@ -1609,21 +1607,12 @@ def _corpus_reinit_run(
         jaccard_threshold=jaccard_threshold,
         max_bucket=max_bucket,
     )
-    if iofs.has_parquet(spark, f"{cur_led}/knobs"):
-        row = spark.read.parquet(f"{cur_led}/knobs").head()
-        same = (
-            row["keep_langs"] == ",".join(knobs["keep_langs"])
-            and row["sample_pct"] == sample_pct
-            and row["jaccard_threshold"] == jaccard_threshold
-            and row["max_bucket"]
-            == (-1 if max_bucket is None else int(max_bucket))
+    if ledger_knobs(spark, cur_led) == knobs_row(**knobs):
+        raise ValueError(
+            "corpus-reinit under the state's CURRENT knobs is a no-op "
+            "(if a prior reinit crashed after its flip, delete the "
+            "leftover reinit_snapshot/ and carry on)"
         )
-        if same:
-            raise ValueError(
-                "corpus-reinit under the state's CURRENT knobs is a no-op "
-                "(if a prior reinit crashed after its flip, delete the "
-                "leftover reinit_snapshot/ and carry on)"
-            )
 
     kept_store = resolve_store(spark, root_dir, "kept_store")
     snap = os.path.join(root_dir, "reinit_snapshot")
@@ -1728,7 +1717,7 @@ def cmd_shards_verify(
 def _add_refresh_knobs(p) -> None:
     """The curation knobs recorded in the refresh state's knobs meta:
     night one sets them, every later night must repeat them or the
-    refresh fails fast (pipeline/refresh._check_knobs). Shared by
+    refresh fails fast (pipeline/refresh._prior_tables). Shared by
     corpus-refresh and corpus-nightly so a state built under
     non-default knobs stays drivable through either face."""
     p.add_argument("--keep-langs", default="en", help="comma-separated language allowlist (state knob)")
@@ -1777,13 +1766,13 @@ def main(argv: list[str] | None = None) -> int:
     cc.add_argument("--max-per-domain", type=int, default=None)
     cr = sub.add_parser("corpus-refresh")
     cr.add_argument("--docs", required=True, help="tonight's snapshot parquet (with --delta-direct: tonight's NEW docs only)")
-    cr.add_argument("--state-out", required=True, help="dir for tonight's state")
-    cr.add_argument("--state-in", default=None, help="prior night's state dir (omit for night zero)")
+    cr.add_argument("--state-ledger", required=True, help="delta state ledger dir (one epoch per night)")
+    cr.add_argument("--epoch", type=int, required=True, help="epoch to write: 0 runs night zero (init_state), N > 0 refreshes epoch N-1 into N; always explicit, so a crashed night replays its own epoch")
     cr.add_argument("--store", default=None, help="optional kept-corpus parquet to maintain incrementally")
     cr.add_argument("--postings-store", default=None, help="optional BM25 postings index to maintain incrementally (requires --store)")
     cr.add_argument("--ivf-store", default=None, help="optional IVF ANN vector store to maintain incrementally")
     cr.add_argument("--night", default=None, help="idempotency tag for the postings apply: a completed night's re-run is a no-op (the kept/IVF applies are rerun-idempotent by construction)")
-    cr.add_argument("--delta-direct", action="store_true", help="O(delta)-I/O nightly mode: --docs is tonight's docs only and the refresh runs against the virtual snapshot kept-store∖tonight∪tonight (requires --state-in and --store)")
+    cr.add_argument("--delta-direct", action="store_true", help="O(delta)-I/O nightly mode: --docs is tonight's docs only and the refresh runs against the virtual snapshot kept-store∖tonight∪tonight (requires --epoch >= 1 and --store)")
     cr.add_argument("--max-bucket", type=int, default=None, help="hot-LSH-bucket cap (state knob; the 100TB boilerplate guard)")
     _add_refresh_knobs(cr)
     sd = sub.add_parser("snapshot-diff")
@@ -1964,9 +1953,11 @@ def main(argv: list[str] | None = None) -> int:
         _print_sorted(counts)
         return 0
     if args.cmd == "corpus-refresh":
+        from radares_spark.pipeline.state_ledger import LedgerState
+
         counts = cmd_corpus_refresh(
-            spark, args.docs, args.state_out, args.state_in, args.store,
-            args.postings_store, args.ivf_store, args.night,
+            spark, args.docs, LedgerState(args.state_ledger, args.epoch),
+            args.store, args.postings_store, args.ivf_store, args.night,
             delta_direct=args.delta_direct, max_bucket=args.max_bucket,
             **_knob_kwargs(args),
         )

@@ -57,9 +57,9 @@ def speeding_ratio(limit: int, bins: Bins = SPEED_BINS) -> Column:
     return num / _total(bins)
 
 
-def percentile_col(p: float = 0.85, bins: Bins = SPEED_BINS) -> Column:
-    """p-th percentile speed from a wide histogram row: the upper bound
-    of the first bin whose cumulative count reaches ``p * total`` — a
+def percentile_col(bins: Bins = SPEED_BINS) -> Column:
+    """85th-percentile speed from a wide histogram row: the upper bound
+    of the first bin whose cumulative count reaches ``0.85 * total`` — a
     pure column expression (prefix sums compared against the target;
     Catalyst folds it into the enclosing pass)."""
     total = _total(bins)
@@ -68,7 +68,7 @@ def percentile_col(p: float = 0.85, bins: Bins = SPEED_BINS) -> Column:
     for c, _, _ in bins:
         acc = F.col(c) if acc is None else acc + F.col(c)
         prefix.append(acc)
-    target = F.lit(p) * total
+    target = F.lit(0.85) * total
     expr = None
     for (c, lo, hi), cum in zip(bins, prefix):
         cond = cum >= target

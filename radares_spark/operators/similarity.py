@@ -395,7 +395,7 @@ def retrain_ivf_store(
     own resident vectors under FRESHLY TRAINED centroids, into a NEW
     directory (write-new-then-swap: the old store keeps serving,
     byte-untouched, until the caller flips the path — the same
-    crash-safety story as refresh state dirs).
+    crash-safety story as the store pointer flips in pipeline/stores.py).
 
     What a retrain fixes, by construction: the new ``_stats`` anchor
     is the mean assigned cosine of the CURRENT residents under the new

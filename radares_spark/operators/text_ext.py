@@ -53,14 +53,14 @@ PII_RULES: list[tuple[str, str, str]] = [
 ]
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """Input columns + ``clean_text`` + one ``n_<rule>`` count per PII
     rule. Counts are taken on the ORIGINAL text (per-rule, before any
     masking); the masked text applies the rules in declaration order."""
     out = docs
     for name, pat, _ in PII_RULES:
-        out = out.withColumn(f"n_{name}", F.regexp_count(F.col(text_col), F.lit(pat)))
-    clean = F.col(text_col)
+        out = out.withColumn(f"n_{name}", F.regexp_count(F.col("text"), F.lit(pat)))
+    clean = F.col("text")
     for _, pat, repl in PII_RULES:
         clean = F.regexp_replace(clean, pat, repl)
     return out.withColumn("clean_text", clean)
@@ -104,7 +104,7 @@ HTML_ENTITIES: list[tuple[str, str]] = [
 ]
 
 
-def extract_html_text(docs: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_html_text(docs: DataFrame) -> DataFrame:
     """Input columns + ``plain_text`` + ``n_tags`` + ``n_links`` — the
     crawl pipeline's first stage (strip markup before any quality /
     dedup / PII stage sees bytes). Pure projection: chained
@@ -113,9 +113,9 @@ def extract_html_text(docs: DataFrame, html_col: str = "html") -> DataFrame:
     ORIGINAL markup (tag density is itself a quality signal: Gopher
     drops pages whose text is mostly chrome)."""
     out = docs.withColumn(
-        "n_tags", F.regexp_count(F.col(html_col), F.lit(r"<[^>]+>"))
-    ).withColumn("n_links", F.regexp_count(F.col(html_col), F.lit(r"(?i)<a\b")))
-    txt = F.col(html_col)
+        "n_tags", F.regexp_count(F.col("html"), F.lit(r"<[^>]+>"))
+    ).withColumn("n_links", F.regexp_count(F.col("html"), F.lit(r"(?i)<a\b")))
+    txt = F.col("html")
     for pat, repl in HTML_STRIP_RULES:
         txt = F.regexp_replace(txt, pat, repl)
     for ent, ch in HTML_ENTITIES:

@@ -70,9 +70,9 @@ def _canonical_parts(url: Column) -> dict[str, Column]:
     return {"scheme": scheme, "host": host, "path": path, "query": query}
 
 
-def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
+def with_canonical_url(df: DataFrame) -> DataFrame:
     """Adds ``canonical_url`` (+ ``url_host`` for per-domain grouping)."""
-    p = _canonical_parts(F.col(url_col))
+    p = _canonical_parts(F.col("url"))
     # materialize the split BEFORE the lambdas: inlining it would make
     # CollapseProject re-run the regexp chain once per array element
     staged = df.withColumns(
@@ -105,11 +105,11 @@ def with_canonical_url(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def url_dedup_audit(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_dedup_audit(df: DataFrame) -> DataFrame:
     """(id, canonical_url, outcome) — ``kept`` for the smallest id per
     canonical URL, ``url_dup`` for the rest. Same keeper shape as
     ``dedup_exact``: one shuffle on the canonical key."""
-    canon = with_canonical_url(df, url_col).select("doc_id", "canonical_url")
+    canon = with_canonical_url(df).select("doc_id", "canonical_url")
     keeper = canon.filter(F.col("canonical_url").isNotNull()).groupBy(
         "canonical_url"
     ).agg(F.min("doc_id").alias("__keep"))
@@ -169,12 +169,7 @@ def canonical_url_sql(table: str) -> str:
     """
 
 
-def domain_cap(
-    df: DataFrame,
-    k: int,
-    quality: Column,
-    url_col: str = "url",
-) -> DataFrame:
+def domain_cap(df: DataFrame, k: int, quality: Column) -> DataFrame:
     """Per-domain quota — the crawl-curation stage that stops a single
     site from dominating the corpus (RefinedWeb/Dolma cap documents
     per registrable domain): keep the top ``k`` docs per canonical
@@ -192,7 +187,7 @@ def domain_cap(
     100M-page domain contributes k x n_partitions rows to the wire,
     not 100M (the same shape as ``corpus.stratified_sample``).
     """
-    canon = with_canonical_url(df, url_col).select(
+    canon = with_canonical_url(df).select(
         "doc_id", "url_host", quality.cast("double").alias("__q")
     )
     # desc_nulls_last: Spark's desc already sinks NULL quality, but

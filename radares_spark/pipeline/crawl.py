@@ -63,28 +63,25 @@ def curate_crawl(
     ~3.5 s after. A production crawl lands extracted text between
     stages anyway (the same argument as ``incremental_dedup``'s
     pinned batch)."""
-    url_audit = url_dedup_audit(pages, url_col="url").localCheckpoint(eager=True)
+    url_audit = url_dedup_audit(pages).localCheckpoint(eager=True)
     url_kept = pages.join(
         url_audit.filter(F.col("outcome") == OUT_KEPT).select("doc_id"),
         "doc_id",
         "left_semi",
     )
 
-    extracted = extract_html_text(url_kept, html_col="html").select(
+    extracted = extract_html_text(url_kept).select(
         "doc_id", "url", F.col("plain_text").alias("text"), "n_tags", "n_links"
     )
     scrubbed = (
-        scrub_pii(extracted, text_col="text")
+        scrub_pii(extracted)
         .select("doc_id", "url", F.col("clean_text").alias("text"))
         .localCheckpoint(eager=True)
     )
 
     if max_per_domain is not None:
         capped_ids = domain_cap(
-            scrubbed,
-            max_per_domain,
-            quality=F.length("text"),
-            url_col="url",
+            scrubbed, max_per_domain, quality=F.length("text")
         ).select("doc_id")
         domain_kept = scrubbed.join(capped_ids, "doc_id", "left_semi")
     else:

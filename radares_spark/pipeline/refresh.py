@@ -27,19 +27,22 @@ outcomes.  The refreshed audit is EQUIVALENT to running batch
 tests/test_refresh.py across keeper-resurrection, bucket-churn,
 partner-removal and randomized three-night scenarios.
 
-State layout (parquet under a state dir):
-``features/`` (doc_id, text_hash, raw_hash, quality_pass, pred_lang,
-exact_keep) · ``bands/`` (doc_id, band, band_hash — stage-alive docs
-only) · ``audit/`` (doc_id, outcome).  Each refresh writes a NEW
-state dir (caller rotates nightly dirs; write-new-then-swap is the
-crash-safety story, as with ledger epochs).
+State layout: one delta state ledger (pipeline/state_ledger.py)
+holding ``features`` (doc_id, text_hash, raw_hash, quality_pass,
+pred_lang, exact_keep) · ``bands`` (doc_id, band, band_hash —
+stage-alive docs only) · ``audit`` (doc_id, outcome).  Every entry
+point takes ONE :class:`LedgerState`, the epoch being written:
+``init_state`` lands the full night-zero state as that epoch, and a
+refresh into epoch N reads epoch N-1 of the same ledger and writes
+ONLY the rows the night changed (plus tombstones) as ``epoch=N`` —
+state work scales with the delta, never the corpus.
 
 The curation knobs (keep_langs, sample_pct, jaccard_threshold,
 max_bucket) must match across nights — they are part of the state's
-meaning, so ``init_state``/``refresh`` land them in a one-row
-``knobs`` meta under the state dir and ``refresh`` FAILS FAST when
-the caller's knobs differ from the state's (silently mixing
-semantics would corrupt every carried outcome).
+meaning, so ``init_state`` lands them in a one-row ``knobs`` meta,
+once per ledger, and every refresh FAILS FAST when the caller's
+knobs differ from the ledger's (silently mixing semantics would
+corrupt every carried outcome).
 
 ``max_bucket`` hot-bucket capping (the 100 TB guard against
 boilerplate mega-buckets) IS honored incrementally: the cap makes an
@@ -77,70 +80,94 @@ from radares_spark.pipeline.corpus import (
     outcome_ladder,
     verify_near_pairs,
 )
-from radares_spark.io.fs import delete as fs_delete
+from radares_spark.io import fs as iofs
 from radares_spark.pipeline.snapshot import content_fingerprint
 from radares_spark.pipeline.state_ledger import (
+    STATE_TABLES,
     LedgerState,
     compaction_floor,
     read_state,
     write_state_epoch,
 )
 
-# Every public entry below takes states as ``str | LedgerState``: a
-# str is the full-rewrite dir layout the corpus-refresh CLI writes
-# (one dir per night, every table rewritten in full); a LedgerState
-# addresses one epoch of the delta state ledger
-# (pipeline/state_ledger.py), where a night writes ONLY its changed
-# rows — the delta-proportional production shape.
+
+def knobs_row(
+    keep_langs: tuple[str, ...],
+    sample_pct: int,
+    jaccard_threshold: float,
+    max_bucket: int | None,
+) -> tuple:
+    """The curation knobs as the ledger's one-row ``knobs`` meta
+    stores them (columns of ``_KNOBS_SCHEMA``, in order)."""
+    return (
+        ",".join(keep_langs),
+        int(sample_pct),
+        float(jaccard_threshold),
+        -1 if max_bucket is None else int(max_bucket),
+    )
 
 
-def _state_read(spark: SparkSession, state, table: str) -> DataFrame:
-    if isinstance(state, LedgerState):
-        return read_state(spark, state, table)
-    return spark.read.parquet(f"{state}/{table}")
+_KNOBS_SCHEMA = (
+    "keep_langs string, sample_pct int, jaccard_threshold double, max_bucket int"
+)
 
 
-def _state_write(
+def ledger_knobs(spark: SparkSession, ledger_dir: str) -> tuple | None:
+    """The ledger's recorded :func:`knobs_row`, or None before its
+    night zero landed one."""
+    path = f"{ledger_dir}/knobs"
+    if not iofs.has_parquet(spark, path):
+        return None
+    return tuple(spark.read.parquet(path).head())
+
+
+def _write_read(
     spark: SparkSession,
-    state,
+    state: LedgerState,
     table: str,
-    full: DataFrame,
     delta: DataFrame,
     dead: DataFrame,
 ) -> DataFrame:
-    """Land one table of one night's refreshed state, returning the
-    disk-backed read-back frame (the lineage break every downstream
-    step keys off). Dir states write ``full``; a LedgerState writes
-    ONLY ``delta`` rows + ``dead`` tombstones to its epoch partition —
-    carry = no write, so the nightly state write scales with the
-    delta, never the corpus (r10 verdict #1)."""
-    if isinstance(state, LedgerState):
-        write_state_epoch(spark, state, table, delta, dead)
-        return read_state(spark, state, table)
-    return _write_read(full, f"{state}/{table}")
+    """Land one table's ``delta`` rows + ``dead`` tombstones as the
+    state's epoch partition and return the as-of read-back (the
+    lineage break every downstream step keys off). Carry = no write,
+    so the nightly state write scales with the delta."""
+    write_state_epoch(spark, state, table, delta, dead)
+    return read_state(spark, state, table)
 
 
-def _knobs_dir(state) -> str:
-    """Knobs live once per ledger (immutable for its lifetime) vs once
-    per night dir in the dir layout."""
-    base = state.ledger_dir if isinstance(state, LedgerState) else state
-    return f"{base}/knobs"
-
-
-def _check_floor(spark: SparkSession, state) -> None:
-    """An as-of read below the ledger's compaction floor would
-    silently serve a base view that already contains LATER nights'
-    changes — fail fast instead."""
-    if not isinstance(state, LedgerState):
-        return
+def _prior_tables(
+    spark: SparkSession, state: LedgerState, knobs: tuple
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(features, bands, audit) as of the epoch a refresh into
+    ``state`` reads: ``epoch - 1`` of the same ledger. Fails fast on
+    an as-of read below the compaction floor (it would silently serve
+    a base view that already contains LATER nights' changes) and on
+    ``knobs`` (a :func:`knobs_row`) differing from the ledger's —
+    carried outcomes are only valid under the SAME semantics."""
+    prior = LedgerState(state.ledger_dir, state.epoch - 1)
+    if prior.epoch < 0:
+        raise ValueError(
+            f"epoch {state.epoch} has no prior epoch to refresh from — "
+            "night zero is init_state"
+        )
     floor = compaction_floor(spark, state.ledger_dir)
-    if floor is not None and state.epoch < floor:
+    if floor is not None and prior.epoch < floor:
         raise ValueError(
             f"state ledger {state.ledger_dir!r} is compacted through "
-            f"epoch {floor}; the as-of epoch {state.epoch} view no "
+            f"epoch {floor}; the as-of epoch {prior.epoch} view no "
             "longer exists (bounded retention) — refresh against the "
             "floor or a later epoch"
         )
+    got = ledger_knobs(spark, state.ledger_dir)
+    if knobs != got:
+        raise ValueError(
+            f"refresh knobs {knobs} differ from the state's knobs {got} "
+            "(keep_langs, sample_pct, jaccard_threshold, max_bucket); "
+            "carried outcomes are only valid under the state's semantics — "
+            "re-run init_state to change knobs"
+        )
+    return tuple(read_state(spark, prior, t) for t in STATE_TABLES)
 
 
 def _features(docs: DataFrame) -> DataFrame:
@@ -161,91 +188,19 @@ def _alive(feats: DataFrame, keep_langs: tuple[str, ...]):
     return F.col("quality_pass") & F.col("pred_lang").isin(*keep_langs) & F.col("exact_keep")
 
 
-def _write_read(df: DataFrame, path: str) -> DataFrame:
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
-def _write_knobs(
-    spark: SparkSession,
-    state_dir,
-    keep_langs: tuple[str, ...],
-    sample_pct: int,
-    jaccard_threshold: float,
-    max_bucket: int | None,
-) -> None:
-    """One-row knobs meta (the postings-store meta idiom): the knobs
-    are part of the state's meaning, so they travel with it. A ledger
-    records them ONCE (immutable for its lifetime — _check_knobs
-    already proved tonight's match), not once per night."""
-    from radares_spark.io import fs as iofs
-
-    if isinstance(state_dir, LedgerState) and iofs.has_parquet(
-        spark, _knobs_dir(state_dir)
-    ):
-        return
-    spark.createDataFrame(
-        [
-            (
-                ",".join(keep_langs),
-                int(sample_pct),
-                float(jaccard_threshold),
-                -1 if max_bucket is None else int(max_bucket),
-            )
-        ],
-        "keep_langs string, sample_pct int, jaccard_threshold double, max_bucket int",
-    ).repartition(1).write.mode("overwrite").parquet(_knobs_dir(state_dir))
-    # repartition(1), never coalesce(1), on local relations — the
-    # coalesce form serializes 32 Python slices in one task, ~4 s of
-    # fixed cost per write (see shards._write_meta)
-
-
-def _check_knobs(
-    spark: SparkSession,
-    state_in,
-    keep_langs: tuple[str, ...],
-    sample_pct: int,
-    jaccard_threshold: float,
-    max_bucket: int | None,
-) -> None:
-    """Fail fast when the caller's knobs differ from the knobs the
-    state was built under — carried outcomes are only valid under the
-    SAME semantics."""
-    row = spark.read.parquet(_knobs_dir(state_in)).collect()[0]
-    want = (
-        ",".join(keep_langs),
-        int(sample_pct),
-        float(jaccard_threshold),
-        -1 if max_bucket is None else int(max_bucket),
-    )
-    got = (
-        row["keep_langs"],
-        row["sample_pct"],
-        row["jaccard_threshold"],
-        row["max_bucket"],
-    )
-    if want != got:
-        raise ValueError(
-            f"refresh knobs {want} differ from the state's knobs {got} "
-            "(keep_langs, sample_pct, jaccard_threshold, max_bucket); "
-            "carried outcomes are only valid under the state's semantics — "
-            "re-run init_state to change knobs"
-        )
-
-
 def init_state(
     spark: SparkSession,
     docs: DataFrame,
-    state_dir,
+    state: LedgerState,
     keep_langs: tuple[str, ...] = ("en",),
     sample_pct: int = 100,
     jaccard_threshold: float = 0.8,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Night zero: full batch curation, landing the reusable state
-    (``state_dir``: a state dir, or a LedgerState whose epoch becomes
-    the ledger's base — every row is that epoch's "delta").
-    Returns the audit (read back from the state)."""
+    """Night zero: full batch curation, landing the reusable state as
+    ``state``'s epoch (every row is that epoch's "delta"; later
+    nights refresh from it) and recording the ledger's knobs. Returns
+    the audit (read back from the state)."""
     none_dead = docs.select("doc_id").limit(0)
     feats = _features(docs)
     keeper = feats.groupBy("text_hash").agg(F.min("doc_id").alias("keep_id"))
@@ -254,11 +209,11 @@ def init_state(
         .withColumn("exact_keep", F.col("doc_id") == F.col("keep_id"))
         .drop("keep_id")
     )
-    feats = _state_write(spark, state_dir, "features", feats, feats, none_dead)
+    feats = _write_read(spark, state, "features", feats, none_dead)
 
     alive_ids = feats.filter(_alive(feats, keep_langs)).select("doc_id")
     bands = lsh_bands(minhash_signatures(docs.join(alive_ids, "doc_id", "left_semi")))
-    bands = _state_write(spark, state_dir, "bands", bands, bands, none_dead)
+    bands = _write_read(spark, state, "bands", bands, none_dead)
 
     if max_bucket is not None:
         cand, _hot = lsh_pairs_capped(bands, max_bucket)
@@ -275,24 +230,28 @@ def init_state(
     audit = feats.join(near, "doc_id", "left").select(
         "doc_id", outcome_ladder(keep_langs, sample_pct).alias("outcome")
     )
-    _write_knobs(
-        spark, state_dir, keep_langs, sample_pct, jaccard_threshold, max_bucket
-    )
-    return _state_write(spark, state_dir, "audit", audit, audit, none_dead)
+    # repartition(1), never coalesce(1), on local relations — the
+    # coalesce form serializes 32 Python slices in one task, ~4 s of
+    # fixed cost per write (see shards._write_meta)
+    spark.createDataFrame(
+        [knobs_row(keep_langs, sample_pct, jaccard_threshold, max_bucket)],
+        _KNOBS_SCHEMA,
+    ).repartition(1).write.mode("overwrite").parquet(f"{state.ledger_dir}/knobs")
+    return _write_read(spark, state, "audit", audit, none_dead)
 
 
 def refresh(
     spark: SparkSession,
     new_docs: DataFrame,
-    state_in,
-    state_out,
+    state: LedgerState,
     keep_langs: tuple[str, ...] = ("en",),
     sample_pct: int = 100,
     jaccard_threshold: float = 0.8,
     max_bucket: int | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """One night of incremental curation: ``(audit, stats)`` for the
-    new snapshot, writing refreshed state to ``state_out``.
+    new snapshot, refreshing epoch ``state.epoch - 1`` of the ledger
+    into ``state``.
 
     Per-doc text work (features, signatures, shingles) touches ONLY
     delta docs, resurrected/demoted dedup members, and near-pair
@@ -304,15 +263,9 @@ def refresh(
     changes are always bucket churn, so cap flips land inside the
     affected set); it must match the knob the state was built with —
     mismatches fail fast via the state's knobs meta."""
-    if state_in == state_out:
-        raise ValueError("state_out must differ from state_in (write-new-then-swap)")
-    _check_floor(spark, state_in)
-    _check_knobs(
-        spark, state_in, keep_langs, sample_pct, jaccard_threshold, max_bucket
+    prior_feats, prior_bands, prior_audit = _prior_tables(
+        spark, state, knobs_row(keep_langs, sample_pct, jaccard_threshold, max_bucket)
     )
-    prior_feats = _state_read(spark, state_in, "features")
-    prior_bands = _state_read(spark, state_in, "bands")
-    prior_audit = _state_read(spark, state_in, "audit")
 
     # -- 1. delta detection on the raw-byte fingerprint ---------------
     # Every small multi-consumer frame below is PINNED with an eager
@@ -342,7 +295,7 @@ def refresh(
 
     return _refresh_core(
         spark, text_for, delta_ids, removed_ids,
-        prior_feats, prior_bands, prior_audit, state_out,
+        prior_feats, prior_bands, prior_audit, state,
         keep_langs, sample_pct, jaccard_threshold, max_bucket,
     )
 
@@ -350,8 +303,6 @@ def refresh(
 def _store_n_buckets(spark: SparkSession, store_dir: str) -> int | None:
     """The kept store's pinned bucket count, or None for a plain
     (non-init_store) parquet dir without the ``_meta`` sidecar."""
-    from radares_spark.io import fs as iofs
-
     if not iofs.has_parquet(spark, f"{store_dir}/_meta"):
         return None
     return spark.read.parquet(f"{store_dir}/_meta").head()["n_buckets"]
@@ -405,8 +356,7 @@ def _pruned_store_text(
 def refresh_night(
     spark: SparkSession,
     tonight_docs: DataFrame,
-    state_in,
-    state_out,
+    state: LedgerState,
     kept_store_dir: str,
     keep_langs: tuple[str, ...] = ("en",),
     sample_pct: int = 100,
@@ -425,7 +375,7 @@ def refresh_night(
     written, read or hashed:
 
     - delta detection joins tonight's fingerprints against the raw
-      hashes ALREADY recorded in ``state_in/features`` — no stable
+      hashes ALREADY recorded in the prior epoch's ``features`` — no stable
       doc's text is hashed (a stable store doc's text is the text the
       state fingerprinted, by the store-apply contract);
     - the stable side of the snapshot is never materialized: stable
@@ -441,15 +391,9 @@ def refresh_night(
       tonight's rewritten docs ride tonight's frame, docs the crashed
       run dropped read as removed.
     """
-    if state_in == state_out:
-        raise ValueError("state_out must differ from state_in (write-new-then-swap)")
-    _check_floor(spark, state_in)
-    _check_knobs(
-        spark, state_in, keep_langs, sample_pct, jaccard_threshold, max_bucket
+    prior_feats, prior_bands, prior_audit = _prior_tables(
+        spark, state, knobs_row(keep_langs, sample_pct, jaccard_threshold, max_bucket)
     )
-    prior_feats = _state_read(spark, state_in, "features")
-    prior_bands = _state_read(spark, state_in, "bands")
-    prior_audit = _state_read(spark, state_in, "audit")
 
     tonight = tonight_docs.select("doc_id", "text").localCheckpoint()
     tonight_ids = tonight.select("doc_id")
@@ -517,7 +461,7 @@ def refresh_night(
 
     audit, stats = _refresh_core(
         spark, text_for, delta_ids, removed_ids,
-        prior_feats, prior_bands, prior_audit, state_out,
+        prior_feats, prior_bands, prior_audit, state,
         keep_langs, sample_pct, jaccard_threshold, max_bucket,
     )
     stats["n_store_buckets_read"] = len(buckets_read)
@@ -532,7 +476,7 @@ def _refresh_core(
     prior_feats: DataFrame,
     prior_bands: DataFrame,
     prior_audit: DataFrame,
-    state_out,
+    state: LedgerState,
     keep_langs: tuple[str, ...],
     sample_pct: int,
     jaccard_threshold: float,
@@ -575,24 +519,12 @@ def _refresh_core(
         .withColumn("exact_keep", F.col("doc_id") == F.col("keep_id"))
         .drop("keep_id")
     )
-    carried = (
-        feats_stable.join(affected_hashes, "text_hash", "left_anti")
-        .join(
-            prior_feats.select("doc_id", "exact_keep"), "doc_id"
-        )  # hash untouched => prior keeper decision stands
-    )
     # ledger delta = exactly the recomputed rows (delta-bounded by the
     # affected-hash semi-joins above; a recomputed row that happens to
     # equal its prior value shadows equal content) + tombstones for
-    # removed docs; carried rows are carried BY NOT BEING WRITTEN
-    feats_new = _state_write(
-        spark,
-        state_out,
-        "features",
-        full=carried.unionByName(recomputed),
-        delta=recomputed,
-        dead=removed_ids,
-    )
+    # removed docs; an untouched hash's rows keep their prior keeper
+    # decision, carried BY NOT BEING WRITTEN
+    feats_new = _write_read(spark, state, "features", recomputed, removed_ids)
 
     # -- 4. aliveness churn (quality/lang flips ride delta_ids;
     #       exact flips can hit ANY doc in an affected hash group) ----
@@ -623,16 +555,7 @@ def _refresh_core(
         .join(prior_bands.select("doc_id"), "doc_id", "left_semi")
         .distinct()
     )
-    bands_new = _state_write(
-        spark,
-        state_out,
-        "bands",
-        full=prior_bands.join(void_ids, "doc_id", "left_anti").unionByName(
-            fresh_bands
-        ),
-        delta=fresh_bands,
-        dead=band_dead,
-    )
+    bands_new = _write_read(spark, state, "bands", fresh_bands, band_dead)
     churned = (
         prior_bands.join(void_ids, "doc_id", "left_semi")
         .select("band", "band_hash")
@@ -726,16 +649,12 @@ def _refresh_core(
     audit_changed = (
         recomputed.select("doc_id").unionByName(affected).distinct()
     )
-    audit = _state_write(
+    audit = _write_read(
         spark,
-        state_out,
+        state,
         "audit",
-        full=audit,
-        delta=audit.join(audit_changed, "doc_id", "left_semi"),
-        dead=removed_ids,
-    )
-    _write_knobs(
-        spark, state_out, keep_langs, sample_pct, jaccard_threshold, max_bucket
+        audit.join(audit_changed, "doc_id", "left_semi"),
+        removed_ids,
     )
 
     stats = {
@@ -760,79 +679,43 @@ def _refresh_core(
 N_STORE_BUCKETS = 64
 
 
-def _kept(spark: SparkSession, state_dir) -> DataFrame:
+def _kept(spark: SparkSession, state: LedgerState) -> DataFrame:
     return (
-        _state_read(spark, state_dir, "audit")
+        read_state(spark, state, "audit")
         .filter(F.col("outcome") == KEPT)
         .select("doc_id")
     )
 
 
 def kept_churn(
-    spark: SparkSession, state_in, state_out
+    spark: SparkSession, state: LedgerState
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """``(entered, left, rewritten)`` doc_id frames describing how the
-    KEPT set changed across one refresh — the single churn computation
-    every downstream serving store keys off (kept-corpus parquet,
-    postings index, IVF vector store): entered/left are the kept-set
-    symmetric difference (two anti-joins — a union-exceptAll would
-    double-count common ids), rewritten are docs kept on BOTH nights
-    whose raw content hash changed (features ledger — no text ever
-    compared). All three are audit/ledger-sized id joins, never
-    corpus text. Callers maintaining SEVERAL stores from one night
-    compute this once (pinned) and pass it via each apply's
-    ``churn`` param — the CLI previously re-ran it per store.
+    KEPT set changed across the refresh into ``state`` — the single
+    churn computation every downstream serving store keys off
+    (kept-corpus parquet, postings index, IVF vector store):
+    entered/left are the kept-set symmetric difference (two anti-joins
+    — a union-exceptAll would double-count common ids), rewritten are
+    docs kept on BOTH nights whose raw content hash changed (features
+    ledger — no text ever compared). Callers maintaining SEVERAL
+    stores from one night compute this once (pinned) and pass it via
+    each apply's ``churn`` param.
 
-    Consecutive epochs of ONE state ledger take the delta-bounded
-    fast path: every doc whose kept-membership or content changed is
-    IN tonight's epoch partitions by the ledger's write contract, so
-    the churn reads the ``epoch=N`` partitions plus a semi-joined
-    prior view instead of four corpus-wide audits (equivalence to the
-    generic path is pinned in tests/test_state_ledger.py)."""
-    if (
-        isinstance(state_in, LedgerState)
-        and isinstance(state_out, LedgerState)
-        and state_in.ledger_dir == state_out.ledger_dir
-        and state_out.epoch == state_in.epoch + 1
-    ):
-        return _kept_churn_ledger_delta(spark, state_in, state_out)
-    kept_old = _kept(spark, state_in)
-    kept_new = _kept(spark, state_out)
-    entered = kept_new.join(kept_old, "doc_id", "left_anti")
-    left = kept_old.join(kept_new, "doc_id", "left_anti")
-    fp_old = _state_read(spark, state_in, "features").select(
-        "doc_id", F.col("raw_hash").alias("old_raw")
-    )
-    fp_new = _state_read(spark, state_out, "features").select(
-        "doc_id", "raw_hash"
-    )
-    rewritten = (
-        kept_new.join(kept_old, "doc_id", "left_semi")
-        .join(fp_old, "doc_id")
-        .join(fp_new, "doc_id")
-        .filter(F.col("raw_hash") != F.col("old_raw"))
-        .select("doc_id")
-    )
-    return entered, left, rewritten
-
-
-def _kept_churn_ledger_delta(
-    spark: SparkSession, state_in: "LedgerState", state_out: "LedgerState"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """kept_churn over one ledger night from its delta partitions: a
-    doc entering/leaving the kept set has a changed outcome (in the
-    audit's ``epoch=N``); a rewritten doc has a changed raw_hash (in
-    the features' ``epoch=N``). The prior side reads only the changed
-    docs' history (broadcast semi-join pushed into the scan), so the
-    whole computation is O(tonight's delta), not O(corpus)."""
+    Read from the night's delta partitions: a doc entering/leaving the
+    kept set has a changed outcome (in the audit's ``epoch=N``); a
+    rewritten doc has a changed raw_hash (in the features'
+    ``epoch=N``), by the ledger's write contract. The prior side reads
+    only the changed docs' history (broadcast semi-join pushed into
+    the scan), so the whole computation is O(tonight's delta), not
+    O(corpus) — equivalence to a diff of two full as-of views is
+    pinned in tests/test_state_ledger.py."""
+    from pyspark.sql import Window
 
     def _delta_and_prior(table: str, cols: list[str]):
-        from pyspark.sql import Window
-
-        raw = spark.read.parquet(state_out.table_dir(table))
-        tonight = raw.filter(F.col("epoch") == F.lit(state_out.epoch))
+        raw = spark.read.parquet(state.table_dir(table))
+        tonight = raw.filter(F.col("epoch") == F.lit(state.epoch))
         ids = tonight.select("doc_id").distinct()
-        prior_rows = raw.filter(F.col("epoch") <= F.lit(state_in.epoch)).join(
+        prior_rows = raw.filter(F.col("epoch") < F.lit(state.epoch)).join(
             ids, "doc_id", "left_semi"
         )
         # latest-per-doc via max-over-window: one doc_id shuffle
@@ -874,7 +757,7 @@ def _store_bucket(n_buckets: int):
 def init_store(
     spark: SparkSession,
     docs: DataFrame,
-    state_dir,
+    state: LedgerState,
     store_dir: str,
     n_buckets: int = N_STORE_BUCKETS,
 ) -> None:
@@ -883,7 +766,7 @@ def init_store(
     The bucket is the REWRITE UNIT for refresh nights: at 100 TB,
     ``n_buckets`` is sized so one bucket is an acceptable rewrite
     (churning b buckets rewrites b/n of the store, never all of it)."""
-    audit = _state_read(spark, state_dir, "audit")
+    audit = read_state(spark, state, "audit")
     kept = docs.join(
         audit.filter(F.col("outcome") == KEPT), "doc_id", "left_semi"
     ).withColumn("part_bucket", _store_bucket(n_buckets))
@@ -900,19 +783,18 @@ def init_store(
 def apply_refresh_to_store(
     spark: SparkSession,
     new_docs: DataFrame,
-    state_in,
-    state_out,
+    state: LedgerState,
     store_dir: str,
     n_buckets: int = N_STORE_BUCKETS,
     churn: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> dict[str, int]:
-    """Bring the materialized kept-store in line with a refreshed
-    state, rewriting ONLY churned buckets via dynamic partition
+    """Bring the materialized kept-store in line with the refreshed
+    ``state``, rewriting ONLY churned buckets via dynamic partition
     overwrite — untouched bucket partitions keep their files byte for
     byte (pinned in tests via the file listing).
 
     A bucket churns when any of its docs changed kept-membership
-    between the two audits, or stayed kept with different content
+    between the prior epoch's audit and tonight's, or stayed kept with different content
     (raw_hash from the features state — no text comparison). Returns
     ``{"n_churned_docs": ..., "n_buckets_rewritten": ...}``."""
     stored = spark.read.parquet(f"{store_dir}/_meta").head()["n_buckets"]
@@ -921,7 +803,7 @@ def apply_refresh_to_store(
             f"store was initialized with n_buckets={stored}, got {n_buckets}: "
             "a mismatched bucket count would rewrite the wrong partitions"
         )
-    entered, left, rewritten = churn or kept_churn(spark, state_in, state_out)
+    entered, left, rewritten = churn or kept_churn(spark, state)
     churned = (
         entered.unionByName(left).unionByName(rewritten).distinct().localCheckpoint()
     )
@@ -942,7 +824,7 @@ def apply_refresh_to_store(
             )
         rows = (
             new_docs.select(*store_cols)
-            .join(_kept(spark, state_out), "doc_id", "left_semi")
+            .join(_kept(spark, state), "doc_id", "left_semi")
             .withColumn("part_bucket", _store_bucket(n_buckets))
             .join(buckets, "part_bucket", "left_semi")
             .localCheckpoint()
@@ -961,7 +843,7 @@ def apply_refresh_to_store(
             ).collect()
         ]
         for b in emptied:
-            fs_delete(spark, f"{store_dir}/part_bucket={b}")
+            iofs.delete(spark, f"{store_dir}/part_bucket={b}")
     return {"n_churned_docs": n_docs, "n_buckets_rewritten": n_buckets_hit}
 
 
@@ -993,22 +875,21 @@ def night_snapshot_source(
 
 
 def init_postings_from_state(
-    spark: SparkSession, docs: DataFrame, state_dir, postings_dir: str
+    spark: SparkSession, docs: DataFrame, state: LedgerState, postings_dir: str
 ) -> None:
     """Night zero of the retrieval index: BM25 postings over exactly
     the kept docs (operators/retrieval.build_postings_store)."""
     from radares_spark.operators.retrieval import build_postings_store
 
     build_postings_store(
-        docs.join(_kept(spark, state_dir), "doc_id", "left_semi"), postings_dir
+        docs.join(_kept(spark, state), "doc_id", "left_semi"), postings_dir
     )
 
 
 def apply_refresh_to_postings_store(
     spark: SparkSession,
     new_docs: DataFrame,
-    state_in,
-    state_out,
+    state: LedgerState,
     kept_store_dir: str,
     postings_dir: str,
     night: str | None = None,
@@ -1029,7 +910,7 @@ def apply_refresh_to_postings_store(
     orchestrator's crash contract)."""
     from radares_spark.operators.retrieval import refresh_postings_store
 
-    entered, left, rewritten = churn or kept_churn(spark, state_in, state_out)
+    entered, left, rewritten = churn or kept_churn(spark, state)
     remove_ids = left.unionByName(rewritten).distinct()
     add_ids = entered.unionByName(rewritten).distinct()
     # pruned point-read of the removed docs' OLD text: only the
@@ -1066,7 +947,7 @@ def _kept_vectors(docs: DataFrame, dim: int) -> DataFrame:
 def init_ivf_from_state(
     spark: SparkSession,
     docs: DataFrame,
-    state_dir,
+    state: LedgerState,
     ivf_dir: str,
     n_cells: int = 8,
 ) -> None:
@@ -1077,7 +958,7 @@ def init_ivf_from_state(
     from radares_spark.operators.similarity import build_ivf_index, write_ivf_store
 
     normed = _kept_vectors(
-        docs.join(_kept(spark, state_dir), "doc_id", "left_semi"), EMBED_DIM
+        docs.join(_kept(spark, state), "doc_id", "left_semi"), EMBED_DIM
     ).localCheckpoint()
     assignment, centroids = build_ivf_index(normed, n_cells=n_cells, dim=EMBED_DIM)
     write_ivf_store(spark, normed, assignment, centroids, ivf_dir)
@@ -1086,8 +967,7 @@ def init_ivf_from_state(
 def apply_refresh_to_ivf_store(
     spark: SparkSession,
     new_docs: DataFrame,
-    state_in,
-    state_out,
+    state: LedgerState,
     ivf_dir: str,
     churn: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> dict[str, int]:
@@ -1101,7 +981,7 @@ def apply_refresh_to_ivf_store(
     from radares_spark.operators.embed import EMBED_DIM
     from radares_spark.operators.similarity import refresh_ivf_store
 
-    entered, left, rewritten = churn or kept_churn(spark, state_in, state_out)
+    entered, left, rewritten = churn or kept_churn(spark, state)
     delta = _kept_vectors(
         new_docs.join(
             entered.unionByName(rewritten).distinct(), "doc_id", "left_semi"

@@ -1,8 +1,8 @@
-"""Delta-proportional refresh-state ledger (r10 verdict #1 — the last
-O(corpus)-per-night term in the production night).
+"""Delta-proportional refresh-state ledger — the only on-disk form of
+the corpus refresh state (pipeline/refresh.py).
 
-Every refresh night used to rewrite the FULL features/bands/audit
-ledgers into a brand-new ``state/<night>`` dir and retain every
+Every refresh night once rewrote the FULL features/bands/audit
+ledgers into a brand-new ``state/<night>`` dir and retained every
 night's copy forever. The rows are narrow (two hashes + flags per
 doc, no text), but at 10^9-10^10 docs that is a ~100 GB-1 TB write
 per night and unbounded O(corpus)-per-night storage growth: a year of
@@ -36,14 +36,13 @@ compaction) to the refresh state:
 Crash replay: a crashed (un-logged) night re-runs deterministically
 and :func:`write_state_epoch` clears any partial ``epoch=N``
 partition before rewriting it, so a replay lands byte-identically and
-prior epochs are never touched — the same contract the materialized
-``state/<night>`` dirs had under write-new-then-swap.
+prior epochs are never touched.
 
 As-of reads BELOW the compaction floor are gone by design;
 ``compaction_floor`` records the fold point (written BEFORE the fold,
 so a crash can only over-report and fail fast, never silently serve a
-base-polluted view) and the refresh entry points reject a state_in
-older than it.
+base-polluted view) and the refresh entry points reject a refresh
+whose prior epoch is older than it.
 
 Reference parity: the reference keeps one mutable curation table and
 overwrites it per run (/root/reference/src/clean_data.py to_sql
@@ -66,11 +65,10 @@ COMPACTED_EPOCH = -1
 
 @dataclass(frozen=True)
 class LedgerState:
-    """One epoch's view of a delta state ledger — accepted anywhere
-    the refresh layer takes a state DIR path (``str`` keeps the
-    full-rewrite dir layout). ``epoch`` is the night index the
+    """One epoch's view of a delta state ledger — the state every
+    refresh-layer entry point takes. ``epoch`` is the night index the
     orchestrator assigns (night log order), so consecutive nights are
-    consecutive epochs."""
+    consecutive epochs: a refresh writing epoch N reads epoch N-1."""
 
     ledger_dir: str
     epoch: int
@@ -82,8 +80,8 @@ class LedgerState:
 def read_state(spark: SparkSession, state: LedgerState, table: str) -> DataFrame:
     """The state table as of ``state.epoch``: latest-per-doc over
     ``epoch <= e`` (partition-pruned), tombstoned docs dropped, payload
-    columns only — row-equal to what the full-rewrite dir layout
-    stores in ``<state_dir>/<table>``.
+    columns only — the full table as a from-scratch ``init_state``
+    of the same snapshot would land it.
 
     Latest-per-doc is a max-over-window + filter (ONE doc_id shuffle;
     every row of a doc's newest epoch survives, which the bands table

@@ -133,7 +133,7 @@ def radar_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "equipment",
         "pubmonth",
         F.round(weighted_mean_speed(QTY_BINS), 4).alias("weighted_mean"),
-        percentile_col(0.85, QTY_BINS).alias("p85_speed"),
+        percentile_col(QTY_BINS).alias("p85_speed"),
         F.round(speeding_ratio(31, QTY_BINS), 6).alias("speeding_ratio"),
     )
 
@@ -143,7 +143,7 @@ def radar_p85(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench's round-over-round comparable plan)."""
     hist = _qty_hist(spark, sf_dir)
     return hist.select(
-        "equipment", "pubmonth", percentile_col(0.85, QTY_BINS).alias("p85_speed")
+        "equipment", "pubmonth", percentile_col(QTY_BINS).alias("p85_speed")
     )
 
 

@@ -9,19 +9,22 @@ import datetime as dt
 
 import pytest
 
-# Whole-module slow tier (r15): multi-second Spark e2e tests dominate
-# this module's wall; deselected by default so the driver's verify
-# window fits — run with -m slow (see COVERAGE.md).
-pytestmark = pytest.mark.slow
+# Slow tier per test: multi-second Spark e2e tests dominate this
+# module's wall; deselected by default so the default run fits its
+# time window — run with -m slow (see COVERAGE.md). The one default-tier test,
+# test_corpus_refresh_subcommand_two_nights, runs the refresh layer
+# (epoch 0 -> 1 of the state ledger) end to end through main().
 
 from pyspark.sql import functions as F
 
 from radares_spark.cli import cmd_backload, cmd_scrape, cmd_verify, parse_cli_date
 from radares_spark.io.report_parser import build_report
+from radares_spark.pipeline.state_ledger import LedgerState
 
 TODAY = dt.date(2024, 5, 10)
 
 
+@pytest.mark.slow
 def test_parse_cli_date_contract():
     assert parse_cli_date("5/3/2024", today=TODAY) == dt.date(2024, 3, 5)
     assert parse_cli_date("05/03/2024", today=TODAY) == dt.date(2024, 3, 5)
@@ -53,6 +56,7 @@ class FakePortal:
         return R()
 
 
+@pytest.mark.slow
 def test_backload_plans_fetches_ingests_then_noop(spark, tmp_path):
     devices = spark.createDataFrame([("FS551JOI",), ("FS655JOI",)], "equipment string")
     landing, wh, ckpt = str(tmp_path / "l"), str(tmp_path / "w"), str(tmp_path / "c")
@@ -86,6 +90,7 @@ def test_backload_plans_fetches_ingests_then_noop(spark, tmp_path):
     assert short == {"2024-05-01", "2024-05-02", "2024-05-03"}
 
 
+@pytest.mark.slow
 def test_scrape_pulls_one_day_and_logs(spark, tmp_path):
     landing, wh, ckpt = str(tmp_path / "l"), str(tmp_path / "w"), str(tmp_path / "c")
     portal = FakePortal()
@@ -102,6 +107,7 @@ def test_scrape_pulls_one_day_and_logs(spark, tmp_path):
     assert got_day == day
 
 
+@pytest.mark.slow
 def test_corpus_health_subcommand(spark, tmp_path, capsys):
     """corpus-health audits a parquet documents store from the CLI."""
     import pandas as pd
@@ -127,6 +133,7 @@ def test_corpus_health_subcommand(spark, tmp_path, capsys):
     assert rows["b"]["n_null_text"] == 1
 
 
+@pytest.mark.slow
 def test_corpus_health_needs_only_docs_flag():
     """Review finding: the advertised one-flag invocation must parse —
     the radar-domain globals are not demanded globally (corpus-health
@@ -142,6 +149,7 @@ def test_corpus_health_needs_only_docs_flag():
     assert "corpus-health" in src
 
 
+@pytest.mark.slow
 def test_curate_crawl_subcommand(spark, tmp_path, capsys):
     """The flagship pipeline through the public CLI: pages in, kept/ +
     audit/ parquet out, per-outcome counts printed; URL-dup pages never
@@ -281,6 +289,7 @@ def test_crawl_nightly_three_night_recrawl(spark, tmp_path, capsys):
     assert sorted(iofs.epoch_partitions(spark, ledger)) == [0, 1]
 
 
+@pytest.mark.slow
 def test_snapshot_diff_subcommand(spark, tmp_path, capsys):
     """snapshot-diff compares two parquet snapshots from the CLI,
     lands the per-key delta when --out is given, and prints summary
@@ -305,33 +314,42 @@ def test_snapshot_diff_subcommand(spark, tmp_path, capsys):
 
 
 def test_corpus_refresh_subcommand_two_nights(spark, tmp_path, capsys):
-    """corpus-refresh: night zero (no --state-in) batch-curates and
-    lands state; night one refreshes against it, reporting the
-    delta-proportional stats alongside outcome counts."""
+    """corpus-refresh through ``main``: epoch 0 batch-curates and lands
+    the state ledger; epoch 1 refreshes against it, reporting the
+    delta-proportional stats alongside outcome counts. The default
+    tier's one run of the refresh layer end to end."""
     import pandas as pd
 
-    from radares_spark.cli import cmd_corpus_refresh
+    from radares_spark.cli import main
     from tests.test_refresh import mk_text
+
+    led = str(tmp_path / "state_ledger")
+
+    def corpus_refresh(docs, epoch):
+        argv = ["corpus-refresh", "--docs", docs,
+                "--state-ledger", led, "--epoch", str(epoch)]
+        assert main(argv) == 0
+        printed = capsys.readouterr().out.strip().splitlines()
+        return {k: int(v) for k, v in (line.split(": ") for line in printed)}
 
     rows = [(i, mk_text(i)) for i in range(10)] + [(10, mk_text(0))]
     n0 = str(tmp_path / "docs_n0")
     spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "text"])
     ).write.parquet(n0)
-    c0 = cmd_corpus_refresh(spark, n0, str(tmp_path / "s0"))
+    c0 = corpus_refresh(n0, 0)
     assert c0["kept"] == 10 and c0["exact_dup"] == 1
 
     n1 = str(tmp_path / "docs_n1")
     spark.createDataFrame(
         pd.DataFrame(rows[1:], columns=["doc_id", "text"])  # drop keeper 0
     ).write.parquet(n1)
-    c1 = cmd_corpus_refresh(
-        spark, n1, str(tmp_path / "s1"), state_in=str(tmp_path / "s0")
-    )
+    c1 = corpus_refresh(n1, 1)
     assert c1["kept"] == 10 and "exact_dup" not in c1  # 10 resurrected
     assert c1["n_removed"] == 1 and c1["n_delta"] == 0
 
 
+@pytest.mark.slow
 def test_corpus_refresh_store_flag(spark, tmp_path):
     """--store maintains the kept-corpus parquet across nights: full
     write on night zero, churned-bucket rewrite stats on night one,
@@ -347,7 +365,8 @@ def test_corpus_refresh_store_flag(spark, tmp_path):
         pd.DataFrame(rows, columns=["doc_id", "text"])
     ).write.parquet(n0)
     store = str(tmp_path / "store")
-    c0 = cmd_corpus_refresh(spark, n0, str(tmp_path / "s0"), store_dir=store)
+    led = str(tmp_path / "state_ledger")
+    c0 = cmd_corpus_refresh(spark, n0, LedgerState(led, 0), store_dir=store)
     assert c0["kept"] == 8
     assert spark.read.parquet(store).count() == 8
 
@@ -355,10 +374,7 @@ def test_corpus_refresh_store_flag(spark, tmp_path):
     spark.createDataFrame(
         pd.DataFrame(rows[2:], columns=["doc_id", "text"])
     ).write.parquet(n1)
-    c1 = cmd_corpus_refresh(
-        spark, n1, str(tmp_path / "s1"),
-        state_in=str(tmp_path / "s0"), store_dir=store,
-    )
+    c1 = cmd_corpus_refresh(spark, n1, LedgerState(led, 1), store_dir=store)
     assert c1["kept"] == 6 and c1["n_churned_docs"] == 2
     assert sorted(
         r["doc_id"] for r in spark.read.parquet(store).collect()
@@ -384,6 +400,7 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
     from radares_spark.pipeline.refresh import _kept, _kept_vectors
     from tests.test_refresh import mk_text
 
+    S = [LedgerState(str(tmp_path / "state_ledger"), e) for e in range(3)]
     kst = str(tmp_path / "kept_store")
     pst = str(tmp_path / "postings")
     ivf = str(tmp_path / "ivf")
@@ -403,11 +420,11 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
             .collect()
         }
 
-    def assert_postings_equals_rebuild(docs_path, state_dir):
+    def assert_postings_equals_rebuild(docs_path, state):
         kept = (
             spark.read.parquet(docs_path)
             .select("doc_id", "text")
-            .join(_kept(spark, state_dir), "doc_id", "left_semi")
+            .join(_kept(spark, state), "doc_id", "left_semi")
         )
         rb = str(tmp_path / "postings_rebuild")
         build_postings_store(kept, rb)
@@ -422,13 +439,13 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
             for r in spark.read.parquet(path).collect()
         }
 
-    def assert_ivf_equals_rebuild(docs_path, state_dir):
+    def assert_ivf_equals_rebuild(docs_path, state):
         """Rebuild-with-same-centroids: the store's frozen quantizer
         over tonight's full kept vector set."""
         kept = (
             spark.read.parquet(docs_path)
             .select("doc_id", "text")
-            .join(_kept(spark, state_dir), "doc_id", "left_semi")
+            .join(_kept(spark, state), "doc_id", "left_semi")
         )
         vecs = _kept_vectors(kept, 16)
         cents = spark.read.parquet(f"{ivf}/_centroids")
@@ -445,12 +462,11 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
     rows0 = [(i, mk_text(i)) for i in range(10)] + [(20, mk_text(0))]
     d0 = write_docs("d0", rows0)
     c0 = cmd_corpus_refresh(
-        spark, d0, str(tmp_path / "s0"),
-        store_dir=kst, postings_dir=pst, ivf_dir=ivf,
+        spark, d0, S[0], store_dir=kst, postings_dir=pst, ivf_dir=ivf,
     )
     assert c0["kept"] == 10
-    assert_postings_equals_rebuild(d0, str(tmp_path / "s0"))
-    assert_ivf_equals_rebuild(d0, str(tmp_path / "s0"))
+    assert_postings_equals_rebuild(d0, S[0])
+    assert_ivf_equals_rebuild(d0, S[0])
 
     # night 1: churn — doc 3 rewritten, doc 5 removed, doc 30 added
     rows1 = [
@@ -460,11 +476,10 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
     ] + [(30, mk_text(30))]
     d1 = write_docs("d1", rows1)
     c1 = cmd_corpus_refresh(
-        spark, d1, str(tmp_path / "s1"), state_in=str(tmp_path / "s0"),
-        store_dir=kst, postings_dir=pst, ivf_dir=ivf,
+        spark, d1, S[1], store_dir=kst, postings_dir=pst, ivf_dir=ivf,
     )
-    assert_postings_equals_rebuild(d1, str(tmp_path / "s1"))
-    assert_ivf_equals_rebuild(d1, str(tmp_path / "s1"))
+    assert_postings_equals_rebuild(d1, S[1])
+    assert_ivf_equals_rebuild(d1, S[1])
     # delta-proportional: each store reports bounded rewrites
     assert 0 < c1["postings_n_buckets_rewritten"]
     assert 0 < c1["ivf_n_cells_rewritten"]
@@ -478,8 +493,7 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
         "ivf": files(ivf, "cell=*/*.parquet"),
     }
     c2 = cmd_corpus_refresh(
-        spark, d2, str(tmp_path / "s2"), state_in=str(tmp_path / "s1"),
-        store_dir=kst, postings_dir=pst, ivf_dir=ivf,
+        spark, d2, S[2], store_dir=kst, postings_dir=pst, ivf_dir=ivf,
     )
     after = {
         "kept": files(kst, "part_bucket=*/*.parquet"),
@@ -492,6 +506,7 @@ def test_corpus_refresh_all_stores_three_nights(spark, tmp_path):
     assert c2["n_buckets_rewritten"] == 0
 
 
+@pytest.mark.slow
 def test_corpus_refresh_postings_requires_store(spark, tmp_path):
     import pandas as pd
     import pytest as _pytest
@@ -505,7 +520,8 @@ def test_corpus_refresh_postings_requires_store(spark, tmp_path):
     ).write.parquet(p)
     with _pytest.raises(ValueError, match="requires --store"):
         cmd_corpus_refresh(
-            spark, p, str(tmp_path / "s0"), postings_dir=str(tmp_path / "pst")
+            spark, p, LedgerState(str(tmp_path / "state_ledger"), 0),
+            postings_dir=str(tmp_path / "pst"),
         )
 
 
@@ -737,6 +753,7 @@ def test_crawl_nightly_content_ledger_cross_night_dedup(spark, tmp_path, capsys)
     } == {1, 2, 12, 21}
 
 
+@pytest.mark.slow
 def test_crawl_nightly_decontam_gate(spark, tmp_path, capsys):
     """--decontam: a page embedding an eval-benchmark 8-gram drops
     with outcome 'contaminated' BEFORE the content ledger (no

@@ -66,7 +66,7 @@ def test_weighted_mean_and_ratio(spark):
 
 
 def test_percentile_from_bins(spark):
-    rows = _hist_df(spark).select("g", percentile_col(0.85, BINS).alias("p85_speed")).collect()
+    rows = _hist_df(spark).select("g", percentile_col(BINS).alias("p85_speed")).collect()
     d = {r["g"]: r["p85_speed"] for r in rows}
     assert d["g1"] == 30  # cum: 10,20,100 -> first >= 85 is b2 (hi=30)
     assert d["g2"] == 10  # cum: 90 -> first >= 85 is b0 (hi=10)

@@ -10,6 +10,7 @@ from pathlib import Path
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from radares_spark.io.ingest import clean_flows, parse_reports
 from radares_spark.io.report_parser import build_bad_report, build_report
@@ -17,6 +18,7 @@ from radares_spark.pipeline.audit import completeness_audit
 from radares_spark.pipeline.backfill import backfill_plan
 from radares_spark.pipeline.ledger import idempotent_append
 from radares_spark.schemas import BIN_COLS
+from radares_spark.session import driver_frame
 
 EQUIPS = ["FS551JOI", "FS655JOI", "FS661JOI"]
 DATES = [dt.date(2024, 3, 15), dt.date(2024, 3, 16)]
@@ -106,7 +108,7 @@ def test_e2e_ingested_flows_feed_analytics(spark, landing, tmp_path):
         assert 0.0 <= r["wm"] <= 120.0  # inside the bin range
         assert 0.0 <= r["sr"] <= 1.0
 
-    p85 = hist.select(percentile_col(0.85).alias("p85_speed")).collect()
+    p85 = hist.select(percentile_col().alias("p85_speed")).collect()
     uppers = {hi for _, _, hi in SPEED_BINS}
     assert all(r["p85_speed"] in uppers for r in p85)
 
@@ -131,7 +133,11 @@ def test_audit_and_backfill(spark, landing, tmp_path):
         (DATES[1], 3),
     }
 
-    equip_dim = spark.createDataFrame([(e,) for e in EQUIPS + ["FS999JOI"]], ["equipment"])
+    equip_dim = driver_frame(
+        spark,
+        [(e,) for e in EQUIPS + ["FS999JOI"]],
+        StructType([StructField("equipment", StringType())]),
+    )
     plan = backfill_plan(spark, equip_dim, ledger, DATES[0], DATES[1])
     missing = {(r["pubdate"], r["equipment"]) for r in plan.collect()}
     assert missing == {(d, "FS999JOI") for d in DATES}

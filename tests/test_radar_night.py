@@ -23,6 +23,7 @@ from pathlib import Path
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, IntegerType, StringType, StructField, StructType
 
 from radares_spark.cli import cmd_scrape
 from radares_spark.io.fetcher import FetchResult
@@ -30,6 +31,7 @@ from radares_spark.io.report_parser import build_report
 from radares_spark.pipeline.ledger import file_id, idempotent_append
 from radares_spark.pipeline.run_log import fetch_run_log, read_run_log
 from radares_spark.schemas import RUN_LOG_SCHEMA
+from radares_spark.session import driver_frame
 from radares_spark.streaming.ingest_stream import run_ingest_stream
 
 DEVICES = [f"FS{500 + i}JOI" for i in range(8)]
@@ -105,11 +107,18 @@ def test_warm_night_job_budget(spark, tmp_path):
     assert spark.read.parquet(f"{wh}/flows").count() == 2 * len(DEVICES) * 96
 
 
+FLOW_KEYS = StructType(
+    [
+        StructField("pubdate", DateType()),
+        StructField("equipment", StringType()),
+        StructField("slot", IntegerType()),
+        StructField("file_path", StringType()),
+    ]
+)
+
+
 def _flows(spark, rows):
-    return spark.createDataFrame(
-        [(p, e, s, f"{e}/{p}.xlsx") for p, e, s in rows],
-        "pubdate date, equipment string, slot int, file_path string",
-    )
+    return driver_frame(spark, [(p, e, s, f"{e}/{p}.xlsx") for p, e, s in rows], FLOW_KEYS)
 
 
 def test_key_set_append_contract(spark, tmp_path):

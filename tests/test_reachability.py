@@ -9,8 +9,9 @@
   spec tables, ``(module, name)`` pairs);
 - **parameters** — a defaulted parameter of a public top-level engine
   function must be set by at least one caller (product code, bench,
-  perfbench, tests or the ``plans/`` scripts); a value nobody passes
-  is an option nobody uses.
+  perfbench, tests or the ``plans/`` scripts) to a value other than
+  its constant default; a value nobody passes is an option nobody
+  uses.
 
 Code that only tests reach is surface nobody runs; delete it with its
 tests, or wire it in. Each guard has an allowlist with a reason per
@@ -333,24 +334,36 @@ def test_function_allowlist_entries_exist_and_are_unreachable():
         )
 
 
-def _defaulted(fn: ast.FunctionDef) -> dict[str, int | None]:
-    """Defaulted parameter -> its position (None for keyword-only)."""
+def _defaulted(fn: ast.FunctionDef) -> dict[str, tuple[int | None, ast.expr]]:
+    """Defaulted parameter -> (its position, None for keyword-only;
+    its default expression)."""
     args = fn.args
     pos = args.posonlyargs + args.args
     first = len(pos) - len(args.defaults)
-    out: dict[str, int | None] = {a.arg: i for i, a in enumerate(pos) if i >= first}
+    out = {a.arg: (i, args.defaults[i - first]) for i, a in enumerate(pos) if i >= first}
     out.update(
-        {a.arg: None for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None}
+        {a.arg: (None, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None}
     )
     return out
 
 
+def _is_default(arg: ast.expr, default: ast.expr) -> bool:
+    """``arg`` is the same constant as the parameter's constant default
+    (``0.85`` for ``p=0.85``): passing it changes nothing."""
+    return (
+        isinstance(arg, ast.Constant)
+        and isinstance(default, ast.Constant)
+        and type(arg.value) is type(default.value)
+        and arg.value == default.value
+    )
+
+
 def _parameters_set_in(path: Path) -> dict[Fn, set[str]]:
     """Per engine function, the defaulted parameters some call in the
-    file passes. The count errs toward "set": a call with
-    ``*args``/``**kw`` sets all of them, so does passing a value equal
-    to the default, and so does any reference to the function that is
-    not the callee of a call (``partial(f, ...)``, ``runner=f``,
+    file passes with a value other than their constant default. The
+    count errs toward "set": a call with ``*args``/``**kw`` sets all of
+    them, and so does any reference to the function that is not the
+    callee of a call (``partial(f, ...)``, ``runner=f``,
     ``_one(key, frame, f)``), since the call made through that value
     is out of the scan's sight."""
     tree = _tree(path)
@@ -374,8 +387,11 @@ def _parameters_set_in(path: Path) -> dict[Fn, set[str]]:
         ):
             got |= set(params)
             continue
-        got |= {p for p, i in params.items() if i is not None and i < len(node.args)}
-        got |= {k.arg for k in node.keywords}
+        passed = {k.arg: k.value for k in node.keywords if k.arg in params}
+        passed.update(
+            {p: node.args[i] for p, (i, _) in params.items() if i is not None and i < len(node.args)}
+        )
+        got |= {p for p, v in passed.items() if not _is_default(v, params[p][1])}
     return found
 
 
@@ -446,3 +462,25 @@ def test_a_function_passed_as_a_value_counts_every_parameter_as_set(tmp_path):
     for name in ("admission_stream.run_admission_stream", "url_stream.run_url_admission_stream"):
         mod, fn = f"radares_spark.streaming.{name}".rsplit(".", 1)
         assert "max_files_per_trigger" in got.get((mod, fn), set()), name
+
+
+def test_an_argument_equal_to_the_default_does_not_set_the_parameter(tmp_path):
+    """``curate(docs, sample_pct=100)`` with ``sample_pct=100`` leaves
+    ``sample_pct`` a default-only parameter; a different constant or a
+    non-constant expression (a tuple, a name) still sets it."""
+    caller = tmp_path / "caller.py"
+    caller.write_text(
+        "from radares_spark.pipeline.corpus import curate\n"
+        "curate(None, sample_pct=100, max_bucket=None)\n"
+        "curate(None, ('en',), 50)\n"
+        "curate(None, max_bucket=None if FLAG else 8)\n"
+    )
+    got = _parameters_set_in(caller)[("radares_spark.pipeline.corpus", "curate")]
+    assert got == {"keep_langs", "sample_pct", "max_bucket"}
+    positional = tmp_path / "positional.py"  # _tree caches per path
+    positional.write_text(
+        "from radares_spark.pipeline.corpus import curate\n"
+        "curate(None, ('en',), 100, None)\n"
+    )
+    got = _parameters_set_in(positional)[("radares_spark.pipeline.corpus", "curate")]
+    assert got == {"keep_langs"}

@@ -4,8 +4,8 @@ the O(delta)-I/O entry point behind corpus-nightly (r9 verdict #1).
 Contracts pinned here:
 
 1. EQUIVALENCE — refresh_night over (tonight, kept_store) produces
-   row-for-row the same state, audit, stats and serving stores as
-   the generic refresh() over the materialized virtual snapshot
+   row-for-row the same ledger epoch, audit, stats and serving stores
+   as refresh() over the materialized virtual snapshot
    ``kept_store ∖ tonight ∪ tonight`` (the frame corpus-nightly used
    to write to nights/<night>/snapshot), across adds, content
    rewrites, exact-dup demotions and near-dup drops.
@@ -25,7 +25,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from radares_spark.pipeline.refresh import (
-    _state_read,
     apply_refresh_to_ivf_store,
     apply_refresh_to_postings_store,
     apply_refresh_to_store,
@@ -38,7 +37,7 @@ from radares_spark.pipeline.refresh import (
     refresh,
     refresh_night,
 )
-from radares_spark.pipeline.state_ledger import LedgerState
+from radares_spark.pipeline.state_ledger import LedgerState, read_state
 from tests.test_refresh import _df, mk_text, near_variant
 
 # Whole-module slow tier: every test here is a multi-second e2e /
@@ -54,21 +53,20 @@ def _rows(df, cols):
 def _state_rows(spark, state):
     return {
         "features": _rows(
-            _state_read(spark, state, "features"),
+            read_state(spark, state, "features"),
             ["doc_id", "text_hash", "raw_hash", "quality_pass", "pred_lang", "exact_keep"],
         ),
         "bands": _rows(
-            _state_read(spark, state, "bands"), ["doc_id", "band", "band_hash"]
+            read_state(spark, state, "bands"), ["doc_id", "band", "band_hash"]
         ),
-        "audit": _rows(_state_read(spark, state, "audit"), ["doc_id", "outcome"]),
+        "audit": _rows(read_state(spark, state, "audit"), ["doc_id", "outcome"]),
     }
 
 
-def _bootstrap(spark, root, docs, ledger=False):
-    """Night zero: state + all three serving stores (the nightly
-    bootstrap composition) — against per-night dirs or the delta
-    state ledger."""
-    s0 = LedgerState(f"{root}/state_ledger", 0) if ledger else f"{root}/state/n0"
+def _bootstrap(spark, root, docs):
+    """Night zero: epoch 0 of the state ledger + all three serving
+    stores (the nightly bootstrap composition)."""
+    s0 = LedgerState(f"{root}/state_ledger", 0)
     store = f"{root}/kept_store"
     postings = f"{root}/postings_store"
     ivf = f"{root}/ivf_store"
@@ -79,22 +77,18 @@ def _bootstrap(spark, root, docs, ledger=False):
     return s0, store, postings, ivf
 
 
-def _apply_all(spark, docs, s_in, s_out, store, postings, ivf, night):
+def _apply_all(spark, docs, state, store, postings, ivf, night):
     """The cmd_corpus_refresh store ladder: postings (old text) ->
     ivf -> kept store."""
-    churn = tuple(f.localCheckpoint() for f in kept_churn(spark, s_in, s_out))
+    churn = tuple(f.localCheckpoint() for f in kept_churn(spark, state))
     stats = {}
     stats.update(
         apply_refresh_to_postings_store(
-            spark, docs, s_in, s_out, store, postings, night=night, churn=churn
+            spark, docs, state, store, postings, night=night, churn=churn
         )
     )
-    stats.update(
-        apply_refresh_to_ivf_store(spark, docs, s_in, s_out, ivf, churn=churn)
-    )
-    stats.update(
-        apply_refresh_to_store(spark, docs, s_in, s_out, store, churn=churn)
-    )
+    stats.update(apply_refresh_to_ivf_store(spark, docs, state, ivf, churn=churn))
+    stats.update(apply_refresh_to_store(spark, docs, state, store, churn=churn))
     return stats
 
 
@@ -118,25 +112,19 @@ def _tonight_rows(offset=100):
     ]
 
 
-def test_refresh_night_matches_generic_snapshot_path(spark, tmp_path):
+def test_refresh_night_matches_snapshot_refresh(spark, tmp_path):
     base = _base_corpus()
     tonight = _tonight_rows()
 
     results = {}
-    for mode in ("generic", "delta", "ledger"):
+    for mode in ("refresh", "refresh_night"):
         root = str(tmp_path / mode)
         docs0 = _df(spark, base)
-        s0, store, postings, ivf = _bootstrap(
-            spark, root, docs0, ledger=mode == "ledger"
-        )
-        s1 = (
-            LedgerState(f"{root}/state_ledger", 1)
-            if mode == "ledger"
-            else f"{root}/state/n1"
-        )
+        s0, store, postings, ivf = _bootstrap(spark, root, docs0)
+        s1 = LedgerState(s0.ledger_dir, 1)
         tonight_df = _df(spark, tonight)
 
-        if mode == "generic":
+        if mode == "refresh":
             # yesterday's path: materialize the virtual snapshot, hash
             # every doc, feed the full frame to every store apply
             snapshot = (
@@ -146,30 +134,22 @@ def test_refresh_night_matches_generic_snapshot_path(spark, tmp_path):
                 .unionByName(tonight_df)
                 .localCheckpoint()
             )
-            audit, stats = refresh(spark, snapshot, s0, s1)
-            stats.update(
-                _apply_all(spark, snapshot, s0, s1, store, postings, ivf, "n1")
-            )
+            audit, stats = refresh(spark, snapshot, s1)
+            stats.update(_apply_all(spark, snapshot, s1, store, postings, ivf, "n1"))
         else:
-            audit, stats = refresh_night(spark, tonight_df, s0, s1, store)
-            churn = tuple(
-                f.localCheckpoint() for f in kept_churn(spark, s0, s1)
-            )
+            audit, stats = refresh_night(spark, tonight_df, s1, store)
+            churn = tuple(f.localCheckpoint() for f in kept_churn(spark, s1))
             stats.update(
                 apply_refresh_to_postings_store(
-                    spark, tonight_df, s0, s1, store, postings,
+                    spark, tonight_df, s1, store, postings,
                     night="n1", churn=churn,
                 )
             )
             stats.update(
-                apply_refresh_to_ivf_store(
-                    spark, tonight_df, s0, s1, ivf, churn=churn
-                )
+                apply_refresh_to_ivf_store(spark, tonight_df, s1, ivf, churn=churn)
             )
             src = night_snapshot_source(spark, tonight_df, store, churn)
-            stats.update(
-                apply_refresh_to_store(spark, src, s0, s1, store, churn=churn)
-            )
+            stats.update(apply_refresh_to_store(spark, src, s1, store, churn=churn))
 
         results[mode] = {
             "state": _state_rows(spark, s1),
@@ -185,15 +165,9 @@ def test_refresh_night_matches_generic_snapshot_path(spark, tmp_path):
             },
         }
 
-    g = results["generic"]
-    for mode in ("delta", "ledger"):
-        d = results[mode]
-        assert d["state"] == g["state"], mode
-        assert d["audit"] == g["audit"], mode
-        assert d["store"] == g["store"], mode
-        assert d["postings"] == g["postings"], mode
-        assert d["ivf"] == g["ivf"], mode
-        assert d["stats"] == g["stats"], mode
+    g, d = results["refresh"], results["refresh_night"]
+    for key in ("state", "audit", "store", "postings", "ivf", "stats"):
+        assert d[key] == g[key], key
 
 
 def test_refresh_night_io_counters_are_corpus_independent(spark, tmp_path):
@@ -207,14 +181,12 @@ def test_refresh_night_io_counters_are_corpus_independent(spark, tmp_path):
         root = str(tmp_path / tag)
         docs0 = _df(spark, _base_corpus(n=24 * scale))
         s0, store, postings, ivf = _bootstrap(spark, root, docs0)
-        s1 = f"{root}/state/n1"
+        s1 = LedgerState(s0.ledger_dir, 1)
         tonight_df = _df(spark, _tonight_rows())
-        _, stats = refresh_night(spark, tonight_df, s0, s1, store)
-        churn = tuple(f.localCheckpoint() for f in kept_churn(spark, s0, s1))
+        _, stats = refresh_night(spark, tonight_df, s1, store)
+        churn = tuple(f.localCheckpoint() for f in kept_churn(spark, s1))
         src = night_snapshot_source(spark, tonight_df, store, churn)
-        stats.update(
-            apply_refresh_to_store(spark, src, s0, s1, store, churn=churn)
-        )
+        stats.update(apply_refresh_to_store(spark, src, s1, store, churn=churn))
         footprints.append(stats)
     small, big = footprints
     for k in ("n_delta", "n_removed", "n_rebanded", "n_store_buckets_read",
@@ -235,7 +207,7 @@ def test_refresh_night_rejects_store_state_divergence(spark, tmp_path):
     ).write.mode("append").partitionBy("part_bucket").parquet(store)
     with pytest.raises(ValueError, match="out of step"):
         refresh_night(
-            spark, _df(spark, _tonight_rows()), s0, f"{root}/state/n1", store
+            spark, _df(spark, _tonight_rows()), LedgerState(s0.ledger_dir, 1), store
         )
 
 
@@ -244,9 +216,9 @@ def test_refresh_night_text_bytes_are_corpus_independent(spark, tmp_path):
     with bucket size held constant (n_buckets sized with the corpus —
     init_store's 100 TB contract), 4x the residents with the SAME
     tonight delta writes the same text bytes: the night's text I/O is
-    the delta neighborhood, never the corpus. The narrow per-night
-    state ledger (hashes + flags, no text) is the one documented
-    O(corpus) write and is excluded here."""
+    the delta neighborhood, never the corpus. The narrow state
+    ledger's bytes (hashes + flags, no text) are pinned by the test
+    below."""
     import glob
     import os
 
@@ -255,10 +227,10 @@ def test_refresh_night_text_bytes_are_corpus_independent(spark, tmp_path):
         root = str(tmp_path / tag)
         store = f"{root}/kept_store"
         docs0 = _df(spark, _base_corpus(n=24 * scale))
-        s0 = f"{root}/state/n0"
+        s0 = LedgerState(f"{root}/state_ledger", 0)
         init_state(spark, docs0, s0)
         init_store(spark, docs0, s0, store, n_buckets=nb)
-        s1 = f"{root}/state/n1"
+        s1 = LedgerState(s0.ledger_dir, 1)
         tonight_df = _df(spark, _tonight_rows())
 
         def _files():
@@ -268,12 +240,12 @@ def test_refresh_night_text_bytes_are_corpus_independent(spark, tmp_path):
             }
 
         before = _files()
-        _, _stats = refresh_night(spark, tonight_df, s0, s1, store)
-        churn = tuple(f.localCheckpoint() for f in kept_churn(spark, s0, s1))
+        _, _stats = refresh_night(spark, tonight_df, s1, store)
+        churn = tuple(f.localCheckpoint() for f in kept_churn(spark, s1))
         apply_refresh_to_store(
             spark,
             night_snapshot_source(spark, tonight_df, store, churn),
-            s0, s1, store, n_buckets=nb, churn=churn,
+            s1, store, n_buckets=nb, churn=churn,
         )
         after = _files()
         written_bytes[tag] = sum(
@@ -297,7 +269,7 @@ def test_pruned_store_read_partition_filters_in_plan(spark, tmp_path):
 
     root = str(tmp_path)
     docs = _df(spark, _base_corpus())
-    s0, store = f"{root}/s0", f"{root}/kept_store"
+    s0, store = LedgerState(f"{root}/state_ledger", 0), f"{root}/kept_store"
     init_state(spark, docs, s0)
     init_store(spark, docs, s0, store)
     ids = _df(spark, [(101, "x"), (105, "y")]).select("doc_id")
@@ -339,7 +311,7 @@ def test_state_ledger_bytes_are_delta_proportional(spark, tmp_path):
             }
 
         before = _files()
-        refresh_night(spark, _df(spark, _tonight_rows()), L0, L1, store)
+        refresh_night(spark, _df(spark, _tonight_rows()), L1, store)
         after = _files()
         # prior epochs are never touched...
         assert all(after.get(f) == sz for f, sz in before.items()), tag

@@ -1,19 +1,17 @@
-"""Delta state ledger (pipeline/state_ledger.py) — r10 verdict #1:
-the nightly refresh state as an epoch-delta ledger instead of a full
-per-night rewrite.
+"""Delta state ledger (pipeline/state_ledger.py): the nightly refresh
+state as an epoch-delta ledger, the refresh layer's only state.
 
 Contracts pinned here:
 
 1. VIEW SEMANTICS — latest-per-doc over ``epoch <= e``: changed rows
    shadow older ones, tombstones delete, an untouched doc is carried
    by NOT being written (empty delta ⇒ no epoch partition).
-2. LAYOUT EQUIVALENCE — init_state + refresh against a LedgerState
-   produce row-for-row the same features/bands/audit views and the
-   same stats as the legacy dir layout, while the epoch partition
-   holds only the night's delta.
-3. kept_churn FAST PATH — consecutive ledger epochs compute churn
-   from the delta partitions; the three frames equal the generic
-   dir-layout computation.
+2. FROM-SCRATCH EQUIVALENCE — each refreshed epoch's
+   features/bands/audit views equal, row for row, those of a
+   from-scratch ``init_state`` over the same night's snapshot, while
+   the epoch partition holds only the night's delta.
+3. kept_churn from the delta partitions — the three frames equal a
+   reference diff of the prior and current full ``read_state`` views.
 4. COMPACTION — folding completed epochs into ``epoch=-1`` preserves
    the as-of view, bounds retention, records a floor that rejects
    older as-of reads, and is superset-monotone (a crash that leaves
@@ -153,36 +151,49 @@ NIGHT2 = [r for r in NIGHT1 if r[0] != 1] + [(9, mk_text(9))]  # keeper 1 gone
 
 
 def _all_views(spark, state):
-    from radares_spark.pipeline.refresh import _state_read
-
     return {
-        "features": _rows(_state_read(spark, state, "features"), FEATURE_COLS),
+        "features": _rows(read_state(spark, state, "features"), FEATURE_COLS),
         "bands": _rows(
-            _state_read(spark, state, "bands"), ["doc_id", "band", "band_hash"]
+            read_state(spark, state, "bands"), ["doc_id", "band", "band_hash"]
         ),
-        "audit": _rows(_state_read(spark, state, "audit"), ["doc_id", "outcome"]),
+        "audit": _rows(read_state(spark, state, "audit"), ["doc_id", "outcome"]),
     }
 
 
+def _churn_reference(spark, state):
+    """kept_churn's three id lists as a plain diff of the prior and
+    current FULL as-of views (two audits, two feature tables)."""
+    prior = LedgerState(state.ledger_dir, state.epoch - 1)
+
+    def kept(s):
+        audit = read_state(spark, s, "audit")
+        return {r["doc_id"] for r in audit.filter(F.col("outcome") == "kept").collect()}
+
+    def raw(s):
+        return {r["doc_id"]: r["raw_hash"] for r in read_state(spark, s, "features").collect()}
+
+    old, new = kept(prior), kept(state)
+    old_raw, new_raw = raw(prior), raw(state)
+    rewritten = {d for d in old & new if old_raw[d] != new_raw[d]}
+    return [sorted(new - old), sorted(old - new), sorted(rewritten)]
+
+
 @pytest.mark.slow  # >=10 s in the r15 full-suite durations log
-def test_ledger_refresh_matches_dir_layout(spark, tmp_path):
+def test_ledger_refresh_matches_init_state(spark, tmp_path):
     led = str(tmp_path / "led")
-    d0, d1, d2 = (str(tmp_path / f"d{i}") for i in range(3))
-
-    init_state(spark, _df(spark, BASE), d0)
-    a1d, s1d = refresh(spark, _df(spark, NIGHT1), d0, d1)
-    a2d, s2d = refresh(spark, _df(spark, NIGHT2), d1, d2)
-
     L = [LedgerState(led, e) for e in range(3)]
     init_state(spark, _df(spark, BASE), L[0])
-    a1l, s1l = refresh(spark, _df(spark, NIGHT1), L[0], L[1])
-    a2l, s2l = refresh(spark, _df(spark, NIGHT2), L[1], L[2])
+    a1, _ = refresh(spark, _df(spark, NIGHT1), L[1])
+    a2, _ = refresh(spark, _df(spark, NIGHT2), L[2])
 
-    assert s1l == s1d and s2l == s2d
-    for dir_state, led_state in ((d0, L[0]), (d1, L[1]), (d2, L[2])):
-        assert _all_views(spark, led_state) == _all_views(spark, dir_state)
-    assert _rows(a1l, ["doc_id", "outcome"]) == _rows(a1d, ["doc_id", "outcome"])
-    assert _rows(a2l, ["doc_id", "outcome"]) == _rows(a2d, ["doc_id", "outcome"])
+    # each refreshed epoch == a from-scratch init_state of the same
+    # night's snapshot, table by table
+    for e, (night, audit) in enumerate(((NIGHT1, a1), (NIGHT2, a2)), start=1):
+        fresh = LedgerState(str(tmp_path / f"fresh{e}"), 0)
+        init_state(spark, _df(spark, night), fresh)
+        want = _all_views(spark, fresh)
+        assert _all_views(spark, L[e]) == want
+        assert _rows(audit, ["doc_id", "outcome"]) == want["audit"]
 
     # the nightly write is the DELTA, not the corpus: night-1 features
     # epoch holds only the affected rows (5 rewritten, 7 removed
@@ -196,13 +207,13 @@ def test_ledger_refresh_matches_dir_layout(spark, tmp_path):
     # knobs land ONCE at the ledger root
     assert os.path.isdir(f"{led}/knobs")
 
-    # kept_churn fast path (consecutive epochs) == generic dir result
-    for (si, so), (li, lo) in (((d0, d1), (L[0], L[1])), ((d1, d2), (L[1], L[2]))):
-        gen = [sorted(r["doc_id"] for r in f.collect())
-               for f in kept_churn(spark, si, so)]
-        fast = [sorted(r["doc_id"] for r in f.collect())
-                for f in kept_churn(spark, li, lo)]
-        assert fast == gen
+    # kept_churn from the delta partitions == the full-view diff
+    for state in L[1:]:
+        want = _churn_reference(spark, state)
+        assert any(want)  # each night moves the kept set
+        got = [sorted(r["doc_id"] for r in f.collect())
+               for f in kept_churn(spark, state)]
+        assert got == want
 
 
 @pytest.mark.slow  # >=10 s in the r15 full-suite durations log
@@ -210,8 +221,8 @@ def test_compaction_preserves_view_bounds_retention(spark, tmp_path):
     led = str(tmp_path / "led")
     L = [LedgerState(led, e) for e in range(3)]
     init_state(spark, _df(spark, BASE), L[0])
-    refresh(spark, _df(spark, NIGHT1), L[0], L[1])
-    refresh(spark, _df(spark, NIGHT2), L[1], L[2])
+    refresh(spark, _df(spark, NIGHT1), L[1])
+    refresh(spark, _df(spark, NIGHT2), L[2])
     want1 = _all_views(spark, L[1])
     want = _all_views(spark, L[2])
 
@@ -227,7 +238,7 @@ def test_compaction_preserves_view_bounds_retention(spark, tmp_path):
     # as-of reads below the floor are gone — fail fast, never serve a
     # base-polluted view
     with pytest.raises(ValueError, match="compacted through"):
-        refresh(spark, _df(spark, NIGHT1), L[0], LedgerState(led, 9))
+        refresh(spark, _df(spark, NIGHT1), L[1])
 
     # superset-monotonicity: a crashed fold that resurfaces a
     # superseded partition changes nothing (shadowed duplicates), and
@@ -247,6 +258,6 @@ def test_compaction_preserves_view_bounds_retention(spark, tmp_path):
     assert _all_views(spark, LedgerState(led, 2)) == want
     # refresh night 3 on the fully compacted ledger still works
     a3, _ = refresh(
-        spark, _df(spark, NIGHT2 + [(10, mk_text(10))]), L[2], LedgerState(led, 3)
+        spark, _df(spark, NIGHT2 + [(10, mk_text(10))]), LedgerState(led, 3)
     )
     assert {r["doc_id"] for r in a3.collect()} >= {9, 10}
