@@ -327,11 +327,13 @@ def _bench_nightly_refresh(spark, sf_dir: str) -> dict:
 
     TWO delta points (~2% and ~20% of residents) pin the
     fixed-overhead amortization the r10 verdict asked to demonstrate:
-    at toy scale a night is ~25 small Spark jobs of fixed
-    scheduler/commit cost, so rows/s at a tiny delta reads alarmingly
-    low; the 10x point plus the solved-out ``fixed_night_s_est`` /
-    ``marginal_ms_per_row`` show the floor amortizing (at a real
-    corpus delta the marginal term dominates).
+    at toy scale a night is almost all fixed scheduler/commit cost —
+    140 small Spark jobs inside ``refresh_night`` plus about 148 for
+    the rest of the night (the excluded night-zero setup is 130) — so
+    rows/s at a tiny delta reads alarmingly low; the 10x point plus
+    the solved-out ``fixed_night_s_est`` / ``marginal_ms_per_row``
+    show the floor amortizing (at a real corpus delta the marginal
+    term dominates).
     ``n_store_buckets_read`` stays the structural I/O proof — it
     scales with the delta neighborhood, never the corpus."""
     import shutil
@@ -421,7 +423,7 @@ def _bench_nightly_refresh(spark, sf_dir: str) -> dict:
         # the r13 a,b,c,a,b,c interleave with min-of-two-reps STILL
         # fit inverted even in a QUIET session, and the emitted
         # night_fit_points showed why — the JVM keeps getting faster
-        # for minutes (tiered JIT over ~25 jobs/night), a monotone
+        # for minutes (tiered JIT over 140 + ~148 jobs/night), a monotone
         # ~1 s/night session drift that dwarfs the ~1.5 s marginal
         # signal; min() filters load SPIKES but preserves a monotone
         # trend's ordering, and in the cyclic order run position
@@ -702,9 +704,9 @@ def _bench_streaming(spark, sf_dir: str) -> dict:
     ``error`` key, never kills the batch numbers."""
     import shutil
     import tempfile
+    from functools import partial
 
     from radares_spark.streaming.admission_stream import run_admission_stream
-    from radares_spark.streaming.url_stream import run_url_admission_stream
 
     out: dict = {}
     root = tempfile.mkdtemp(prefix="radares_bench_stream_")
@@ -772,7 +774,7 @@ def _bench_streaming(spark, sf_dir: str) -> dict:
                 (F.col("doc_id") % F.lit(2048)).cast("string"),
             ).alias("url"),
         ),
-        run_url_admission_stream,
+        partial(run_admission_stream, admission="urls"),
     )
     # r8: the shards stream — tokenize + fixed-ctx pack per micro-batch
     # against the frozen tokenizer artifact. One-time setup (train +

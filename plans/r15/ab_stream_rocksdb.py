@@ -36,8 +36,9 @@ DEFAULT = (
 
 
 def run_once(spark, sf_dir, provider: str) -> dict:
+    from functools import partial
+
     from radares_spark.streaming.admission_stream import run_admission_stream
-    from radares_spark.streaming.url_stream import run_url_admission_stream
     from radares_spark.operators.bpe import (
         save_tokenizer,
         train_bpe_batched,
@@ -79,7 +80,7 @@ def run_once(spark, sf_dir, provider: str) -> dict:
                     (F.col("doc_id") % F.lit(2048)).cast("string"),
                 ).alias("url"),
             ),
-            run_url_admission_stream,
+            partial(run_admission_stream, admission="urls"),
         )
 
         merges, word_syms, _ = train_bpe_batched(

@@ -626,21 +626,20 @@ def cmd_crawl_nightly(
     from pyspark.sql import functions as F
 
     from radares_spark.io import fs as iofs
-    from radares_spark.operators.urls import incremental_url_dedup
+    from radares_spark.operators.urls import incremental_url_dedup, url_ledger_rows
     from radares_spark.pipeline.crawl import curate_crawl
 
     pages = spark.read.parquet(pages_path).select("doc_id", "url", "html")
-    if iofs.has_parquet(spark, url_ledger_dir):
-        ledger = spark.read.parquet(url_ledger_dir).drop("epoch")
-    else:
-        ledger = spark.createDataFrame([], "doc_id long, canonical_url string")
     # tonight's night number, fixed up front: the URL ledger's next
     # epoch. The content ledger reuses it so a crash between the two
-    # ledger appends reruns consistently (own-epoch exclusion below).
-    epochs = iofs.epoch_partitions(spark, url_ledger_dir)
-    next_epoch = (max(epochs) + 1) if epochs else 0
+    # ledger appends reruns consistently: both reads exclude it
+    # (fs.read_ledger), and the URL ledger never holds it yet.
+    epochs = iofs.night_epochs(spark, url_ledger_dir)
+    next_epoch = (epochs[-1] + 1) if epochs else 0
+    urls = pages.select("doc_id", "url")
     url_audit, append_rows = incremental_url_dedup(
-        pages.select("doc_id", "url"), ledger
+        urls,
+        iofs.read_ledger(spark, url_ledger_dir, next_epoch, url_ledger_rows, urls),
     )
     # pinned once (delta-sized: one narrow row per discovered URL) so
     # counts AND the conditional write below come from a single run of
@@ -793,18 +792,12 @@ def cmd_crawl_nightly(
                 ledger_rows,
             )
 
-            if iofs.has_parquet(spark, content_ledger_dir):
-                cled = (
-                    spark.read.parquet(content_ledger_dir)
-                    .filter(F.col("epoch") < next_epoch)  # own-epoch exclusion
-                    .drop("epoch")
-                )
-            else:
-                cled = ledger_rows(
-                    spark.createDataFrame([], "doc_id long, text string")
-                )
+            docs = kept.select("doc_id", "text")
             c_audit, c_append = incremental_dedup(
-                kept.select("doc_id", "text"), cled
+                docs,
+                iofs.read_ledger(
+                    spark, content_ledger_dir, next_epoch, ledger_rows, docs
+                ),
             )
             c_drop = c_audit.filter(F.col("outcome") != OUT_KEPT).select(
                 "doc_id", F.col("outcome").alias("__c_out")
@@ -828,22 +821,10 @@ def cmd_crawl_nightly(
             # (the admission above excluded this epoch, so a rerun
             # after a crash between the two appends recomputes the
             # identical night and dynamic-overwrites the same epoch)
-            (
-                c_append.withColumn("epoch", F.lit(next_epoch))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(content_ledger_dir)
-            )
+            iofs.append_epoch(c_append, content_ledger_dir, next_epoch)
 
     # URL ledger append LAST (see ordering note); epoch fixed up top
-    (
-        append_rows.withColumn("epoch", F.lit(next_epoch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(url_ledger_dir)
-    )
+    iofs.append_epoch(append_rows, url_ledger_dir, next_epoch)
     return counts
 
 
@@ -1436,26 +1417,20 @@ def _corpus_maintain_run(
     if compact_ledgers:
         _check_root_lease(root_dir)
         from radares_spark.streaming.admission_stream import compact_ledger
-        from radares_spark.streaming.url_stream import compact_url_ledger
 
         # batch nightly ledgers have no stream checkpoint to gate on:
         # within the single-writer maintenance window every present
         # epoch belongs to a finished (or convergently replayable)
-        # night, so the ungated fold is the right call
-        url_led = os.path.join(root_dir, "url_ledger")
-        con_led = os.path.join(root_dir, "content_ledger")
-        # count only per-night (e >= 0) partitions: a pre-existing
-        # epoch=-1 from an earlier compaction is not folded work, and
-        # counting it would overstate a second --compact-ledgers run
-        n_before = len(
-            [e for e in iofs.epoch_partitions(spark, url_led) if e >= 0]
-        ) + len(
-            [e for e in iofs.epoch_partitions(spark, con_led) if e >= 0]
-        )
-        compact_url_ledger(spark, url_led)
-        if iofs.has_parquet(spark, con_led):
-            compact_ledger(spark, con_led)
-        counts["ledger_epochs_folded"] = n_before
+        # night, so the ungated fold is the right call. Content first:
+        # night numbering restarts at 0 once the URL ledger is folded,
+        # so a crash between the two folds must not leave per-night
+        # content epochs that tomorrow's epoch 0 would collide with.
+        # Only per-night partitions count as folded work.
+        counts["ledger_epochs_folded"] = 0
+        for ledger in ("content_ledger", "url_ledger"):
+            led = os.path.join(root_dir, ledger)
+            counts["ledger_epochs_folded"] += len(iofs.night_epochs(spark, led))
+            compact_ledger(spark, led)
 
     if compact_states:
         _check_root_lease(root_dir)

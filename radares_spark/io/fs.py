@@ -15,6 +15,12 @@ prefixes through the same FileSystem contract).
 Driver-side listings only — these helpers inspect partition NAMES and
 commit markers (kilobytes of metadata), never data rows; data always
 flows through ``spark.read``/``write``.
+
+The epoch-ledger layout lives here too, in one place: the compacted
+epoch id, the epoch append, the own-epoch-excluding ledger read, the
+per-night epoch listing and the compaction core. The crawl night, both
+admission streams, the refresh-state ledger and the shard store use
+them (``tests/test_ledger_layout.py`` keeps hand-written copies out).
 """
 
 from __future__ import annotations
@@ -254,6 +260,64 @@ def read_marker(spark: SparkSession, path_str: str) -> str | None:
         stream.close()
 
 
+# The epoch-ledger layout every cross-run ledger here shares (URL and
+# content admission, refresh state, shard store): one ``epoch=<n>``
+# partition per night or micro-batch, written by dynamic overwrite so a
+# replay of epoch n rewrites only its own partition, and compacted
+# history in ONE partition whose id no writer ever takes — Structured
+# Streaming batch ids and night numbers start at 0 and only grow, so
+# an own-epoch exclusion always keeps compacted rows visible.
+COMPACTED_EPOCH = -1
+
+
+def append_epoch(rows: DataFrame, path_str: str, epoch: int) -> None:
+    """Land ``rows`` as the ``epoch=<epoch>`` partition of the ledger
+    at ``path_str``. Dynamic overwrite touches only that partition: a
+    replay overwrites its own epoch instead of double-appending, and
+    empty ``rows`` create no partition at all."""
+    (
+        rows.withColumn("epoch", F.lit(epoch))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch")
+        .parquet(path_str)
+    )
+
+
+def read_ledger(
+    spark: SparkSession,
+    ledger_dir: str,
+    epoch: int,
+    rows_of: Callable[[DataFrame], DataFrame],
+    like: DataFrame,
+) -> DataFrame:
+    """The ledger's rows as they stood before ``epoch`` (the epoch the
+    caller is about to append) was written: every partition except
+    ``epoch=<epoch>``, without the epoch column. A crash between a
+    ledger append and the step that records it (a stream's checkpoint
+    commit, a night's URL append) leaves that epoch's rows in place;
+    excluding them reconstructs the exact pre-epoch ledger, so the
+    replay recomputes the same outcomes instead of admitting tonight
+    against itself. A missing ledger (first run) reads as the empty
+    frame of ``rows_of``, the operator that owns the row shape,
+    applied to ``like`` (the docs about to be admitted)."""
+    if not has_parquet(spark, ledger_dir):
+        return rows_of(like).filter(F.lit(False))
+    # plain partitioned read: epoch is a partition column, which
+    # recursiveFileLookup would silently drop (no partition inference)
+    return (
+        spark.read.parquet(ledger_dir)
+        .filter(F.col("epoch") != F.lit(epoch))
+        .drop("epoch")
+    )
+
+
+def night_epochs(spark: SparkSession, path_str: str) -> list[int]:
+    """The per-night (or per-batch) epochs of a ledger, ascending:
+    every ``epoch=<n>`` partition except the compacted one."""
+    return sorted(e for e in epoch_partitions(spark, path_str) if e >= 0)
+
+
 def last_committed_epoch(spark: SparkSession, checkpoint: str) -> int | None:
     """Highest batch id with a commit marker in a Structured Streaming
     checkpoint, or None before the first commit — the only epochs
@@ -265,11 +329,8 @@ def last_committed_epoch(spark: SparkSession, checkpoint: str) -> int | None:
     return max(ids) if ids else None
 
 
-def committed_view(
-    spark: SparkSession, led: DataFrame, checkpoint: str, compacted_epoch: int
-):
-    """The commit-watermark gate every epoch-ledger compactor shares
-    (one implementation, same rationale as fold_epochs): restrict a
+def committed_view(spark: SparkSession, led: DataFrame, checkpoint: str):
+    """The commit-watermark gate of the ledger compactor: restrict a
     ledger frame to its compacted partition plus epochs at or below
     the checkpoint's last committed batch id. Returns
     ``(filtered_ledger, committed_predicate)``, or ``None`` when no
@@ -287,7 +348,7 @@ def committed_view(
     if w is None:
         return None
     filtered = led.filter(
-        (F.col("epoch") == compacted_epoch) | (F.col("epoch") <= F.lit(w))
+        (F.col("epoch") == COMPACTED_EPOCH) | (F.col("epoch") <= F.lit(w))
     )
     return filtered, (lambda e: e <= w)
 
@@ -296,62 +357,51 @@ def fold_epochs(
     spark: SparkSession,
     ledger_dir: str,
     folded: DataFrame,
-    new_epoch: int,
     supersedes: Callable[[int], bool],
 ) -> None:
-    """The crash-safe core every epoch-ledger compactor here shares
-    (admission / URL ledgers — one implementation so the
-    ordering invariant can never silently diverge between copies).
+    """The crash-safe core of every epoch-ledger compactor here (the
+    content and URL admission ledgers and the refresh-state ledger —
+    one implementation so the ordering invariant can never silently
+    diverge between copies).
 
     ``folded`` is the compacted content (no epoch column); it lands as
-    the ``epoch=new_epoch`` partition; partitions for which
-    ``supersedes(e)`` is true are then GC'd. Crash safety is
+    the ``epoch=COMPACTED_EPOCH`` partition; per-night partitions for
+    which ``supersedes(e)`` is true are then GC'd. Crash safety is
     SUPERSET-monotone, not rename-atomic (a two-rename swap had a
     window where the ledger did not exist — review finding, r5):
 
     1. stage ``folded`` to a sibling tmp dir FIRST — it reads
        ``ledger_dir`` lazily, so it must be fully materialized before
        anything writes into the directory it reads;
-    2. write the staged rows INTO ``ledger_dir`` as the new-epoch
-       partition (dynamic overwrite touches only that partition —
-       a pure ADD when it did not exist before);
+    2. write the staged rows INTO ``ledger_dir`` as the compacted
+       partition (:func:`append_epoch` — dynamic overwrite touches
+       only that partition);
     3. only then delete superseded partitions and the tmp dir.
 
     A crash at any point leaves the ledger holding a SUPERSET of the
     compacted rows (duplicates at worst, never a loss); readers that
-    select by epoch rule (newest generation / own-epoch exclusion)
-    are unaffected, and the next compaction heals the duplicates.
+    select by epoch rule (latest-per-doc / own-epoch exclusion) are
+    unaffected, and the next compaction heals the duplicates.
 
     SINGLE CONCURRENT COMPACTOR per ledger: compaction is offline
     maintenance run between stream runs (the reference's nightly cron
     window, cron/script.bash:3) and this function assumes no other
     compactor is working the same ledger at the same time — two
-    overlapping runs could interleave stage/GC steps. The tmp dir is
-    suffixed with ``new_epoch`` so a RETRY of a *different generation*
-    (a generation epoch that advances per fold) never collides with a
-    stale tmp from a crashed older fold; same-generation overlap is
-    out of contract."""
-    tmp = ledger_dir.rstrip("/") + f"__compact_tmp_e{new_epoch}"
-    # GC every stale staging sibling, not just our own name: a crashed
-    # fold of ANOTHER generation (or the pre-r7 unsuffixed layout)
-    # would otherwise orphan a full ledger-sized copy forever
+    overlapping runs could interleave stage/GC steps."""
     base = ledger_dir.rstrip("/")
+    tmp = base + f"__compact_tmp_e{COMPACTED_EPOCH}"
+    # GC every stale staging sibling, not just our own name: a crashed
+    # fold under an older tmp name would otherwise orphan a full
+    # ledger-sized copy forever
     parent, name = base.rsplit("/", 1) if "/" in base else (".", base)
     for child in list_names(spark, parent):
         if child.startswith(name + "__compact_tmp"):
             delete(spark, f"{parent}/{child}")
     folded.write.mode("overwrite").parquet(tmp)
-    (
-        spark.read.parquet(tmp)
-        .withColumn("epoch", F.lit(new_epoch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(ledger_dir)
-    )
-    for e in epoch_partitions(spark, ledger_dir):
+    append_epoch(spark.read.parquet(tmp), ledger_dir, COMPACTED_EPOCH)
+    for e in night_epochs(spark, ledger_dir):
         if supersedes(e):
-            delete(spark, f"{ledger_dir.rstrip('/')}/epoch={e}")
+            delete(spark, f"{base}/epoch={e}")
     delete(spark, tmp)
 
 

@@ -189,19 +189,16 @@ def verify_nightly_root(spark: SparkSession, root_dir: str) -> dict:
     url_pos: list[int] = []
     url_led = os.path.join(root_dir, "url_ledger")
     if iofs.has_parquet(spark, url_led):
-        url_pos = sorted(
-            e for e in iofs.epoch_partitions(spark, url_led) if e >= 0
-        )
+        url_pos = iofs.night_epochs(spark, url_led)
         checks["url_epochs_match"] = (
             url_pos == list(range(len(url_pos)))
             and len(url_pos) <= len(nights)
         )
     con_led = os.path.join(root_dir, "content_ledger")
     if iofs.has_parquet(spark, con_led):
-        con_pos = {
-            e for e in iofs.epoch_partitions(spark, con_led) if e >= 0
-        }
-        checks["content_epochs_match"] = con_pos <= set(url_pos)
+        checks["content_epochs_match"] = set(
+            iofs.night_epochs(spark, con_led)
+        ) <= set(url_pos)
 
     # --- refresh state: the delta state ledger -------------------------
     state_led = resolve_store(spark, root_dir, "state_ledger")

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from radares_spark.io.fs import COMPACTED_EPOCH, append_epoch
 from radares_spark.io.fs import delete as fs_delete
 from radares_spark.io.fs import list_names
 from radares_spark.operators.bpe import (
@@ -625,16 +626,10 @@ def append_shards(
     total = prior_total + int(n_delta_tokens)
     sealed_hi = total // ctx_len
     seqs = _sequences(placed_all, ctx_len)
-    sealed = (
-        seqs.filter(F.col("seq_id") < sealed_hi)
-        .withColumn("epoch", F.lit(epoch))
-        .localCheckpoint()
-    )
+    sealed = seqs.filter(F.col("seq_id") < sealed_hi).localCheckpoint()
     n_sealed = sealed.count()
     if n_sealed:
-        sealed.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(shards_dir)
+        append_epoch(sealed, shards_dir, epoch)
 
     # the partial tail: unsealed suffixes of rows crossing the new
     # boundary, trimmed so the sidecar holds < ctx_len tokens total
@@ -788,7 +783,7 @@ def compact_shards(
         1 for nme in list_names(spark, shards_dir) if nme.startswith("epoch=")
     )
     sealed = read_shards(spark, shards_dir).drop("epoch").withColumn(
-        "epoch", F.lit(-1)
+        "epoch", F.lit(COMPACTED_EPOCH)
     )
     n = sealed.count()
     per_file = max(1, _COMPACT_TOKENS_PER_FILE // max(ctx_len, 1))

@@ -60,7 +60,6 @@ from pyspark.sql import functions as F
 from radares_spark.io import fs as iofs
 
 STATE_TABLES = ("features", "bands", "audit")
-COMPACTED_EPOCH = -1
 
 
 @dataclass(frozen=True)
@@ -131,13 +130,7 @@ def write_state_epoch(
             F.lit(True).alias("_deleted"),
         )
     )
-    (
-        rows.withColumn("epoch", F.lit(state.epoch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(state.table_dir(table))
-    )
+    iofs.append_epoch(rows, state.table_dir(table), state.epoch)
 
 
 def compaction_floor(spark: SparkSession, ledger_dir: str) -> int | None:
@@ -176,22 +169,12 @@ def compact_state_ledger(
         tdir = f"{ledger_dir}/{table}"
         if not iofs.has_parquet(spark, tdir):
             continue
-        foldable = [
-            e
-            for e in iofs.epoch_partitions(spark, tdir)
-            if 0 <= e <= thru_epoch
-        ]
+        foldable = [e for e in iofs.night_epochs(spark, tdir) if e <= thru_epoch]
         counts[table] = len(foldable)
         if not foldable:
             continue
         live = read_state(
             spark, LedgerState(ledger_dir, thru_epoch), table
         ).withColumn("_deleted", F.lit(False))
-        iofs.fold_epochs(
-            spark,
-            tdir,
-            live,
-            new_epoch=COMPACTED_EPOCH,
-            supersedes=lambda e: 0 <= e <= thru_epoch,
-        )
+        iofs.fold_epochs(spark, tdir, live, lambda e: e <= thru_epoch)
     return counts

@@ -1,88 +1,81 @@
-"""Streaming corpus admission — ``operators/incremental.py`` as a
+"""Streaming admission — the cross-run admission operators as one
 Structured Streaming sink, closing the loop the reference runs as a
 cron'd nightly batch (cron/script.bash:3 → scrape.py → the
-existence-guarded insert at clean_data.py:168-180).
+existence-guarded insert at clean_data.py:168-180). Two admissions run
+through it, chosen by the caller:
 
-Shape: a file-source stream of new document files → ``foreachBatch``
-admits each micro-batch against the persistent dedup ledger and
-appends (a) the per-doc admission audit and (b) the kept docs' ledger
-rows — so the NEXT micro-batch dedups against everything admitted
-before it, across restarts.
+- ``"content"``: new documents against the hash+minhash dedup ledger
+  (``operators/incremental.incremental_dedup``) — a re-sent article
+  classifies ``exact_dup_corpus`` / ``near_dup_corpus``;
+- ``"urls"``: freshly-discovered URLs against the canonical-URL ledger
+  of every prior crawl (``operators/urls.incremental_url_dedup``) — a
+  recrawled URL classifies ``url_dup_ledger`` before a byte of HTML is
+  fetched or parsed.
 
-Exactly-once story (the part worth copying at 100 TB/day):
+Shape: a file-source stream of landed files → ``foreachBatch`` admits
+each micro-batch against the persistent ledger and appends (a) the
+per-doc admission audit and (b) the kept docs' ledger rows — so the
+NEXT micro-batch (and the next nightly run) dedups against everything
+admitted before it, across restarts.
+
+Exactly-once story (the part worth copying at 100 TB/day), shared by
+both admissions and by the batch ``crawl-nightly`` through the
+epoch-ledger helpers of ``io/fs``:
 
 - the checkpoint's file log gives each landed file to exactly one
   micro-batch;
 - both sinks write ``epoch=<id>`` partitions with DYNAMIC partition
-  overwrite — a replayed micro-batch (crash between sink and commit)
-  OVERWRITES its own partition instead of double-appending, making
-  the whole pipeline idempotent per epoch, the standard foreachBatch
-  exactly-once recipe;
+  overwrite (``fs.append_epoch``) — a replayed micro-batch (crash
+  between sink and commit) OVERWRITES its own partition instead of
+  double-appending;
+- the ledger loads with the replaying epoch EXCLUDED
+  (``fs.read_ledger``), reconstructing the exact pre-epoch state so a
+  replay recomputes the same outcomes;
 - admission itself is idempotent by construction (re-admitted content
-  classifies ``exact_dup_corpus`` and appends nothing — proven in
-  tests/test_incremental.py), so even a lost checkpoint degrades to
-  correct-but-reclassified, never to duplicate corpus docs.
+  or a re-landed URL appends nothing — proven in
+  tests/test_incremental.py and tests/test_urls.py), so even a lost
+  checkpoint degrades to correct-but-reclassified, never to duplicate
+  corpus docs or duplicate fetches.
 
-Scale: per micro-batch cost is the incremental_dedup contract — the
-ledger is never rescanned as text, only its hash/signature rows join
-against the (small) batch; reading the ledger per batch is a parquet
-scan of longs/hashes that partition-prunes nothing but also shuffles
-nothing ledger-sized (see operators/incremental.py docstring).
+Scale: per micro-batch cost is the operators' incremental contract —
+the ledger is never rescanned as text, only its hash/signature or
+canonical-URL rows join against the (small) batch; reading the ledger
+per batch is a parquet scan of narrow rows that shuffles nothing
+ledger-sized (see operators/incremental.py and operators/urls.py).
+The URL admission pays for itself hardest at 100 TB: every URL
+dropped there is a fetch, an HTML parse and a dedup shuffle that
+never happen.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from radares_spark.io import fs
 from radares_spark.operators.incremental import incremental_dedup, ledger_rows
+from radares_spark.operators.urls import incremental_url_dedup, url_ledger_rows
 
 DOCS_SCHEMA = "doc_id long, text string"
 
-# Epoch value for compacted history. Structured Streaming batch ids
-# start at 0 and only grow (tracked in the checkpoint), so -1 can never
-# collide with a replayed epoch: the replay's epoch-exclusion filter
-# always keeps compacted rows visible.
-COMPACTED_EPOCH = -1
+# per admission: the landed files' schema, the ledger row shape and
+# the admit operator returning (audit, append_rows)
+ADMISSIONS = {
+    "content": (DOCS_SCHEMA, ledger_rows, incremental_dedup),
+    "urls": ("doc_id long, url string", url_ledger_rows, incremental_url_dedup),
+}
 
 
 def stream_docs(
-    spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
+    spark: SparkSession,
+    landing_dir: str,
+    max_files_per_trigger: int | None = None,
+    schema: str = DOCS_SCHEMA,
 ) -> DataFrame:
-    """readStream over a parquet landing prefix of (doc_id, text)."""
-    reader = spark.readStream.schema(DOCS_SCHEMA).option(
-        "recursiveFileLookup", "true"
-    )
+    """readStream over a parquet landing prefix of ``schema`` rows."""
+    reader = spark.readStream.schema(schema).option("recursiveFileLookup", "true")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(landing_dir)
-
-
-def _load_ledger(
-    spark: SparkSession,
-    ledger_dir: str,
-    like: DataFrame,
-    exclude_epoch: int | None = None,
-) -> DataFrame:
-    """Current ledger, or an empty correctly-shaped frame on first run.
-
-    ``exclude_epoch`` filters out the caller's own epoch partition: on a
-    replay (crash between the sink's writes and the checkpoint commit)
-    the ledger may already contain the replayed micro-batch's rows, and
-    admitting the batch against them would reclassify every previously
-    kept doc as ``exact_dup_corpus`` and overwrite the audit partition
-    with wrong outcomes. Excluding the epoch reconstructs the exact
-    pre-epoch ledger state, so replay recomputes the same result.
-    """
-    if fs.has_parquet(spark, ledger_dir):
-        # plain partitioned read: epoch is a partition column, which
-        # recursiveFileLookup would silently drop (no partition inference)
-        ledger = spark.read.parquet(ledger_dir)
-        if exclude_epoch is not None:
-            ledger = ledger.filter(F.col("epoch") != F.lit(exclude_epoch))
-        return ledger.drop("epoch")
-    return ledger_rows(like).filter(F.lit(False))
 
 
 def run_admission_stream(
@@ -92,10 +85,14 @@ def run_admission_stream(
     audit_dir: str,
     checkpoint: str,
     max_files_per_trigger: int | None = None,
+    admission: str = "content",
 ) -> None:
-    """One AvailableNow pass: admit every new file's docs against the
-    ledger, append audit + kept ledger rows, stop. Re-runnable."""
-    docs = stream_docs(spark, landing_dir, max_files_per_trigger)
+    """One AvailableNow pass: admit every new file's rows against the
+    ``admission`` ledger (a key of ``ADMISSIONS``), append audit + kept
+    ledger rows, stop. Re-runnable: the next invocation picks up only
+    files the checkpoint has not assigned yet."""
+    schema, rows_of, admit = ADMISSIONS[admission]
+    docs = stream_docs(spark, landing_dir, max_files_per_trigger, schema)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
@@ -104,23 +101,10 @@ def run_admission_stream(
         batch = batch_df.localCheckpoint(eager=True)
         if batch.isEmpty():
             return
-        ledger = _load_ledger(s, ledger_dir, batch, exclude_epoch=epoch_id)
-        audit, append_rows = incremental_dedup(batch, ledger)
-        # epoch-partitioned dynamic overwrite => replay-idempotent
-        (
-            append_rows.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(ledger_dir)
-        )
-        (
-            audit.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(audit_dir)
-        )
+        ledger = fs.read_ledger(s, ledger_dir, epoch_id, rows_of, batch)
+        audit, append_rows = admit(batch, ledger)
+        fs.append_epoch(append_rows, ledger_dir, epoch_id)
+        fs.append_epoch(audit, audit_dir, epoch_id)
 
     q = (
         docs.writeStream.foreachBatch(sink)
@@ -139,75 +123,59 @@ def compact_ledger(
     n_buckets: int = 16,
     checkpoint: str | None = None,
 ) -> None:
-    """Offline ledger maintenance — run BETWEEN stream runs, with the
-    stream stopped and every landed epoch committed (the same window
-    the reference's nightly cron leaves between runs,
-    cron/script.bash:3).
+    """Offline ledger maintenance for either admission ledger (content
+    or URL) — run BETWEEN stream runs, with the stream stopped and
+    every landed epoch committed (the same window the reference's
+    nightly cron leaves between runs, cron/script.bash:3).
 
-    The admission ledger is append-only: every micro-batch adds an
-    ``epoch=N`` partition and nothing ever rewrites old ones, so after
-    a year of nightly crawls the directory holds hundreds of small
-    partitions. Compaction folds them into ONE deduplicated
-    ``epoch=COMPACTED_EPOCH`` partition:
+    An admission ledger is append-only: every micro-batch or night
+    adds an ``epoch=N`` partition and nothing ever rewrites old ones,
+    so after a year of nightly crawls the directory holds hundreds of
+    small partitions. Compaction folds them into ONE deduplicated
+    ``epoch=fs.COMPACTED_EPOCH`` partition:
 
-    - ``distinct()`` over the content columns — semantically a no-op
+    - ``distinct()`` over the ledger columns — semantically a no-op
       on a healthy ledger (admission never appends a kept doc twice),
       but it makes compaction idempotent and self-healing after a
       manual restore;
-    - the ``epoch=-1`` partition value keeps the crash-replay contract
-      intact: a replayed micro-batch excludes only ITS OWN epoch id,
-      and batch ids never go negative, so compacted history is always
-      visible to replays (see ``_load_ledger``);
-    - crash safety is SUPERSET-monotone, not rename-atomic (review fix:
-      a two-rename swap had a window where ``ledger_dir`` did not
-      exist, which ``_load_ledger``'s first-run branch would silently
-      turn into total dedup-history loss). Order of operations: stage
-      the distinct rows to a sibling dir, write them INTO ``ledger_dir``
-      as the ``epoch=-1`` partition (dynamic overwrite touches only
-      that partition), THEN delete the superseded ``epoch=N`` dirs. A
-      crash at any point leaves ``ledger_dir`` holding a SUPERSET of
-      the compacted rows — duplicates at worst, never a loss — and
-      admission is multiplicity-insensitive (semi-joins + distinct), so
-      outcomes are unaffected; the next compaction's ``distinct()``
-      heals the duplicates.
+    - the compacted partition id is never a batch id or night number,
+      so a replay's own-epoch exclusion (``fs.read_ledger``) always
+      keeps compacted history visible;
+    - crash safety is SUPERSET-monotone (``fs.fold_epochs``): a crash
+      at any point leaves ``ledger_dir`` holding duplicates at worst,
+      never a loss, and admission is multiplicity-insensitive
+      (semi-joins + distinct), so outcomes are unaffected; the next
+      compaction's ``distinct()`` heals the duplicates.
 
     When ``bucketed_table`` is given, the compacted rows are ALSO
-    registered as a bucketed+sorted external table on the band join
-    keys (``io/bucketing.write_bucketed``) — the layout under which
-    the nightly admission band join scans the ledger side with zero
-    Exchange (plan-asserted in tests/test_incremental.py).
+    registered as a bucketed+sorted external table on the content
+    ledger's band join keys (``io/bucketing.write_bucketed``) — the
+    layout under which the nightly admission band join scans the
+    ledger side with zero Exchange (plan-asserted in
+    tests/test_incremental.py).
 
     ``checkpoint`` (the stream's checkpointLocation) gates folding on
-    the commit watermark: only epochs ``<= last_committed_epoch`` fold
-    into ``epoch=-1``. A
-    written-but-uncommitted epoch (crash between the sink's writes and
-    the checkpoint commit) must stay an EXCLUDABLE delta — once folded
-    into ``epoch=-1``, the replay's own-epoch exclusion
-    (``_load_ledger``) could no longer excise it and the replayed
-    audit partition would misclassify kept docs as corpus duplicates.
-    Without ``checkpoint`` every epoch folds (the pre-r7 behavior) —
-    only safe when the caller KNOWS the last run stopped cleanly.
+    the commit watermark (``fs.committed_view``): only epochs
+    ``<= last_committed_epoch`` fold. A written-but-uncommitted epoch
+    (crash between the sink's writes and the checkpoint commit) must
+    stay an EXCLUDABLE delta — once folded, the replay's own-epoch
+    exclusion could no longer excise it and the replayed audit
+    partition would misclassify kept docs as duplicates. Without
+    ``checkpoint`` every epoch folds — only safe when the caller KNOWS
+    the last run stopped cleanly (the batch nightly ledgers, which
+    have no checkpoint).
     """
     if not fs.has_parquet(spark, ledger_dir):
         return  # nothing landed yet — compaction is a no-op, not an error
     led = spark.read.parquet(ledger_dir)
     if checkpoint is not None:
-        view = fs.committed_view(spark, led, checkpoint, COMPACTED_EPOCH)
+        view = fs.committed_view(spark, led, checkpoint)
         if view is None:
             return  # nothing committed yet — nothing is safe to fold
         led, committed = view
     else:
         committed = lambda e: True  # noqa: E731
-    # stage/fold/GC ordering and its crash contract live in ONE place
-    # (fs.fold_epochs) shared by the admission and URL compactors;
-    # every committed epoch>=0 row lands in epoch=-1
-    fs.fold_epochs(
-        spark,
-        ledger_dir,
-        led.drop("epoch").distinct(),
-        COMPACTED_EPOCH,
-        supersedes=lambda e: e != COMPACTED_EPOCH and committed(e),
-    )
+    fs.fold_epochs(spark, ledger_dir, led.drop("epoch").distinct(), committed)
 
     if bucketed_table is not None:
         from radares_spark.io.bucketing import write_bucketed
@@ -219,9 +187,7 @@ def compact_ledger(
         # misclassification the watermark gate exists to prevent
         rebuilt = spark.read.parquet(ledger_dir)
         if checkpoint is not None:
-            rebuilt, _ = fs.committed_view(
-                spark, rebuilt, checkpoint, COMPACTED_EPOCH
-            )
+            rebuilt, _ = fs.committed_view(spark, rebuilt, checkpoint)
         write_bucketed(
             rebuilt.drop("epoch").distinct(),
             bucketed_table,

@@ -152,10 +152,8 @@ def test_compact_then_admit_is_idempotent(spark, dirs, tmp_path):
     classifies exact_dup_corpus); a second compaction is a no-op."""
     import os
 
-    from radares_spark.streaming.admission_stream import (
-        COMPACTED_EPOCH,
-        compact_ledger,
-    )
+    from radares_spark.io.fs import COMPACTED_EPOCH
+    from radares_spark.streaming.admission_stream import compact_ledger
 
     def content(d):
         return sorted(tuple(r) for r in spark.read.parquet(d).drop("epoch").collect())
@@ -219,11 +217,8 @@ def test_partial_compaction_is_superset_safe(spark, dirs):
     import shutil
 
     from radares_spark.operators.incremental import incremental_dedup, ledger_rows
-    from radares_spark.streaming.admission_stream import (
-        COMPACTED_EPOCH,
-        _load_ledger,
-        compact_ledger,
-    )
+    from radares_spark.io.fs import COMPACTED_EPOCH, read_ledger
+    from radares_spark.streaming.admission_stream import compact_ledger
 
     def content(d):
         return sorted(
@@ -263,7 +258,9 @@ def test_partial_compaction_is_superset_safe(spark, dirs):
     batch = _docs(spark, 150, 160).select(
         (F.col("doc_id") + 9_000).alias("doc_id"), "text"
     )
-    dup_ledger = _load_ledger(spark, dirs["ledger"], batch)
+    # the epoch this batch would take: no partition is excluded
+    next_epoch = max(fs.epoch_partitions(spark, dirs["ledger"])) + 1
+    dup_ledger = read_ledger(spark, dirs["ledger"], next_epoch, ledger_rows, batch)
     audit_dup = {
         r["doc_id"]: r["outcome"]
         for r in incremental_dedup(batch, dup_ledger)[0].collect()
@@ -287,7 +284,7 @@ def test_partial_compaction_is_superset_safe(spark, dirs):
 
 
 def test_admission_compaction_gates_on_commit_watermark(spark, tmp_path):
-    """r6 ADVICE (url_stream twin): with the checkpoint passed,
+    """r6 ADVICE (URL admission twin): with the checkpoint passed,
     compact_ledger folds only committed epochs — a written-but-
     uncommitted epoch stays an excludable delta so its crash-replay
     can reconstruct the exact pre-epoch ledger state."""

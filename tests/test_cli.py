@@ -11,9 +11,14 @@ import pytest
 
 # Slow tier per test: multi-second Spark e2e tests dominate this
 # module's wall; deselected by default so the default run fits its
-# time window — run with -m slow (see COVERAGE.md). The one default-tier test,
-# test_corpus_refresh_subcommand_two_nights, runs the refresh layer
-# (epoch 0 -> 1 of the state ledger) end to end through main().
+# time window — run with -m slow (see COVERAGE.md). Three tests stay
+# in the default tier: test_corpus_refresh_subcommand_two_nights runs
+# the refresh layer (epoch 0 -> 1 of the state ledger) end to end
+# through main(), and the two crawl-nightly tests
+# (test_crawl_nightly_three_night_recrawl,
+# test_crawl_nightly_content_ledger_cross_night_dedup) run the night's
+# URL and content ledger reads and epoch appends, including a crash
+# between the two appends.
 
 from pyspark.sql import functions as F
 
@@ -190,7 +195,6 @@ def test_curate_crawl_subcommand(spark, tmp_path, capsys):
     assert audit.count() == 3
 
 
-@pytest.mark.slow  # >=10 s in the r15 full-suite durations log
 def test_crawl_nightly_three_night_recrawl(spark, tmp_path, capsys):
     """r6 verdict #5: the fetch-list → incremental_url_dedup →
     append-epoch → curate sequence as ONE crawl-nightly command.
@@ -633,7 +637,6 @@ def test_tokenizer_train_and_shards_append_nightly(spark, tmp_path, capsys):
     }
 
 
-@pytest.mark.slow  # >=10 s in the r15 full-suite durations log
 def test_crawl_nightly_content_ledger_cross_night_dedup(spark, tmp_path, capsys):
     """--content-ledger closes the cross-night CONTENT hole: the same
     article re-syndicated at a NEW url passes the URL ledger but drops

@@ -43,6 +43,39 @@ def test_fs_helpers_on_file_uris(spark, tmp_path):
     fs.delete(spark, _furi(d / "epoch=3"))  # missing path is a no-op
 
 
+def test_epoch_ledger_read_and_append_on_file_uris(spark, tmp_path):
+    """The shared epoch-ledger layout: appends land one dynamic
+    partition each (a replay overwrites its own epoch, empty rows land
+    none), the read drops exactly the epoch about to be written, and a
+    missing ledger reads as the row-shape operator's empty frame."""
+    led = _furi(tmp_path / "ledger")
+
+    def rows(*ids):
+        return spark.createDataFrame([(i, f"u{i}") for i in ids], "doc_id long, url string")
+
+    def shape(df):
+        return df.select("doc_id", F.upper("url").alias("canonical_url"))
+
+    first = fs.read_ledger(spark, led, 0, shape, rows(1))
+    assert first.columns == ["doc_id", "canonical_url"] and first.count() == 0
+
+    fs.append_epoch(rows(1, 2), led, fs.COMPACTED_EPOCH)
+    fs.append_epoch(rows(3), led, 0)
+    fs.append_epoch(rows(4), led, 1)
+    fs.append_epoch(rows(5), led, 1)  # replay of epoch 1: overwrites it
+    fs.append_epoch(rows(), led, 2)  # empty: no partition
+    assert sorted(fs.epoch_partitions(spark, led)) == [-1, 0, 1]
+    assert fs.night_epochs(spark, led) == [0, 1]
+
+    def ids(epoch):
+        got = fs.read_ledger(spark, led, epoch, shape, rows(9))
+        assert got.columns == ["doc_id", "url"]
+        return sorted(r["doc_id"] for r in got.collect())
+
+    assert ids(1) == [1, 2, 3]  # own epoch dropped, compacted kept
+    assert ids(2) == [1, 2, 3, 5]
+
+
 def test_admission_compaction_over_file_uri(spark, tmp_path):
     """compact_ledger end to end with every path an explicit file: URI
     — stream a landing dir, compact behind the commit watermark

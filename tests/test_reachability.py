@@ -447,21 +447,28 @@ def test_parameter_allowlist_entries_exist_and_are_unset():
 
 def test_a_function_passed_as_a_value_counts_every_parameter_as_set(tmp_path):
     """bench.py's streaming section hands each runner to a helper that
-    calls it with ``max_files_per_trigger=1``; the guard cannot follow
-    that call, so the reference itself must count as setting it."""
-    caller = tmp_path / "caller.py"
-    caller.write_text(
+    calls it with ``max_files_per_trigger=1`` — the content row as the
+    bare function, the URL row as a ``functools.partial`` of it; the
+    guard cannot follow that call, so each form of reference must
+    count as setting it on its own."""
+    header = (
+        "from functools import partial\n"
+        "from radares_spark.streaming import admission_stream\n"
         "from radares_spark.streaming.admission_stream import run_admission_stream\n"
-        "from radares_spark.streaming import url_stream\n"
         "def _one(key, runner):\n"
         "    runner(None, 'landing', 'ledger', 'audit', 'ckpt', max_files_per_trigger=1)\n"
-        "_one('admission', run_admission_stream)\n"
-        "_one('url_admission', runner=url_stream.run_url_admission_stream)\n"
     )
-    got = _parameters_set_in(caller)
-    for name in ("admission_stream.run_admission_stream", "url_stream.run_url_admission_stream"):
-        mod, fn = f"radares_spark.streaming.{name}".rsplit(".", 1)
-        assert "max_files_per_trigger" in got.get((mod, fn), set()), name
+    rows = {
+        "bare": "_one('admission', run_admission_stream)\n",
+        "partial": "_one('url_admission', runner=partial("
+        "admission_stream.run_admission_stream, admission='urls'))\n",
+    }
+    fn = ("radares_spark.streaming.admission_stream", "run_admission_stream")
+    for form, row in rows.items():
+        caller = tmp_path / f"{form}.py"  # _tree caches per path
+        caller.write_text(header + row)
+        got = _parameters_set_in(caller).get(fn, set())
+        assert "max_files_per_trigger" in got, form
 
 
 def test_an_argument_equal_to_the_default_does_not_set_the_parameter(tmp_path):

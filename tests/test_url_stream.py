@@ -1,4 +1,5 @@
-"""Streaming URL admission (streaming/url_stream.py): batch==stream
+"""Streaming URL admission (``run_admission_stream(...,
+admission="urls")`` in streaming/admission_stream.py): batch==stream
 parity, cross-micro-batch ledger growth (a recrawled URL classifies
 url_dup_ledger), crash-replay idempotency, and compaction — the
 streaming face of the cross-run URL ledger."""
@@ -13,9 +14,9 @@ from pyspark.sql import functions as F
 
 from radares_spark.io import fs
 from radares_spark.operators.urls import incremental_url_dedup, url_ledger_rows
-from radares_spark.streaming.url_stream import (
-    compact_url_ledger,
-    run_url_admission_stream,
+from radares_spark.streaming.admission_stream import (
+    compact_ledger,
+    run_admission_stream,
 )
 
 
@@ -53,8 +54,9 @@ NIGHT2 = [
 
 def test_url_stream_matches_batch_and_skips_recrawls(spark, dirs):
     _pages(spark, NIGHT1).coalesce(1).write.mode("append").parquet(dirs["landing"])
-    run_url_admission_stream(
-        spark, dirs["landing"], dirs["ledger"], dirs["audit"], dirs["ckpt"]
+    run_admission_stream(
+        spark, dirs["landing"], dirs["ledger"], dirs["audit"], dirs["ckpt"],
+        admission="urls",
     )
     got1 = {
         r["doc_id"]: r["outcome"]
@@ -72,8 +74,9 @@ def test_url_stream_matches_batch_and_skips_recrawls(spark, dirs):
     # night 2: the recrawled URL is skipped, the fresh one admits,
     # NULL-url passes through; the ledger grew by exactly the new URL
     _pages(spark, NIGHT2).coalesce(1).write.mode("append").parquet(dirs["landing"])
-    run_url_admission_stream(
-        spark, dirs["landing"], dirs["ledger"], dirs["audit"], dirs["ckpt"]
+    run_admission_stream(
+        spark, dirs["landing"], dirs["ledger"], dirs["audit"], dirs["ckpt"],
+        admission="urls",
     )
     audit = spark.read.parquet(dirs["audit"])
     ep2 = {
@@ -92,8 +95,9 @@ def test_url_stream_matches_batch_and_skips_recrawls(spark, dirs):
 
     # nothing new landed -> no-op (checkpoint file log)
     before = audit.count()
-    run_url_admission_stream(
-        spark, dirs["landing"], dirs["ledger"], dirs["audit"], dirs["ckpt"]
+    run_admission_stream(
+        spark, dirs["landing"], dirs["ledger"], dirs["audit"], dirs["ckpt"],
+        admission="urls",
     )
     assert spark.read.parquet(dirs["audit"]).count() == before
 
@@ -116,8 +120,9 @@ def test_url_stream_crash_replay_is_idempotent(spark, dirs):
     crc = os.path.join(commits_dir, f".{newest}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    run_url_admission_stream(
-        spark, dirs["landing"], dirs["ledger"], dirs["audit"], dirs["ckpt"]
+    run_admission_stream(
+        spark, dirs["landing"], dirs["ledger"], dirs["audit"], dirs["ckpt"],
+        admission="urls",
     )
     assert {
         (r["doc_id"], r["outcome"])
@@ -134,7 +139,7 @@ def test_url_ledger_compaction_preserves_urls(spark, dirs):
         r["canonical_url"]
         for r in spark.read.parquet(dirs["ledger"]).select("canonical_url").collect()
     }
-    compact_url_ledger(spark, dirs["ledger"])
+    compact_ledger(spark, dirs["ledger"])
     assert fs.epoch_partitions(spark, dirs["ledger"]) == [-1]
     after = {
         r["canonical_url"]
@@ -163,9 +168,9 @@ def test_url_compaction_never_folds_uncommitted_epochs(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     _pages(spark, NIGHT1).coalesce(1).write.mode("append").parquet(landing)
-    run_url_admission_stream(spark, landing, ledger, audit_dir, ckpt)
+    run_admission_stream(spark, landing, ledger, audit_dir, ckpt, admission="urls")
     _pages(spark, NIGHT2).coalesce(1).write.mode("append").parquet(landing)
-    run_url_admission_stream(spark, landing, ledger, audit_dir, ckpt)
+    run_admission_stream(spark, landing, ledger, audit_dir, ckpt, admission="urls")
     audit_before = {
         (r["doc_id"], r["outcome"])
         for r in spark.read.parquet(audit_dir).collect()
@@ -179,20 +184,20 @@ def test_url_compaction_never_folds_uncommitted_epochs(spark, tmp_path):
     if os.path.exists(crc):
         os.remove(crc)
 
-    compact_url_ledger(spark, ledger, checkpoint=ckpt)
+    compact_ledger(spark, ledger, checkpoint=ckpt)
     # committed epoch 0 folded; uncommitted epoch 1 stays excludable
     assert sorted(fs.epoch_partitions(spark, ledger)) == [-1, int(newest)]
 
     # the replay recomputes the same outcomes (doc 10 is a ledger dup
     # against night-1 history, NOT against its own replayed rows)
-    run_url_admission_stream(spark, landing, ledger, audit_dir, ckpt)
+    run_admission_stream(spark, landing, ledger, audit_dir, ckpt, admission="urls")
     assert {
         (r["doc_id"], r["outcome"])
         for r in spark.read.parquet(audit_dir).collect()
     } == audit_before
 
     # with every epoch committed, a second compaction folds the rest
-    compact_url_ledger(spark, ledger, checkpoint=ckpt)
+    compact_ledger(spark, ledger, checkpoint=ckpt)
     assert fs.epoch_partitions(spark, ledger) == [-1]
 
     # before any commit exists, a gated compaction is a no-op
@@ -201,5 +206,5 @@ def test_url_compaction_never_folds_uncommitted_epochs(spark, tmp_path):
     spark.createDataFrame(
         pd.DataFrame({"doc_id": [1], "canonical_url": ["http://x/a"], "epoch": [0]})
     ).write.partitionBy("epoch").parquet(probe)
-    compact_url_ledger(spark, probe, checkpoint=empty_ckpt)
+    compact_ledger(spark, probe, checkpoint=empty_ckpt)
     assert fs.epoch_partitions(spark, probe) == [0]
